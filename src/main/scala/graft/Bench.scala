@@ -1,9 +1,5 @@
 package graft
-import org.apache.spark.graftshim.ListenerShim
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-
-import java.util.concurrent.atomic.LongAdder
 
 /** Benchmark main: times every SparkEntry query at the given scale
   * factor and prints one JSON line with the total and the per-query
@@ -25,7 +21,7 @@ import java.util.concurrent.atomic.LongAdder
   *    the double-run when they coincide, and logs instead of
   *    swallowing warmup failures;
   *  - (round 11) per-query `executorRunTime` / `executorCpuTime` are
-  *    accumulated by a [[SparkListener]] and reported alongside wall
+  *    collected by [[Metrics.around]] and reported alongside wall
   *    time (`task_s` / `cpu_s` maps). Wall time inflates under
   *    ambient box load while summed task CPU time does not, so
   *    wall-vs-cpu divergence is the load signature that lets a round
@@ -34,22 +30,6 @@ import java.util.concurrent.atomic.LongAdder
   *    on pure sandbox contention and could not self-adjudicate).
   */
 object Bench {
-
-  /** Accumulates executor task time across all tasks seen since
-    * construction. RunTime is wall-on-executor (includes shuffle-fetch
-    * wait + GC); CpuTime is actual CPU ns — the contention-robust one.
-    * Diffing [[snapshot]] around a blocking action (after a listener
-    * bus drain) attributes the interval's tasks to that action. */
-  private[graft] final class TaskTimeListener extends SparkListener {
-    private val runMs = new LongAdder
-    private val cpuNs = new LongAdder
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) { runMs.add(m.executorRunTime); cpuNs.add(m.executorCpuTime) }
-    }
-    /** (task seconds, cpu seconds) totals so far. */
-    def snapshot: (Double, Double) = (runMs.sum / 1e3, cpuNs.sum / 1e9)
-  }
 
   /** Total task-cpu seconds of ONE fixed state-free shuffle burst:
     * `n` longs through a bare `repartition(64, id)` — serialize +
@@ -60,32 +40,16 @@ object Bench {
     * compares its per-row cpu across burst lengths — if the shapes
     * drifted apart the two instruments would silently stop measuring
     * the same weather (review r19). */
-  def stateFreeShuffleCpu(spark: SparkSession, n: Long): Double = {
-    val lst = new TaskTimeListener
-    org.apache.spark.graftshim.ListenerShim
-      .drainListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(lst)
-    try {
+  def stateFreeShuffleCpu(spark: SparkSession, n: Long): Double =
+    Metrics.around(spark) {
       spark.range(n)
         .repartition(64, org.apache.spark.sql.functions.col("id"))
-        .queryExecution.toRdd.count(): Unit
-      org.apache.spark.graftshim.ListenerShim
-        .drainListenerBus(spark.sparkContext)
-      lst.snapshot._2
-    } finally spark.sparkContext.removeSparkListener(lst)
-  }
+        .queryExecution.toRdd.count()
+    }._2.cpuS
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val taskTimes = new TaskTimeListener
-    spark.sparkContext.addSparkListener(taskTimes)
+    val spark = Session.local("graft-bench")
 
     // 1-minute load average — recorded in the artifact so a round timed
     // under machine contention self-identifies (the round-5 official
@@ -152,10 +116,9 @@ object Bench {
     var failed = List.empty[String]
     val results = SparkEntry.queries.map { case (name, fn) =>
       // min-of-2: immune to one-off stalls (GC pause, page-cache miss).
-      // Each rep also diffs the task-time listener around the run (bus
-      // drained on both sides so async task-end events land in the
-      // right interval); the rep with the min WALL time supplies the
-      // reported task_s/cpu_s so the three numbers describe ONE run.
+      // Each rep's task time is collected by Metrics.around; the rep
+      // with the min WALL time supplies the reported task_s/cpu_s so
+      // the three numbers describe ONE run.
       val times = (1 to 2).flatMap { _ =>
         // pay earlier queries' garbage debt OUTSIDE the timed window:
         // without this, whichever query first tips the old gen eats a
@@ -163,18 +126,12 @@ object Bench {
         // across otherwise-identical runs)
         System.gc()
         try {
-          // the pre-rep drain lives INSIDE the try: waitUntilEmpty has
-          // an internal ~10 s timeout that THROWS when the bus is
-          // backed up, and a drain timeout must fail this one query,
-          // not abort the whole partial-run-containing artifact
-          ListenerShim.drainListenerBus(spark.sparkContext)
-          val (task0, cpu0) = taskTimes.snapshot
-          val t0 = System.nanoTime()
-          run(fn, sfDir)
-          val wall = (System.nanoTime() - t0) / 1e9
-          ListenerShim.drainListenerBus(spark.sparkContext)
-          val (task1, cpu1) = taskTimes.snapshot
-          Some((wall, task1 - task0, cpu1 - cpu0))
+          // Metrics.around lives INSIDE the try: its bus drain has an
+          // internal ~10 s timeout that THROWS when the bus is backed
+          // up, and a drain timeout must fail this one query, not
+          // abort the whole partial-run-containing artifact
+          val m = Metrics.around(spark)(run(fn, sfDir))._2
+          Some((m.wallS, m.runS, m.cpuS))
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           None

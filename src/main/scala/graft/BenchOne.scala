@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query timing probe: run ONE `SparkEntry.queries` entry N
   * times in one JVM and print per-rep seconds. The full [[Bench]]
   * total is the official artifact; this exists because A/B-ing one
@@ -18,34 +16,17 @@ object BenchOne {
     val dir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench-one")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-bench-one")
     val q = SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query '$name'"))
     // same task/cpu attribution as the full Bench (r11): task CPU time
     // is contention-robust, so an A/B on a loaded box compares cpu_s,
     // not wall
-    val taskTimes = new Bench.TaskTimeListener
-    spark.sparkContext.addSparkListener(taskTimes)
     try (1 to reps).foreach { i =>
-      org.apache.spark.graftshim.ListenerShim
-        .drainListenerBus(spark.sparkContext)
-      val (task0, cpu0) = taskTimes.snapshot
-      val t0 = System.nanoTime()
-      val n = q(spark, dir).queryExecution.toRdd.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.graftshim.ListenerShim
-        .drainListenerBus(spark.sparkContext)
-      val (task1, cpu1) = taskTimes.snapshot
-      println(f"[bench-one] $name rep$i: $sec%.3f s " +
-        f"(task ${task1 - task0}%.3f s, cpu ${cpu1 - cpu0}%.3f s, $n rows)")
+      val (n, m) = Metrics.around(spark)(
+        q(spark, dir).queryExecution.toRdd.count())
+      println(f"[bench-one] $name rep$i: ${m.wallS}%.3f s " +
+        f"(task ${m.runS}%.3f s, cpu ${m.cpuS}%.3f s, $n rows)")
     } finally spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit utility: print the formatted physical plan of one or
   * more `SparkEntry.queries` entries without executing them.
   *
@@ -20,14 +18,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Explain <sfDir> <query> [query...]")
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local("graft-explain")
     val names =
       if (args.length == 2 && args(1) == "ALL")
         SparkEntry.queries.keys.toSeq.sorted

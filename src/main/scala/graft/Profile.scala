@@ -1,10 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
-import scala.collection.mutable
-
 /** Per-STAGE attribution probe for one `SparkEntry.queries` entry:
   * runs the query [[reps]] times and prints, for every stage of the
   * LAST rep, its executor run/cpu time, input bytes/records, and
@@ -15,38 +10,12 @@ import scala.collection.mutable
   * Usage: `runMain graft.Profile <sfDir> <query> [reps=2]`
   */
 object Profile {
-  private final case class StageRow(id: Int, name: String, tasks: Int,
-      runMs: Long, cpuNs: Long, inBytes: Long, inRecs: Long,
-      srBytes: Long, swBytes: Long, outRecs: Long)
-
-  private final class StageListener extends SparkListener {
-    val rows = mutable.ArrayBuffer.empty[StageRow]
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-      val si = e.stageInfo
-      val m = si.taskMetrics
-      if (m != null) rows += StageRow(si.stageId, si.name, si.numTasks,
-        m.executorRunTime, m.executorCpuTime,
-        m.inputMetrics.bytesRead, m.inputMetrics.recordsRead,
-        m.shuffleReadMetrics.totalBytesRead,
-        m.shuffleWriteMetrics.bytesWritten,
-        m.outputMetrics.recordsWritten)
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Profile <sfDir> <query> [reps]")
     val dir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-profile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-profile")
     val q = SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query '$name'"))
     try {
@@ -57,29 +26,19 @@ object Profile {
         q(spark, dir).queryExecution.toRdd.count(): Unit
         println(f"[profile] warm rep$i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
       }
-      val lst = new StageListener
-      org.apache.spark.graftshim.ListenerShim
-        .drainListenerBus(spark.sparkContext)
-      spark.sparkContext.addSparkListener(lst)
-      val t0 = System.nanoTime()
-      val n = q(spark, dir).queryExecution.toRdd.count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.graftshim.ListenerShim
-        .drainListenerBus(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(lst)
-      println(f"[profile] $name measured rep: $wall%.3f s wall, $n rows, " +
-        s"${lst.rows.size} stages")
-      val rows = lst.rows.sortBy(-_.cpuNs)
+      val (n, m) = Metrics.around(spark)(
+        q(spark, dir).queryExecution.toRdd.count())
+      println(f"[profile] $name measured rep: ${m.wallS}%.3f s wall, " +
+        s"$n rows, ${m.stages.size} stages")
       println(f"${"stage"}%6s ${"tasks"}%5s ${"run_s"}%8s ${"cpu_s"}%8s " +
         f"${"in_MB"}%8s ${"in_rec"}%10s ${"sh_rd_MB"}%9s ${"sh_wr_MB"}%9s  name")
-      rows.foreach { r =>
+      m.stages.sortBy(-_.cpuNs).foreach { r =>
         println(f"${r.id}%6d ${r.tasks}%5d ${r.runMs / 1e3}%8.3f " +
           f"${r.cpuNs / 1e9}%8.3f ${r.inBytes / 1e6}%8.1f ${r.inRecs}%10d " +
-          f"${r.srBytes / 1e6}%9.2f ${r.swBytes / 1e6}%9.2f  ${r.name.take(110)}")
+          f"${r.shuffleReadBytes / 1e6}%9.2f " +
+          f"${r.shuffleWriteBytes / 1e6}%9.2f  ${r.name.take(110)}")
       }
-      val totCpu = rows.map(_.cpuNs).sum / 1e9
-      val totRun = rows.map(_.runMs).sum / 1e3
-      println(f"[profile] total: run $totRun%.3f s, cpu $totCpu%.3f s")
+      println(f"[profile] total: run ${m.runS}%.3f s, cpu ${m.cpuS}%.3f s")
     } finally spark.stop()
   }
 }

@@ -31,10 +31,6 @@ object Exprs {
     * instant — matching DuckDB's `epoch_ms` on naive timestamps. */
   def epochMs(c: Column): Column = unix_millis(c.cast("timestamp"))
 
-  /** Exact money sum widened to DECIMAL(38,2) so Spark's sum type matches
-    * DuckDB's (DuckDB widens decimal sums to precision 38). */
-  def sumMoney(c: Column): Column = sum(money(c)).cast(DecimalType(38, 2))
-
   /** Money as integer minor units (cents, BIGINT). DECIMAL(18,2) × 100 is
     * an exact integer, so the cast truncates nothing — and downstream
     * sums become plain LONG aggregates (map-side combinable, no decimal

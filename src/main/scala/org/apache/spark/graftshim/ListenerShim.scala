@@ -7,7 +7,7 @@ import org.apache.spark.SparkContext
   * counters around a blocking action must drain the bus first or the
   * tail of one query's tasks is attributed to the next. This shim
   * lives inside the `org.apache.spark` package solely to re-export
-  * that one call for graft's Bench instrumentation. */
+  * that one call for [[graft.Metrics.around]]. */
 object ListenerShim {
   /** Block until every queued listener event has been delivered
     * (bounded by the bus's internal timeout; a timeout is surfaced,

@@ -23,22 +23,33 @@ class MaterializeSpec extends SparkSpec {
   }
 
   test("reliable mode routes through checkpoint() to the checkpoint dir") {
+    val sc = spark.sparkContext
+    val prior = sc.getCheckpointDir
     val dir = java.nio.file.Files.createTempDirectory("graft_mat_ckpt")
-    spark.sparkContext.setCheckpointDir(dir.toString)
-    val ss = Confs.scopedSession(spark,
-      Seq(Materialize.ModeConf -> "reliable"))
-    val lazyOut = Materialize.lazily(ss.range(50).toDF("id"))
-    assert(lazyOut.count() === 50)
-    val eagerOut = Materialize.eagerly(ss.range(7).toDF("id"))
-    assert(eagerOut.count() === 7)
-    // both materializations must have landed files under the
-    // fault-tolerant checkpoint dir (the local mode writes none)
+    sc.setCheckpointDir(dir.toString)
     def files(p: java.io.File): Seq[java.io.File] = {
       val kids = Option(p.listFiles()).map(_.toSeq).getOrElse(Nil)
       kids.filter(_.isFile) ++ kids.filter(_.isDirectory).flatMap(files)
     }
-    assert(files(dir.toFile).nonEmpty,
-      "reliable mode must write to the checkpoint dir")
+    try {
+      val ss = Confs.scopedSession(spark,
+        Seq(Materialize.ModeConf -> "reliable"))
+      val lazyOut = Materialize.lazily(ss.range(50).toDF("id"))
+      assert(lazyOut.count() === 50)
+      val eagerOut = Materialize.eagerly(ss.range(7).toDF("id"))
+      assert(eagerOut.count() === 7)
+      // both materializations must have landed files under the
+      // fault-tolerant checkpoint dir (the local mode writes none)
+      assert(files(dir.toFile).nonEmpty,
+        "reliable mode must write to the checkpoint dir")
+    } finally {
+      // the session is shared across suites: hand back the checkpoint
+      // dir it had (or none) and delete what this test wrote
+      org.apache.spark.graftshim.CheckpointDirShim.restore(sc, prior)
+      scala.util.Using.resource(java.nio.file.Files.walk(dir))(
+        _.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+          .forEach(java.nio.file.Files.delete(_)))
+    }
   }
 
   test("an unknown mode fails loudly, naming the conf") {
