@@ -4,9 +4,12 @@
 # whole round's correctness + bench board. This script is the insurance:
 #   1. sbt compile  (the exact step the driver runs first)
 #   2. sbt test     (full ScalaTest suite)
-#   3. Verify smoke at sf0.001 — every SparkEntry.queries entry runs and
+#   3. perfbench sbt test — the benchmark harness compiles against the
+#      main code (operators.AsOf, plans.NativeAsOf, ...), so a main-code
+#      change that breaks its build or its CheckSpec fails here
+#   4. Verify smoke at sf0.001 — every SparkEntry.queries entry runs and
 #      dumps parquet; any query that throws fails the gate.
-#   4. (optional, if duckdb is importable) oracle compare via
+#   5. (optional, if duckdb is importable) oracle compare via
 #      scripts/check_oracle.py on the same sf0.001 dump.
 # Exit code 0 = safe to snapshot.
 set -euo pipefail
@@ -16,13 +19,16 @@ SF_DIR="${1:-/root/testdata/sf0.001}"
 OUT_DIR="$(mktemp -d /tmp/graft-preflight.XXXXXX)"
 trap 'rm -rf "$OUT_DIR"' EXIT
 
-echo "[preflight] 1/4 sbt compile + Test/compile"
+echo "[preflight] 1/5 sbt compile + Test/compile"
 sbt -batch compile Test/compile
 
-echo "[preflight] 2/4 sbt test"
+echo "[preflight] 2/5 sbt test"
 sbt -batch test
 
-echo "[preflight] 3/4 Verify smoke at $SF_DIR"
+echo "[preflight] 3/5 perfbench sbt test"
+(cd perfbench && sbt -batch test)
+
+echo "[preflight] 4/5 Verify smoke at $SF_DIR"
 VERIFY_LOG="$OUT_DIR/verify.log"
 sbt -batch "runMain graft.Verify $SF_DIR $OUT_DIR" 2>&1 | tee "$VERIFY_LOG" | tail -5
 if grep -q '\[verify\] .* failed' "$VERIFY_LOG"; then
@@ -41,7 +47,7 @@ done
 
 # STRICT when duckdb is importable: any row/schema/hash mismatch fails the
 # gate (this is the driver's gate, locally). Only duckdb's absence is soft.
-echo "[preflight] 4/4 oracle compare (strict if duckdb importable)"
+echo "[preflight] 5/5 oracle compare (strict if duckdb importable)"
 if python3 -c 'import duckdb' 2>/dev/null; then
   python3 scripts/check_oracle.py "$SF_DIR" "$OUT_DIR"
 else

@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one SparkSession factory for every main (Bench, BenchOne,
-  * Explain, Profile, Verify, ScaleRehearsal), so a profile measures
-  * the session the bench measured. */
+/** The one SparkSession factory for every main (Bench, Explain,
+  * Profile, Verify, ScaleRehearsal), so a profile measures the session
+  * the bench measured. */
 object Session {
   /** Executor threads: `$SPARK_GRAFT_CPUS`, else the machine's
     * available processors — the same rule as the benchmark harness

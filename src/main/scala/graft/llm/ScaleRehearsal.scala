@@ -4,7 +4,9 @@ import graft.{Metrics, Session}
 import graft.func.Confs.withSqlConfs
 import org.apache.spark.graftshim.ListenerShim
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StateOperatorProgress, StreamingQuery}
 
 /** Scale rehearsals (VERDICT r9 task 3, extended per VERDICT r10
   * tasks 2/3/5/6) — a standalone main, NOT part of the query board.
@@ -723,6 +725,84 @@ object ScaleRehearsal {
       "constructed truth (vs 0.097% adrift at 8×4 in r10)")
   }
 
+  /** One MemoryStream input of a fed query: its rows for micro-batch
+    * `b` and the far-future sentinels that flush it (none: no flush). */
+  private final case class Feed[A](src: MemoryStream[A],
+      rows: Int => Seq[A], sentinels: Seq[A] = Nil) {
+    def add(b: Int): Unit = src.addData(rows(b))
+    def flush(): Unit = if (sentinels.nonEmpty) src.addData(sentinels)
+  }
+
+  /** What [[feedLoop]] read off one query: feed seconds (flush
+    * excluded), state rows and bytes after each batch, state rows
+    * after the flush (after the last batch when nothing flushes) and
+    * the rows dropped as late. */
+  private final case class Fed(secs: Double, stateRows: Seq[Long],
+      stateBytes: Seq[Long], finalRows: Long, lateDropped: Long)
+
+  /** The streaming sections' feed loop: per micro-batch, add every
+    * side's rows, `processAllAvailable` and record the state; then add
+    * the sentinels, process, read the final state and stop the query.
+    * Rows later than the watermark delay are dropped by Spark's
+    * pre-stateful filter, losing true answers with no error — the
+    * silent failure no operator guard can see (r18-ADVICE). So the
+    * loop sums `numRowsDroppedByWatermark` per batchId after every
+    * feed (one feed can span several batches, which `lastProgress`
+    * alone misses, and the rolling `recentProgress` only has to cover
+    * one feed's batches) and requires zero: every corpus feeds each
+    * side in its own event-time order within the delay, so a drop is
+    * a harness bug. */
+  private def feedLoop(tag: String, q: StreamingQuery, nBatches: Int,
+      sides: Feed[_]*): Fed = try {
+    def state(f: StateOperatorProgress => Long): Long =
+      q.lastProgress.stateOperators.map(f).sum
+    val seen = scala.collection.mutable.Set.empty[Long]
+    var late = 0L
+    def harvest(): Unit = q.recentProgress.foreach { p =>
+      if (seen.add(p.batchId))
+        late += p.stateOperators.map(_.numRowsDroppedByWatermark).sum
+    }
+    val rows = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val bytes = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val t0 = System.nanoTime()
+    (0 until nBatches).foreach { b =>
+      sides.foreach(_.add(b))
+      q.processAllAvailable()
+      rows += state(_.numRowsTotal)
+      bytes += state(_.memoryUsedBytes)
+      harvest()
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    if (sides.exists(_.sentinels.nonEmpty)) {
+      sides.foreach(_.flush())
+      q.processAllAvailable()
+      harvest()
+    }
+    require(late == 0L, s"$tag: the watermark late-drop filter removed " +
+      s"$late rows from a corpus fed in per-side event-time order")
+    Fed(secs, rows.toSeq, bytes.toSeq, state(_.numRowsTotal), late)
+  } finally q.stop()
+
+  /** Starts `df` into an append-mode memory sink read as `view`. */
+  private def memorySink(df: DataFrame, view: String): StreamingQuery =
+    df.writeStream.format("memory").queryName(view).outputMode("append")
+      .start()
+
+  /** The RocksDB state store, as the conf pair that selects it (the
+    * default is the HDFS-backed store). */
+  private val RocksStore = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** (count, XOR of (l_id, r_id) hashes) of a pair frame: order-
+    * independent and (unlike a sum) immune to ANSI long overflow at
+    * any pair count; the exactly-once property that makes XOR sound is
+    * spec-proven. */
+  private def pairSig(pairs: DataFrame): (Long, Long) = {
+    val r = pairs.agg(count(lit(1)),
+      coalesce(expr("bit_xor(xxhash64(l_id, r_id))"), lit(0L))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
   // ---- (stream) stateful streaming throughput + batch parity -------
 
   /** Synthetic event row for the streaming rehearsal (a stable
@@ -731,7 +811,6 @@ object ScaleRehearsal {
     value: Double, ts: java.sql.Timestamp)
 
   private def streamSection(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
     println("[scale] === streaming rehearsal (5M events, MemoryStream) ===")
@@ -764,39 +843,26 @@ object ScaleRehearsal {
     // production knob when per-batch state-commit latency dominates,
     // which it does at this batch size) --------------------------------
     val sentinelTs = base + 1000000000L
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val defaultProvider = spark.conf.get(providerKey)
-    val rocks = "org.apache.spark.sql.execution.streaming" +
-      ".state.RocksDBStateStoreProvider"
     // returns (secs, streamed window groups) — the output map is
     // collected INSIDE the run, from a per-tag view name, so the
     // second provider's run cannot clobber the first's sink before
     // parity is adjudicated (earlier shape parity-checked only the
     // last provider despite the A/B framing)
-    def runTumble(tag: String, provider: Option[String])
-        : (Double, Map[(Long, Long, String), (Long, Double)]) = {
-      provider.foreach(spark.conf.set(providerKey, _))
-      try {
+    def runTumble(tag: String, store: Option[(String, String)])
+        : (Double, Map[(Long, Long, String), (Long, Double)]) =
+      withSqlConfs(spark)(store.toSeq: _*) {
         val src = MemoryStream[RehEv]
         val view = "scale_vt_" + tag.replaceAll("[^a-zA-Z0-9]", "_")
-        val q = graft.streaming.StreamJobs.visitorTumble(src.toDF())
-          .writeStream.format("memory").queryName(view)
-          .outputMode("append").start()
-        val t0 = System.nanoTime()
-        batches.foreach { data =>
-          src.addData(data)
-          q.processAllAvailable()
-        }
-        val secs = (System.nanoTime() - t0) / 1e9
+        val q = memorySink(
+          graft.streaming.StreamJobs.visitorTumble(src.toDF()), view)
         // far-future sentinel drives the watermark past every window
-        src.addData(RehEv(nEvents, 0L, "view", 0.0,
-          new java.sql.Timestamp(sentinelTs)))
-        q.processAllAvailable()
-        val vtState = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-        q.stop()
+        val fed = feedLoop(s"visitorTumble[$tag]", q, nBatches,
+          Feed(src, batches, Seq(RehEv(nEvents, 0L, "view", 0.0,
+            new java.sql.Timestamp(sentinelTs)))))
+        val secs = fed.secs
         println(f"[scale] visitorTumble[$tag]: $nEvents events in " +
           f"$secs%.1f s = ${nEvents / secs / 1e6}%.2f M rows/s " +
-          s"($nBatches micro-batches, final state rows $vtState)")
+          s"($nBatches micro-batches, final state rows ${fed.finalRows})")
         val out = spark.table(view)
           .filter(unix_millis(col("stt")) < sentinelTs - 10000)
           .select(unix_millis(col("stt")), col("ar"), col("ch"),
@@ -804,10 +870,8 @@ object ScaleRehearsal {
           .as[(Long, Long, String, Long, Double)].collect()
           .map(r => (r._1, r._2, r._3) -> (r._4, r._5)).toMap
         (secs, out)
-      } finally provider.foreach(_ => spark.conf.set(providerKey,
-        defaultProvider))
-    }
-    val (_, streamedRocks) = runTumble("rocksdb", Some(rocks))
+      }
+    val (_, streamedRocks) = runTumble("rocksdb", Some(RocksStore))
     val (_, streamed) = runTumble("default-hdfs", None)
     // the batch twin of visitorTumble's aggregate, minus the watermark
     val batchAgg = batchEvents
@@ -830,17 +894,10 @@ object ScaleRehearsal {
 
     // --- uvDedup: watermark-evicted keyed dedup state ---------------
     val src2 = MemoryStream[RehEv]
-    val q2 = graft.streaming.StreamJobs.uvDedup(src2.toDF())
-      .writeStream.format("memory").queryName("scale_uv")
-      .outputMode("append").start()
-    val t1 = System.nanoTime()
-    batches.foreach { data =>
-      src2.addData(data)
-      q2.processAllAvailable()
-    }
-    val secs2 = (System.nanoTime() - t1) / 1e9
-    val uvState = q2.lastProgress.stateOperators.map(_.numRowsTotal).sum
-    q2.stop()
+    val q2 = memorySink(
+      graft.streaming.StreamJobs.uvDedup(src2.toDF()), "scale_uv")
+    val uvFed = feedLoop("uvDedup", q2, nBatches, Feed(src2, batches))
+    val (secs2, uvState) = (uvFed.secs, uvFed.finalRows)
     val uv = spark.table("scale_uv").select(col("mid")).distinct().count()
     println(f"[scale] uvDedup: $nEvents events in $secs2%.1f s = " +
       f"${nEvents / secs2 / 1e6}%.2f M rows/s (state rows $uvState " +
@@ -1089,7 +1146,7 @@ object ScaleRehearsal {
       .filter(l => l.contains("Join")).map(_.trim.take(100))
       .mkString(" | ")
 
-  /** toRdd.count() (the BenchOne device) evaluates THIS df's full
+  /** toRdd.count() (the Profile device) evaluates THIS df's full
     * plan — no column pruning (a bare Dataset.count() lets Catalyst
     * skip the scoring expressions) — and finalizes its AQE plan so
     * [[joins]] reads what actually ran. */
@@ -1253,7 +1310,6 @@ object ScaleRehearsal {
     rval: Double)
 
   private def streamJoinSection(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
     println("[scale] === stream-stream interval-join rehearsal " +
@@ -1282,25 +1338,14 @@ object ScaleRehearsal {
         lo, hi, delay = "10 seconds")
         .select(col("l_id"), col("r_id"), col("lkey"))
       val view = "scale_sj_" + tag
-      val q = joined.writeStream.format("memory").queryName(view)
-        .outputMode("append").start()
-      val states = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val t0 = System.nanoTime()
-      (0 until nBatches).foreach { b =>
-        lSrc.addData(lRows(b))
-        rSrc.addData(rRows(b))
-        q.processAllAvailable()
-        states += q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-      }
-      val secs = (System.nanoTime() - t0) / 1e9
+      val q = memorySink(joined, view)
       // sentinels on BOTH sides drive both watermarks past every row;
       // disjoint negative keys so they can never join
       val far = new java.sql.Timestamp(base + 4000000000L)
-      lSrc.addData(RehL(-1L, -1L, far, 0.0))
-      rSrc.addData(RehR(-2L, -2L, far, 0.0))
-      q.processAllAvailable()
-      val finalState = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-      q.stop()
+      val fed = feedLoop(s"intervalJoin[$tag]", q, nBatches,
+        Feed(lSrc, lRows, Seq(RehL(-1L, -1L, far, 0.0))),
+        Feed(rSrc, rRows, Seq(RehR(-2L, -2L, far, 0.0))))
+      val (secs, states, finalState) = (fed.secs, fed.stateRows, fed.finalRows)
       val horizonRows = 2 * (per + horizonS * 1000 / stepMs)
       println(f"[scale] intervalJoin[$tag]: ${2 * nPerSide} events in " +
         f"$secs%.1f s = ${2 * nPerSide / secs / 1e6}%.2f M rows/s; " +
@@ -1335,12 +1380,8 @@ object ScaleRehearsal {
         "joined pairs EXACTLY equal the batch run of the same body")
     }
 
-    def chunk[A](xs: Seq[A], nBatches: Int): IndexedSeq[Seq[A]] = {
-      val per = xs.size / nBatches
-      (0 until nBatches).map(b =>
-        if (b == nBatches - 1) xs.drop(b * per)
-        else xs.slice(b * per, (b + 1) * per))
-    }
+    def chunk[A](xs: Seq[A], nb: Int): IndexedSeq[Seq[A]] =
+      (0 until nb).map(b => xs.slice(xs.size * b / nb, xs.size * (b + 1) / nb))
 
     // J1 twin (OrderWideApp2 order×detail ±5 s): 1 kHz event time,
     // right jitter sweeps ±9 s (inside the 10 s delay, so nothing is
@@ -1385,173 +1426,95 @@ object ScaleRehearsal {
     }
   }
 
-  /** Streaming as-of join at volume: state must plateau at
-    * O(keys + rate × delay) — the retained-latest-right dimension
-    * residue plus the watermark-transient buffers — NEVER O(events).
-    * Two ingest sizes with FIXED micro-batch size (so the watermark
-    * lag buffers the same transient either way): peak state bytes at
-    * 2× the events must stay ~flat, the post-flush state must equal
-    * one retained right per key, and the streamed output must equal
-    * the batch composition row-for-row (nulls included). */
+  /** Streaming as-of join at volume, one runner over the three
+    * directions ([[graft.streaming.StreamJobs.asOfLatest]] /
+    * `asOfNext` / `asOfNearest`, tolerance 40 s for the last two).
+    * State must plateau — NEVER O(events): two ingest sizes with FIXED
+    * micro-batch size (so the watermark lag buffers the same transient
+    * either way) must give ~flat peak state bytes at 2× the events;
+    * the post-flush state must be the direction's residue (backward:
+    * one retained right per key plus the sentinel keys; forward and
+    * nearest: NO residue, the sentinel keys alone); and the streamed
+    * output at 0.5M must equal `asOfDirection` on the same rows
+    * row-for-row (nulls included). */
   private def streamAsOfSection(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
     println("[scale] === streaming as-of rehearsal (MemoryStream) ===")
     val base = 1616300000000L
     val keys = 1000L
     val perBatch = 100000L
-
-    // (peak state bytes, final state rows) for nLefts + nLefts/4 rights
-    def run(nLefts: Long, checkParity: Boolean): (Long, Long) = {
-      val nRights = nLefts / 4
-      val nb = (nLefts / perBatch).toInt
-      val lSrc = MemoryStream[RehL]
-      val rSrc = MemoryStream[RehR]
-      val view = s"scale_asof_$nLefts"
-      val q = graft.streaming.StreamJobs.asOfLatest(
-          lSrc.toDF(), rSrc.toDF(), "lkey", "rkey", "lts", "rts",
-          "l_id", "r_id", delay = "10 seconds")
-        .writeStream.format("memory").queryName(view)
-        .outputMode("append").start()
-      val mem = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val t0 = System.nanoTime()
-      (0 until nb).foreach { b =>
-        val (l0, l1) = (nLefts * b / nb, nLefts * (b + 1) / nb)
-        lSrc.addData((l0 until l1).map(i =>
-          RehL(i, i % keys, new java.sql.Timestamp(base + i), 0.0)))
-        val (r0, r1) = (nRights * b / nb, nRights * (b + 1) / nb)
-        rSrc.addData((r0 until r1).map(j =>
-          RehR(j, j % keys, new java.sql.Timestamp(base + j * 4), 0.0)))
-        q.processAllAvailable()
-        mem += q.lastProgress.stateOperators.map(_.memoryUsedBytes).sum
-      }
-      val secs = (System.nanoTime() - t0) / 1e9
-      // sentinels on both sides push the watermark past every real row
-      val far = new java.sql.Timestamp(base + 4000000000L)
-      lSrc.addData(RehL(-1L, -1L, far, 0.0))
-      rSrc.addData(RehR(-2L, -2L, far, 0.0))
-      q.processAllAvailable()
-      val finalRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-      q.stop()
-      val total = nLefts + nRights
-      println(f"[scale] asOf[$nLefts]: $total events in $secs%.1f s = " +
-        f"${total / secs / 1e6}%.2f M rows/s; peak state " +
-        f"${mem.max / 1024 / 1024}%d MiB; post-flush rows $finalRows " +
-        s"(keys $keys)")
-      // post-flush state = ONE retained right per key + the two
-      // sentinel keys' rows — the dimension residue, not event history
-      require(finalRows >= keys && finalRows <= keys + 10,
-        s"post-flush state $finalRows != dimension residue ~$keys")
-      if (checkParity) {
-        val streamed = spark.table(view).filter(col("left_id") >= 0)
-          .select(col("left_id"), col("payload"))
-        val lDf = spark.range(nLefts).select(col("id").as("l_id"),
-          (col("id") % keys).as("lk"), (lit(base) + col("id")).as("lms"))
-        val rDf = spark.range(nRights).select(col("id").as("r_id"),
-          (col("id") % keys).as("rk"), (lit(base) + col("id") * 4).as("rms"))
-        val batch = graft.operators.AsOf
-          .asOf(lDf, rDf, "lk", "rk", "lms", "rms", Seq("r_id"))
-          .select(col("l_id").as("left_id"), col("r_id").as("payload"))
-        val missing = batch.exceptAll(streamed).count()
-        val extra = streamed.exceptAll(batch).count()
-        require(missing == 0 && extra == 0,
-          s"stream/batch as-of parity broken: $missing missing, $extra extra")
-        println(s"[scale] asOf[$nLefts] parity: $nLefts streamed rows " +
-          "EXACTLY equal the batch composition (nulls included)")
-      }
-      (mem.max, finalRows)
-    }
-
-    val (peak1, _) = run(500000L, checkParity = true)
-    val (peak2, _) = run(1000000L, checkParity = false)
-    println(f"[scale] asOf peak state: ${peak1 / 1024}%d KiB at 0.5M vs " +
-      f"${peak2 / 1024}%d KiB at 1M lefts (ratio ${peak2.toDouble / peak1}%.2f)")
-    require(peak2 <= (peak1 * 3) / 2,
-      s"as-of state grew with TOTAL events ($peak1 -> $peak2 bytes); " +
-        "expected watermark-bounded transient + per-key residue")
-
-    // directional legs (r15 forward, r16 nearest): same corpus through
-    // StreamJobs.asOfNext / asOfNearest — the claims under measurement
-    // are (a) NO residue: post-flush state is the sentinel keys alone,
-    // not ~keys rows, and (b) peak state is watermark/tolerance-
-    // bounded, flat across 2× events. One parameterized runner: the
-    // legs differ only in operator, batch-oracle direction, and tag.
     val dirTol = 40000L
-    def runDir(tag: String, direction: String,
-        stream: (DataFrame, DataFrame) => DataFrame)(
-        nLefts: Long, checkParity: Boolean): (Long, Long) = {
-      val nRights = nLefts / 4
-      val nb = (nLefts / perBatch).toInt
-      val lSrc = MemoryStream[RehL]
-      val rSrc = MemoryStream[RehR]
-      val view = s"scale_asof_${tag}_$nLefts"
-      val q = stream(lSrc.toDF(), rSrc.toDF())
-        .writeStream.format("memory").queryName(view)
-        .outputMode("append").start()
-      val mem = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val t0 = System.nanoTime()
-      (0 until nb).foreach { b =>
-        val (l0, l1) = (nLefts * b / nb, nLefts * (b + 1) / nb)
-        lSrc.addData((l0 until l1).map(i =>
-          RehL(i, i % keys, new java.sql.Timestamp(base + i), 0.0)))
-        val (r0, r1) = (nRights * b / nb, nRights * (b + 1) / nb)
-        rSrc.addData((r0 until r1).map(j =>
-          RehR(j, j % keys, new java.sql.Timestamp(base + j * 4), 0.0)))
-        q.processAllAvailable()
-        mem += q.lastProgress.stateOperators.map(_.memoryUsedBytes).sum
+    // one direction at 0.5M then 1M lefts (and a quarter as many
+    // rights): parity at 0.5M, then the peak state bytes compared
+    def leg(tag: String, direction: String, tol: Long,
+        residue: (Long, Long))(
+        stream: (DataFrame, DataFrame) => DataFrame): Unit = {
+      val Seq(p1, p2) = Seq(500000L, 1000000L).map { nLefts =>
+        val nRights = nLefts / 4
+        val nb = (nLefts / perBatch).toInt
+        val lSrc = MemoryStream[RehL]
+        val rSrc = MemoryStream[RehR]
+        val view = s"scale_${tag}_$nLefts"
+        val q = memorySink(stream(lSrc.toDF(), rSrc.toDF()), view)
+        // sentinels on both sides push the watermark past every row
+        val far = new java.sql.Timestamp(base + 4000000000L)
+        def slice(n: Long, b: Int) = n * b / nb until n * (b + 1) / nb
+        val fed = feedLoop(s"$tag[$nLefts]", q, nb,
+          Feed(lSrc, b => slice(nLefts, b).map(i =>
+            RehL(i, i % keys, new java.sql.Timestamp(base + i), 0.0)),
+            Seq(RehL(-1L, -1L, far, 0.0))),
+          Feed(rSrc, b => slice(nRights, b).map(j =>
+            RehR(j, j % keys, new java.sql.Timestamp(base + j * 4), 0.0)),
+            Seq(RehR(-2L, -2L, far, 0.0))))
+        val total = nLefts + nRights
+        println(f"[scale] $tag[$nLefts]: $total events in ${fed.secs}%.1f " +
+          f"s = ${total / fed.secs / 1e6}%.2f M rows/s; peak state " +
+          f"${fed.stateBytes.max / 1024 / 1024}%d MiB; post-flush rows " +
+          s"${fed.finalRows} (keys $keys)")
+        require(fed.finalRows >= residue._1 && fed.finalRows <= residue._2,
+          s"$tag post-flush state ${fed.finalRows} outside its residue " +
+            s"$residue — event history kept, or the residue lost")
+        if (nLefts == 500000L) {
+          val streamed = spark.table(view).filter(col("left_id") >= 0)
+            .select(col("left_id"), col("payload"))
+          val lDf = spark.range(nLefts).select(col("id").as("l_id"),
+            (col("id") % keys).as("lk"), (lit(base) + col("id")).as("lms"))
+          val rDf = spark.range(nRights).select(col("id").as("r_id"),
+            (col("id") % keys).as("rk"),
+            (lit(base) + col("id") * 4).as("rms"))
+          val batch = graft.operators.AsOf
+            .asOfDirection(lDf, rDf, "lk", "rk", "lms", "rms",
+              Seq("r_id"), direction, tol)
+            .select(col("l_id").as("left_id"), col("r_id").as("payload"))
+          val missing = batch.exceptAll(streamed).count()
+          val extra = streamed.exceptAll(batch).count()
+          require(missing == 0 && extra == 0, s"stream/batch $tag parity " +
+            s"broken: $missing missing, $extra extra")
+          println(s"[scale] $tag[$nLefts] parity: $nLefts streamed rows " +
+            s"EXACTLY equal asOfDirection($direction, tol $tol), nulls " +
+            "included")
+        }
+        fed.stateBytes.max
       }
-      val secs = (System.nanoTime() - t0) / 1e9
-      val far = new java.sql.Timestamp(base + 4000000000L)
-      lSrc.addData(RehL(-1L, -1L, far, 0.0))
-      rSrc.addData(RehR(-2L, -2L, far, 0.0))
-      q.processAllAvailable()
-      val finalRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-      q.stop()
-      val total = nLefts + nRights
-      println(f"[scale] $tag[$nLefts]: $total events in $secs%.1f s = " +
-        f"${total / secs / 1e6}%.2f M rows/s; peak state " +
-        f"${mem.max / 1024 / 1024}%d MiB; post-flush rows $finalRows")
-      require(finalRows <= 4,
-        s"$tag as-of must keep NO residue, got $finalRows state rows")
-      if (checkParity) {
-        val streamed = spark.table(view).filter(col("left_id") >= 0)
-          .select(col("left_id"), col("payload"))
-        val lDf = spark.range(nLefts).select(col("id").as("l_id"),
-          (col("id") % keys).as("lk"), (lit(base) + col("id")).as("lms"))
-        val rDf = spark.range(nRights).select(col("id").as("r_id"),
-          (col("id") % keys).as("rk"), (lit(base) + col("id") * 4).as("rms"))
-        val batch = graft.operators.AsOf
-          .asOfDirection(lDf, rDf, "lk", "rk", "lms", "rms",
-            Seq("r_id"), direction, dirTol)
-          .select(col("l_id").as("left_id"), col("r_id").as("payload"))
-        val missing = batch.exceptAll(streamed).count()
-        val extra = streamed.exceptAll(batch).count()
-        require(missing == 0 && extra == 0,
-          s"stream/batch $tag-as-of parity broken: $missing missing, " +
-            s"$extra extra")
-        println(s"[scale] $tag[$nLefts] parity: $nLefts streamed rows " +
-          s"EXACTLY equal asOfDirection($direction, tol)")
-      }
-      (mem.max, finalRows)
+      println(f"[scale] $tag peak state: ${p1 / 1024}%d KiB at 0.5M vs " +
+        f"${p2 / 1024}%d KiB at 1M lefts (ratio ${p2.toDouble / p1}%.2f)")
+      require(p2 <= (p1 * 3) / 2,
+        s"$tag state grew with TOTAL events ($p1 -> $p2 bytes); " +
+          "expected watermark-bounded transient + per-key residue")
     }
-    Seq(
-      ("asOfNext", "forward",
-        (l: DataFrame, r: DataFrame) => graft.streaming.StreamJobs.asOfNext(
-          l, r, "lkey", "rkey", "lts", "rts", "l_id", "r_id",
-          tolMs = dirTol, delay = "10 seconds")),
-      ("asOfNearest", "nearest",
-        (l: DataFrame, r: DataFrame) => graft.streaming.StreamJobs.asOfNearest(
-          l, r, "lkey", "rkey", "lts", "rts", "l_id", "r_id",
-          tolMs = dirTol, delay = "10 seconds"))
-    ).foreach { case (tag, direction, stream) =>
-      val (fp1, _) = runDir(tag, direction, stream)(500000L, checkParity = true)
-      val (fp2, _) = runDir(tag, direction, stream)(1000000L, checkParity = false)
-      println(f"[scale] $tag peak state: ${fp1 / 1024}%d KiB at 0.5M vs " +
-        f"${fp2 / 1024}%d KiB at 1M lefts (ratio ${fp2.toDouble / fp1}%.2f)")
-      require(fp2 <= (fp1 * 3) / 2,
-        s"$tag as-of state grew with TOTAL events ($fp1 -> $fp2 bytes)")
-    }
+    import graft.streaming.StreamJobs
+    // backward: post-flush state is ONE retained right per key plus
+    // the sentinel keys — the dimension residue, not event history
+    leg("asOf", "backward", Long.MaxValue, (keys, keys + 10))(
+      StreamJobs.asOfLatest(_, _, "lkey", "rkey", "lts", "rts", "l_id",
+        "r_id", delay = "10 seconds"))
+    leg("asOfNext", "forward", dirTol, (0L, 4L))(
+      StreamJobs.asOfNext(_, _, "lkey", "rkey", "lts", "rts", "l_id",
+        "r_id", dirTol, "10 seconds"))
+    leg("asOfNearest", "nearest", dirTol, (0L, 4L))(
+      StreamJobs.asOfNearest(_, _, "lkey", "rkey", "lts", "rts", "l_id",
+        "r_id", dirTol, "10 seconds"))
   }
 
   // ---- (streamoverlap) stream-stream interval-overlap at volume ----
@@ -1576,7 +1539,6 @@ object ScaleRehearsal {
     * side phase-shifted — ~4 true partners per interval, pair output
     * ∝ events, never quadratic. */
   private def streamOverlapSection(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
     println("[scale] === stream-stream interval-overlap rehearsal " +
@@ -1602,70 +1564,26 @@ object ScaleRehearsal {
       val lSrc = MemoryStream[RehOv]
       val rSrc = MemoryStream[RehOv]
       val view = s"scale_ovl_$n"
-      val q = graft.streaming.StreamJobs.intervalOverlapStream(
+      val q = memorySink(graft.streaming.StreamJobs.intervalOverlapStream(
           lSrc.toDF(), rSrc.toDF(), "id", "lo", "hi", "id", "lo", "hi",
           bucketWidthMs = widthMs, maxSpanMs = spanMs,
-          delay = "10 seconds")
-        .writeStream.format("memory").queryName(view)
-        .outputMode("append").start()
-      val buckets = scala.collection.mutable.ArrayBuffer.empty[Long]
-      val mem = scala.collection.mutable.ArrayBuffer.empty[Long]
-      // late drops harvested per FEED ITERATION from recentProgress,
-      // deduped by batchId: one iteration can span several batches
-      // (lastProgress alone misses the early ones), and the rolling
-      // 100-entry recentProgress buffer only has to cover ONE
-      // iteration's batches between harvests — so the guard survives
-      // arbitrarily long runs (review r19, both passes)
-      val seenBatches = scala.collection.mutable.Set.empty[Long]
-      var lateDropped = 0L
-      def harvestDrops(): Unit = q.recentProgress.foreach { p =>
-        if (seenBatches.add(p.batchId))
-          lateDropped +=
-            p.stateOperators.map(_.numRowsDroppedByWatermark).sum
-      }
-      val t0 = System.nanoTime()
-      (0 until nb).foreach { b =>
-        val (i0, i1) = (n * b / nb, n * (b + 1) / nb)
-        lSrc.addData((i0 until i1).map(lRow))
-        rSrc.addData((i0 until i1).map(rRow))
-        q.processAllAvailable()
-        buckets += q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-        mem += q.lastProgress.stateOperators.map(_.memoryUsedBytes).sum
-        harvestDrops()
-      }
-      val secs = (System.nanoTime() - t0) / 1e9
+          delay = "10 seconds"), view)
       val far = new java.sql.Timestamp(base + 4000000000L)
-      lSrc.addData(RehOv(-1L, far, far))
-      rSrc.addData(RehOv(-2L, far, far))
-      q.processAllAvailable()
-      val finalBuckets =
-        q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-      harvestDrops() // sentinel-flush batches included
-      q.stop()
-      // count + XOR of pair hashes: order-independent and (unlike a
-      // sum) immune to ANSI long overflow at any pair count; the
-      // exactly-once property that makes XOR sound is spec-proven
-      val sig = spark.table(view).filter(col("l_id") >= 0)
-        .agg(count(lit(1)), coalesce(
-          expr("bit_xor(xxhash64(l_id, r_id))"), lit(0L)))
-        .as[(Long, Long)].collect()(0)
+      def slice(b: Int) = n * b / nb until n * (b + 1) / nb
+      val fed = feedLoop(s"overlap[$n]", q, nb,
+        Feed(lSrc, b => slice(b).map(lRow), Seq(RehOv(-1L, far, far))),
+        Feed(rSrc, b => slice(b).map(rRow), Seq(RehOv(-2L, far, far))))
+      val (secs, buckets, mem, finalBuckets) =
+        (fed.secs, fed.stateRows, fed.stateBytes, fed.finalRows)
+      val sig = pairSig(spark.table(view).filter(col("l_id") >= 0))
       // drop the sink view — it pins the full pair set otherwise
       spark.catalog.dropTempView(view)
       println(f"[scale] overlap[$n]: ${2 * n} events in $secs%.1f s = " +
         f"${2 * n / secs / 1e6}%.2f M rows/s; ${sig._1} pairs; peak " +
-        s"state ${mem.max / 1024} KiB (p90 ${p90Of(mem.toSeq) / 1024} " +
+        s"state ${mem.max / 1024} KiB (p90 ${p90Of(mem) / 1024} " +
         s"KiB) in ${buckets.max} buckets; " +
         s"post-flush $finalBuckets buckets; " +
-        s"late-dropped $lateDropped rows")
-      // the silent failure mode the operator's span guard CANNOT see
-      // (r18-ADVICE): rows later than the watermark delay are dropped
-      // by Spark's pre-stateful filter, losing true pairs with no
-      // error — surfaced here so an ordering violation shows up in
-      // the measurement record; this corpus is in-order, so any drop
-      // is a harness bug
-      require(lateDropped == 0L,
-        s"watermark late-drop filter removed $lateDropped rows from " +
-          "an in-order corpus")
+        s"late-dropped ${fed.lateDropped} rows")
       require(buckets.max < n,
         s"overlap state ${buckets.max} buckets is O(events)")
       require(finalBuckets <= 2,
@@ -1687,7 +1605,7 @@ object ScaleRehearsal {
       // min-of-2-reps (below) keeps one unlucky maintenance window
       // from tripping it.
       val memMed = mem.sorted.apply(mem.size / 2)
-      (memMed, p90Of(mem.toSeq), buckets.max, finalBuckets, sig)
+      (memMed, p90Of(mem), buckets.max, finalBuckets, sig)
     }
 
     // min-of-2 plateau on the state statistics (the repo's
@@ -1739,11 +1657,8 @@ object ScaleRehearsal {
       (lit(base) + col("id") * 4 + 2).as("r_lo"),
       (lit(base) + col("id") * 4 + 2 + (col("id") * 7) % (spanMs + 1))
         .as("r_hi"))
-    val batchSig = graft.operators.RangeJoin.intervalOverlap(
-        lDf, rDf, "l_lo", "l_hi", "r_lo", "r_hi", widthMs)
-      .agg(count(lit(1)), coalesce(
-        expr("bit_xor(xxhash64(l_id, r_id))"), lit(0L)))
-      .as[(Long, Long)].collect()(0)
+    val batchSig = pairSig(graft.operators.RangeJoin.intervalOverlap(
+      lDf, rDf, "l_lo", "l_hi", "r_lo", "r_hi", widthMs))
     require(sig1 == batchSig,
       s"stream/batch overlap parity broken: streamed $sig1 vs " +
         s"batch $batchSig (count, hash-xor)")
@@ -1757,19 +1672,13 @@ object ScaleRehearsal {
     // version retention — the source of the max-statistic spikes
     // fixed above — is also a cpu story. No gate: provider cost is an
     // environment knob, not an operator property.
-    locally {
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      val prior = spark.conf.get(providerKey)
-      spark.conf.set(providerKey, "org.apache.spark.sql.execution." +
-        "streaming.state.RocksDBStateStoreProvider")
-      try {
-        val (med, p90, k, _, sig) = run(500000L)
-        require(sig == sig1,
-          s"RocksDB provider changed the answer: $sig vs $sig1")
-        println(f"[scale] overlap RocksDB A/B: median ${med / 1024}%d " +
-          f"KiB (p90 ${p90 / 1024}%d) / $k%d buckets — signature " +
-          "identical to the HDFS-backed runs")
-      } finally spark.conf.set(providerKey, prior)
+    withSqlConfs(spark)(RocksStore) {
+      val (med, p90, k, _, sig) = run(500000L)
+      require(sig == sig1,
+        s"RocksDB provider changed the answer: $sig vs $sig1")
+      println(f"[scale] overlap RocksDB A/B: median ${med / 1024}%d " +
+        f"KiB (p90 ${p90 / 1024}%d) / $k%d buckets — signature " +
+        "identical to the HDFS-backed runs")
     }
   }
 
@@ -1820,7 +1729,6 @@ object ScaleRehearsal {
     * corpus, unsalted); this section measures only the crowd the sf
     * data cannot produce. */
   private def streamOverlapSaltSection(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
     println("[scale] === streaming overlap same-range crowd " +
@@ -1849,22 +1757,17 @@ object ScaleRehearsal {
         // signature accumulated per batch in the operator's own
         // tasks (count + order-independent pair-hash XOR) — a raw
         // 64M-pair sink would bury the yield cost under IO
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          val r = b.agg(count(lit(1)), coalesce(
-            expr("bit_xor(xxhash64(l_id, r_id))"), lit(0L))).collect()(0)
-          cnt += r.getLong(0); xorAcc ^= r.getLong(1)
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          val (c, x) = pairSig(b)
+          cnt += c; xorAcc ^= x
         }.start()
       // two batches: the second's lefts must pair with the first's
       // buffered rights INSIDE their grid cell (cross-batch state)
-      (0 until 2).foreach { b =>
-        lSrc.addData(lRows.slice(b * C / 2, (b + 1) * C / 2))
-        rSrc.addData(rRows.slice(b * C / 2, (b + 1) * C / 2))
-        q.processAllAvailable()
-      }
-      val bytes = q.lastProgress.stateOperators.map(_.memoryUsedBytes).sum
-      val keys = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-      q.stop()
-      (cnt, xorAcc, bytes, keys)
+      def half(rows: IndexedSeq[RehOv])(b: Int) =
+        rows.slice(b * C / 2, (b + 1) * C / 2)
+      val fed = feedLoop(s"crowd($sl,$sr)", q, 2,
+        Feed(lSrc, half(lRows)), Feed(rSrc, half(rRows)))
+      (cnt, xorAcc, fed.stateBytes.last, fed.finalRows)
     }
     // codegen/state-store warmup on a tiny crowd (all variants)
     Seq((1, 1), (16, 1), (4, 4)).foreach { case (sl, sr) =>
@@ -1873,8 +1776,8 @@ object ScaleRehearsal {
           s.toDF(), r.toDF(), "id", "lo", "hi", "id", "lo", "hi",
           widthMs, spanMs, "1 hour", sl, sr)
         .writeStream.format("noop").outputMode("append").start()
-      s.addData(lRows.take(50)); r.addData(rRows.take(50))
-      wq.processAllAvailable(); wq.stop()
+      feedLoop(s"warm-up($sl,$sr)", wq, 1,
+        Feed(s, _ => lRows.take(50)), Feed(r, _ => rRows.take(50)))
     }
     // min-of-2 plateau on the max task AND the state bytes (the
     // repo's adjudication rule — the HDFS store's memoryUsedBytes

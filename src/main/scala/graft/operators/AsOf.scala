@@ -35,63 +35,22 @@ import graft.func.Exprs
 object AsOf {
   /** Generic as-of join. `payload` columns from `right` are appended
     * to every `left` row (all null when no right row precedes it).
-    *
-    * The payload travels as ONE struct column: `last(ignoreNulls)`
-    * applied per payload column would backfill a NULL field of the
-    * latest right row from OLDER right rows — a row that exists
-    * nowhere on the right. The struct is non-null exactly on right
-    * rows (even when every field inside is null), so the running last
-    * picks the latest right ROW atomically, matching ASOF-join
-    * semantics. Right rows with a null key OR null time are dropped up
-    * front (an equi-key never matches on null, and `t >= null` is
-    * never true — nulls-first window order would otherwise make such a
-    * row everyone's oldest match); null-key left rows survive with a
-    * null payload. */
+    * `asOf` is [[asOfDirection]]'s `backward` direction at its
+    * default (infinite) tolerance — one device, so the two cannot
+    * drift; it reserves the same internal names. */
   def asOf(left: DataFrame, right: DataFrame,
            leftKey: String, rightKey: String,
            leftTime: String, rightTime: String,
-           payload: Seq[String]): DataFrame = {
-    val leftCols = left.columns.toSeq
-    require(payload.forall(c => !leftCols.contains(c)),
-      s"payload ${payload.mkString(",")} collides with left columns")
-    // the internal tag/key columns would be silently shadowed (wrong
-    // results, not an analyzer error) if either input already uses them
-    val reserved = Seq("__k", "__t", "__side", "__p")
-    val clash = (left.columns ++ right.columns).filter(reserved.contains)
-    require(clash.isEmpty,
-      s"input columns ${clash.mkString(",")} collide with asOf-internal " +
-        s"names (${reserved.mkString(",")}) — rename them before joining")
-    val lSchema = left.schema
-    val payloadStruct = struct(payload.map(col): _*)
-    val lSide = left.select(
-      col(leftKey).as("__k") +: col(leftTime).as("__t") +:
-        lit(1).as("__side") +: (leftCols.map(col) :+
-        lit(null).cast(right.select(payloadStruct).schema.head.dataType)
-          .as("__p")): _*)
-    val rSide = right
-      .filter(col(rightKey).isNotNull && col(rightTime).isNotNull)
-      .select(
-      col(rightKey).as("__k") +: col(rightTime).as("__t") +:
-        lit(0).as("__side") +:
-        (leftCols.map(c => lit(null).cast(lSchema(c).dataType).as(c)) :+
-          payloadStruct.as("__p")): _*)
-    // right rows (side 0) sort before left rows at equal time, so an
-    // exactly-simultaneous right row is visible to the left row (<=).
-    val w = Window.partitionBy("__k").orderBy(col("__t"), col("__side"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    lSide.unionByName(rSide)
-      .select(col("__side") +: (leftCols.map(col) :+
-        last(col("__p"), ignoreNulls = true).over(w).as("__p")): _*)
-      .filter(col("__side") === 1)
-      .select(leftCols.map(col) ++
-        payload.map(c => col(s"__p.$c").as(c)): _*)
-  }
+           payload: Seq[String]): DataFrame =
+    asOfDirection(left, right, leftKey, rightKey, leftTime, rightTime,
+      payload, "backward")
 
   /** Directional as-of join with a match tolerance — the full pandas
     * `merge_asof` surface (direction = backward | forward | nearest,
-    * tolerance) on the same one-shuffle union device as [[asOf]]:
+    * tolerance) on the one-shuffle union device described above:
     *
-    *  - `backward`: latest right time ≤ left time (= [[asOf]]);
+    *  - `backward`: latest right time ≤ left time; [[asOf]] is this
+    *    direction;
     *  - `forward`: EARLIEST right time ≥ left time — the same running
     *    `last(ignoreNulls)` over the key partition ordered by time
     *    DESCENDING (in that order, "already seen" rows are exactly the
@@ -102,13 +61,24 @@ object AsOf {
     *    shuffle, two partition-local sorts), then the closer match,
     *    BACKWARD winning distance ties.
     *
+    * The payload travels as ONE struct column: `last(ignoreNulls)`
+    * applied per payload column would backfill a NULL field of the
+    * picked right row from OLDER right rows — a row that exists
+    * nowhere on the right. The struct is non-null exactly on right
+    * rows (even when every field inside is null), so the running last
+    * picks one right ROW atomically, matching ASOF-join semantics.
+    * Right rows with a null key OR null time are dropped up front (an
+    * equi-key never matches on null, and `t >= null` is never true —
+    * nulls-first window order would otherwise make such a row
+    * everyone's oldest match); null-key left rows survive with a null
+    * payload.
+    *
     * `toleranceMs` bounds |left time − right time| per direction
     * BEFORE nearest picks (pandas semantics: tolerance filters the
     * candidate, then nearest chooses among survivors); out-of-
     * tolerance matches null out. Ties at equal time match in both
-    * directions (`<=`/`>=` semantics). Contract otherwise as [[asOf]]:
-    * LONG keys/times, right unique per (key, time), null right
-    * keys/times dropped, null-key left rows survive with null payload. */
+    * directions (`<=`/`>=` semantics). Contract otherwise as the
+    * object doc: LONG keys/times, right unique per (key, time). */
   def asOfDirection(left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
       leftTime: String, rightTime: String,
@@ -131,7 +101,7 @@ object AsOf {
     val lSchema = left.schema
     // the right TIME travels inside the struct so tolerance can be
     // applied to the ROW the window picked (post-filtering a field
-    // from an older row would be the backfill bug [[asOf]] avoids)
+    // from an older row would be the backfill bug the struct avoids)
     val payloadStruct =
       struct(col(rightTime).as("__rt") +: payload.map(col): _*)
     val lSide = left.select(

@@ -238,9 +238,10 @@ object StreamJobs {
         col(rts) >= col(lts) - expr(s"INTERVAL $lo") &&
         col(rts) <= col(lts) + expr(s"INTERVAL $hi"))
 
-  /** Buffered state for one [[StreamJobs.asOfLatest]] key: left rows
-    * not yet final (watermark hasn't passed their event time) and the
-    * right rows that can still win a future lookup. */
+  /** Buffered state for one key of the streaming as-of family
+    * ([[asOfLatest]], [[asOfNext]], [[asOfNearest]]): left rows
+    * (ms, id) not yet final and the right rows (ms, payload) that can
+    * still win a future lookup. */
   case class AsOfBuf(lefts: Seq[(Long, Long)],
                      rights: Seq[(Long, Option[Long])])
 
@@ -254,37 +255,95 @@ object StreamJobs {
   private def satSubMs(a: Long, b: Long): Long =
     if (a < Long.MinValue + b) Long.MinValue else a - b
 
+  /** A direction's finality step for one key: which lefts are final
+    * (by left time), a final left's payload, the rights kept for later
+    * triggers (the prune), and the event-time timer for the still
+    * pending left times (None arms none; only asked when the key's
+    * state is kept, and every timer must exceed the watermark). */
+  private case class AsOfStep(ripe: Long => Boolean,
+      answer: Long => Option[Long], kept: Seq[(Long, Option[Long])],
+      timer: Seq[Long] => Option[Long])
+
+  /** The keyed-state driver of the streaming as-of family. Spark has
+    * no native stream-stream as-of (the one-sided time bound defeats
+    * the interval-join eviction rule), so both sides union into one
+    * keyed stream under one watermark. Per trigger and key it loads
+    * the state, appends the new rows and hands `step` the watermark,
+    * the state as LOADED, every buffered left (loaded + new), the
+    * rights sorted by time and whether the key's timer fired; it emits
+    * the lefts `step` calls ripe in (time, id) order, then drops the
+    * state (nothing pending or kept) or stores (pending, kept) and
+    * arms `step`'s timer, which flushes keys the input goes quiet on.
+    *
+    * Shared contract, the streaming twin of the batch one: non-null
+    * LONG keys and ids, timestamp event times; right unique per
+    * (key, ts); ties (rts == lts) match; each side arrives in its own
+    * event-time order within the watermark delay (the §r13(e) harness
+    * rule). Emission is watermark-final (append, no retractions) as
+    * (k, left_id, ts_ms, payload); StreamingSpec asserts batch parity
+    * with [[graft.operators.AsOf.asOfDirection]] for every direction. */
+  private def asOfKeyed(left: DataFrame, right: DataFrame,
+      lkey: String, rkey: String, lts: String, rts: String,
+      leftId: String, payload: String, delay: String)(
+      step: (Long, AsOfBuf, Seq[(Long, Long)], Seq[(Long, Option[Long])],
+        Boolean) => AsOfStep): DataFrame = {
+    import left.sparkSession.implicits._
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    val l = left.select(col(lkey).as("k"), col(lts).as("ts"),
+      lit(1).as("side"), col(leftId).as("lid"),
+      lit(null).cast("long").as("p"))
+    val r = right.select(col(rkey).as("k"), col(rts).as("ts"),
+      lit(0).as("side"), lit(0L).as("lid"), col(payload).as("p"))
+    l.unionByName(r)
+      .withWatermark("ts", delay)
+      .select(col("k"), col("ts"), unix_millis(col("ts")).as("ms"),
+        col("side"), col("lid"), col("p"))
+      .as[(Long, java.sql.Timestamp, Long, Int, Long, Option[Long])]
+      .groupByKey(_._1)
+      .flatMapGroupsWithState[AsOfBuf, (Long, Long, Long, Option[Long])](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        case (k, rows, state: GroupState[AsOfBuf]) =>
+          val st = state.getOption.getOrElse(AsOfBuf(Nil, Nil))
+          var lefts = st.lefts
+          var rights = st.rights
+          rows.foreach { case (_, _, ms, side, lid, p) =>
+            if (side == 1) lefts +:= ((ms, lid)) else rights +:= ((ms, p))
+          }
+          val s = step(state.getCurrentWatermarkMs(), st, lefts,
+            rights.sortBy(_._1), state.hasTimedOut)
+          val (ripe, pending) = lefts.partition { case (lt, _) => s.ripe(lt) }
+          val out = ripe.sortBy(identity).map { case (lt, lid) =>
+            (k, lid, lt, s.answer(lt))
+          }
+          if (pending.isEmpty && s.kept.isEmpty) state.remove()
+          else {
+            state.update(AsOfBuf(pending, s.kept))
+            s.timer(pending.map(_._1)).foreach(state.setTimeoutTimestamp)
+          }
+          out.iterator
+      }
+      .toDF("k", "left_id", "ts_ms", "payload")
+  }
+
   /** STREAMING as-of join — the unbounded-lower limit of the J1/J2
     * interval-join family ([[intervalJoinBounds]]), completing the
     * as-of operator's third tier beside the batch composition
     * ([[graft.operators.AsOf.asOf]]) and the custom-plan merge exec
     * ([[graft.plans.NativeAsOf]]): every left row gains the payload of
     * the LATEST right row at-or-before its event time within its key
-    * (null when none precedes it).
+    * (null when none precedes it). Runs on [[asOfKeyed]] (contract
+    * there).
     *
-    * Spark has no native stream-stream as-of (the time bound is
-    * one-sided-unbounded, so the interval-join state eviction rule
-    * doesn't apply), hence keyed state: both sides union into one
-    * keyed stream; per key the state buffers (a) left rows until the
-    * watermark passes their event time — only then is the right side
-    * COMPLETE at-or-before that instant and the answer final — and
-    * (b) right rows, pruned to the single latest at-or-before the
+    * Finality: a left row is final once the watermark passes its event
+    * time — only then is the right side COMPLETE at-or-before that
+    * instant. Rights prune to the single latest at-or-before the
     * watermark plus everything after it (an older right can never win
     * again: any future left's time is at least the watermark).
     *
     * State shape: O(rate × delay) transient rows per side plus ONE
     * retained right row per key — the point-in-time dimension residue
     * every as-of lookup must keep (same floor as the reference's
-    * Phoenix dim cache), NOT event-count growth. An event-time timer
-    * on the earliest pending left flushes keys the input goes quiet
-    * on. Emission is watermark-final (append mode, no retractions).
-    *
-    * Contract (streaming twin of the batch contract): non-null LONG
-    * keys and ids, timestamp event times; right unique per (key, ts);
-    * ties (rts == lts) match; each side arrives in its own event-time
-    * order within the watermark delay (the §r13(e) harness rule).
-    * Batch parity is asserted in StreamingSpec against
-    * [[graft.operators.AsOf.asOf]] on the same rows.
+    * Phoenix dim cache), NOT event-count growth.
     *
     * `idleTtlMs` (0 = off, the default): the one-right-per-key
     * dimension residue is correct to keep FOREVER for dimension-like
@@ -299,164 +358,95 @@ object StreamJobs {
   def asOfLatest(left: DataFrame, right: DataFrame,
       lkey: String, rkey: String, lts: String, rts: String,
       leftId: String, payload: String,
-      delay: String = "1 minute", idleTtlMs: Long = 0L): DataFrame = {
-    import left.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val l = left.select(col(lkey).as("k"), col(lts).as("ts"),
-      lit(1).as("side"), col(leftId).as("lid"),
-      lit(null).cast("long").as("p"))
-    val r = right.select(col(rkey).as("k"), col(rts).as("ts"),
-      lit(0).as("side"), lit(0L).as("lid"), col(payload).as("p"))
-    l.unionByName(r)
-      .withWatermark("ts", delay)
-      .select(col("k"), col("ts"), unix_millis(col("ts")).as("ms"),
-        col("side"), col("lid"), col("p"))
-      .as[(Long, java.sql.Timestamp, Long, Int, Long, Option[Long])]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[AsOfBuf, (Long, Long, Long, Option[Long])](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case (k, rows, state: GroupState[AsOfBuf]) =>
-          val st = state.getOption.getOrElse(AsOfBuf(Nil, Nil))
-          var lefts = st.lefts
-          var rights = st.rights
-          rows.foreach { case (_, _, ms, side, lid, p) =>
-            if (side == 1) lefts +:= ((ms, lid)) else rights +:= ((ms, p))
-          }
-          val wm = state.getCurrentWatermarkMs()
-          // a left row is FINAL once the watermark passes its event
-          // time: no right row at-or-before it can still arrive
-          val (ripe, pending) = lefts.partition(_._1 <= wm)
-          val rSorted = rights.sortBy(_._1)
-          val out = ripe.sortBy(identity).map { case (ms, lid) =>
-            (k, lid, ms, rSorted.takeWhile(_._1 <= ms).lastOption.flatMap(_._2))
-          }
-          // prune: of the rights at-or-before the watermark only the
-          // LATEST can ever win again (future lefts are >= wm)
-          val (closed, open) = rSorted.partition(_._1 <= wm)
-          val kept = closed.takeRight(1) ++ open
-          if (pending.isEmpty && kept.isEmpty) state.remove()
-          else if (idleTtlMs > 0 && state.hasTimedOut &&
-              st.lefts.isEmpty && pending.isEmpty && open.isEmpty) {
-            // idle-key eviction. hasTimedOut alone is NOT enough: the
-            // FLUSH timer (armed on the earliest pending left) also
-            // sets it, and evicting on that firing would forget the
-            // residue the instant the last left drains — st.lefts
-            // (the LOADED state) empty is what proves the timer that
-            // fired was the idle one, armed a full idleTtlMs ago
-            state.remove()
-          } else {
-            state.update(AsOfBuf(pending, kept))
+      delay: String = "1 minute", idleTtlMs: Long = 0L): DataFrame =
+    asOfKeyed(left, right, lkey, rkey, lts, rts, leftId, payload, delay) {
+      (wm, loaded, lefts, rights, timedOut) =>
+        // prune: of the rights at-or-before the watermark only the
+        // LATEST can ever win again (future lefts are >= wm)
+        val (closed, open) = rights.partition(_._1 <= wm)
+        // idle-key eviction. The timer firing is NOT enough: the
+        // FLUSH timer (armed on the earliest pending left) also sets
+        // it, and evicting on that firing would forget the residue
+        // the instant the last left drains — the LOADED state's lefts
+        // empty is what proves the timer that fired was the idle one,
+        // armed a full idleTtlMs ago
+        val idle = idleTtlMs > 0 && timedOut && loaded.lefts.isEmpty &&
+          lefts.forall(_._1 <= wm) && open.isEmpty
+        AsOfStep(
+          ripe = _ <= wm,
+          answer = lt => rights.takeWhile(_._1 <= lt).lastOption.flatMap(_._2),
+          kept = if (idle) Nil else closed.takeRight(1) ++ open,
+          timer = pending =>
             // flush quiescent keys when the watermark passes their
-            // earliest pending left (must be > current watermark,
-            // which partition() guarantees)
-            if (pending.nonEmpty)
-              state.setTimeoutTimestamp(pending.map(_._1).min)
-            else if (idleTtlMs > 0)
-              // arm the idle clock (saturating: a near-MaxValue
-              // "never evict" TTL must not wrap negative and evict
-              // instantly); any new data invocation re-arms it
-              state.setTimeoutTimestamp(satAddMs(wm, idleTtlMs))
-          }
-          out.iterator
-      }
-      .toDF("k", "left_id", "ts_ms", "payload")
-  }
+            // earliest pending left (> wm: it is not ripe)
+            if (pending.nonEmpty) Some(pending.min)
+            // arm the idle clock (saturating: a near-MaxValue "never
+            // evict" TTL must not wrap negative and evict instantly);
+            // any new data invocation re-arms it
+            else if (idleTtlMs > 0) Some(satAddMs(wm, idleTtlMs))
+            else None)
+    }
 
   /** STREAMING forward as-of with tolerance — the streaming twin of
     * [[graft.operators.AsOf.asOfDirection]]("forward", tol): every
     * left row gains the payload of the EARLIEST right row in
     * [lt, lt + tol] within its key (null when none arrives by the
     * deadline) — "did this session convert within the attribution
-    * window", live.
+    * window", live. Runs on [[asOfKeyed]] (contract there).
     *
-    * Finality (watermark-final, append, no retractions): a buffered
-    * candidate at time rt is the answer once wm ≥ rt — any unseen
-    * right with an earlier time would be late by definition; with no
-    * candidate the answer is final null once wm ≥ lt + tol. So each
-    * pending left's deadline is min(candidate rt, lt + tol) and the
-    * event-time timer arms on the key's earliest deadline (every
-    * deadline is > wm while the left is pending, satisfying the
-    * timer contract).
+    * Finality: a buffered candidate at time rt is the answer once
+    * wm ≥ rt — any unseen right with an earlier time would be late by
+    * definition; with no candidate the answer is final null once
+    * wm ≥ lt + tol. So each pending left's deadline is
+    * min(candidate rt, lt + tol) and the event-time timer arms on the
+    * key's earliest deadline (every deadline is > wm while the left
+    * is pending, satisfying the timer contract).
     *
     * State: unlike the backward join's one-right-per-key dimension
     * residue ([[asOfLatest]]), the forward direction keeps NO residue
     * — a right at-or-before the watermark can never match a future
     * left (lt ≥ wm ⇒ rt ≥ lt ≥ wm), so rights prune to rt ≥ wm and
     * the whole state is O(rate × (tol + delay)) transient rows,
-    * vanishing entirely on quiet keys. Contract otherwise as
-    * [[asOfLatest]] (LONG keys/ids, right unique per (key, ts), ties
-    * rt == lt match, per-side event-time order within the delay). */
+    * vanishing entirely on quiet keys. */
   def asOfNext(left: DataFrame, right: DataFrame,
       lkey: String, rkey: String, lts: String, rts: String,
       leftId: String, payload: String, tolMs: Long,
       delay: String = "1 minute"): DataFrame = {
     require(tolMs >= 0, s"negative tolerance $tolMs")
-    import left.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val l = left.select(col(lkey).as("k"), col(lts).as("ts"),
-      lit(1).as("side"), col(leftId).as("lid"),
-      lit(null).cast("long").as("p"))
-    val r = right.select(col(rkey).as("k"), col(rts).as("ts"),
-      lit(0).as("side"), lit(0L).as("lid"), col(payload).as("p"))
-    l.unionByName(r)
-      .withWatermark("ts", delay)
-      .select(col("k"), col("ts"), unix_millis(col("ts")).as("ms"),
-        col("side"), col("lid"), col("p"))
-      .as[(Long, java.sql.Timestamp, Long, Int, Long, Option[Long])]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[AsOfBuf, (Long, Long, Long, Option[Long])](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case (k, rows, state: GroupState[AsOfBuf]) =>
-          val st = state.getOption.getOrElse(AsOfBuf(Nil, Nil))
-          var lefts = st.lefts
-          var rights = st.rights
-          rows.foreach { case (_, _, ms, side, lid, p) =>
-            if (side == 1) lefts +:= ((ms, lid)) else rights +:= ((ms, p))
-          }
-          val wm = state.getCurrentWatermarkMs()
-          val rSorted = rights.sortBy(_._1)
-          // saturating lt + tol: the batch twin's "no bound" default
-          // is toleranceMs = Long.MaxValue, and a wrapped-negative
-          // deadline would flush every left as an instant null
-          def deadline(lt: Long): Long = satAddMs(lt, tolMs)
-          // earliest buffered right in the left's window, if any —
-          // memoized: rights are fixed for the rest of this
-          // invocation and the partition / emit / timer-arm passes
-          // each consult the same lefts (O(lefts × rights) once, not
-          // three times, per trigger)
-          val candMemo = scala.collection.mutable.HashMap
-            .empty[Long, Option[(Long, Option[Long])]]
-          def candOf(lt: Long): Option[(Long, Option[Long])] =
-            candMemo.getOrElseUpdate(lt,
-              rSorted.find(r => r._1 >= lt && r._1 <= deadline(lt)))
-          val (ripe, pending) = lefts.partition { case (lt, _) =>
-            candOf(lt).exists(_._1 <= wm) ||
-              (candOf(lt).isEmpty && wm >= deadline(lt))
-          }
-          val out = ripe.sortBy(identity).map { case (lt, lid) =>
-            (k, lid, lt, candOf(lt).flatMap(_._2))
-          }
-          // no residue: rights at-or-before the watermark are dead for
-          // every possible future left
-          val kept = rSorted.filter(_._1 >= wm)
-          if (pending.isEmpty && kept.isEmpty) state.remove()
-          else {
-            state.update(AsOfBuf(pending, kept))
-            if (pending.nonEmpty)
-              state.setTimeoutTimestamp(pending.map { case (lt, _) =>
-                candOf(lt).map(_._1).getOrElse(Long.MaxValue).min(deadline(lt))
-              }.min)
-            else
-              // rights-only key: without a timer it would never be
-              // re-invoked and the buffered rights would leak (the
-              // asOfLatest idle-residue hazard, here fully solvable) —
-              // fire just past the last kept right, when the prune
-              // empties the state
-              state.setTimeoutTimestamp(kept.map(_._1).max + 1)
-          }
-          out.iterator
-      }
-      .toDF("k", "left_id", "ts_ms", "payload")
+    asOfKeyed(left, right, lkey, rkey, lts, rts, leftId, payload, delay) {
+      (wm, _, _, rights, _) =>
+        // saturating lt + tol: the batch twin's "no bound" default
+        // is toleranceMs = Long.MaxValue, and a wrapped-negative
+        // deadline would flush every left as an instant null
+        def deadline(lt: Long): Long = satAddMs(lt, tolMs)
+        // earliest buffered right in the left's window, if any —
+        // memoized: rights are fixed for the rest of this trigger and
+        // the ripe / answer / timer passes each consult the same
+        // lefts (O(lefts × rights) once, not three times, per trigger)
+        val candMemo = scala.collection.mutable.HashMap
+          .empty[Long, Option[(Long, Option[Long])]]
+        def candOf(lt: Long): Option[(Long, Option[Long])] =
+          candMemo.getOrElseUpdate(lt,
+            rights.find(r => r._1 >= lt && r._1 <= deadline(lt)))
+        // no residue: rights at-or-before the watermark are dead for
+        // every possible future left
+        val kept = rights.filter(_._1 >= wm)
+        AsOfStep(
+          ripe = lt => candOf(lt).exists(_._1 <= wm) ||
+            (candOf(lt).isEmpty && wm >= deadline(lt)),
+          answer = lt => candOf(lt).flatMap(_._2),
+          kept = kept,
+          timer = pending => Some(
+            if (pending.nonEmpty) pending.map { lt =>
+              candOf(lt).map(_._1).getOrElse(Long.MaxValue).min(deadline(lt))
+            }.min
+            // rights-only key: without a timer it would never be
+            // re-invoked and the buffered rights would leak (the
+            // asOfLatest idle-residue hazard, here fully solvable) —
+            // fire just past the last kept right, when the prune
+            // empties the state
+            else kept.map(_._1).max + 1))
+    }
   }
 
   /** STREAMING nearest as-of with tolerance — the streaming twin of
@@ -465,18 +455,19 @@ object StreamJobs {
     * forward = [[asOfNext]]): every left row gains the payload of the
     * right row minimizing |rt − lt| within [lt − tol, lt + tol] on
     * its key, BACKWARD winning distance ties (the batch contract;
-    * null when no right lands in the window).
+    * null when no right lands in the window). Runs on [[asOfKeyed]]
+    * (contract there).
     *
-    * Finality (watermark-final, append, no retractions): any future
-    * right arrives with rt > wm, so its distance to a pending left
-    * exceeds wm − lt going forward and the current best (distance
-    * d) can only be beaten by some rt in (lt − d, lt + d) — which is
-    * entirely at-or-below lt + d. Once wm ≥ lt + d no such right can
-    * still arrive (a forward tie at exactly lt + d would lose to the
-    * backward pick anyway, and rt > wm ≥ lt + d is strictly worse),
-    * so each pending left's deadline is lt + min(d_best, tol) and
-    * the event-time timer arms on the key's earliest deadline
-    * (deadline > wm while pending, satisfying the timer contract).
+    * Finality: any future right arrives with rt > wm, so its distance
+    * to a pending left exceeds wm − lt going forward and the current
+    * best (distance d) can only be beaten by some rt in
+    * (lt − d, lt + d) — which is entirely at-or-below lt + d. Once
+    * wm ≥ lt + d no such right can still arrive (a forward tie at
+    * exactly lt + d would lose to the backward pick anyway, and
+    * rt > wm ≥ lt + d is strictly worse), so each pending left's
+    * deadline is lt + min(d_best, tol) and the event-time timer arms
+    * on the key's earliest deadline (deadline > wm while pending,
+    * satisfying the timer contract).
     *
     * State: a pending left has lt > wm − tol (it finalizes at
     * deadline ≤ lt + tol), so its window reaches no further back
@@ -485,81 +476,46 @@ object StreamJobs {
     * residue, vanishing on quiet keys like [[asOfNext]] (and unlike
     * the backward join's per-key dimension row). The batch twin's
     * Long.MaxValue "no bound" tolerance is accepted but saturates
-    * every deadline to never — state then grows with right-less
-    * lefts and unpruned rights; production nearest wants a finite
-    * window. Contract otherwise as [[asOfLatest]] (LONG keys/ids,
-    * right unique per (key, ts), per-side event-time order within
-    * the delay). */
+    * every right-less deadline to never — state then grows with
+    * right-less lefts and unpruned rights; production nearest wants a
+    * finite window. */
   def asOfNearest(left: DataFrame, right: DataFrame,
       lkey: String, rkey: String, lts: String, rts: String,
       leftId: String, payload: String, tolMs: Long,
       delay: String = "1 minute"): DataFrame = {
     require(tolMs >= 0, s"negative tolerance $tolMs")
-    import left.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val l = left.select(col(lkey).as("k"), col(lts).as("ts"),
-      lit(1).as("side"), col(leftId).as("lid"),
-      lit(null).cast("long").as("p"))
-    val r = right.select(col(rkey).as("k"), col(rts).as("ts"),
-      lit(0).as("side"), lit(0L).as("lid"), col(payload).as("p"))
-    l.unionByName(r)
-      .withWatermark("ts", delay)
-      .select(col("k"), col("ts"), unix_millis(col("ts")).as("ms"),
-        col("side"), col("lid"), col("p"))
-      .as[(Long, java.sql.Timestamp, Long, Int, Long, Option[Long])]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[AsOfBuf, (Long, Long, Long, Option[Long])](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case (k, rows, state: GroupState[AsOfBuf]) =>
-          val st = state.getOption.getOrElse(AsOfBuf(Nil, Nil))
-          var lefts = st.lefts
-          var rights = st.rights
-          rows.foreach { case (_, _, ms, side, lid, p) =>
-            if (side == 1) lefts +:= ((ms, lid)) else rights +:= ((ms, p))
-          }
-          val wm = state.getCurrentWatermarkMs()
-          val rSorted = rights.sortBy(_._1)
-          // the best in-window right: min distance, backward (rt <=
-          // lt) winning ties — stated as min over (distance, rt > lt).
-          // Memoized like asOfNext's candOf: rights are fixed for the
-          // rest of this invocation and partition / emit / timer-arm
-          // each consult the same lefts
-          val bestMemo = scala.collection.mutable.HashMap
-            .empty[Long, Option[(Long, Option[Long])]]
-          def bestOf(lt: Long): Option[(Long, Option[Long])] =
-            bestMemo.getOrElseUpdate(lt, rSorted
-              .filter(r => r._1 >= satSubMs(lt, tolMs) &&
-                r._1 <= satAddMs(lt, tolMs))
-              .minByOption(r => (math.abs(r._1 - lt), r._1 > lt)))
-          def deadline(lt: Long): Long =
-            satAddMs(lt, bestOf(lt).map(r => math.abs(r._1 - lt))
-              .getOrElse(tolMs))
-          val (ripe, pending) = lefts.partition { case (lt, _) =>
-            wm >= deadline(lt)
-          }
-          val out = ripe.sortBy(identity).map { case (lt, lid) =>
-            (k, lid, lt, bestOf(lt).flatMap(_._2))
-          }
-          // no residue: a pending or future left's window reaches no
-          // further back than wm − 2·tol
-          val kept =
-            rSorted.filter(_._1 > satSubMs(wm, satAddMs(tolMs, tolMs)))
-          if (pending.isEmpty && kept.isEmpty) state.remove()
-          else {
-            state.update(AsOfBuf(pending, kept))
-            if (pending.nonEmpty)
-              state.setTimeoutTimestamp(
-                pending.map { case (lt, _) => deadline(lt) }.min)
-            else
-              // rights-only key: arm the prune horizon of the last
-              // kept right, when the filter above empties the state
-              // (the asOfNext leak fix, shifted by the 2·tol window)
-              state.setTimeoutTimestamp(
-                satAddMs(kept.map(_._1).max, satAddMs(tolMs, tolMs)))
-          }
-          out.iterator
-      }
-      .toDF("k", "left_id", "ts_ms", "payload")
+    asOfKeyed(left, right, lkey, rkey, lts, rts, leftId, payload, delay) {
+      (wm, _, _, rights, _) =>
+        // the best in-window right: min distance, backward (rt <=
+        // lt) winning ties — stated as min over (distance, rt > lt).
+        // Memoized like asOfNext's candOf: rights are fixed for the
+        // rest of this trigger and ripe / answer / timer each consult
+        // the same lefts
+        val bestMemo = scala.collection.mutable.HashMap
+          .empty[Long, Option[(Long, Option[Long])]]
+        def bestOf(lt: Long): Option[(Long, Option[Long])] =
+          bestMemo.getOrElseUpdate(lt, rights
+            .filter(r => r._1 >= satSubMs(lt, tolMs) &&
+              r._1 <= satAddMs(lt, tolMs))
+            .minByOption(r => (math.abs(r._1 - lt), r._1 > lt)))
+        def deadline(lt: Long): Long =
+          satAddMs(lt, bestOf(lt).map(r => math.abs(r._1 - lt))
+            .getOrElse(tolMs))
+        // no residue: a pending or future left's window reaches no
+        // further back than wm − 2·tol
+        val kept =
+          rights.filter(_._1 > satSubMs(wm, satAddMs(tolMs, tolMs)))
+        AsOfStep(
+          ripe = lt => wm >= deadline(lt),
+          answer = lt => bestOf(lt).flatMap(_._2),
+          kept = kept,
+          timer = pending => Some(
+            if (pending.nonEmpty) pending.map(deadline).min
+            // rights-only key: arm the prune horizon of the last kept
+            // right, when the filter above empties the state (the
+            // asOfNext leak fix, shifted by the 2·tol window)
+            else satAddMs(kept.map(_._1).max, satAddMs(tolMs, tolMs))))
+    }
   }
 
   /** Buffered state for one (bucket, salt group) of

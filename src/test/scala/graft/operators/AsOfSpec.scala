@@ -40,6 +40,19 @@ class AsOfSpec extends SparkSpec {
       AsOf.asOf(left.withColumnRenamed("__side", "ev"), rightBad,
         "k", "rk", "t", "rt", Seq("__p"))
     }
+    // asOf shares asOfDirection's reserved set, whose __rt is the
+    // picked right row's time inside the payload struct
+    val ok = left.withColumnRenamed("__side", "ev")
+    val e2 = intercept[IllegalArgumentException] {
+      AsOf.asOf(ok.withColumnRenamed("ev", "__rt"), right,
+        "k", "rk", "t", "rt", Seq("payload"))
+    }
+    assert(e2.getMessage.contains("__rt"))
+    val e3 = intercept[IllegalArgumentException] {
+      AsOf.asOf(ok, right.withColumnRenamed("payload", "__rt"),
+        "k", "rk", "t", "rt", Seq("__rt"))
+    }
+    assert(e3.getMessage.contains("__rt"))
   }
 
   test("asOf takes the latest right ROW atomically; null keys never match") {

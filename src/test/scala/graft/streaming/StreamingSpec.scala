@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -325,6 +326,107 @@ class StreamingSpec extends SparkSpec {
         "lk", "rk", "lms", "rms", Seq("pay"), "nearest", tol)
       .select("lid", "pay").as[(Long, Option[Long])].collect().toMap
     assert(got === batch)
+  }
+
+  /** Streams `lefts` (one batch), then `rights` (the next), then a
+    * far-future sentinel on each side through `op`, and returns the
+    * real lefts' (left_id → payload) next to the batch
+    * `asOfDirection(direction)` answer at its default (infinite)
+    * tolerance on the same rows. */
+  private def streamVsBatchAtMaxTol(name: String, direction: String,
+      lefts: Seq[AL], rights: Seq[AR])(
+      op: (DataFrame, DataFrame) => DataFrame)
+      : (Map[Long, Option[Long]], Map[Long, Option[Long]]) = {
+    implicit val sc = spark.sqlContext
+    val lSrc = MemoryStream[AL]
+    val rSrc = MemoryStream[AR]
+    val q = op(lSrc.toDF(), rSrc.toDF())
+      .writeStream.format("memory").queryName(name)
+      .outputMode("append").start()
+    lSrc.addData(lefts: _*)
+    q.processAllAvailable()
+    rSrc.addData(rights: _*)
+    q.processAllAvailable()
+    lSrc.addData(AL(99, 999, t("2021-04-01 00:00:00")))
+    rSrc.addData(AR(998, t("2021-04-01 00:00:00"), 0L))
+    q.processAllAvailable()
+    q.stop()
+    val got = spark.table(name).filter(col("left_id") < 99)
+      .select("left_id", "payload").as[(Long, Option[Long])]
+      .collect().toMap
+    val batch = graft.operators.AsOf.asOfDirection(
+        lefts.toDF().select(col("lid"), col("lk"),
+          unix_millis(col("lts")).as("lms")),
+        rights.toDF().select(col("rk"),
+          unix_millis(col("rts")).as("rms"), col("pay")),
+        "lk", "rk", "lms", "rms", Seq("pay"), direction)
+      .select("lid", "pay").as[(Long, Option[Long])].collect().toMap
+    (got, batch)
+  }
+
+  test("streaming forward/nearest as-of at tolMs = Long.MaxValue equal " +
+      "the batch default tolerance (no wrapped deadline)") {
+    // every left has a right in each direction's reach, some minutes
+    // away: a deadline lt + tol that wrapped negative would finalize
+    // these lefts at once with a null payload
+    val rights = Seq(
+      AR(1, t("2021-03-21 10:00:10"), 100L),
+      AR(1, t("2021-03-21 10:00:20"), 200L),
+      AR(2, t("2021-03-21 10:05:00"), 500L))
+    val fwdLefts = Seq(
+      AL(1, 1, t("2021-03-21 10:00:05")), // -> 100
+      AL(2, 1, t("2021-03-21 10:00:10")), // tie -> 100
+      AL(3, 1, t("2021-03-21 10:00:15")), // -> 200
+      AL(4, 2, t("2021-03-21 10:00:00"))) // 5 min ahead -> 500
+    val (fwd, fwdBatch) = streamVsBatchAtMaxTol("asof_fwd_max", "forward",
+        fwdLefts, rights) { (l, r) =>
+      StreamJobs.asOfNext(l, r, "lk", "rk", "lts", "rts", "lid", "pay",
+        Long.MaxValue)
+    }
+    assert(fwd === Map(1L -> Some(100L), 2L -> Some(100L),
+      3L -> Some(200L), 4L -> Some(500L)))
+    assert(fwd === fwdBatch)
+    val nearLefts = fwdLefts :+ AL(5, 1, t("2021-03-21 10:00:50")) // -> 200
+    val (near, nearBatch) = streamVsBatchAtMaxTol("asof_near_max",
+        "nearest", nearLefts, rights) { (l, r) =>
+      StreamJobs.asOfNearest(l, r, "lk", "rk", "lts", "rts", "lid", "pay",
+        Long.MaxValue)
+    }
+    assert(near.size === nearLefts.size && near.values.forall(_.nonEmpty),
+      s"a left finalized with a null payload: $near")
+    assert(near === nearBatch)
+  }
+
+  test("streaming as-of join at idleTtlMs = Long.MaxValue keeps the " +
+      "residue for a key that returns days later") {
+    implicit val sc = spark.sqlContext
+    val lSrc = MemoryStream[AL]
+    val rSrc = MemoryStream[AR]
+    val q = StreamJobs.asOfLatest(lSrc.toDF(), rSrc.toDF(),
+        "lk", "rk", "lts", "rts", "lid", "pay", idleTtlMs = Long.MaxValue)
+      .writeStream.format("memory").queryName("asof_ttl_max")
+      .outputMode("append").start()
+    rSrc.addData(AR(1, t("2021-03-21 10:00:00"), 100L))
+    lSrc.addData(AL(1, 1, t("2021-03-21 10:00:05")))
+    q.processAllAvailable()
+    // watermark four days on: left 1 flushes and the idle clock arms
+    // at wm + TTL, which must saturate to "never", not wrap to "now"
+    lSrc.addData(AL(97, 999, t("2021-03-25 10:00:00")))
+    rSrc.addData(AR(997, t("2021-03-25 10:00:00"), 0L))
+    q.processAllAvailable()
+    lSrc.addData(AL(98, 999, t("2021-03-28 10:00:00")))
+    rSrc.addData(AR(998, t("2021-03-28 10:00:00"), 0L))
+    q.processAllAvailable()
+    lSrc.addData(AL(2, 1, t("2021-03-28 09:59:30")))
+    q.processAllAvailable()
+    lSrc.addData(AL(99, 999, t("2021-04-01 00:00:00")))
+    rSrc.addData(AR(996, t("2021-04-01 00:00:00"), 0L))
+    q.processAllAvailable()
+    q.stop()
+    val got = spark.table("asof_ttl_max").filter(col("left_id") < 97)
+      .select("left_id", "payload").as[(Long, Option[Long])]
+      .collect().toMap
+    assert(got === Map(1L -> Some(100L), 2L -> Some(100L)))
   }
 
   test("streaming as-of join: idle-key TTL evicts the dimension residue; " +
