@@ -27,8 +27,7 @@ object Explain {
     outDir.foreach(d =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)): Unit)
     try names.foreach { name =>
-      val q = SparkEntry.queries.getOrElse(name, sys.error(
-        s"unknown query '$name'; valid: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
+      val q = SparkEntry.query(name)
       val plan =
         try q(spark, dir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)

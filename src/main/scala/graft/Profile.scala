@@ -22,9 +22,8 @@ object Profile {
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 3
     require(reps >= 1, s"reps must be positive, got $reps")
+    val q = SparkEntry.query(name)
     val spark = Session.local("graft-profile")
-    val q = SparkEntry.queries.getOrElse(name,
-      sys.error(s"unknown query '$name'"))
     try {
       // same task/cpu attribution as the full Bench (r11): task CPU
       // time is contention-robust, so an A/B on a loaded box compares

@@ -114,4 +114,29 @@ class OperatorsSpec extends SparkSpec {
     // and every declared oracle key has a matching query
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
+
+  test("board names are unique and well-formed") {
+    // a duplicate name would be dropped silently when the maps are built
+    val names = SparkEntry.board.map(_.name)
+    assert(names.diff(names.distinct).isEmpty, "duplicate board names")
+    names.foreach(n => assert(n.matches("q_[a-z0-9_]+"), s"bad board name '$n'"))
+  }
+
+  test("only the four rows-only queries lack an oracle") {
+    val rowsOnly = SparkEntry.board.filter(_.oracle.isEmpty).map(_.name).toSet
+    assert(rowsOnly == Set("q_dws_product_stats_approx", "q_llm_ann_ivf",
+      "q_llm_ann_pq", "q_llm_ann_ivfpq"))
+  }
+
+  test("every oracle is non-blank SQL") {
+    SparkEntry.oracleSql.foreach { case (name, sql) =>
+      assert(sql != null && sql.trim.nonEmpty, s"$name oracle is blank")
+    }
+  }
+
+  test("an unknown query name fails with the valid names") {
+    val e = intercept[IllegalArgumentException](SparkEntry.query("q_no_such"))
+    assert(e.getMessage.contains("q_no_such"))
+    assert(e.getMessage.contains("q_dws_province_stats, "))
+  }
 }
