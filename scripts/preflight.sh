@@ -3,7 +3,8 @@
 # Round 7's lesson: one uncompiled line in the final commit zeroed the
 # whole round's correctness + bench board. This script is the insurance:
 #   1. sbt compile  (the exact step the driver runs first)
-#   2. sbt test     (full ScalaTest suite)
+#   2. sbt test     (full ScalaTest suite), then scripts/test_times.py
+#      prints its total time and slowest suites/cases from the reports
 #   3. perfbench sbt test — the benchmark harness compiles against the
 #      main code (operators.AsOf, plans.NativeAsOf, ...), so a main-code
 #      change that breaks its build or its CheckSpec fails here
@@ -24,6 +25,7 @@ sbt -batch compile Test/compile
 
 echo "[preflight] 2/5 sbt test"
 sbt -batch test
+python3 scripts/test_times.py target/test-reports
 
 echo "[preflight] 3/5 perfbench sbt test"
 (cd perfbench && sbt -batch test)

@@ -34,13 +34,9 @@ object Bench {
   /** Total task-cpu seconds of ONE fixed state-free shuffle burst:
     * `n` longs through a bare `repartition(64, id)` — serialize +
     * write + read per row, NOTHING whose footprint grows with burst
-    * length. The ONE copy of the workload whose fixedness is
-    * load-bearing twice over: the bench weather normalizer divides
-    * per-query cpu by it, and ScaleRehearsal's saturation probe
-    * compares its per-row cpu across burst lengths — if the shapes
-    * drifted apart the two instruments would silently stop measuring
-    * the same weather (review r19). */
-  def stateFreeShuffleCpu(spark: SparkSession, n: Long): Double =
+    * length. The weather normalizer below divides per-query cpu by
+    * it, so its shape must stay fixed across runs. */
+  private def stateFreeShuffleCpu(spark: SparkSession, n: Long): Double =
     Metrics.around(spark) {
       spark.range(n)
         .repartition(64, org.apache.spark.sql.functions.col("id"))

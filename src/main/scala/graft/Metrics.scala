@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
 /** The one task-metrics collector: executor task metrics summed per
   * stage from every task end it sees. Bench reads the totals
   * (`task_s` / `cpu_s`), Profile the per-stage rows, ScaleRehearsal
-  * the per-task run times and shuffle-read records (task balance) —
+  * the input and shuffle-read records (work counters) —
   * one per-stage statistics record serving every view, the practice
   * of "Running Presto at Scale" (ICDE 2022). Obtain one through
   * [[Metrics.around]], which bounds it to exactly one body's tasks. */

@@ -349,8 +349,8 @@ object Dedup {
     * component level: members of an exact group share signatures
     * with their representative, so rep-level pairs + exact groups
     * reconstruct the same connected components and the same min-id
-    * keepers (asserted in DedupSpec and measured at 20k docs in
-    * ScaleRehearsal skewcorpus). Production rule: ALWAYS exact-dedup
+    * keepers (asserted in DedupSpec, including under a 20%-mass
+    * boilerplate text). Production rule: ALWAYS exact-dedup
     * before near-dup banding.
     *
     * NULL and empty texts are EXCLUDED from the collapse (and so from

@@ -791,9 +791,8 @@ object RangeJoin {
     * near-uniform occupancy — so auto returns (probeWidth, 1) and
     * the salted operator IS [[intervalOverlap]]: the leg proves the
     * auto path adds nothing on healthy data; the skewed regimes are
-    * rehearsed on hot-bucket corpora in ScaleRehearsal's rangeladder
-    * and overlapsalt sections, where auto BEAT the hand-tuned width
-    * 3.4 s vs 7.4 s wall and derived the salt the crowd needed.) */
+    * tested on hot-bucket corpora in RangeJoinSpec, where the derived
+    * width and salt must cut the hottest cell's candidate work.) */
   def bandOverlapAutoQuery(spark: SparkSession, dir: String): DataFrame = {
     val (a, b) = (priceBands(spark, dir, "pk_a", "lo_a", "hi_a"),
       priceBands(spark, dir, "pk_b", "lo_b", "hi_b"))

@@ -161,7 +161,7 @@ object Sinks {
       // shuffle partitions wrote 32 near-empty files PER SINK — the
       // classic sink anti-pattern at scale. Materialize the cache
       // once, read its measured in-memory size off the relation stats,
-      // and coalesce to ceil(bytes / target) writer tasks — one file
+      // and size to ceil(bytes / target) writer tasks — one file
       // per ~target bytes, derived from the data, no fixed constant,
       // and both sinks share the single materialization. (In-memory
       // bytes overestimate parquet bytes, so files land under the
@@ -172,11 +172,20 @@ object Sinks {
       val targetFileBytes = 128L << 20
       val nFiles = ((bytes + targetFileBytes - 1) / targetFileBytes)
         .min(BigInt(1 << 15)).toInt.max(1)
-      val sized = cached.coalesce(nFiles)
+      val sized = writerFanOut(cached, nFiles)
       sized.write.mode("overwrite").parquet(primaryPath)
       sized.write.mode("overwrite").parquet(republishPath)
     } finally cached.unpersist()
   }
+
+  /** `df` at exactly `nFiles` writer tasks. `coalesce` only merges
+    * partitions, so it cannot raise the count: a frame cached at fewer
+    * partitions than its size calls for would silently keep its larger
+    * files. Above the current count the frame is repartitioned (one
+    * round-robin shuffle); at or below it, coalesced without one. */
+  private[sinks] def writerFanOut(df: DataFrame, nFiles: Int): DataFrame =
+    if (nFiles > df.rdd.getNumPartitions) df.repartition(nFiles)
+    else df.coalesce(nFiles)
 
   /** Read back a routed "topic" (for tests and downstream jobs). */
   def readTopic(spark: SparkSession, path: String, routeCol: String,

@@ -227,8 +227,8 @@ object StreamJobs {
     * admit payments before their order. Spark's state eviction reads
     * the bounds off the join predicate: each side's buffered rows
     * drop once the watermark passes its bound + delay, so state is
-    * O(rate × (lo + hi + delay)) — rehearsed at 5M events in
-    * ScaleRehearsal streamjoin (PLANS.md §r13). */
+    * O(rate × (lo + hi + delay)) — rehearsed at 5M events (PLANS.md
+    * §r13); StreamingSpec holds the state bound and plateau. */
   def intervalJoinBounds(left: DataFrame, right: DataFrame,
       lkey: String, rkey: String, lts: String, rts: String,
       lo: String, hi: String, delay: String = "1 minute"): DataFrame =
@@ -562,8 +562,8 @@ object StreamJobs {
     * avg-buckets-per-interval) — rate-bounded, never event-count —
     * and an event-time timer sweeps buckets the input goes quiet on
     * (armed at min kept hi + maxSpan + 1 > watermark, the timer
-    * contract). Measured at 2× ingest in ScaleRehearsal
-    * `streamoverlap`: peak state flat.
+    * contract). StreamingSpec feeds 2× the events at the same batch
+    * size and requires the state bytes to stay flat.
     *
     * Contract: LONG ids (unique per side), TIMESTAMP bounds with
     * lo <= hi and span ≤ `maxSpanMs` (violations raise — a silent
@@ -576,11 +576,10 @@ object StreamJobs {
     * true pairs are then silently lost, with no error (the guard can
     * only raise on rows it receives). Size `delay` to the source's
     * real out-of-orderness; the observable is the state operator's
-    * `numRowsDroppedByWatermark` progress metric, surfaced in the
-    * streamoverlap rehearsal so an ordering violation shows up in
-    * the measurement record rather than as quietly-missing pairs.
-    * Batch parity with the batch operator is asserted in
-    * StreamingSpec and at volume in the rehearsal.
+    * `numRowsDroppedByWatermark` progress metric, which StreamingSpec
+    * requires to read zero so an ordering violation fails a test
+    * rather than showing as quietly-missing pairs. Batch parity with
+    * the batch operator is asserted in StreamingSpec.
     *
     * VALUE-CROWD rung (`saltLeft`/`saltRight` > 1) — the streaming
     * twin of [[graft.operators.RangeJoin.intervalOverlapSalted]],
@@ -609,13 +608,13 @@ object StreamJobs {
     * C/saltLeft + C/saltRight (the 1-D form leaves it ~C — the
     * replicated side dominates the key); total state pays the grid
     * replication C·saltRight + C·saltLeft. Placement-only — answers
-    * are salt-invariant (spec + rehearsal-asserted). Size the knobs
+    * are salt-invariant (spec-asserted). Size the knobs
     * from a batch census of the same feed
     * ([[graft.operators.RangeJoin.autoOverlapMitigation]]'s
     * value-crowd arm, splitting its k ≈ saltLeft·saltRight near-
     * square); the sf corpora are benign, so the board leg runs
-    * unsalted and the crowd regime is rehearsed (ScaleRehearsal
-    * `streamoverlapsalt`: unmitigated vs 1-D vs 2-D ladder). */
+    * unsalted and the crowd regime is tested in StreamingSpec
+    * (unmitigated vs 1-D vs 2-D ladder: keys and per-key state). */
   def intervalOverlapStream(left: DataFrame, right: DataFrame,
       lId: String, lLo: String, lHi: String,
       rId: String, rLo: String, rHi: String,

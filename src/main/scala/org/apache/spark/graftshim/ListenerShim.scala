@@ -17,7 +17,7 @@ object ListenerShim {
 
   /** Number of listeners currently registered on the shared
     * LiveListenerBus — the accumulation observable for the
-    * per-query-session idiom (ScaleRehearsal `scopedsession`): if
+    * per-query-session idiom (ScopedSessionSpec): if
     * minting a scoped session registered anything on the SHARED bus,
     * 10k mints would show here (and retain their SessionStates). */
   def listenerCount(sc: SparkContext): Int = sc.listenerBus.listeners.size()

@@ -3,16 +3,16 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One SparkSession builder ([[Session]]), one SparkListener
-  * ([[Metrics]]) and one as-of core per execution mode in main code.
-  * Six builders with four core defaults, five near-identical listeners
-  * and five as-of copies grew one copy at a time; grep the main
+  * ([[Metrics]]), one as-of core per execution mode and four
+  * environment variables in main code. Six builders with four core
+  * defaults, five near-identical listeners, five as-of copies and two
+  * gate-softening env knobs grew one copy at a time; grep the main
   * source tree so a new copy fails here instead. */
 class SingleSiteSpec extends AnyFunSuite {
   private val root = new java.io.File("src/main/scala")
 
-  /** Main-code files (paths relative to [[root]]) containing any of
-    * `needles`, except `allowed`. */
-  private def offenders(allowed: String, needles: String*): Seq[String] = {
+  /** Every main-code source file. */
+  private def mainSources: Seq[java.io.File] = {
     assert(root.isDirectory, "main source tree not visible from test cwd")
     def scalas(d: java.io.File): Seq[java.io.File] = {
       val kids = Option(d.listFiles()).map(_.toSeq).getOrElse(Nil)
@@ -20,6 +20,12 @@ class SingleSiteSpec extends AnyFunSuite {
         kids.filter(_.isDirectory).flatMap(scalas)
     }
     scalas(root)
+  }
+
+  /** Main-code files (paths relative to [[root]]) containing any of
+    * `needles`, except `allowed`. */
+  private def offenders(allowed: String, needles: String*): Seq[String] = {
+    mainSources
       .map(f => root.toPath.relativize(f.toPath).toString)
       .filter(_ != allowed)
       .filter { rel =>
@@ -52,6 +58,26 @@ class SingleSiteSpec extends AnyFunSuite {
     assert(occurrences("graft/operators/AsOf.scala",
       "lit(1).as(\"__side\")") === 1,
       "batch as-of directions must share AsOf.asOfDirection's union")
+  }
+
+  test("main code reads only the four documented environment variables") {
+    // a knob read from the environment is an undocumented option: it
+    // changes what a run does without showing in its arguments, and a
+    // gate it softens stops being a gate. Every read goes through
+    // sys.env or System.getenv with a literal name.
+    val read = """(?:sys\.env\s*(?:\.\s*(?:get|getOrElse|contains|apply))?|System\.getenv)\s*\(\s*"([^"]+)"""".r
+    val allowed = Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR",
+      "SPARK_GRAFT_BENCH_OUT", "SPARK_GRAFT_EXPLAIN_DIR")
+    val names = mainSources.flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath),
+        "UTF-8")
+      read.findAllMatchIn(src).map(m => m.group(1) ->
+        root.toPath.relativize(f.toPath).toString)
+    }
+    assert(names.map(_._1).toSet.contains("SPARK_GRAFT_CPUS"),
+      s"the pattern no longer sees the known reads: $names")
+    val extra = names.filterNot(n => allowed(n._1))
+    assert(extra.isEmpty, s"environment reads outside $allowed: $extra")
   }
 
   test("graft.Metrics is the only SparkListener in main code") {

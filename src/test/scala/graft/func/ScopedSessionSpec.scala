@@ -32,6 +32,42 @@ class ScopedSessionSpec extends SparkSpec {
     assert(pdf.queryExecution.toRdd.getNumPartitions !== 7)
   }
 
+  test("minted scoped sessions leave nothing on the shared machinery: " +
+      "no shared-bus listeners, and dropped sessions are collectable") {
+    // a mint that subscribed anything to the shared listener bus would
+    // accumulate listeners and keep its cloned SessionState reachable
+    // for good; a dropped scoped session must be garbage like any
+    // other object. Every 50th mint runs a real action, so the
+    // listener count covers sessions that were USED. Those four are
+    // left out of the reachability count: Spark's exchange and AQE
+    // pool threads, started lazily by an action, inherit the active
+    // session through an InheritableThreadLocal and hold it
+    import org.apache.spark.graftshim.ListenerShim
+    val sc = spark.sparkContext
+    ListenerShim.drainListenerBus(sc)
+    val l0 = ListenerShim.listenerCount(sc)
+    val dropped = (0 until 200).flatMap { i =>
+      val s = Confs.scopedSession(spark,
+        Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true"))
+      if (i % 50 == 0) {
+        assert(s.conf.get("spark.sql.autoBroadcastJoinThreshold") === "-1")
+        assert(s.range(2).count() === 2L)
+        None
+      } else Some(new java.lang.ref.WeakReference(s))
+    }
+    ListenerShim.drainListenerBus(sc)
+    val l1 = ListenerShim.listenerCount(sc)
+    assert(l1 <= l0 + 2, s"200 mints added shared-bus listeners: $l0 -> $l1")
+    def live = dropped.count(_.get != null)
+    var tries = 0
+    while (live > 0 && tries < 20) {
+      System.gc(); Thread.sleep(50); tries += 1
+    }
+    assert(live === 0, s"$live of ${dropped.size} dropped scoped sessions " +
+      "are still reachable — their cloned SessionStates are retained")
+  }
+
   test("scoped strategy/rule injection never mutates the parent's hooks") {
     val marker = new SparkStrategy {
       override def apply(plan: LogicalPlan): Seq[SparkPlan] = Nil

@@ -63,11 +63,25 @@ class DedupSpec extends SparkSpec {
     val near = (1 to 40).map(i => if (i == 37) "CHANGED" else s"tok$i")
       .mkString(" ")
     val other = (100 to 140).map(i => s"z$i").mkString(" ")
+    val boiler = (0 until 60).map(t => s"boiler$t").mkString(" ")
+    val skewed = spark.range(500L).as[Long].map { i =>
+      val j = i - i / 5 - 1 // rank among the non-boilerplate docs
+      if (i % 5 == 0) (1000L + i, boiler)
+      else if (j < 100)
+        (1000L + i, (0 until 60).map(t => s"s${j / 4}b$t").mkString(" ") +
+          s" s${j / 4}u${j % 4}")
+      else {
+        val rnd = new java.util.Random(i * 6364136223846793005L + 31L)
+        (1000L + i,
+          (0 until 60).map(_ => s"w${rnd.nextInt(30000)}").mkString(" "))
+      }
+    }.toDF("doc_id", "text")
     val d = docs(
       (1L, base), (5L, base), (9L, base),          // exact group A
       (2L, near), (7L, near),                      // exact group B (~A)
       (3L, other), (8L, other),                    // exact group C
       (4L, (200 to 240).map(i => s"q$i").mkString(" "))) // singleton
+      .unionByName(skewed)
     val plain = Dedup.closureKeepers(
       Dedup.lshDuplicatesOf(d, Dedup.Bands, Dedup.R)
         .select(col("doc_a"), col("doc_b")))
@@ -89,6 +103,16 @@ class DedupSpec extends SparkSpec {
     // absent from both, identically
     assert(plain(5L) == 1L && plain(2L) == 1L && plain(7L) == 1L &&
       plain(8L) == 3L && !plain.contains(4L))
+
+    // the 20%-mass boilerplate rides the same corpus (ids from 1000):
+    // ONE text on every 5th of its 500 docs puts C(100, 2) candidate
+    // pairs into a single band bucket, beside 25 near-dup clusters of
+    // 4 and unrelated docs; the collapsed labeling equals the plain one
+    // (asserted above) and the boilerplate group collapses to its min id
+    assert((1000L until 1500L by 5).forall(plain(_) == 1000L),
+      "the boilerplate group must share its min-id keeper")
+    assert(plain.size === 7 + 200,
+      "groups A+B and C, the boilerplate group and the 25 clusters")
   }
 
   test("exact-collapse simhash preserves components; null/empty excluded") {

@@ -7,6 +7,38 @@ import graft.SparkSpec
 class RangeJoinSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Candidate work per cell of a range join, read off the operator's
+    * own plan: its sort-merge join's two inputs, executed and counted
+    * per join key (the bucket, plus the salt group when salted); a
+    * cell's work is its left rows × right rows — the occupancy product
+    * the auto-mitigation census models, and the work of the task that
+    * joins the cell. Planned without AQE or broadcast, so the one join
+    * is a sort-merge join over both exploded sides, and run without
+    * whole-stage codegen: compiling the two sides would cost more than
+    * counting their rows. Returns (max cell, max/mean over the cells
+    * both sides populate, total). */
+  private def cellWork(df: => org.apache.spark.sql.DataFrame)
+      : (Long, Double, Long) =
+    graft.func.Confs.withSqlConfs(spark)(
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.codegen.wholeStage" -> "false") {
+      import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression}
+      import org.apache.spark.sql.execution.SparkPlan
+      import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+      val Seq(smj) = df.queryExecution.executedPlan
+        .collect { case j: SortMergeJoinExec => j }
+      def keyed(side: SparkPlan, keys: Seq[Expression], tag: Int) = {
+        val bound = keys.map(BindReferences.bindReference(_, side.output))
+        side.execute().map(r => tag -> bound.map(_.eval(r)))
+      }
+      val n = keyed(smj.left, smj.leftKeys, 0)
+        .union(keyed(smj.right, smj.rightKeys, 1)).countByValue()
+      val ws = n.toSeq.collect { case ((0, k), l) if n.contains(1 -> k) =>
+        l * n(1 -> k) }
+      (ws.max, ws.max / (ws.sum.toDouble / ws.size), ws.sum)
+    }
+
   test("pointInInterval equals the naive theta join, once per pair") {
     val points = Seq(0L, 5L, 1024L, 1500L, 4096L, 9999L).toDF("p")
     val intervals = Seq(
@@ -142,6 +174,40 @@ class RangeJoinSpec extends SparkSpec {
     assert(got.keySet.contains((1L, 10L)), "inclusive endpoint touch")
     assert(got.keySet.contains((2L, 11L)), "cross-bucket overlap")
     assert(!got.keySet.exists(_._1 == 4L), "inverted interval never matches")
+
+    // at volume and constant bucket occupancy (16 interval starts per
+    // bucket per side, spans uniform in [0, width)): the bucket device
+    // equals the theta join on a 200-row subset, its candidate pairs
+    // grow ~linearly over x1/x3/x10, and one interval spanning 30
+    // buckets finds exactly the rights it overlaps
+    val w = RangeJoin.BucketWidth
+    def side(n: Long, salt: Long, id: String, lo: String, hi: String) =
+      spark.range(n).select(col("id").as(id),
+        pmod(xxhash64(col("id"), lit(salt)), lit(n * w / 16)).as(lo))
+        .withColumn(hi,
+          col(lo) + pmod(xxhash64(col(id), lit(salt + 1)), lit(w)))
+    def rung(s: Int) = (side(2000L * s, 7L, "l_id", "l_lo", "l_hi"),
+      side(2000L * s, 77L, "r_id", "r_lo", "r_hi"))
+    val (l1, r1) = rung(1)
+    val lSub = l1.filter(col("l_id") < 200)
+    val theta = lSub.join(r1,
+      col("l_lo") <= col("r_hi") && col("r_lo") <= col("l_hi")).count()
+    assert(RangeJoin.intervalOverlap(lSub, r1,
+      "l_lo", "l_hi", "r_lo", "r_hi").count() === theta)
+    assert(theta > 0)
+    val growth = Seq(1, 3, 10).map { s =>
+      val (l, r) = rung(s)
+      s -> cellWork(RangeJoin.intervalOverlap(
+        l, r, "l_lo", "l_hi", "r_lo", "r_hi"))._3.toDouble
+    }
+    val aCand = graft.llm.ScaleRehearsal.fitAlpha(growth)
+    assert(aCand <= 1.4, f"interval-overlap candidate work is " +
+      f"super-linear at constant occupancy: alpha=$aCand%.2f ($growth)")
+    val wideHi = w * 30 - 1
+    val wide = spark.range(1).select(col("id").as("l_id"),
+      lit(0L).as("l_lo"), lit(wideHi).as("l_hi"))
+    assert(RangeJoin.intervalOverlap(wide, r1, "l_lo", "l_hi", "r_lo",
+      "r_hi").count() === r1.filter(col("r_lo") <= wideHi).count())
   }
 
   test("price-band AUTO and SALTED queries match the fixed-width " +
@@ -212,6 +278,31 @@ class RangeJoinSpec extends SparkSpec {
         .groupBy("i_id").agg(count(lit(1)).as("n"))
         .as[(Long, Long)].collect().toMap
     assert(got(vPts, wv, kv) === got(vPts, RangeJoin.BucketWidth, 1))
+
+    // twice the crowd (100k points × the 404 local intervals ≈ 40M
+    // candidates in one cell) derives salt ≥ 3, and salting must cut
+    // the hottest cell's candidate work at least 2×; the answer holds
+    // across width and salt (checked on 44 of the intervals)
+    val probe = RangeJoin.BucketWidth
+    // (materialized: the optimizer folds a literal point column into
+    // the interval filter, and the bucket join disappears from the plan)
+    val vBig = spark.range(100000).select(col("id").as("rid"),
+      lit(100L).as("p")).localCheckpoint()
+    val (wb, kb) = RangeJoin.autoPointMitigation(vBig, "p", iv, "lo", "hi")
+    assert(wb === probe && kb >= 3, s"value crowd mitigation ($wb, $kb)")
+    def hotCell(k: Int) = cellWork(RangeJoin.pointInIntervalSalted(
+      vBig, iv, "p", "lo", "hi", probe, k, Seq("rid")))._1
+    val (mPlain, mSalted) = (hotCell(1), hotCell(kb))
+    assert(mPlain >= 2 * mSalted,
+      s"salting did not shrink the hot cell: $mPlain -> $mSalted")
+    val ivSub = iv.filter(col("i_id") < 44)
+    def sub(w: Long, k: Int) = RangeJoin.pointInIntervalSalted(vBig, ivSub,
+        "p", "lo", "hi", w, k, Seq("rid"))
+      .groupBy("i_id").agg(count(lit(1)).as("n"))
+      .as[(Long, Long)].collect().toMap
+    val plain = sub(probe, 1)
+    assert(sub(wb, kb) === plain && sub(probe / 64, 1) === plain)
+    assert(plain.values.sum === 400000L)
   }
 
   test("intervalOverlapSalted: salt placement never changes the answer") {
@@ -297,6 +388,39 @@ class RangeJoinSpec extends SparkSpec {
       .select("a_id", "b_id").as[(Long, Long)].collect()
       .groupBy(identity).view.mapValues(_.length).toMap
     assert(pairs(wv, kv) === pairs(RangeJoin.BucketWidth, 1))
+
+    // a larger same-range crowd — 12,000 lefts × 1,500 rights on one
+    // range, 18M candidates in one cell — derives salt ≥ 3: the finest
+    // width leaves the hottest cell as it was (identical intervals
+    // share a bucket at every width), salting must cut it at least 2×,
+    // and the answer holds across width and salt (checked with 20 of
+    // the rights, as (count, pair-hash xor))
+    val probe = RangeJoin.BucketWidth
+    // (materialized, so literal bounds cannot fold into the plan)
+    def same(n: Int, id: String, lo: String, hi: String) =
+      spark.range(n).select(col("id").as(id), lit(100L).as(lo))
+        .withColumn(hi, lit(107L)).localCheckpoint()
+    val aBig = same(12000, "a_id", "lo_a", "hi_a")
+    val bBig = same(1500, "b_id", "lo_b", "hi_b")
+    val (wm, km) = RangeJoin.autoOverlapMitigation(aBig, bBig,
+      "lo_a", "hi_a", "lo_b", "hi_b", saltIdCols = Seq("a_id"))
+    assert(wm === probe && km >= 3, s"same-range crowd mitigation ($wm, $km)")
+    def hotCell(w: Long, k: Int) = cellWork(RangeJoin.intervalOverlapSalted(
+      aBig, bBig, "lo_a", "hi_a", "lo_b", "hi_b", w, k, Seq("a_id")))._1
+    val mHot = hotCell(probe, 1)
+    assert(mHot === 18000000L)
+    assert(hotCell(probe / 64, 1) === mHot, "width split a same-range crowd")
+    val mSalted = hotCell(wm, km)
+    assert(mHot >= 2 * mSalted,
+      s"salting did not shrink the hot cell: $mHot -> $mSalted")
+    val bSub = bBig.filter(col("b_id") < 20)
+    def sig(w: Long, k: Int) = RangeJoin.intervalOverlapSalted(aBig, bSub,
+        "lo_a", "hi_a", "lo_b", "hi_b", w, k, Seq("a_id"))
+      .agg(count(lit(1)), expr("bit_xor(xxhash64(a_id, b_id))")).head()
+      .toSeq
+    val plain = sig(probe, 1)
+    assert(sig(wm, km) === plain && sig(probe / 64, 1) === plain)
+    assert(plain.head === 240000L)
   }
 
   test("autoOverlapMitigation: degenerate saltIdCols warn loudly, " +
@@ -395,8 +519,24 @@ class RangeJoinSpec extends SparkSpec {
       pts, iv, "p", "lo", "hi", width)
       .groupBy("i_id").agg(count(lit(1)).as("n"))
       .as[(Long, Long)].collect().toMap
-    assert(got(w) === got(RangeJoin.BucketWidth))
-    assert(got(w).values.sum === 200000L)
+    val probe = RangeJoin.BucketWidth
+    val atProbe = got(probe)
+    assert(got(w) === atProbe)
+    assert(got(probe / 64) === atProbe)
+    assert(atProbe.values.sum === 200000L)
+    // efficacy on the hottest cell's candidate work (points × local
+    // intervals): the hand-tuned width (probe/64) must cut the probe
+    // cell at least 2×, the derived width at least 4×, and the derived
+    // width's max/mean cell work must stay in the hand-tuned class
+    def cw(width: Long) =
+      cellWork(RangeJoin.pointInInterval(pts, iv, "p", "lo", "hi", width))
+    val (hot, fine, auto) = (cw(probe), cw(probe / 64), cw(w))
+    assert(hot._1 >= 2 * fine._1,
+      s"the width knob did not shrink the hot cell: $hot -> $fine")
+    assert(hot._1 >= 4 * auto._1,
+      s"auto width $w did not shrink the hot cell: $hot -> $auto")
+    assert(auto._2 <= fine._2 * 1.75 + 0.5, s"auto width's cell balance " +
+      s"${auto._2} is not in the hand-tuned class ${fine._2}")
   }
 
   test("band-overlap STREAM query matches the batch board query on " +
@@ -519,7 +659,21 @@ class RangeJoinSpec extends SparkSpec {
     def pairs(width: Long) =
       RangeJoin.intervalOverlap(a, b, "lo_a", "hi_a", "lo_b", "hi_b", width)
         .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    assert(pairs(w) === pairs(RangeJoin.BucketWidth))
+    val probe = RangeJoin.BucketWidth
+    val atProbe = pairs(probe)
+    assert(pairs(w) === atProbe)
+    assert(pairs(probe / 64) === atProbe)
+    // the knob's efficacy, read off the hottest cell's candidate work:
+    // the probe bucket pairs ~4000 × 4000 crowd rows; the hand-tuned
+    // width (probe/64) must cut that at least 2×, and the derived width
+    // at least 2× too while staying within 4× of the hand-tuned cell
+    def hot(width: Long) = cellWork(RangeJoin.intervalOverlap(
+      a, b, "lo_a", "hi_a", "lo_b", "hi_b", width))._1
+    val (mHot, mFine, mAuto) = (hot(probe), hot(probe / 64), hot(w))
+    assert(mHot >= 2 * mFine,
+      s"the width knob did not shrink the hot cell: $mHot -> $mFine")
+    assert(mHot >= 2 * mAuto && mAuto <= 4 * mFine, s"auto width $w's " +
+      s"hot cell $mAuto is not in the hand-tuned class ($mHot -> $mFine)")
   }
 
   test("autoWidth: a narrow domain crowding ONE bucket re-keys on the " +

@@ -80,6 +80,22 @@ class SinksSpec extends SparkSpec {
     assert(spark.read.parquet(base + "/r1").count() === 1000)
   }
 
+  test("publishBoth's writer fan-out can raise the file count above the " +
+      "cached frame's partitions") {
+    // coalesce only merges partitions: a frame cached at one partition
+    // whose size calls for three writers must still get three files
+    val one = spark.range(1000).toDF("id").coalesce(1)
+    val up = Sinks.writerFanOut(one, 3)
+    val path = tmp() + "/up"
+    up.write.parquet(path)
+    assert(new java.io.File(path).listFiles()
+      .count(_.getName.endsWith(".parquet")) === 3)
+    assert(spark.read.parquet(path).count() === 1000)
+    // and below the current count it still merges
+    val four = spark.range(1000).toDF("id").repartition(4)
+    assert(Sinks.writerFanOut(four, 2).rdd.getNumPartitions === 2)
+  }
+
   test("co-bucketed tables join without a shuffle exchange") {
     val o = graft.Tables.orders(spark, Sf)
       .select("o_orderkey", "o_totalprice")

@@ -4,7 +4,9 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StateOperatorProgress, StreamingQuery}
 import graft.SparkSpec
+import graft.func.Confs.withSqlConfs
 
 case class Ev(event_id: Long, user_id: Long, event_type: String,
   value: Double, ts: Timestamp)
@@ -16,6 +18,8 @@ case class AL(lid: Long, lk: Long, lts: Timestamp)
 case class AR(rk: Long, rts: Timestamp, pay: Long)
 case class OvL(ol_id: Long, ol_lo: Timestamp, ol_hi: Timestamp)
 case class OvR(or_id: Long, or_lo: Timestamp, or_hi: Timestamp)
+case class JL(l_id: Long, lkey: Long, lts: Timestamp)
+case class JR(r_id: Long, rkey: Long, rts: Timestamp)
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -32,6 +36,80 @@ class StreamingSpec extends SparkSpec {
   // far-future sentinel so the watermark passes every real session
   private val sentinel = Ev(99, 999, "view", 0.0, t("2021-04-01 00:00:00"))
 
+  /** The RocksDB state store, as the conf pair that selects it (the
+    * default is the HDFS-backed store). */
+  private val RocksStore = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** What [[feed]] read off one query: state rows and state bytes
+    * after each micro-batch, state rows after the flush, and the rows
+    * dropped as late. */
+  private case class Fed(rows: Seq[Long], bytes: Seq[Long],
+      finalRows: Long, late: Long)
+
+  /** Starts `start` and feeds it `nBatches` micro-batches — `add(b)`
+    * adds every side's rows of batch `b`, then the query processes
+    * them — recording the state after each. `flush` adds the sentinels
+    * to the last batch and once more after it, so one batch runs under
+    * the watermark they moved; then the query stops.
+    *
+    * The query starts with no-data micro-batches off, so a feed is one
+    * micro-batch (state evicts in the next data batch instead of in an
+    * extra empty one), and with one state partition, whose store commit
+    * a batch pays once instead of once per partition; the other cases
+    * cover the multi-partition paths. The bytes are the store's
+    * current-version size: its `memoryUsedBytes` also counts older map
+    * versions kept in memory, which come and go with maintenance
+    * timing (PLANS.md, r19). Spark drops rows later than the watermark
+    * delay before any stateful operator sees them, losing answers with
+    * no error, so `late` sums `numRowsDroppedByWatermark` over every
+    * batch (one feed can span several, which `lastProgress` misses). */
+  private def feed(start: => StreamingQuery, nBatches: Int)(
+      add: Int => Unit)(flush: => Unit): Fed = {
+    val q = withSqlConfs(spark)(
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "1")(start)
+    try {
+      def state(f: StateOperatorProgress => Long): Long =
+        q.lastProgress.stateOperators.map(f).sum
+      val seen = scala.collection.mutable.Set.empty[Long]
+      var late = 0L
+      def harvest(): Unit = q.recentProgress.foreach { p =>
+        if (seen.add(p.batchId))
+          late += p.stateOperators.map(_.numRowsDroppedByWatermark).sum
+      }
+      val rows = scala.collection.mutable.ArrayBuffer.empty[Long]
+      val bytes = scala.collection.mutable.ArrayBuffer.empty[Long]
+      (0 until nBatches).foreach { b =>
+        add(b)
+        if (b == nBatches - 1) flush
+        q.processAllAvailable()
+        rows += state(_.numRowsTotal)
+        bytes += state(o => Option(o.customMetrics
+          .get("stateOnCurrentVersionSizeBytes")).fold(0L)(_.longValue))
+        harvest()
+      }
+      flush
+      q.processAllAvailable()
+      harvest()
+      Fed(rows.toSeq, bytes.toSeq, state(_.numRowsTotal), late)
+    } finally q.stop()
+  }
+
+  /** Starts `df` into an append-mode memory sink read as `view`. */
+  private def memorySink(df: DataFrame, view: String): StreamingQuery =
+    df.writeStream.format("memory").queryName(view).outputMode("append")
+      .start()
+
+  /** (count, XOR of (l_id, r_id) hashes) of a pair frame: an
+    * order-independent signature of the pair set that, unlike a sum,
+    * cannot overflow at any pair count. */
+  private def pairSig(pairs: DataFrame): (Long, Long) = {
+    val r = pairs.agg(count(lit(1)),
+      coalesce(expr("bit_xor(xxhash64(l_id, r_id))"), lit(0L))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
   test("streaming UV dedup emits the same (mid, day) set as batch") {
     implicit val sc = spark.sqlContext
     val src = MemoryStream[Ev]
@@ -46,6 +124,30 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, String)].collect().toSet
     assert(got == Set((1L, "2021-03-21"), (2L, "2021-03-21"),
       (1L, "2021-03-22")))
+
+    // at volume: 12k in-order events of 500 users over two
+    // micro-batches — each (mid, day) emitted exactly once, and the
+    // dedup state stays within the key space (one entry per (mid,
+    // day), never one per event), with no row dropped as late
+    val users = 500L
+    val vol = MemoryStream[Ev]
+    val fed = feed(memorySink(StreamJobs.uvDedup(vol.toDF()), "uv_vol"), 2)(
+      b => vol.addData(volumeEvents(b, 2, 12000L)))(())
+    val out = spark.table("uv_vol")
+    assert(out.count() === users && out.select("mid").distinct().count() ===
+      users, "uvDedup must emit each (mid, day) exactly once")
+    assert(fed.finalRows <= 2 * users,
+      s"dedup state ${fed.finalRows} grew past the key space")
+    assert(fed.late === 0L)
+  }
+
+  /** Micro-batch `b` of `nb` over `n` in-order events, 10 ms apart
+    * from 2021-03-21 10:00, of 500 users and four event types. */
+  private def volumeEvents(b: Int, nb: Int, n: Long): Seq[Ev] = {
+    val base = t("2021-03-21 10:00:00").getTime
+    val types = Array("view", "click", "cart", "order")
+    (n * b / nb until n * (b + 1) / nb).map(i => Ev(i, i % 500,
+      types((i % 4).toInt), (i % 100).toDouble, new Timestamp(base + i * 10)))
   }
 
   test("streaming tumble agg matches batch totals after watermark close") {
@@ -66,6 +168,36 @@ class StreamingSpec extends SparkSpec {
       .select("pv_ct").as[Long].collect()
     assert(w1.toSeq == Seq(2L))
     assert(got.agg(sum("pv_ct")).as[Long].head() == fixture.size)
+
+    // at volume, once per state store provider (the default
+    // HDFS-backed store and RocksDB): 12k in-order events over two
+    // micro-batches, then the sentinel; every window group must equal
+    // the batch recompute of the same events, none dropped as late
+    val events = (0 until 2).flatMap(volumeEvents(_, 2, 12000L))
+    def groups(df: DataFrame) =
+      df.select(unix_millis(col("stt")), col("ar"), col("ch"),
+          col("pv_ct"), col("dur_sum"))
+        .as[(Long, Long, String, Long, Double)].collect()
+        .map(r => (r._1, r._2, r._3) -> (r._4, r._5)).toMap
+    val batch = groups(events.toDF()
+      .groupBy(window(col("ts"), "10 seconds").as("w"),
+        (col("user_id") % 10).as("ar"), col("event_type").as("ch"))
+      .agg(count(lit(1)).as("pv_ct"), sum(col("value")).as("dur_sum"))
+      .select(col("w.start").as("stt"), col("ar"), col("ch"),
+        col("pv_ct"), col("dur_sum")))
+    // (RocksDB takes the same events in one batch: the answer, not the
+    // batching, is what the provider must not change)
+    Seq(("vt_hdfs", None, 2), ("vt_rocksdb", Some(RocksStore), 1)).foreach {
+      case (view, store, nb) => withSqlConfs(spark)(store.toSeq: _*) {
+        val vol = MemoryStream[Ev]
+        val fed = feed(memorySink(StreamJobs.visitorTumble(vol.toDF()), view),
+          nb)(b => vol.addData(volumeEvents(b, nb, 12000L)))(vol.addData(sentinel))
+        assert(fed.late === 0L, view)
+        // the sentinel's own window never closes, so it never emits
+        assert(groups(spark.table(view)) === batch,
+          s"$view: stream/batch window parity")
+      }
+    }
   }
 
   test("file-source events stream: UV dedup set matches the batch operator") {
@@ -142,6 +274,61 @@ class StreamingSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet
     assert(streamed == Set((10L, 100L), (10L, 150L), (20L, 300L)))
     assert(streamed == batch)
+
+    // the reference's two shapes at volume through intervalJoinBounds,
+    // each side fed in its own event-time order: the joined pairs equal
+    // the batch run of the same body over the same rows, join state
+    // stays below one side's event count (bounded by the watermark
+    // horizon, not by the events ingested), the sentinel flush leaves
+    // at most the sentinels, and no row is dropped as late
+    def atVolume(tag: String, ls: Seq[JL], rs: Seq[JR], lo: String,
+        hi: String, nb: Int): Seq[Long] = {
+      def chunk[A](xs: Seq[A], b: Int) =
+        xs.slice(xs.size * b / nb, xs.size * (b + 1) / nb)
+      def body(l: DataFrame, r: DataFrame) = StreamJobs.intervalJoinBounds(
+          l, r, "lkey", "rkey", "lts", "rts", lo, hi, delay = "10 seconds")
+        .select(col("l_id"), col("r_id"))
+      val lSrc = MemoryStream[JL]
+      val rSrc = MemoryStream[JR]
+      val far = t("2021-04-01 00:00:00")
+      val fed = feed(memorySink(body(lSrc.toDF(), rSrc.toDF()), s"ivj_$tag"),
+          nb) { b =>
+        lSrc.addData(chunk(ls, b)); rSrc.addData(chunk(rs, b))
+      } { lSrc.addData(JL(-1L, -1L, far)); rSrc.addData(JR(-2L, -2L, far)) }
+      val streamed = spark.table(s"ivj_$tag").as[(Long, Long)].collect().toSet
+      val batch = body(ls.toDF(), rs.toDF()).as[(Long, Long)].collect().toSet
+      assert(streamed === batch, s"$tag: stream/batch interval-join parity")
+      assert(batch.nonEmpty, tag)
+      assert(fed.rows.max < ls.size, s"$tag: join state ${fed.rows.max} " +
+        s"is O(events), not watermark-bounded: ${fed.rows}")
+      assert(fed.finalRows <= 10,
+        s"$tag: sentinel flush left ${fed.finalRows} buffered rows")
+      assert(fed.late === 0L, tag)
+      fed.rows
+    }
+    val base = t("2021-03-21 10:00:00").getTime
+    // J1 (OrderWideApp2 order × detail ±5 s) at 10 Hz: the right
+    // jitter sweeps ±9 s, inside the delay, so 11/19 of pairs join
+    atVolume("pm5s",
+      (0L until 6000L).map(i => JL(i, i, new Timestamp(base + i * 100))),
+      (0L until 6000L).map(i => JR(i, i,
+        new Timestamp(base + i * 100 + (i % 19 - 9) * 1000)))
+        .sortBy(_.rts.getTime),
+      "5 seconds", "5 seconds", 3)
+    // J2 (PaymentWideApp2 payment × order [-30 min, 0]) at 1 Hz over
+    // 12,000 s, far longer than the window: each payment follows its
+    // order by (i mod 3600) s, tapered at the end so none outlives the
+    // feed. The order side buffers the whole 30 min window, so the
+    // state curve must PLATEAU while events keep flowing
+    val j2 = atVolume("back30m",
+      (0L until 12000L).map { i =>
+        val off = math.min(i % 3600, 12000L - 1 - i)
+        JL(i, i, new Timestamp(base + (i + off) * 1000))
+      }.sortBy(_.lts.getTime),
+      (0L until 12000L).map(i => JR(i, i, new Timestamp(base + i * 1000))),
+      "30 minutes", "0 seconds", 5)
+    assert(j2.last <= j2(j2.size - 4) * 13 / 10,
+      s"J2 state kept growing past the window plateau: $j2")
   }
 
   test("streaming as-of join matches the batch composition, state-final") {
@@ -189,6 +376,12 @@ class StreamingSpec extends SparkSpec {
         "lk", "rk", "lms", "rms", Seq("pay"))
       .select("lid", "pay").as[(Long, Option[Long])].collect().toMap
     assert(got === batch)
+    // backward's post-flush residue is ONE retained right per key plus
+    // the sentinel keys — the dimension, not event history
+    asOfAtVolume("asof_latest", "backward", Long.MaxValue, (50L, 60L)) {
+      (l, r) => StreamJobs.asOfLatest(l, r, "lk", "rk", "lts", "rts", "lid",
+        "pay", delay = "10 seconds")
+    }
   }
 
   test("streaming as-of join tolerates in-delay disorder across batches") {
@@ -273,6 +466,10 @@ class StreamingSpec extends SparkSpec {
         "lk", "rk", "lms", "rms", Seq("pay"), "forward", tol)
       .select("lid", "pay").as[(Long, Option[Long])].collect().toMap
     assert(got === batch)
+    asOfAtVolume("asof_next", "forward", 40000L, (0L, 4L)) { (l, r) =>
+      StreamJobs.asOfNext(l, r, "lk", "rk", "lts", "rts", "lid", "pay",
+        40000L, "10 seconds")
+    }
   }
 
   test("streaming nearest as-of: min distance within tolerance, backward " +
@@ -326,6 +523,10 @@ class StreamingSpec extends SparkSpec {
         "lk", "rk", "lms", "rms", Seq("pay"), "nearest", tol)
       .select("lid", "pay").as[(Long, Option[Long])].collect().toMap
     assert(got === batch)
+    asOfAtVolume("asof_nearest", "nearest", 40000L, (0L, 4L)) { (l, r) =>
+      StreamJobs.asOfNearest(l, r, "lk", "rk", "lts", "rts", "lid", "pay",
+        40000L, "10 seconds")
+    }
   }
 
   /** Streams `lefts` (one batch), then `rights` (the next), then a
@@ -362,6 +563,58 @@ class StreamingSpec extends SparkSpec {
         "lk", "rk", "lms", "rms", Seq("pay"), direction)
       .select("lid", "pay").as[(Long, Option[Long])].collect().toMap
     (got, batch)
+  }
+
+  /** One as-of direction at volume: 50 keys, a left every 50 ms and a
+    * right every 200 ms, 1,000 lefts per micro-batch (50 s of event
+    * time, far past the 10 s delay), fed for 2 and then 4 batches and
+    * flushed by a far-future sentinel per side. After each flush the
+    * state must be the direction's `residue` (state keys, inclusive
+    * bounds), never the event history; at 2 batches the streamed
+    * answers must equal `asOfDirection` on the same rows, nulls
+    * included; and the peak state bytes at twice the events must stay
+    * within 1.5× — a watermark-bounded transient plus the residue. */
+  private def asOfAtVolume(tag: String, direction: String, tol: Long,
+      residue: (Long, Long))(op: (DataFrame, DataFrame) => DataFrame)
+      : Unit = {
+    implicit val sc = spark.sqlContext
+    val base = t("2021-03-21 10:00:00").getTime
+    val far = t("2021-04-01 00:00:00")
+    val Seq(p1, p2) = Seq(2, 4).map { nb =>
+      val ls = (0L until nb * 1000L).map(i =>
+        AL(i, i % 50, new Timestamp(base + i * 50)))
+      val rs = (0L until nb * 250L).map(j =>
+        AR(j % 50, new Timestamp(base + j * 200), j))
+      val lSrc = MemoryStream[AL]
+      val rSrc = MemoryStream[AR]
+      val view = s"${tag}_vol_$nb"
+      val fed = feed(memorySink(op(lSrc.toDF(), rSrc.toDF()), view), nb) {
+          b =>
+        lSrc.addData(ls.slice(b * 1000, (b + 1) * 1000))
+        rSrc.addData(rs.slice(b * 250, (b + 1) * 250))
+      } { lSrc.addData(AL(-1L, 9999L, far)); rSrc.addData(AR(9998L, far, -2L)) }
+      assert(fed.finalRows >= residue._1 && fed.finalRows <= residue._2,
+        s"$tag[$nb] post-flush state ${fed.finalRows} outside its residue " +
+          s"$residue — event history kept, or the residue lost")
+      assert(fed.late === 0L, tag)
+      if (nb == 2) {
+        val got = spark.table(view).filter(col("left_id") >= 0)
+          .select("left_id", "payload").as[(Long, Option[Long])]
+          .collect().toMap
+        val batch = graft.operators.AsOf.asOfDirection(
+            ls.toDF().select(col("lid"), col("lk"),
+              unix_millis(col("lts")).as("lms")),
+            rs.toDF().select(col("rk"),
+              unix_millis(col("rts")).as("rms"), col("pay")),
+            "lk", "rk", "lms", "rms", Seq("pay"), direction, tol)
+          .select("lid", "pay").as[(Long, Option[Long])].collect().toMap
+        assert(got.size === ls.size && got === batch,
+          s"$tag stream/batch parity")
+      }
+      fed.bytes.max
+    }
+    assert(p2 <= p1 * 3 / 2,
+      s"$tag state grew with the events ingested: $p1 -> $p2 bytes")
   }
 
   test("streaming forward/nearest as-of at tolMs = Long.MaxValue equal " +
@@ -622,6 +875,70 @@ class StreamingSpec extends SparkSpec {
     assert(got.toSet === Set((1L, 1L), (2L, 1L)))
     assert(finalState <= 2,
       s"only the sentinels may remain buffered, got $finalState rows")
+
+    // at volume: 250 Hz per side (4 ms apart), spans 0–16 ms, the right
+    // side phase-shifted — about four true partners per interval. Fed
+    // 5,000 rows per side per micro-batch (20 s of event time) for 3
+    // and then 6 batches, each run must keep its state keys (one per
+    // bucket) below the event count, leave only the sentinels' buckets
+    // after the flush and drop nothing as late. At twice the events the
+    // state BYTES must stay flat — bytes, not keys, because a key holds
+    // a bucket's whole buffer, so a leak inside the buffers would leave
+    // the key count flat: the median per-batch reading within 1.5×,
+    // and the 90th percentile within 3× (a leak that shows as growing
+    // spikes leaves the median flat). The streamed pairs must equal the
+    // batch operator on the same rows, under both state store providers.
+    val base = t("2021-03-21 10:00:00").getTime
+    def lRow(i: Long) = OvL(i, new Timestamp(base + i * 4),
+      new Timestamp(base + i * 4 + i % 17))
+    def rRow(j: Long) = OvR(j, new Timestamp(base + j * 4 + 2),
+      new Timestamp(base + j * 4 + 2 + (j * 7) % 17))
+    def atVolume(view: String, nb: Int, n: Long = 0L): (Fed, (Long, Long)) = {
+      val lVol = MemoryStream[OvL]
+      val rVol = MemoryStream[OvR]
+      val per = if (n > 0) n / nb else 5000L
+      val far = t("2021-04-01 00:00:00")
+      val fed = feed(memorySink(StreamJobs.intervalOverlapStream(lVol.toDF(),
+          rVol.toDF(), "ol_id", "ol_lo", "ol_hi", "or_id", "or_lo", "or_hi",
+          bucketWidthMs = 32L, maxSpanMs = 16L, delay = "10 seconds"), view),
+          nb) { b =>
+        lVol.addData((b * per until (b + 1) * per).map(lRow))
+        rVol.addData((b * per until (b + 1) * per).map(rRow))
+      } { lVol.addData(OvL(-1L, far, far)); rVol.addData(OvR(-2L, far, far)) }
+      assert(fed.late === 0L, view)
+      assert(fed.rows.max < nb * per,
+        s"$view: overlap state ${fed.rows.max} buckets is O(events)")
+      assert(fed.finalRows <= 2,
+        s"$view: the sentinel flush left ${fed.finalRows} buckets")
+      (fed, pairSig(spark.table(view).filter(col("l_id") >= 0)))
+    }
+    def median(xs: Seq[Long]) = xs.sorted.apply(xs.size / 2)
+    // nearest-rank 90th percentile: at 3 readings it is the max
+    def p90(xs: Seq[Long]) =
+      xs.sorted.apply(math.ceil(xs.size * 0.9).toInt - 1)
+    val (f1, sig1) = atVolume("ovs_vol_3", 3)
+    val (f2, _) = atVolume("ovs_vol_6", 6)
+    assert(median(f2.bytes) <= median(f1.bytes) * 3 / 2,
+      s"overlap state bytes grew with the events ingested: ${f1.bytes} " +
+        s"-> ${f2.bytes}")
+    assert(p90(f2.bytes) <= 3 * p90(f1.bytes),
+      s"overlap p90 state bytes grew with the events ingested: " +
+        s"${f1.bytes} -> ${f2.bytes}")
+    def ms(ts: Timestamp) = ts.getTime
+    val batchSig = pairSig(graft.operators.RangeJoin.intervalOverlap(
+      (0L until 15000L).map(lRow).map(r => (r.ol_id, ms(r.ol_lo),
+        ms(r.ol_hi))).toDF("l_id", "l_lo", "l_hi"),
+      (0L until 15000L).map(rRow).map(r => (r.or_id, ms(r.or_lo),
+        ms(r.or_hi))).toDF("r_id", "r_lo", "r_hi"),
+      "l_lo", "l_hi", "r_lo", "r_hi", 32L))
+    assert(sig1 === batchSig, "stream/batch overlap parity (count, xor)")
+    assert(sig1._1 > 15000L)
+    // the same rows in one micro-batch: the answer, not the batching,
+    // is what the provider must not change
+    withSqlConfs(spark)(RocksStore) {
+      assert(atVolume("ovs_vol_rocks", 1, 15000L)._2 === sig1,
+        "the RocksDB provider changed the answer")
+    }
   }
 
   test("stream-stream interval overlap: randomized batch parity, " +
@@ -717,6 +1034,51 @@ class StreamingSpec extends SparkSpec {
     // the crowd really pairs all-to-all (the shape under test)
     assert(got.count { case (l, r) => l >= 500 && l < 525 &&
       r >= 1500 && r < 1525 } === 625)
+
+    // the crowd ladder: C = 800 rows per side on ONE bucket-aligned
+    // interval, fed in two micro-batches (the second's lefts pair with
+    // the first's buffered rights inside their grid cell) under a delay
+    // past the feed, so nothing prunes — unmitigated (1,1), the batch
+    // form's 1-D split (16,1) and the 2-D grid (4,4), the same 16
+    // cells. Answers are salt-invariant; the unsalted crowd is ONE
+    // state key and both salted forms spread it over exactly 16; the
+    // per-key state drops to ~(C + C/16)/2C ≈ 0.53 of the single key
+    // under 1-D (the replicated right dominates) and to (C/4 + C/4)/2C
+    // = 0.25 under the grid (bars 0.65 and 0.40); and the grid buffers
+    // less in total than 1-D at the same cell count
+    val C = 800
+    val (cLo, cHi) = (new Timestamp(t("2021-03-21 10:00:00").getTime + 96),
+      new Timestamp(t("2021-03-21 10:00:00").getTime + 112))
+    def ladder(sl: Int, sr: Int): ((Long, Long), Long, Long) = {
+      val cl = MemoryStream[OvL]
+      val cr = MemoryStream[OvR]
+      var sig = (0L, 0L)
+      val fed = feed(StreamJobs.intervalOverlapStream(cl.toDF(), cr.toDF(),
+          "ol_id", "ol_lo", "ol_hi", "or_id", "or_lo", "or_hi",
+          bucketWidthMs = 32L, maxSpanMs = 16L, delay = "1 hour",
+          saltLeft = sl, saltRight = sr)
+        .writeStream.outputMode("append")
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          val (c, x) = pairSig(b)
+          sig = (sig._1 + c, sig._2 ^ x)
+        }.start(), 2) { b =>
+        val ids = (b * C / 2 until (b + 1) * C / 2).map(_.toLong)
+        cl.addData(ids.map(OvL(_, cLo, cHi)))
+        cr.addData(ids.map(i => OvR(10000L + i, cLo, cHi)))
+      }(())
+      (sig, fed.bytes.last, fed.rows.last)
+    }
+    val (s0, b0, k0) = ladder(1, 1)
+    val (s1, b1, k1) = ladder(16, 1)
+    val (s2, b2, k2) = ladder(4, 4)
+    assert(s0._1 === C.toLong * C, "the crowd must pair all-to-all")
+    assert(s1 === s0 && s2 === s0, s"salt changed the answer: $s0 $s1 $s2")
+    assert((k0, k1, k2) === ((1L, 16L, 16L)), "crowd placement keys")
+    assert(b1 / k1 * 20 <= b0 / k0 * 13, s"1-D per-key state should drop " +
+      s"to ~0.53 of the single key: ${b1 / k1} vs ${b0 / k0} bytes/key")
+    assert(b2 / k2 * 5 <= b0 / k0 * 2, s"2-D per-key state should drop " +
+      s"to ~0.25 of the single key: ${b2 / k2} vs ${b0 / k0} bytes/key")
+    assert(b2 < b1, s"the grid should buffer less than 1-D: $b2 vs $b1")
   }
 
   test("stream-stream interval overlap: an over-span row fails loudly") {
