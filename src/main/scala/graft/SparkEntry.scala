@@ -175,9 +175,11 @@ object SparkEntry {
     // (the oracle lock is the banding + threshold arithmetic);
     // row-level evidence for the 0.9 path is SimilaritySpec's
     // planted-twin corpus, where it must find exactly the plants
-    q("q_llm_embed_neardup_prod", llm.Similarity.lshNearDupProd(_, _),
+    q("q_llm_embed_neardup_prod",
+      llm.Similarity.lshNearDup(_, _, thresholdPpm = llm.Similarity.NearDupProdPpm),
       llm.Similarity.lshNearDupProdOracle),
-    q("q_llm_embed_keeplist_prod", llm.Similarity.embedKeepListProd(_, _),
+    q("q_llm_embed_keeplist_prod",
+      llm.Similarity.embedKeepList(_, _, thresholdPpm = llm.Similarity.NearDupProdPpm),
       llm.Similarity.embedKeepListProdOracle),
     // scale-aware banding: band width derived from corpus cardinality
     // (the measured-linear configuration; oracle re-derives the width

@@ -30,15 +30,13 @@ object Confs {
     * [[withSqlConfs]] limitation that plan-shaping confs must hold at
     * the caller's ACTION, not at frame construction: a sibling
     * session sharing the parent's SparkContext and SharedState (cache,
-    * catalog) whose SessionState is a deep CLONE of the parent's,
-    * with `confs` overlaid and any `configure` injections (optimizer
-    * rules / planner strategies via its `experimental` hooks,
-    * function registration) applied to it alone. Frames built on the
-    * returned session stay LAZY and execute under these confs
-    * whenever acted on; the parent session is never mutated. Mint one
-    * per query — construction is cheap. */
-  def scopedSession(spark: SparkSession, confs: Seq[(String, String)],
-      configure: SparkSession => Unit = _ => ()): SparkSession =
+    * catalog) whose SessionState is a deep CLONE of the parent's, with
+    * `confs` overlaid. Frames built on the returned session stay LAZY
+    * and execute under these confs whenever acted on; the parent
+    * session is never mutated. Mint one per query — construction is
+    * cheap. */
+  def scopedSession(spark: SparkSession,
+      confs: Seq[(String, String)]): SparkSession =
     org.apache.spark.sql.graftshim.SessionShim
-      .scopedSession(spark, confs.toMap, configure)
+      .scopedSession(spark, confs.toMap)
 }

@@ -304,27 +304,22 @@ object Dedup {
     * once (lazy checkpoint) — the band self-join and both verify joins
     * re-read them instead of re-tokenizing the corpus per branch. */
   def lshDuplicates(spark: SparkSession, dir: String): DataFrame =
-    lshDuplicatesWith(spark, dir, Bands, R)
+    lshDuplicatesOf(Tables.documents(spark, dir))
 
-  /** [[lshDuplicates]] with an explicit bands×rows banding — the
-    * RECALL knob. The default [[Bands]]×[[R]] = 8×4 has band-hit
-    * probability 1−(1−J⁴)⁸ ≈ 0.990 at J = 0.81, which the round-10
-    * scale rehearsal measured as 97/100k docs (0.097%) losing every
-    * band cut on an adversarial chain corpus. When recall at the 0.8
-    * verify threshold matters, 16×2 over the same K = 32 signature
-    * raises the hit probability to 1−(1−J²)¹⁶ ≈ 1−3e-8 at the same
-    * verify cost per emitted candidate (more candidates, same exact
-    * Jaccard filter — precision is unchanged by construction). The
-    * board query stays on the default; the rehearsal re-runs the
-    * constructed-truth corpus at 16×2 and measures recall → 100%
-    * (PLANS.md §r11). */
-  def lshDuplicatesWith(spark: SparkSession, dir: String,
-                        bands: Int, rows: Int): DataFrame =
-    lshDuplicatesOf(Tables.documents(spark, dir), bands, rows)
-
-  /** [[lshDuplicatesWith]] over any (doc_id, text) frame. */
+  /** [[lshDuplicates]] over any (doc_id, text) frame. `bands`×`rows`
+    * is the RECALL knob. The default [[Bands]]×[[R]] = 8×4 has
+    * band-hit probability 1−(1−J⁴)⁸ ≈ 0.990 at J = 0.81, which the
+    * round-10 scale rehearsal measured as 97/100k docs (0.097%)
+    * losing every band cut on an adversarial chain corpus. When
+    * recall at the 0.8 verify threshold matters, 16×2 over the same
+    * K = 32 signature raises the hit probability to 1−(1−J²)¹⁶ ≈
+    * 1−3e-8 at the same verify cost per emitted candidate (more
+    * candidates, same exact Jaccard filter — precision is unchanged by
+    * construction). The board query stays on the default; the
+    * rehearsal re-runs the constructed-truth corpus at 16×2 and
+    * measures recall → 100% (PLANS.md §r11). */
   def lshDuplicatesOf(docs: DataFrame,
-                      bands: Int, rows: Int): DataFrame = {
+                      bands: Int = Bands, rows: Int = R): DataFrame = {
     val shl = shingleSetsShared(docs)
     val bands0 = bandedOf(signaturesWideOf(shl).matLazily,
       bands, rows)
@@ -360,7 +355,7 @@ object Dedup {
     * the min-id one — a component that exists nowhere in the plain
     * pipeline's output. */
   def lshDuplicatesCollapsed(spark: SparkSession, dir: String): DataFrame =
-    lshDuplicatesOf(collapsedDocs(Tables.documents(spark, dir)), Bands, R)
+    lshDuplicatesOf(collapsedDocs(Tables.documents(spark, dir)))
 
   /** The exact-collapse device shared by every `*Collapsed` variant:
     * one representative (min doc_id) per distinct non-null non-empty

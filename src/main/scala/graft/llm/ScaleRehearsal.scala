@@ -33,11 +33,11 @@ import org.apache.spark.sql.functions._
   *   validates vocabCoverage's freq-keyed device at 1M+ types.
   *
   * - `recall` (r11, VERDICT r10 task 5): re-runs the closure corpus
-  *   through [[Dedup.lshDuplicatesWith]] at the stricter 16×2
+  *   through [[Dedup.lshDuplicatesOf]] at the stricter 16×2
   *   banding and requires the r10-measured 97-doc recall gap to
   *   close to zero against the constructed truth.
   *
-  * - `bpe` (r11, VERDICT r10 task 6): runs [[Bpe.learnWith]] at a
+  * - `bpe` (r11, VERDICT r10 task 6): runs [[Bpe.learn]] at a
   *   production-scale configuration (≥4k learned merges; batch 256,
   *   pool 1024) on a 10M-token letter-word corpus and records
   *   runtime and merge-table size. Board constants are untouched.
@@ -54,7 +54,7 @@ import org.apache.spark.sql.functions._
   *   plus the scale-aware banding variant of the last one, because
   *   fixed 8×4 sign-LSH is the ONE shape with an expected
   *   super-linear term (chance candidates ~ bands·n²/2^bits) and the
-  *   knob that removes it ([[Similarity.lshNearDupWith]], bits ≈
+  *   knob that removes it ([[Similarity.lshNearDup]]'s bits ≈
   *   log2(n/targetBucket)) must be demonstrated, not asserted.
   *
   * - `prefixcross` (r16, VERDICT r15 task 1): the lossless
@@ -443,9 +443,9 @@ object ScaleRehearsal {
     println(s"[scale] === recall-knob rehearsal " +
       s"($RecallBands×$RecallRows banding) ===")
     val (pairs, nPairs) =
-      time(s"lshDuplicatesWith($RecallBands, $RecallRows)") {
-        val p = Dedup
-          .lshDuplicatesWith(spark, closureDir, RecallBands, RecallRows)
+      time(s"lshDuplicatesOf($RecallBands, $RecallRows)") {
+        val p = Dedup.lshDuplicatesOf(
+            graft.Tables.documents(spark, closureDir), RecallBands, RecallRows)
           .select("doc_a", "doc_b").localCheckpoint()
         (p, p.count())
       }
@@ -544,7 +544,7 @@ object ScaleRehearsal {
     println(s"[scale] corpus: $nTok tokens")
     val t0 = System.nanoTime()
     val (merges, vocab) =
-      Bpe.learnWith(docs, BpeRounds, BpeBatchCap, BpeCandCap)
+      Bpe.learn(docs, BpeRounds, BpeBatchCap, BpeCandCap)
     val secs = (System.nanoTime() - t0) / 1e9
     val tableBytes = merges.map { case (p, _) => p.length + 16 }.sum
     val nSyms = vocab.select(explode(split(trim(col("syms")), " ")))
@@ -676,9 +676,9 @@ object ScaleRehearsal {
         "triangles" -> (graft.ads.ItemRank.triangles _),
         "lsh_dups" -> (Dedup.lshDuplicates _),
         "keeplist_8x4" -> ((sp: SparkSession, d: String) =>
-          Similarity.embedKeepListWith(sp, d, 8, 4)),
+          Similarity.embedKeepList(sp, d, 8, 4)),
         s"keeplist_aware_8x$bits" -> ((sp: SparkSession, d: String) =>
-          Similarity.embedKeepListWith(sp, d, 8, bits)),
+          Similarity.embedKeepList(sp, d, 8, bits)),
         // second CPU tier (r13 verdict task 5): the next-largest board
         // block (~17 cpu-s at sf0.1), previously measured at one scale
         // point only
@@ -697,7 +697,7 @@ object ScaleRehearsal {
         "dedup_sweep" -> (Similarity.dedupSweep _),
         s"dedup_sweep_aware_8x$bits" -> ((sp: SparkSession, d: String) =>
           Similarity.dedupSweepFrom(
-            Similarity.lshNearDupAt(sp, d, 8, bits, Similarity.NearDupPpm))))
+            Similarity.lshNearDup(sp, d, 8, bits))))
     }
     // canonical pipe name across rungs (the aware variants' bits — and
     // so their display names — change with the rung; the fit needs one

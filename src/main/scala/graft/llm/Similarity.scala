@@ -948,15 +948,12 @@ object Similarity {
   /** (vec_id, sig) via a per-partition JVM loop: the 2048-term
     * projection made janino the bottleneck (~20 s compile per plan,
     * data-size-independent); the loop does the identical
-    * left-associative IEEE sum, so signatures are unchanged. */
-  def signatures(e: DataFrame): DataFrame =
-    signaturesWith(e, Planes)
-
-  /** [[signatures]] with an explicit plane count ≤ 63 — the first
-    * [[Planes]] bits are identical to the default signature (the
-    * plane family is one deterministic [[planeWeight]] sequence), so
-    * widening the signature never perturbs the default banding. */
-  def signaturesWith(e: DataFrame, planes: Int): DataFrame = {
+    * left-associative IEEE sum, so signatures are unchanged. `planes`
+    * ≤ 63: the first [[Planes]] bits are identical to the default
+    * signature (the plane family is one deterministic [[planeWeight]]
+    * sequence), so widening the signature never perturbs the default
+    * banding. */
+  def signatures(e: DataFrame, planes: Int = Planes): DataFrame = {
     require(planes >= 1 && planes <= 63, s"planes $planes not in [1,63]")
     import e.sparkSession.implicits._
     e.select(col("vec_id"), col("embedding"))
@@ -985,35 +982,25 @@ object Similarity {
   }
 
   /** Near-duplicate pairs: banded sign-LSH candidates verified with
-    * exact cosine ≥ 0.35. Bands bucket the join; recall (vs the exact
-    * all-pairs answer) is probabilistic and asserted in tests. */
-  def lshNearDup(spark: SparkSession, dir: String): DataFrame =
-    lshNearDupWith(spark, dir, BandsCount, BitsPerBand)
-
-  /** [[lshNearDup]] with an explicit bands×bits banding — the
-    * CANDIDATE-VOLUME knob. Per band, two vectors collide with
-    * probability ~2^-bits on an unclustered corpus, so expected
-    * chance candidates are bands·n²/2^(bits+1): at FIXED bits that
-    * term is quadratic in corpus size (confirmed by the r13 ladder —
-    * see PLANS.md §r13). Growing bits with the corpus —
-    * bits ≈ log2(n / targetBucket) — holds expected bucket
+    * exact cosine ≥ `thresholdPpm` (0.35 on the board; the production
+    * regime is [[NearDupProdPpm]], same candidate generation). Bands
+    * bucket the join; recall (vs the exact all-pairs answer) is
+    * probabilistic and asserted in tests.
+    *
+    * `bands`×`bits` is the CANDIDATE-VOLUME knob. Per band, two
+    * vectors collide with probability ~2^-bits on an unclustered
+    * corpus, so expected chance candidates are bands·n²/2^(bits+1):
+    * at FIXED bits that term is quadratic in corpus size (confirmed by
+    * the r13 ladder — see PLANS.md §r13). Growing bits with the corpus
+    * — bits ≈ log2(n / targetBucket) — holds expected bucket
     * occupancy constant and restores ~linear growth, trading per-band
     * recall (p^bits for bit-agreement probability p = 1−θ/π), which
     * stays ≈1 for the cos ≥ 0.9 near-dup regime even at 8 bits. The
     * board query stays on 8×4 (oracle lockstep); production picks
-    * bits from the corpus cardinality. */
-  def lshNearDupWith(spark: SparkSession, dir: String,
-                     bands: Int, bits: Int): DataFrame =
-    lshNearDupAt(spark, dir, bands, bits, NearDupPpm)
-
-  /** [[lshNearDupProd]]: the production-threshold sibling — identical
-    * candidate generation, cosine verify at [[NearDupProdPpm]]. */
-  def lshNearDupProd(spark: SparkSession, dir: String): DataFrame =
-    lshNearDupAt(spark, dir, BandsCount, BitsPerBand, NearDupProdPpm)
-
-  /** [[lshNearDupWith]] with the VERIFY-THRESHOLD knob exposed too. */
-  def lshNearDupAt(spark: SparkSession, dir: String,
-                   bands: Int, bits: Int, thresholdPpm: Long): DataFrame = {
+    * bits from the corpus cardinality ([[scaleBits]]). */
+  def lshNearDup(spark: SparkSession, dir: String,
+                 bands: Int = BandsCount, bits: Int = BitsPerBand,
+                 thresholdPpm: Long = NearDupPpm): DataFrame = {
     // bits ≤ 31 keeps the band mask inside Int; anything wider is
     // pointless anyway (2^31 buckets ≫ any corpus) and `1 << 32`
     // silently wraps mod 32
@@ -1029,7 +1016,7 @@ object Similarity {
     // twice — the r20 plan audit read the embeddings scan 4× in this
     // family's plans. The cached frame is (vec_id, sig): 16 bytes a
     // row, never the vectors.
-    val sigs = signaturesWith(e, bands * bits).matLazily
+    val sigs = signatures(e, bands * bits).matLazily
     val bandsDf = sigs.select(col("vec_id"), posexplode(
       array((0 until bands).map(b =>
         shiftright(col("sig"), bits * b)
@@ -1068,7 +1055,7 @@ object Similarity {
       s"CASE WHEN ${planeSql(j)} >= 0 THEN ${1L << j} ELSE 0 END")
       .mkString(" + ")
 
-  /** [[lshNearDupAt]]'s oracle at the default 8×4 banding with the
+  /** [[lshNearDup]]'s oracle at the default 8×4 banding with the
     * verify threshold parameterized (the banding — and therefore the
     * candidate set — is identical across thresholds). */
   private def nearDupPairsOracleAt(thresholdPpm: Long): String = {
@@ -1317,21 +1304,23 @@ object Similarity {
     * graph (≪ corpus), and the final verdict join is one left join
     * from the embeddings scan pruned to vec_id. The oracle restates
     * the WHOLE chain: the sign-LSH pipeline as CTEs feeding a
-    * recursive-CTE reachability walk — hash-exact end to end. */
-  def embedKeepList(spark: SparkSession, dir: String): DataFrame =
-    embedKeepListWith(spark, dir, BandsCount, BitsPerBand)
-
-  /** [[embedKeepList]] with the banding knob exposed — the scale path
-    * picks bits from corpus cardinality (see [[lshNearDupWith]]). */
-  def embedKeepListWith(spark: SparkSession, dir: String,
-                        bands: Int, bits: Int): DataFrame =
-    embedKeepListAt(spark, dir, bands, bits, NearDupPpm)
-
-  /** [[embedKeepList]] in the PRODUCTION regime: cos ≥ 0.9 verify
-    * ([[NearDupProdPpm]]) — the threshold the noise-floor analysis
-    * prescribes at real corpus sizes. */
-  def embedKeepListProd(spark: SparkSession, dir: String): DataFrame =
-    embedKeepListAt(spark, dir, BandsCount, BitsPerBand, NearDupProdPpm)
+    * recursive-CTE reachability walk — hash-exact end to end. The
+    * knobs are [[lshNearDup]]'s: the production regime verifies at
+    * [[NearDupProdPpm]], and [[embedKeepListScaled]] picks bits from
+    * the corpus cardinality. */
+  def embedKeepList(spark: SparkSession, dir: String,
+                    bands: Int = BandsCount, bits: Int = BitsPerBand,
+                    thresholdPpm: Long = NearDupPpm): DataFrame = {
+    val pairs = lshNearDup(spark, dir, bands, bits, thresholdPpm)
+      .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
+    embRows(spark, dir).select(col("vec_id"))
+      .join(Dedup.closureKeepers(pairs)
+        .withColumnRenamed("doc_id", "vec_id"), Seq("vec_id"), "left")
+      .select(col("vec_id"),
+        coalesce(col("keeper"), col("vec_id")).as("keeper"),
+        when(col("keeper").isNull || col("keeper") === col("vec_id"), 1)
+          .otherwise(0).cast("int").as("kept"))
+  }
 
   /** [[embedKeepList]] on the SCALE-AWARE banding: band width derived
     * from the corpus cardinality by [[scaleBits]] — the measured-linear
@@ -1341,21 +1330,7 @@ object Similarity {
     * banded pipeline with occupancy-constant buckets. */
   def embedKeepListScaled(spark: SparkSession, dir: String): DataFrame = {
     val n = embRows(spark, dir).count()
-    embedKeepListAt(spark, dir, BandsCount, scaleBits(n), NearDupPpm)
-  }
-
-  /** [[embedKeepListWith]] with the verify threshold exposed too. */
-  def embedKeepListAt(spark: SparkSession, dir: String,
-                      bands: Int, bits: Int, thresholdPpm: Long): DataFrame = {
-    val pairs = lshNearDupAt(spark, dir, bands, bits, thresholdPpm)
-      .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-    embRows(spark, dir).select(col("vec_id"))
-      .join(Dedup.closureKeepers(pairs)
-        .withColumnRenamed("doc_id", "vec_id"), Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        coalesce(col("keeper"), col("vec_id")).as("keeper"),
-        when(col("keeper").isNull || col("keeper") === col("vec_id"), 1)
-          .otherwise(0).cast("int").as("kept"))
+    embedKeepList(spark, dir, bits = scaleBits(n))
   }
 
   /** Connected-components + keeper verdict over any pairs oracle —

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -88,198 +88,137 @@ object RangeJoin {
         expr(fdiv(hiCol, bucketWidth)))))
   }
 
-  /** Census max/mean occupancy ratio above which [[autoWidth]] calls
-    * the probe width skewed and re-keys. Below it the probe width
-    * stands — paying explode fan-out for a balanced corpus is pure
-    * loss. */
+  /** Census max/mean occupancy ratio above which
+    * [[autoOverlapMitigation]] calls the probe width skewed. Below it
+    * the probe width stands — paying explode fan-out for a balanced
+    * corpus is pure loss. */
   val AutoSkewFactor = 8.0
 
-  /** Absolute occupancy above which [[autoWidth]] re-keys REGARDLESS
-    * of the max/mean ratio. The ratio test is mathematically blind
-    * when the corpus occupies at most [[AutoSkewFactor]] buckets
-    * (maxN ≤ total and avgN = total/buckets force max/mean ≤
-    * buckets) — a narrow domain crowding ONE bucket reads as
-    * perfectly balanced. A bucket's candidate work is its occupancy
-    * product, so the cap is a work budget: 4096² ≈ 17M candidate
-    * pairs is the most one task should absorb before re-keying. */
+  /** Absolute occupancy above which [[autoOverlapMitigation]] acts
+    * REGARDLESS of the max/mean ratio. The ratio test is
+    * mathematically blind when the corpus occupies at most
+    * [[AutoSkewFactor]] buckets (maxN ≤ total and avgN = total/buckets
+    * force max/mean ≤ buckets) — a narrow domain crowding ONE bucket
+    * reads as perfectly balanced. A bucket's candidate work is its
+    * occupancy product, so the cap is a work budget: 4096² ≈ 17M
+    * candidate pairs is the most one task should absorb. */
   val AutoOccupancyCap = 4096L
 
-  /** Derive `bucketWidth` from the data — the sampled answer to the
-    * r16 finding that EXPANSION skew (one crowded value range →
-    * quadratic join output in one task) is invisible to AQE's
-    * size-based skew split, leaving width the only mitigation, and
-    * until now a hand-tuned one.
-    *
-    * Device: ONE census pass at `probeWidth` — both sides' valid
-    * intervals explode to their buckets (same contract/guard as the
-    * join itself) and one aggregation computes per-bucket occupancy,
-    * its max/mean, the MEDIAN SPAN inside the hottest bucket, and the
-    * corpus span SUM and max (counted once per interval via its first
-    * bucket). The probe width stands only when max/mean ≤
-    * [[AutoSkewFactor]] AND the worst bucket is under
-    * [[AutoOccupancyCap]] — the ratio alone is blind on a narrow
-    * domain (≤ factor occupied buckets force max/mean ≤ buckets), so
-    * the absolute work budget is what catches a corpus crowding ONE
-    * bucket uniformly.
-    *
-    * Otherwise the width balances the device's two costs. Within a
-    * crowded range of n intervals of typical span s, total candidate
-    * work across that range's buckets at width v is ∝ n²·(s+v)²/v
-    * (occupancy n(s+v)/range per bucket, range/v buckets) — wanting
-    * v SMALL, but with nothing left to gain below v ≈ s. Meanwhile
-    * the whole corpus pays explode fan-out Σspans/v — wanting v
-    * LARGE. Marginal balance (d/dv of maxN²/probe · v = d/dv of
-    * S/v, with range ≈ probe since the crowd sat inside one probe
-    * bucket) lands at v* = sqrt(S·probe)/maxN. That v* is clamped
-    * to [max(crowd median span, guard floor, 1), probeWidth]: below
-    * the crowd's own span rebalancing stops while explode cost keeps
-    * rising (measured r17: the crowd-span width looked perfect for
-    * the hot bucket and moved the bottleneck to a 128× background
-    * explode), and the guard floor ceil(maxSpan/(MaxSpanBuckets−1))
-    * guarantees the widest interval explodes to at most
-    * [[MaxSpanBuckets]] buckets (the −1 absorbs bucket mis-alignment,
-    * which can add one bucket over span/width) — an auto-derived
-    * width can never trip the span guard the caller didn't choose.
-    *
-    * Cost: one shuffle over explode(span/probeWidth) rows + one
-    * 1-row collect — O(corpus), far below the join it tunes. The
-    * returned width feeds the existing knob unchanged; results are
-    * width-independent by the operator's contract (spec-asserted). */
-  def autoWidth(left: DataFrame, right: DataFrame,
-      lLo: String, lHi: String, rLo: String, rHi: String,
-      probeWidth: Long = BucketWidth): Long =
-    overlapCensus(left, right, lLo, lHi, rLo, rHi, probeWidth) match {
-      case None => probeWidth // empty/all-invalid input
-      case Some(c) if c.benign => probeWidth
-      case Some(c) => overlapWidthFor(c, probeWidth)
+  /** Per-bucket candidate work above which [[autoPointMitigation]]
+    * acts: the same ~17M-pair task budget [[AutoOccupancyCap]]
+    * encodes (there work ≈ occupancy², here it is the point×interval
+    * PRODUCT, so the budget is the cap squared). */
+  val AutoWorkBudget: Long = AutoOccupancyCap * AutoOccupancyCap
+
+  /** The valid intervals' (saturating, inclusive) span sum, count and
+    * max — the explode-cost side of both censuses. */
+  private case class Spans(sum: Double, count: Long, max: Long) {
+    /** ceil(max / (MaxSpanBuckets − 1)): the narrowest width at which
+      * the widest interval explodes to at most [[MaxSpanBuckets]]
+      * buckets (the −1 absorbs bucket misalignment, which can add one
+      * bucket over span/width) — an auto-derived width can never trip
+      * the span guard the caller didn't choose. */
+    def guardFloor: Long = {
+      val d = MaxSpanBuckets - 1
+      max / d + (if (max % d == 0) 0 else 1)
     }
+    /** The mean span s̄. */
+    def mean: Double = sum / math.max(count, 1L)
+  }
+
+  /** `df`'s (lo, hi) columns normalized to LONG `__lo`/`__hi`. */
+  private def longBounds(df: DataFrame, lo: String, hi: String): DataFrame =
+    df.select(col(lo).cast("long").as("__lo"), col(hi).cast("long").as("__hi"))
+
+  /** Both sides' intervals pooled — the overlap census's input. */
+  private def pooledIntervals(left: DataFrame, right: DataFrame,
+      lLo: String, lHi: String, rLo: String, rHi: String): DataFrame =
+    longBounds(left, lLo, lHi).unionByName(longBounds(right, rLo, rHi))
+
+  /** Intervals (`__lo`, `__hi`) exploded at `probeWidth` and rolled up
+    * per bucket in ONE pass: occupancy `__n`, the `extra` aggregates,
+    * and the span sum/count/max (`__s1`/`__c1`/`__mx1`) counted once
+    * per interval via its FIRST bucket (`__b == fdiv(__lo)` exactly
+    * once per exploded interval). The span `__span` saturates like the
+    * guard (signed contract); bucketExplode applies the valid-interval
+    * filter. */
+  private def bucketRollup(iv: DataFrame, probeWidth: Long,
+      extra: Column*): DataFrame = {
+    require(probeWidth >= 1, s"probe width $probeWidth must be >= 1")
+    val firstB = col("__b") === expr(fdiv("__lo", probeWidth))
+    val spanned = iv.withColumn("__span", expr("coalesce(try_add(" +
+      s"try_subtract(__hi, __lo), 1L), ${Long.MaxValue}L)"))
+    bucketExplode(spanned, "__lo", "__hi", probeWidth)
+      .groupBy("__b")
+      .agg(count(lit(1)).as("__n"), extra ++ Seq(
+        sum(when(firstB, col("__span").cast("double"))).as("__s1"),
+        count(when(firstB, lit(1))).as("__c1"),
+        max(when(firstB, col("__span"))).as("__mx1")): _*)
+  }
+
+  /** The corpus [[Spans]] aggregates over a [[bucketRollup]], read back
+    * by [[spansAt]]. */
+  private def spanTotals: Seq[Column] = Seq(sum(col("__s1")).as("spanSum"),
+    coalesce(sum(col("__c1")), lit(0L)).as("ivCount"),
+    max(col("__mx1")).as("maxSpan"))
+
+  private def spansAt(r: Row, i: Int): Spans =
+    Spans(r.getDouble(i), r.getLong(i + 1), r.getLong(i + 2))
 
   /** The overlap-form census rollup: pooled per-bucket occupancy
     * max/mean, the hottest bucket's id and median span, and the
-    * corpus span sum/count/max (counted once per interval via the
-    * first-bucket trick). */
+    * corpus [[Spans]]. */
   private case class OverlapCensus(maxN: Long, avgN: Double,
-      hotMed: Long, hotB: Long, spanSum: Double, ivCount: Long,
-      maxSpan: Long) {
+      hotMed: Long, hotB: Long, spans: Spans) {
     /** The probe width stands: ratio test (blind on narrow domains)
       * AND the absolute occupancy work budget. */
     def benign: Boolean =
       maxN <= AutoSkewFactor * avgN && maxN <= AutoOccupancyCap
   }
 
-  /** Both sides' valid intervals pooled and exploded at `probeWidth`,
-    * rolled up to ONE statistics row (see [[autoWidth]]'s scaladoc
-    * for the device). Returns None on empty/all-invalid input. */
+  /** Both sides' valid intervals pooled, exploded at `probeWidth` and
+    * rolled up to ONE statistics row. None on empty/all-invalid
+    * input. */
   private def overlapCensus(left: DataFrame, right: DataFrame,
       lLo: String, lHi: String, rLo: String, rHi: String,
       probeWidth: Long): Option[OverlapCensus] = {
-    require(probeWidth >= 1, s"probe width $probeWidth must be >= 1")
-    val iv = pooledIntervals(left, right, lLo, lHi, rLo, rHi)
-      // saturating span (signed contract — same device as the guard);
-      // bucketExplode re-applies the valid-interval filter
-      .withColumn("__span", expr("coalesce(try_add(try_subtract(__hi," +
-        s" __lo), 1L), ${Long.MaxValue}L)"))
-    // ONE pass: per-bucket occupancy + median span from the exploded
-    // frame; the corpus-wide span sum/count/max ride the same frame
-    // counted once per interval via its FIRST bucket (__b == fdiv(lo)
-    // exactly once per exploded interval)
-    val firstB = expr(fdiv("__lo", probeWidth))
-    val census = bucketExplode(iv, "__lo", "__hi", probeWidth)
-      .groupBy("__b")
-      .agg(count(lit(1)).as("__n"),
-        expr("percentile_approx(__span, 0.5)").as("__med"),
-        sum(when(col("__b") === firstB, col("__span").cast("double")))
-          .as("__s1"),
-        count(when(col("__b") === firstB, lit(1))).as("__c1"),
-        max(when(col("__b") === firstB, col("__span"))).as("__mx1"))
+    val census = bucketRollup(pooledIntervals(left, right, lLo, lHi, rLo, rHi),
+      probeWidth, expr("percentile_approx(__span, 0.5)").as("__med"))
     // bounded collect: ONE row of corpus statistics
-    val stats = census.agg(
-      max(col("__n")).as("maxN"), avg(col("__n")).as("avgN"),
-      expr("max_by(__med, __n)").as("hotMed"),
-      expr("max_by(__b, __n)").as("hotB"),
-      sum(col("__s1")).as("spanSum"),
-      coalesce(sum(col("__c1")), lit(0L)).as("ivCount"),
-      max(col("__mx1")).as("maxSpan"))
+    val stats = census.agg(max(col("__n")).as("maxN"),
+      Seq(avg(col("__n")).as("avgN"),
+        expr("max_by(__med, __n)").as("hotMed"),
+        expr("max_by(__b, __n)").as("hotB")) ++ spanTotals: _*)
       .collect()(0)
     if (stats.isNullAt(0)) None
     else Some(OverlapCensus(stats.getLong(0), stats.getDouble(1),
-      stats.getLong(2), stats.getLong(3), stats.getDouble(4),
-      stats.getLong(5), stats.getLong(6)))
+      stats.getLong(2), stats.getLong(3), spansAt(stats, 4)))
   }
 
-  /** Both sides' (lo, hi) columns normalized to LONG and pooled —
-    * the census frame, and the value-core pass's input. */
-  private def pooledIntervals(left: DataFrame, right: DataFrame,
-      lLo: String, lHi: String, rLo: String, rHi: String): DataFrame = {
-    def norm(df: DataFrame, lo: String, hi: String) = df.select(
-      col(lo).cast("long").as("__lo"), col(hi).cast("long").as("__hi"))
-    norm(left, lLo, lHi).unionByName(norm(right, rLo, rHi))
-  }
-
-  /** The balanced width for a flagged overlap census (see
-    * [[autoWidth]]'s scaladoc for the cost model): v* =
-    * sqrt(spanSum·probe)/maxN clamped to [max(crowd median span,
-    * guard floor, 1), probeWidth]. */
+  /** The balanced width for a flagged overlap census. Within a crowded
+    * range of n intervals of typical span s, total candidate work
+    * across that range's buckets at width v is ∝ n²·(s+v)²/v
+    * (occupancy n(s+v)/range per bucket, range/v buckets) — wanting v
+    * SMALL, but with nothing left to gain below v ≈ s. Meanwhile the
+    * whole corpus pays explode fan-out Σspans/v — wanting v LARGE.
+    * Marginal balance (d/dv of maxN²/probe · v = d/dv of S/v, with
+    * range ≈ probe since the crowd sat inside one probe bucket) lands
+    * at v* = sqrt(S·probe)/maxN, clamped to [max(crowd median span,
+    * guard floor, 1), probeWidth]: below the crowd's own span
+    * rebalancing stops while explode cost keeps rising (measured r17:
+    * the crowd-span width looked perfect for the hot bucket and moved
+    * the bottleneck to a 128× background explode). */
   private def overlapWidthFor(c: OverlapCensus, probeWidth: Long): Long = {
-    val d = MaxSpanBuckets - 1
-    val guardFloor = c.maxSpan / d + (if (c.maxSpan % d == 0) 0 else 1)
-    val vStar = math.sqrt(c.spanSum * probeWidth.toDouble) / c.maxN
-    val floor = math.max(math.max(c.hotMed, guardFloor), 1L)
+    val vStar = math.sqrt(c.spans.sum * probeWidth.toDouble) / c.maxN
+    val floor = math.max(math.max(c.hotMed, c.spans.guardFloor), 1L)
     math.min(probeWidth, math.max(vStar.toLong, floor))
   }
 
-  /** Per-bucket candidate work above which [[autoWidthPoints]]
-    * re-keys: the same ~17M-pair task budget the overlap form's
-    * [[AutoOccupancyCap]] encodes (there work ≈ occupancy², here it
-    * is the point×interval PRODUCT, so the budget is the cap
-    * squared). */
-  val AutoWorkBudget: Long = AutoOccupancyCap * AutoOccupancyCap
-
-  /** [[autoWidth]] for the point-in-interval form — with the POINT
-    * term the overlap formula lacks (r18, measured): a first cut fed
-    * points into the shared census as degenerate (p, p) intervals,
-    * and a 2M-point crowd drove v* = sqrt(S·probe)/maxN to width 1 —
-    * where the uniform interval BACKGROUND explodes 512× (256M rows,
-    * 14–47 s) for a hot task that was never span-limited in the
-    * first place. The asymmetry the formula must carry: a point
-    * lives in ONE bucket at ANY width (refining costs points
-    * nothing), and an interval overlapping a crowded bucket still
-    * overlaps its refinement (span ≫ width ⇒ the interval count per
-    * bucket does NOT shrink with v). So within a crowded probe
-    * bucket of P points and I overlapping intervals, a width-v task
-    * does ≈ P·I·v/probe candidate evaluations — linear in v — while
-    * the corpus pays explode Σspans/v. Marginal balance:
-    * v* = sqrt(spanSum · probe / (P·I)).
-    *
-    * Census: one pass per side at `probeWidth` — per-bucket point
-    * counts join (full-outer) per-bucket exploded interval counts;
-    * the hottest bucket is the one maximizing the P·I product (that
-    * product IS the task's work), and interval span sum/max ride the
-    * interval leg via the first-bucket trick. The probe width stands
-    * while max work ≤ [[AutoWorkBudget]] — an absolute task budget,
-    * not a ratio: point work is the product of two occupancies, so
-    * splitting pays whenever the product is large, skewed or not.
-    * The clamp to [max(guard floor, 1), probeWidth] is the overlap
-    * form's (the guard floor keeps the widest interval under
-    * [[MaxSpanBuckets]]); no crowd-median floor — the hot-side cost
-    * is linear in v, so there is no span scale below which
-    * rebalancing stops paying.
-    *
-    * Derived width feeds the existing knob; results width-invariant
-    * by the operator's contract (spec-asserted, and the board leg
-    * q_range_price_band_auto runs under the fixed-width oracle). */
-  def autoWidthPoints(points: DataFrame, pointCol: String,
-      intervals: DataFrame, loCol: String, hiCol: String,
-      probeWidth: Long = BucketWidth): Long =
-    autoPointMitigation(points, pointCol, intervals, loCol, hiCol,
-      probeWidth)._1
-
   /** The point-form census rollup: the hottest bucket (by
-    * point×interval WORK product) with its id, point count, and
-    * interval occupancy, plus the interval side's span
-    * sum/count/max. */
-  private case class PointCensus(maxWork: Long, hotB: Long,
-    hotIn: Long, spanSum: Double, ivCount: Long, maxSpan: Long)
+    * point×interval WORK product) with its id and interval occupancy,
+    * plus the interval side's [[Spans]]. */
+  private case class PointCensus(maxWork: Long, hotB: Long, hotIn: Long,
+      spans: Spans)
 
   private def pointCensus(points: DataFrame, pointCol: String,
       intervals: DataFrame, loCol: String, hiCol: String,
@@ -287,32 +226,42 @@ object RangeJoin {
     val p = points.filter(col(pointCol).isNotNull)
       .select(expr(fdiv(pointCol, probeWidth)).as("__b"))
       .groupBy("__b").agg(count(lit(1)).as("__pn"))
-    val iv = intervals.select(col(loCol).cast("long").as("__lo"),
-      col(hiCol).cast("long").as("__hi"))
-      .withColumn("__span", expr("coalesce(try_add(try_subtract(__hi," +
-        s" __lo), 1L), ${Long.MaxValue}L)"))
-    val firstB = expr(fdiv("__lo", probeWidth))
-    val ivn = bucketExplode(iv, "__lo", "__hi", probeWidth)
-      .groupBy("__b")
-      .agg(count(lit(1)).as("__in"),
-        sum(when(col("__b") === firstB, col("__span").cast("double")))
-          .as("__s1"),
-        count(when(col("__b") === firstB, lit(1))).as("__c1"),
-        max(when(col("__b") === firstB, col("__span"))).as("__mx1"))
-    val work = "coalesce(__pn, 0L) * coalesce(__in, 0L)"
+    val ivn = bucketRollup(longBounds(intervals, loCol, hiCol), probeWidth)
+    val work = "coalesce(__pn, 0L) * coalesce(__n, 0L)"
     val stats = p.join(ivn, Seq("__b"), "full_outer").agg(
       max(expr(work)).as("maxWork"),
-      expr(s"max_by(__b, $work)").as("hotB"),
-      expr(s"max_by(coalesce(__in, 0L), $work)").as("hotIn"),
-      sum(col("__s1")).as("spanSum"),
-      coalesce(sum(col("__c1")), lit(0L)).as("ivCount"),
-      max(col("__mx1")).as("maxSpan"))
+      Seq(expr(s"max_by(__b, $work)").as("hotB"),
+        expr(s"max_by(coalesce(__n, 0L), $work)").as("hotIn")) ++
+        spanTotals: _*)
       .collect()(0)
-    if (stats.isNullAt(0) || stats.isNullAt(3)) return None
-    Some(PointCensus(stats.getLong(0), stats.getLong(1),
-      stats.getLong(2), stats.getDouble(3), stats.getLong(4),
-      stats.getLong(5)))
+    if (stats.isNullAt(0) || stats.isNullAt(3)) None
+    else Some(PointCensus(stats.getLong(0), stats.getLong(1),
+      stats.getLong(2), spansAt(stats, 3)))
   }
+
+  /** Rows of `df` whose valid [lo, hi] overlaps probe bucket `hotB`. */
+  private def inBucket(df: DataFrame, lo: String, hi: String,
+      probeWidth: Long, hotB: Long): DataFrame =
+    df.filter(col(lo).isNotNull && col(hi).isNotNull && col(lo) <= col(hi))
+      .filter(expr(fdiv(lo, probeWidth)) <= lit(hotB) &&
+        expr(fdiv(hi, probeWidth)) >= lit(hotB))
+
+  /** The hot bucket's VALUE core: the largest multiplicity of one
+    * EXACT (lo, hi) among the rows overlapping probe bucket `hotB` (a
+    * point is its own (p, p)). Those rows share a bucket at every
+    * width, so no refinement splits them. One pass filtered to the hot
+    * bucket, run ONLY on the mitigation path — the benign majority
+    * (every board run at the sf corpora) pays the bucket census
+    * alone. */
+  private def maxDupHot(df: DataFrame, lo: String, hi: String,
+      probeWidth: Long, hotB: Long): Long =
+    inBucket(df, lo, hi, probeWidth, hotB)
+      .groupBy(Seq(lo, hi).distinct.map(col): _*)
+      .agg(count(lit(1)).as("__c"))
+      .agg(max(col("__c"))).collect()(0) match {
+        case r if r.isNullAt(0) => 0L
+        case r => r.getLong(0)
+      }
 
   /** Hard cap on the salt factor the auto-mitigations derive — the
     * replicated side replicates salt×, so a runaway estimate must
@@ -334,154 +283,167 @@ object RangeJoin {
     math.min(AutoMaxSalt.toDouble, raw).toInt
   }
 
-  /** Width AND salt for the point form — the full mitigation ladder,
-    * derived from one bucket-census pass per side (plus one
-    * hot-bucket-only value pass on the mitigation path alone):
+  /** Width AND salt for the point form — the `bucketWidth` and `salt`
+    * knobs of [[pointInInterval]], derived from one bucket-census pass
+    * per side at `probeWidth` (plus one hot-bucket-only value pass on
+    * the mitigation path alone).
     *
-    *  - benign (hottest bucket's point×interval product under
-    *    [[AutoWorkBudget]]): `(probeWidth, 1)` — mitigation costs
+    * Cost model (r18, measured): a point lives in ONE bucket at ANY
+    * width (refining costs points nothing), and an interval
+    * overlapping a crowded bucket still overlaps its refinement (span
+    * ≫ width ⇒ the interval count per bucket does NOT shrink with v).
+    * So within a crowded probe bucket of P points and I overlapping
+    * intervals, a width-v task does ≈ P·I·v/probe candidate
+    * evaluations — linear in v — while the corpus pays explode
+    * Σspans/v. Marginal balance: v* = sqrt(spanSum · probe / (P·I)).
+    * (A first cut fed points into the overlap census as degenerate
+    * (p, p) intervals, and a 2M-point crowd drove the overlap formula
+    * to width 1 — where the uniform interval BACKGROUND exploded 512×,
+    * 256M rows and 14–47 s, for a hot task that was never
+    * span-limited.)
+    *
+    * Census: per-bucket point counts join (full-outer) per-bucket
+    * exploded interval counts; the hottest bucket is the one
+    * maximizing the P·I product (that product IS the task's work).
+    * The ladder:
+    *
+    *  - benign (max work ≤ [[AutoWorkBudget]] — an absolute task
+    *    budget, not a ratio: point work is the product of two
+    *    occupancies, so splitting pays whenever the product is large,
+    *    skewed or not): `(probeWidth, 1)` — mitigation costs
     *    explode/replication, paying it on a balanced corpus is loss;
-    *  - crowded RANGE: the balanced width v* =
-    *    sqrt(spanSum·probe/maxWork) (see [[autoWidthPoints]]'s cost
-    *    model) splits the crowd, `(v*, 1)`;
+    *  - crowded RANGE: v* clamped to [max(guard floor, 1), probeWidth]
+    *    splits the crowd, `(v*, 1)` (no crowd-median floor — the
+    *    hot-side cost is linear in v, so there is no span scale below
+    *    which rebalancing stops paying);
     *  - crowded VALUE (the skew NO width can touch — same-value
     *    points share a bucket at every width): keep the probe width
     *    (refining would only inflate the interval explode for
     *    nothing) and SALT at k = ceil(maxWork / budget), bounding
     *    per-task work at the budget for the price of k× interval
-    *    replication ([[pointInIntervalSalted]]);
+    *    replication;
     *  - mixed: refine to v* AND salt the residual.
     *
     * Regime detection: the value-degenerate component of the HOT
     * bucket is maxValHot × hotIn — the largest same-value point
-    * multiplicity WITHIN the hottest bucket times that same
-    * bucket's interval occupancy (same bucket on both factors: a
+    * multiplicity WITHIN the hottest bucket ([[maxDupHot]]) times that
+    * same bucket's interval occupancy (same bucket on both factors: a
     * global max-multiplicity from some other bucket would
     * misclassify a hot range crowd as a value crowd and skip the
-    * refinement it needs). maxValHot costs one extra points pass
-    * FILTERED to the hot bucket, run ONLY on the mitigation path —
-    * the benign majority (every board run at the sf corpora) pays
-    * the bucket census alone. When the value core carries ≥ half
-    * the hot bucket's work the crowd is a value crowd. The residual
-    * a chosen width v cannot split is estimated with interval
-    * occupancy shrunk to hotIn · (s̄+v)/(s̄+probe) — intervals thin
-    * out with the bucket only past their own span scale. Estimates
-    * are deliberately conservative (ceil, probe-width occupancy
-    * bounds); the result is placement-only either way — answers are
-    * width- AND salt-invariant by contract, which the shared oracle
-    * proves on the board (q_range_price_band_salted). */
+    * refinement it needs). When the value core carries ≥ half the hot
+    * bucket's work the crowd is a value crowd. The residual a chosen
+    * width v cannot split is estimated with interval occupancy shrunk
+    * to hotIn · (s̄+v)/(s̄+probe) — intervals thin out with the bucket
+    * only past their own span scale. Estimates are deliberately
+    * conservative (ceil, probe-width occupancy bounds); the result is
+    * placement-only either way — answers are width- AND
+    * salt-invariant by contract, which the shared oracle proves on
+    * the board (q_range_price_band_auto, q_range_price_band_salted). */
   def autoPointMitigation(points: DataFrame, pointCol: String,
       intervals: DataFrame, loCol: String, hiCol: String,
-      probeWidth: Long = BucketWidth): (Long, Int) = {
-    require(probeWidth >= 1, s"probe width $probeWidth must be >= 1")
+      probeWidth: Long = BucketWidth): (Long, Int) =
     pointCensus(points, pointCol, intervals, loCol, hiCol,
         probeWidth) match {
       case None => (probeWidth, 1)
       case Some(c) if c.maxWork <= AutoWorkBudget => (probeWidth, 1)
       case Some(c) =>
-        val maxValHot = points.filter(col(pointCol).isNotNull)
-          .filter(expr(fdiv(pointCol, probeWidth)) === lit(c.hotB))
-          .groupBy(col(pointCol)).agg(count(lit(1)).as("__c"))
-          .agg(max(col("__c"))).collect()(0) match {
-            case r if r.isNullAt(0) => 0L
-            case r => r.getLong(0)
-          }
+        val maxValHot =
+          maxDupHot(points, pointCol, pointCol, probeWidth, c.hotB)
         val valueCore = maxValHot.toDouble * c.hotIn
         if (valueCore * 2 >= c.maxWork.toDouble) {
           // value crowd: width is useless, salt at the probe width
           (probeWidth, saltFor(c.maxWork.toDouble))
         } else {
-          val d = MaxSpanBuckets - 1
-          val guardFloor =
-            c.maxSpan / d + (if (c.maxSpan % d == 0) 0 else 1)
-          val vStar =
-            math.sqrt(c.spanSum * probeWidth.toDouble / c.maxWork.toDouble)
+          val vStar = math.sqrt(
+            c.spans.sum * probeWidth.toDouble / c.maxWork.toDouble)
           val v = math.min(probeWidth,
-            math.max(vStar.toLong, math.max(guardFloor, 1L)))
+            math.max(vStar.toLong, math.max(c.spans.guardFloor, 1L)))
           // what v cannot split: the range crowd shrinks ∝ v, the
           // value core only through interval thinning
-          val sBar = c.spanSum / math.max(c.ivCount, 1L)
-          val hotInV = c.hotIn * (sBar + v) / (sBar + probeWidth)
+          val s = c.spans.mean
+          val hotInV = c.hotIn * (s + v) / (s + probeWidth)
           val residual = math.max(c.maxWork.toDouble * v / probeWidth,
             maxValHot.toDouble * hotInV)
           (v, saltFor(residual))
         }
     }
+
+  /** The shared argument checks of the two batch operators; returns
+    * the join key — the bucket `__b`, plus the salt group `__s` when
+    * `salt` > 1. */
+  private def bucketKeys(inputCols: Array[String], bucketWidth: Long,
+      salt: Int, saltIdCols: Seq[String]): Seq[String] = {
+    require(bucketWidth >= 1, s"bucket width $bucketWidth must be >= 1")
+    require(salt >= 1, s"salt $salt must be >= 1")
+    require(salt == 1 || saltIdCols.nonEmpty,
+      "salt > 1 needs saltIdCols: stable row-identity columns of the " +
+        "split (point / left) side to derive the salt group from (a " +
+        "nondeterministic assignment breaks exactly-once under partial " +
+        "stage recomputation)")
+    val keys = if (salt == 1) Seq("__b") else Seq("__b", "__s")
+    val clash = inputCols.filter(keys.contains)
+    require(clash.isEmpty,
+      s"input columns ${clash.mkString(",")} collide with internal names")
+    keys
   }
 
-  /** SALTED point-in-interval join — the escalation tier past the
-    * width knob, for the skew width cannot touch: a crowd of points
-    * at ONE exact value maps to the same bucket at EVERY width (the
-    * bucket of a point is a function of its value), so refinement
-    * spreads a crowded RANGE but never a crowded VALUE. Salting
-    * splits on ROW IDENTITY instead: each point lands in one of
-    * `salt` groups, each interval REPLICATES to all of them, and the
-    * join key becomes (bucket, salt-group) — per-task candidate work
-    * drops by the salt factor at the cost of salt× the interval
-    * side's exploded rows (the standard replicate-the-small-side
-    * skew device, here composed with the bucket equi-join).
+  /** `df` with its salt group `__s`, hashed from `saltIdCols`; `df`
+    * itself at salt 1. */
+  private def saltGroup(df: DataFrame, salt: Int,
+      saltIdCols: Seq[String]): DataFrame =
+    if (salt == 1) df
+    else df.withColumn("__s",
+      pmod(xxhash64(saltIdCols.map(col): _*), lit(salt.toLong)).cast("int"))
+
+  /** `df` replicated to every salt group `__s`; `df` itself at salt 1. */
+  private def saltReplicas(df: DataFrame, salt: Int): DataFrame =
+    if (salt == 1) df
+    else df.withColumn("__s", explode(sequence(lit(0), lit(salt - 1))))
+
+  /** Generic point-in-interval join: every (point row × interval row)
+    * pair with `lo <= point <= hi`, produced exactly once.
     *
-    * The salt group is derived DETERMINISTICALLY from
-    * `saltIdCols` — caller-designated stable row-identity columns
-    * (a primary key, a row id): a nondeterministic assignment
-    * (row position, rand) would be the SPARK-23207 hazard — a
-    * partial map-stage retry after an executor loss re-routes rows
-    * to reduce partitions that already completed, silently losing
-    * or duplicating pairs. The result is still salt-PLACEMENT-
-    * invariant (every point meets its group's full replicated
-    * interval set exactly once — the board leg
+    * `salt` > 1 is the escalation tier past the width knob, for the
+    * skew width cannot touch: a crowd of points at ONE exact value
+    * maps to the same bucket at EVERY width (the bucket of a point is
+    * a function of its value), so refinement spreads a crowded RANGE
+    * but never a crowded VALUE. Salting splits on ROW IDENTITY
+    * instead: each point lands in one of `salt` groups, each interval
+    * REPLICATES to all of them, and the join key becomes (bucket,
+    * salt group) — per-task candidate work drops by the salt factor
+    * at the cost of salt× the interval side's exploded rows (the
+    * standard replicate-the-small-side skew device, here composed
+    * with the bucket equi-join). At `salt = 1` there is no salt column
+    * and the join is on the bucket alone. [[autoPointMitigation]]
+    * derives both knobs.
+    *
+    * The salt group is derived DETERMINISTICALLY from `saltIdCols` —
+    * caller-designated stable row-identity columns (a primary key, a
+    * row id): a nondeterministic assignment (row position, rand)
+    * would be the SPARK-23207 hazard — a partial map-stage retry
+    * after an executor loss re-routes rows to reduce partitions that
+    * already completed, silently losing or duplicating pairs. The
+    * result is salt-PLACEMENT-invariant (every point meets its group's
+    * full replicated interval set exactly once — the board leg
     * q_range_price_band_salted proves it against the unsalted
-    * oracle), but the placement itself must be stable across
-    * recomputation. Pick id columns with high cardinality WITHIN
-    * the crowd: rows sharing the same id values land in one salt
-    * group and cannot be split apart. Contract otherwise as
-    * [[pointInInterval]]; `salt = 1` IS [[pointInInterval]]. */
-  def pointInIntervalSalted(points: DataFrame, intervals: DataFrame,
+    * oracle). Pick id columns with high cardinality WITHIN the crowd:
+    * rows sharing the same id values land in one salt group and
+    * cannot be split apart. */
+  def pointInInterval(points: DataFrame, intervals: DataFrame,
       pointCol: String, loCol: String, hiCol: String,
       bucketWidth: Long = BucketWidth, salt: Int = 1,
       saltIdCols: Seq[String] = Nil): DataFrame = {
-    require(salt >= 1, s"salt $salt must be >= 1")
-    if (salt == 1)
-      return pointInInterval(points, intervals, pointCol, loCol, hiCol,
-        bucketWidth)
-    require(saltIdCols.nonEmpty,
-      "salt > 1 needs saltIdCols: stable row-identity columns to " +
-        "derive the salt group from (a nondeterministic assignment " +
-        "breaks exactly-once under partial stage recomputation)")
-    require(bucketWidth >= 1, s"bucket width $bucketWidth must be >= 1")
-    val clash = (points.columns ++ intervals.columns)
-      .filter(c => c == "__b" || c == "__s")
-    require(clash.isEmpty,
-      s"input columns ${clash.mkString(",")} collide with internal names")
-    val iv = bucketExplode(intervals, loCol, hiCol, bucketWidth)
-      .withColumn("__s", explode(sequence(lit(0), lit(salt - 1))))
-    val pt = points
+    val keys = bucketKeys(points.columns ++ intervals.columns, bucketWidth,
+      salt, saltIdCols)
+    val iv = saltReplicas(
+      bucketExplode(intervals, loCol, hiCol, bucketWidth), salt)
+    val pt = saltGroup(points
       .filter(col(pointCol).isNotNull)
-      .withColumn("__b", expr(fdiv(pointCol, bucketWidth)))
-      .withColumn("__s",
-        pmod(xxhash64(saltIdCols.map(col): _*), lit(salt.toLong))
-          .cast("int"))
-    pt.join(iv, Seq("__b", "__s"))
+      .withColumn("__b", expr(fdiv(pointCol, bucketWidth))),
+      salt, saltIdCols)
+    pt.join(iv, keys)
       .filter(col(pointCol) >= col(loCol) && col(pointCol) <= col(hiCol))
-      .drop("__b", "__s")
-  }
-
-  /** Generic point-in-interval join: every (point row × interval row)
-    * pair with `lo <= point <= hi`, produced exactly once. */
-  def pointInInterval(points: DataFrame, intervals: DataFrame,
-      pointCol: String, loCol: String, hiCol: String,
-      bucketWidth: Long = BucketWidth): DataFrame = {
-    require(bucketWidth >= 1, s"bucket width $bucketWidth must be >= 1")
-    val clash = (points.columns ++ intervals.columns).filter(_ == "__b")
-    require(clash.isEmpty,
-      "input column __b collides with the bucket-internal name")
-    val iv = bucketExplode(intervals, loCol, hiCol, bucketWidth)
-    val pt = points
-      .filter(col(pointCol).isNotNull)
-      .withColumn("__b", expr(fdiv(pointCol, bucketWidth)))
-    pt.join(iv, Seq("__b"))
-      .filter(col(pointCol) >= col(loCol) && col(pointCol) <= col(hiCol))
-      .drop("__b")
+      .drop(keys: _*)
   }
 
   /** Interval × interval OVERLAP join — the third member of the
@@ -495,106 +457,72 @@ object RangeJoin {
     * `greatest(lLo, rLo) DIV bucketWidth`, which both sides are
     * guaranteed to populate. No distinct pass, no BNLJ/cartesian.
     *
+    * `salt` > 1 is the escalation tier past the width knob for the
+    * overlap form's value crowd: near-identical intervals (the
+    * SCD2/validity-audit shape — one [lo, hi] carried by thousands of
+    * rows on BOTH sides) share buckets at EVERY width, because an
+    * interval's bucket set is a function of its bounds alone. Salting
+    * splits on ROW IDENTITY, as in [[pointInInterval]]: each LEFT row
+    * lands in one of `salt` groups (derived deterministically from
+    * `saltIdCols` — LEFT-side stable row-identity columns), each RIGHT
+    * exploded row REPLICATES to all groups, and the join key becomes
+    * (bucket, salt group). Per-task candidate work drops by the salt
+    * factor for the price of salt× the right side's exploded rows.
+    * Exactly-once holds: within the responsibility bucket a true
+    * pair's left row sits in ONE salt group and its right row is
+    * present in every group (board leg q_range_band_overlap_salted
+    * shares [[bandOverlapOracle]] with the unsalted query). At
+    * `salt = 1` there is no salt column and the join is on the bucket
+    * alone. Pick id columns with high cardinality WITHIN the crowd —
+    * this operator is lazy, so it cannot see that hazard itself;
+    * derive the knobs through [[autoOverlapMitigation]] with
+    * `saltIdCols`, whose degeneracy check warns loudly.
+    *
     * Contract as [[pointInInterval]] (LONG bounds, signed OK,
     * inclusive, nulls/inverted never match); the two inputs must not
     * share column names. */
   def intervalOverlap(left: DataFrame, right: DataFrame,
       lLo: String, lHi: String, rLo: String, rHi: String,
-      bucketWidth: Long = BucketWidth): DataFrame = {
-    require(bucketWidth >= 1, s"bucket width $bucketWidth must be >= 1")
-    val shared = left.columns.toSet intersect right.columns.toSet
-    require(shared.isEmpty,
-      s"inputs share columns ${shared.mkString(",")} — rename before joining")
-    val clash = (left.columns ++ right.columns).filter(_ == "__b")
-    require(clash.isEmpty,
-      "input column __b collides with the bucket-internal name")
-    val l = bucketExplode(left, lLo, lHi, bucketWidth)
-    val r = bucketExplode(right, rLo, rHi, bucketWidth)
-    l.join(r, Seq("__b"))
-      .filter(col(lLo) <= col(rHi) && col(rLo) <= col(lHi))
-      .filter(col("__b") ===
-        expr(fdiv(s"greatest($lLo, $rLo)", bucketWidth)))
-      .drop("__b")
-  }
-
-  /** SALTED interval-overlap join — the escalation tier past the
-    * width knob for the overlap form's value crowd: near-identical
-    * intervals (the SCD2/validity-audit shape — one [lo, hi] carried
-    * by thousands of rows on BOTH sides) share buckets at EVERY
-    * width, because an interval's bucket set is a function of its
-    * bounds alone. Refinement splits a crowded RANGE of distinct
-    * intervals; it can never split a crowd of SAME-RANGE intervals —
-    * the exact overlap analog of the point form's value crowd
-    * ([[pointInIntervalSalted]]). Salting splits on ROW IDENTITY
-    * instead: each LEFT row lands in one of `salt` groups (derived
-    * deterministically from `saltIdCols` — left-side stable
-    * row-identity columns; nondeterministic placement is the
-    * SPARK-23207 partial-retry pair-loss hazard), each RIGHT exploded
-    * row REPLICATES to all groups, and the join key becomes (bucket,
-    * salt group). Per-task candidate work drops by the salt factor
-    * for the price of salt× the right side's exploded rows.
-    *
-    * Exactly-once: within the responsibility bucket a true pair's
-    * left row sits in ONE salt group and its right row is present in
-    * every group, so the pair meets exactly once — the responsibility
-    * rule is unchanged and the answer is salt-placement-invariant
-    * (board leg q_range_band_overlap_salted shares
-    * [[bandOverlapOracle]] with the unsalted query: the driver's hash
-    * compare is the cross-engine proof). Contract otherwise as
-    * [[intervalOverlap]]; `salt = 1` IS [[intervalOverlap]]. Pick id
-    * columns with high cardinality WITHIN the crowd — rows sharing id
-    * values land in one group and cannot be split apart (this
-    * operator is lazy, so it cannot see the hazard itself; derive the
-    * knobs through [[autoOverlapMitigation]] with `saltIdCols` and
-    * its one-pass degeneracy check warns loudly when the hot bucket's
-    * left rows reach half or fewer of the derived groups). */
-  def intervalOverlapSalted(left: DataFrame, right: DataFrame,
-      lLo: String, lHi: String, rLo: String, rHi: String,
       bucketWidth: Long = BucketWidth, salt: Int = 1,
       saltIdCols: Seq[String] = Nil): DataFrame = {
-    require(salt >= 1, s"salt $salt must be >= 1")
-    if (salt == 1)
-      return intervalOverlap(left, right, lLo, lHi, rLo, rHi, bucketWidth)
-    require(saltIdCols.nonEmpty,
-      "salt > 1 needs saltIdCols: stable LEFT-side row-identity " +
-        "columns to derive the salt group from (a nondeterministic " +
-        "assignment breaks exactly-once under partial stage " +
-        "recomputation)")
+    val keys = bucketKeys(left.columns ++ right.columns, bucketWidth,
+      salt, saltIdCols)
     val missing = saltIdCols.filterNot(left.columns.contains)
-    require(missing.isEmpty,
+    require(salt == 1 || missing.isEmpty,
       s"saltIdCols ${missing.mkString(",")} are not LEFT columns — " +
         "the split side is the left one; swap the inputs to salt the " +
         "other side")
-    require(bucketWidth >= 1, s"bucket width $bucketWidth must be >= 1")
     val shared = left.columns.toSet intersect right.columns.toSet
     require(shared.isEmpty,
       s"inputs share columns ${shared.mkString(",")} — rename before joining")
-    val clash = (left.columns ++ right.columns)
-      .filter(c => c == "__b" || c == "__s")
-    require(clash.isEmpty,
-      s"input columns ${clash.mkString(",")} collide with internal names")
-    val l = bucketExplode(left, lLo, lHi, bucketWidth)
-      .withColumn("__s",
-        pmod(xxhash64(saltIdCols.map(col): _*), lit(salt.toLong))
-          .cast("int"))
-    val r = bucketExplode(right, rLo, rHi, bucketWidth)
-      .withColumn("__s", explode(sequence(lit(0), lit(salt - 1))))
-    l.join(r, Seq("__b", "__s"))
+    val l = saltGroup(bucketExplode(left, lLo, lHi, bucketWidth), salt,
+      saltIdCols)
+    val r = saltReplicas(bucketExplode(right, rLo, rHi, bucketWidth), salt)
+    l.join(r, keys)
       .filter(col(lLo) <= col(rHi) && col(rLo) <= col(lHi))
       .filter(col("__b") ===
         expr(fdiv(s"greatest($lLo, $rLo)", bucketWidth)))
-      .drop("__b", "__s")
+      .drop(keys: _*)
   }
 
-  /** Width AND salt for the overlap form — the full mitigation
-    * ladder, mirroring [[autoPointMitigation]] with the overlap
-    * form's cost model (per-bucket work ≈ occupancy², not a
-    * point×interval product):
+  /** Width AND salt for the overlap form — the `bucketWidth` and
+    * `salt` knobs of [[intervalOverlap]], mirroring
+    * [[autoPointMitigation]] with the overlap form's cost model
+    * (per-bucket work ≈ occupancy², not a point×interval product).
     *
-    *  - benign (the [[autoWidth]] tests pass): `(probeWidth, 1)`;
-    *  - crowded RANGE of distinct intervals: the balanced width
-    *    [[autoWidth]] derives, `(v*, 1)` when v* splits the work
-    *    under budget;
+    * Device: ONE census pass at `probeWidth` — both sides' valid
+    * intervals explode to their buckets (same contract/guard as the
+    * join itself) and one aggregation computes per-bucket occupancy,
+    * its max/mean, the MEDIAN SPAN inside the hottest bucket, and the
+    * corpus span sum and max. The ladder:
+    *
+    *  - benign (max/mean ≤ [[AutoSkewFactor]] AND the worst bucket
+    *    under [[AutoOccupancyCap]] — the ratio alone is blind on a
+    *    narrow domain, so the absolute work budget is what catches a
+    *    corpus crowding ONE bucket uniformly): `(probeWidth, 1)`;
+    *  - crowded RANGE of distinct intervals: the balanced width v*
+    *    (cost model at [[overlapWidthFor]]), `(v*, 1)` when v* splits
+    *    the work under budget;
     *  - crowded VALUE (near-identical intervals both sides — the
     *    SCD2 validity-audit shape no width can split): keep the
     *    probe width and SALT at k = ceil((maxN/2)² / budget) —
@@ -603,23 +531,21 @@ object RangeJoin {
     *  - mixed: refine to v* AND salt the residual.
     *
     * Regime detection: the value core of the hot bucket is
-    * (maxDupHot/2)² — the largest multiplicity of one EXACT (lo, hi)
-    * among the pooled intervals overlapping the hottest bucket, under
+    * (maxDupHot/2)² — [[maxDupHot]] over the pooled intervals, under
     * the same AM-GM normalization as maxWork so the ≥-half regime
     * test compares like with like (those rows pair with each other in
-    * the same bucket at every width). maxDupHot costs one extra
-    * pooled pass FILTERED to
-    * the hot bucket, run ONLY on the mitigation path — the benign
-    * majority pays the bucket census alone. The residual a chosen
-    * width v cannot split shrinks each SIDE's occupancy to
+    * the same bucket at every width). The residual a chosen width v
+    * cannot split shrinks each SIDE's occupancy to
     * maxN·(s̄+v)/(s̄+probe) (an interval overlaps a refined bucket
     * while its span covers it), so the range part shrinks
     * quadratically while the dup core stays exactly maxDupHot².
     * Estimates are conservative; the result is placement-only —
-    * answers are width- AND salt-invariant by contract.
+    * answers are width- AND salt-invariant by contract. Cost: one
+    * shuffle over explode(span/probeWidth) rows + one 1-row collect —
+    * O(corpus), far below the join it tunes.
     *
     * Pass `saltIdCols` (the columns the caller will hand
-    * [[intervalOverlapSalted]]) to also get the DEGENERATE-SALT
+    * [[intervalOverlap]]) to also get the DEGENERATE-SALT
     * diagnostic (r19-ADVICE): a salt derived from id columns that are
     * constant or low-cardinality WITHIN the crowd is a silent no-op —
     * the crowd's left rows all hash to a handful of groups while the
@@ -638,12 +564,7 @@ object RangeJoin {
     // whichever arm derived a salt (reuses the census's hot bucket)
     def checked(hotB: Long)(w: Long, k: Int): (Long, Int) = {
       if (k > 1 && saltIdCols.nonEmpty) {
-        val hotLoB = expr(fdiv(lLo, probeWidth))
-        val hotHiB = expr(fdiv(lHi, probeWidth))
-        val row = left
-          .filter(col(lLo).isNotNull && col(lHi).isNotNull &&
-            col(lLo) <= col(lHi))
-          .filter(hotLoB <= lit(hotB) && hotHiB >= lit(hotB))
+        val row = inBucket(left, lLo, lHi, probeWidth, hotB)
           .select(pmod(xxhash64(saltIdCols.map(col): _*),
             lit(k.toLong)).as("__s"))
           .agg(countDistinct(col("__s")), count(lit(1))).collect()(0)
@@ -679,18 +600,9 @@ object RangeJoin {
         // (measured r19: the first cut derived salt 24 where 6
         // sufficed and the replication dwarfed the win)
         val maxWork = (c.maxN.toDouble / 2) * (c.maxN.toDouble / 2)
-        val hotLoB = expr(fdiv("__lo", probeWidth))
-        val hotHiB = expr(fdiv("__hi", probeWidth))
-        val maxDupHot = pooledIntervals(left, right, lLo, lHi, rLo, rHi)
-          .filter(col("__lo").isNotNull && col("__hi").isNotNull &&
-            col("__lo") <= col("__hi"))
-          .filter(hotLoB <= lit(c.hotB) && hotHiB >= lit(c.hotB))
-          .groupBy(col("__lo"), col("__hi")).agg(count(lit(1)).as("__c"))
-          .agg(max(col("__c"))).collect()(0) match {
-            case r if r.isNullAt(0) => 0L
-            case r => r.getLong(0)
-          }
-        val valueCore = (maxDupHot.toDouble / 2) * (maxDupHot.toDouble / 2)
+        val dups = maxDupHot(pooledIntervals(left, right, lLo, lHi, rLo,
+          rHi), "__lo", "__hi", probeWidth, c.hotB)
+        val valueCore = (dups.toDouble / 2) * (dups.toDouble / 2)
         if (valueCore * 2 >= maxWork) {
           // value crowd: width is useless, salt at the probe width
           checked(c.hotB)(probeWidth, saltFor(maxWork))
@@ -698,8 +610,8 @@ object RangeJoin {
           val v = overlapWidthFor(c, probeWidth)
           // what v cannot split: each side's occupancy thins with the
           // bucket only past its own span scale; the dup core never
-          val sBar = c.spanSum / math.max(c.ivCount, 1L)
-          val occV = c.maxN * (sBar + v) / (sBar + probeWidth)
+          val s = c.spans.mean
+          val occV = c.maxN * (s + v) / (s + probeWidth)
           val residual = math.max((occV / 2) * (occV / 2), valueCore)
           checked(c.hotB)(v, saltFor(residual))
         }
@@ -751,13 +663,12 @@ object RangeJoin {
       .groupBy(col("pk_a").as("p_partkey"))
       .agg(count(lit(1)).as("overlap_ct"))
 
-  /** [[priceBandQuery]] through the SALTED operator (fixed salt 4) —
-    * same oracle as the unsalted query: the driver's hash compare is
-    * the cross-engine proof that salt placement never changes the
-    * answer, the contract [[autoPointMitigation]]'s value-crowd
-    * regime leans on. */
+  /** [[priceBandQuery]] at salt 4 — same oracle as the unsalted
+    * query: the driver's hash compare is the cross-engine proof that
+    * salt placement never changes the answer, the contract
+    * [[autoPointMitigation]]'s value-crowd regime leans on. */
   def priceBandSaltedQuery(spark: SparkSession, dir: String): DataFrame =
-    pointInIntervalSalted(
+    pointInInterval(
         Tables.lineitem(spark, dir).select(
           floor(col("l_extendedprice") * 100).cast("long").as("pc"),
           col("l_orderkey"), col("l_linenumber")),
@@ -767,13 +678,13 @@ object RangeJoin {
       .groupBy("p_partkey")
       .agg(count(lit(1)).as("match_ct"))
 
-  /** [[priceBandQuery]] at the width [[autoWidthPoints]] derives —
-    * same oracle as the fixed-width query (width-independence), same
+  /** [[priceBandQuery]] at the width [[autoPointMitigation]] derives
+    * — same oracle as the fixed-width query (width-independence), same
     * device as [[bandOverlapAutoQuery]] but for the point form. */
   def priceBandAutoQuery(spark: SparkSession, dir: String): DataFrame = {
     val iv = priceBands(spark, dir, "p_partkey", "lo", "hi")
     val pts = pricePoints(spark, dir)
-    val w = autoWidthPoints(pts, "pc", iv, "lo", "hi")
+    val (w, _) = autoPointMitigation(pts, "pc", iv, "lo", "hi")
     pointInInterval(pts, iv, "pc", "lo", "hi", w)
       .groupBy("p_partkey")
       .agg(count(lit(1)).as("match_ct"))
@@ -789,7 +700,7 @@ object RangeJoin {
     * that the derived mitigation changes nothing but the plan's
     * balance. (At the sf corpora the price bands are benign —
     * near-uniform occupancy — so auto returns (probeWidth, 1) and
-    * the salted operator IS [[intervalOverlap]]: the leg proves the
+    * the join is the plain bucket join: the leg proves the
     * auto path adds nothing on healthy data; the skewed regimes are
     * tested on hot-bucket corpora in RangeJoinSpec, where the derived
     * width and salt must cut the hottest cell's candidate work.) */
@@ -798,21 +709,20 @@ object RangeJoin {
       priceBands(spark, dir, "pk_b", "lo_b", "hi_b"))
     val (w, k) = autoOverlapMitigation(a, b, "lo_a", "hi_a", "lo_b", "hi_b",
       saltIdCols = Seq("pk_a"))
-    intervalOverlapSalted(a, b, "lo_a", "hi_a", "lo_b", "hi_b", w, k,
+    intervalOverlap(a, b, "lo_a", "hi_a", "lo_b", "hi_b", w, k,
         saltIdCols = Seq("pk_a"))
       .filter(col("pk_a") < col("pk_b"))
       .groupBy(col("pk_a").as("p_partkey"))
       .agg(count(lit(1)).as("overlap_ct"))
   }
 
-  /** [[bandOverlapQuery]] through the SALTED overlap operator (fixed
-    * salt 4, left rows split by part key) — same oracle as the
-    * unsalted query: the driver's hash compare is the cross-engine
-    * proof that salt placement never changes the overlap answer, the
-    * contract [[autoOverlapMitigation]]'s value-crowd regime leans
-    * on. */
+  /** [[bandOverlapQuery]] at salt 4 (left rows split by part key) —
+    * same oracle as the unsalted query: the driver's hash compare is
+    * the cross-engine proof that salt placement never changes the
+    * overlap answer, the contract [[autoOverlapMitigation]]'s
+    * value-crowd regime leans on. */
   def bandOverlapSaltedQuery(spark: SparkSession, dir: String): DataFrame =
-    intervalOverlapSalted(priceBands(spark, dir, "pk_a", "lo_a", "hi_a"),
+    intervalOverlap(priceBands(spark, dir, "pk_a", "lo_a", "hi_a"),
         priceBands(spark, dir, "pk_b", "lo_b", "hi_b"),
         "lo_a", "hi_a", "lo_b", "hi_b", BucketWidth, salt = 4,
         saltIdCols = Seq("pk_a"))

@@ -203,23 +203,12 @@ object StreamJobs {
     * (OrderWideApp2.java order×detail ±5 s, PaymentWideApp payment×
     * order [-30 min, 0]). Both sides carry event-time watermarks and
     * the join predicate is an equi-key plus a time-range bound, which
-    * is exactly the shape Spark's state-store eviction needs: each
-    * side's buffered rows are dropped once the watermark passes
-    * `bound` + delay, so state is O(rate × bound), never unbounded.
+    * is exactly the shape Spark's state-store eviction needs.
     *
     * Column contract: `left` has (lkey, lts) + payload, `right` has
     * (rkey, rts) + payload, all four names distinct; emits the inner
-    * join where rts ∈ [lts - bound, lts + bound]. The same transform
-    * body runs in batch (unified API) — parity with the batch interval
-    * join is asserted in StreamingSpec. */
-  def intervalJoin(left: DataFrame, right: DataFrame,
-      lkey: String, rkey: String, lts: String, rts: String,
-      bound: String, delay: String = "1 minute"): DataFrame =
-    intervalJoinBounds(left, right, lkey, rkey, lts, rts,
-      bound, bound, delay)
-
-  /** [[intervalJoin]] with an asymmetric window — emits the inner
-    * join where rts ∈ [lts - lo, lts + hi]. This is J2's TRUE shape:
+    * join where rts ∈ [lts - lo, lts + hi] (J1 passes the same bound
+    * twice). The window may be asymmetric, which is J2's TRUE shape:
     * the reference's payment×order join looks BACK only
     * (PaymentWideApp2.java:76 `between(-30 min, 0)` — a payment can
     * follow its order by up to 30 minutes, never precede it), and a
@@ -227,8 +216,9 @@ object StreamJobs {
     * admit payments before their order. Spark's state eviction reads
     * the bounds off the join predicate: each side's buffered rows
     * drop once the watermark passes its bound + delay, so state is
-    * O(rate × (lo + hi + delay)) — rehearsed at 5M events (PLANS.md
-    * §r13); StreamingSpec holds the state bound and plateau. */
+    * O(rate × (lo + hi + delay)), never unbounded. The same transform
+    * body runs in batch (unified API); StreamingSpec holds batch
+    * parity, the state bound and the plateau. */
   def intervalJoinBounds(left: DataFrame, right: DataFrame,
       lkey: String, rkey: String, lts: String, rts: String,
       lo: String, hi: String, delay: String = "1 minute"): DataFrame =
@@ -582,7 +572,7 @@ object StreamJobs {
     * the batch operator is asserted in StreamingSpec.
     *
     * VALUE-CROWD rung (`saltLeft`/`saltRight` > 1) — the streaming
-    * twin of [[graft.operators.RangeJoin.intervalOverlapSalted]],
+    * twin of [[graft.operators.RangeJoin.intervalOverlap]]'s `salt`,
     * closing the batch↔stream asymmetry the r19 round left: a
     * same-range crowd (near-identical intervals on BOTH sides — the
     * SCD2 shape) lands every row in ONE bucket at every width, which

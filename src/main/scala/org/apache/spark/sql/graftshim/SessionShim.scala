@@ -23,19 +23,14 @@ import org.apache.spark.sql.classic
   * ([[graft.func.Confs.scopedSession]] is the public face). */
 object SessionShim {
   /** A sibling session of `parent` behaving identically (cloned
-    * SessionState) except for `confs` overlaid and any mutations
-    * `configure` applies to ITS state (e.g.
-    * `_.experimental.extraOptimizations :+= rule`,
-    * `_.experimental.extraStrategies :+= strategy`, function
-    * registration) — all scoped: the parent session is never touched.
-    * Cheap enough to mint per query; frames built on it execute under
-    * its confs whenever the caller acts on them. */
+    * SessionState) except for `confs` overlaid — scoped: the parent
+    * session is never touched. Cheap enough to mint per query; frames
+    * built on it execute under its confs whenever the caller acts on
+    * them. */
   def scopedSession(parent: SparkSession,
-      confs: Map[String, String],
-      configure: SparkSession => Unit = _ => ()): SparkSession = {
+      confs: Map[String, String]): SparkSession = {
     val s = parent.asInstanceOf[classic.SparkSession].cloneSession()
     confs.foreach { case (k, v) => s.conf.set(k, v) }
-    configure(s)
     s
   }
 }

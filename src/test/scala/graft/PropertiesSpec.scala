@@ -80,9 +80,9 @@ class PropertiesSpec extends SparkSpec {
         (i.toLong, new Timestamp(base + rnd.nextInt(7200) * 1000L), i * 10L))
       val details = List.fill(15)(
         (rnd.nextInt(8).toLong, new Timestamp(base + rnd.nextInt(7200) * 1000L), rnd.nextInt(100).toLong))
-      val got = streaming.StreamJobs.intervalJoin(
+      val got = streaming.StreamJobs.intervalJoinBounds(
           orders.toDF("oid", "ots", "total"), details.toDF("did", "dts", "amt"),
-          "oid", "did", "ots", "dts", "30 minutes")
+          "oid", "did", "ots", "dts", "30 minutes", "30 minutes")
         .select("oid", "dts", "amt")
         .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2))).toSet
       val expect = (for {

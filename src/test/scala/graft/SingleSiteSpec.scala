@@ -3,9 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One SparkSession builder ([[Session]]), one SparkListener
-  * ([[Metrics]]), one as-of core per execution mode and four
-  * environment variables in main code. Six builders with four core
-  * defaults, five near-identical listeners, five as-of copies and two
+  * ([[Metrics]]), one as-of core per execution mode, one operator per
+  * range-join form, no forwarding overload ladders in `graft.llm` and
+  * four environment variables in main code. Six builders with four
+  * core defaults, five near-identical listeners, five as-of copies,
+  * salted and auto-width twins beside the range joins and two
   * gate-softening env knobs grew one copy at a time; grep the main
   * source tree so a new copy fails here instead. */
 class SingleSiteSpec extends AnyFunSuite {
@@ -58,6 +60,45 @@ class SingleSiteSpec extends AnyFunSuite {
     assert(occurrences("graft/operators/AsOf.scala",
       "lit(1).as(\"__side\")") === 1,
       "batch as-of directions must share AsOf.asOfDirection's union")
+  }
+
+  /** Names of the `def`s in one main-code source text. */
+  private def defNames(src: String): Seq[String] =
+    """\bdef\s+([A-Za-z_]\w*)""".r.findAllMatchIn(src).map(_.group(1)).toSeq
+
+  test("the range-join family keeps one point and one overlap operator") {
+    // a salted twin or an auto-width picker beside the operator copies
+    // its validation and census; the knobs are the operator's own
+    // parameters and autoPointMitigation/autoOverlapMitigation derive them
+    val forks = Set("pointInIntervalSalted", "intervalOverlapSalted",
+      "autoWidth", "autoWidthPoints")
+    val found = mainSources.flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      defNames(src).filter(forks).map(_ -> f.getName)
+    }
+    assert(found.isEmpty, s"fold these into the operator's defaults: $found")
+    val rj = new String(java.nio.file.Files.readAllBytes(
+      root.toPath.resolve("graft/operators/RangeJoin.scala")), "UTF-8")
+    assert(defNames(rj).count(_ == "pointInInterval") === 1)
+    assert(defNames(rj).count(_ == "intervalOverlap") === 1)
+  }
+
+  test("no forwarding *With/*At overloads in graft.llm") {
+    // `fooWith`/`fooAt` beside a `foo` in the same file is a ladder of
+    // entry points that only fill in defaults; default arguments on
+    // the one operator say the same thing once
+    val llm = mainSources.filter(_.toPath.startsWith(
+      root.toPath.resolve("graft/llm")))
+    assert(llm.nonEmpty, "graft.llm sources not visible from test cwd")
+    val ladder = """(\w+)(?:With|At)""".r
+    val ladders = llm.flatMap { f =>
+      val names = defNames(new String(
+        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).toSet
+      names.toSeq.collect {
+        case n @ ladder(base) if names(base) => s"${f.getName}: $n beside $base"
+      }
+    }
+    assert(ladders.isEmpty, s"fold into default arguments: $ladders")
   }
 
   test("main code reads only the four documented environment variables") {

@@ -75,11 +75,7 @@ class BpeSpec extends SparkSpec {
     val (expMerges, expVocab) = referenceBpe(wordCounts)
 
     // run the same derivation that merges()/vocab() use, on this frame
-    val m = classOf[Bpe.type].getDeclaredMethod("learn",
-      classOf[org.apache.spark.sql.DataFrame])
-    m.setAccessible(true)
-    val (gotMerges, segDf) = m.invoke(Bpe, docs)
-      .asInstanceOf[(Seq[(String, Long)], org.apache.spark.sql.DataFrame)]
+    val (gotMerges, segDf) = Bpe.learn(docs)
     assert(gotMerges === expMerges)
     val gotVocab = segDf.withColumn("a", split(trim(col("syms")), " "))
       .select(col("n"), explode(col("a")).as("symbol"))
@@ -142,25 +138,15 @@ class BpeSpec extends SparkSpec {
 
   test("bpe: words beyond the replace-pass fixpoint bound fail loudly") {
     val docs = Seq((1L, "a" * (2 * Bpe.ReplacePasses))).toDF("doc_id", "text")
-    val m = classOf[Bpe.type].getDeclaredMethod("learn",
-      classOf[org.apache.spark.sql.DataFrame])
-    m.setAccessible(true)
-    val e = intercept[java.lang.reflect.InvocationTargetException] {
-      m.invoke(Bpe, docs)
-    }
-    assert(e.getCause.isInstanceOf[IllegalArgumentException])
-    assert(e.getCause.getMessage.contains("ReplacePasses"))
+    val e = intercept[IllegalArgumentException](Bpe.learn(docs))
+    assert(e.getMessage.contains("ReplacePasses"))
   }
 
   test("bpe: repeated-pair runs resolve to the greedy left-to-right fixpoint") {
     // 'aaaa' → run of 'a a a a </w>': merge (a,a) must produce
     // 'aa aa </w>', not 'aa a a </w>' — the leftmost-splice contract
     val docs = Seq((1L, "aaaa aaaa aaaa")).toDF("doc_id", "text")
-    val m = classOf[Bpe.type].getDeclaredMethod("learn",
-      classOf[org.apache.spark.sql.DataFrame])
-    m.setAccessible(true)
-    val (gotMerges, segDf) = m.invoke(Bpe, docs)
-      .asInstanceOf[(Seq[(String, Long)], org.apache.spark.sql.DataFrame)]
+    val (gotMerges, segDf) = Bpe.learn(docs)
     assert(gotMerges.head._1 === "a a")
     val (expMerges, expVocab) = referenceBpe(Map("aaaa" -> 3L))
     assert(gotMerges === expMerges)
@@ -177,11 +163,7 @@ class BpeSpec extends SparkSpec {
     // not [aa, a, aa] (non-overlapping scan strands the middle).
     // Checked via segmentation ORDER, not just the symbol multiset.
     val docs = Seq((1L, "aaaaa aaaaa")).toDF("doc_id", "text")
-    val m = classOf[Bpe.type].getDeclaredMethod("learn",
-      classOf[org.apache.spark.sql.DataFrame])
-    m.setAccessible(true)
-    val (gotMerges, segDf) = m.invoke(Bpe, docs)
-      .asInstanceOf[(Seq[(String, Long)], org.apache.spark.sql.DataFrame)]
+    val (gotMerges, segDf) = Bpe.learn(docs)
     val after1 = gotMerges.head._1
     assert(after1 === "a a")
     val syms = segDf.select(trim(col("syms"))).as[String].head()

@@ -250,7 +250,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("lshNearDupProd finds exactly the planted cos≥0.9 pairs") {
-    val got = Similarity.lshNearDupProd(spark, prodDir)
+    val got = graft.SparkEntry.query("q_llm_embed_neardup_prod")(spark, prodDir)
       .select("vec_a", "vec_b", "cos_ppm").as[(Long, Long, Long)]
       .collect().map(p => (p._1, p._2) -> p._3).toMap
     val expectedKeys = ((0 until 5).map(i => (i * 10L, 10000L + i)) :+
@@ -266,7 +266,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("embedKeepListProd collapses the planted twins to min-id keepers") {
-    val out = Similarity.embedKeepListProd(spark, prodDir)
+    val out = graft.SparkEntry.query("q_llm_embed_keeplist_prod")(spark, prodDir)
       .as[(Long, Long, Int)].collect()
       .map { case (v, k, kept) => v -> ((k, kept)) }.toMap
     assert(out.size === 506)
@@ -293,7 +293,7 @@ class SimilaritySpec extends SparkSpec {
     val scaled = Similarity.embedKeepListScaled(spark, Sf)
       .as[(Long, Long, Int)].collect().sortBy(_._1)
     val explicit = Similarity
-      .embedKeepListWith(spark, Sf, 8, Similarity.scaleBits(n))
+      .embedKeepList(spark, Sf, 8, Similarity.scaleBits(n))
       .as[(Long, Long, Int)].collect().sortBy(_._1)
     assert(scaled.toSeq === explicit.toSeq)
   }

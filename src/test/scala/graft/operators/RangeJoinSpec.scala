@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -17,7 +18,7 @@ class RangeJoinSpec extends SparkSpec {
     * whole-stage codegen: compiling the two sides would cost more than
     * counting their rows. Returns (max cell, max/mean over the cells
     * both sides populate, total). */
-  private def cellWork(df: => org.apache.spark.sql.DataFrame)
+  private def cellWork(df: => DataFrame)
       : (Long, Double, Long) =
     graft.func.Confs.withSqlConfs(spark)(
         "spark.sql.adaptive.enabled" -> "false",
@@ -38,6 +39,19 @@ class RangeJoinSpec extends SparkSpec {
         l * n(1 -> k) }
       (ws.max, ws.max / (ws.sum.toDouble / ws.size), ws.sum)
     }
+
+  /** `df`, once its executed plan is shown to keep the bucket
+    * equi-join: a literal fixture column lets the optimizer fold the
+    * bucket key away and plan a CartesianProduct (or a
+    * BroadcastNestedLoopJoin), and an invariance check between two
+    * such plans compares cross joins, not the operator. */
+  private def bucketJoined(df: DataFrame): DataFrame = {
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("CartesianProduct") &&
+      !plan.contains("BroadcastNestedLoopJoin"),
+      s"the range join lost its bucket equi-join:\n$plan")
+    df
+  }
 
   test("pointInInterval equals the naive theta join, once per pair") {
     val points = Seq(0L, 5L, 1024L, 1500L, 4096L, 9999L).toDF("p")
@@ -212,12 +226,12 @@ class RangeJoinSpec extends SparkSpec {
 
   test("price-band AUTO and SALTED queries match the fixed-width " +
       "board query") {
-    val auto = RangeJoin.priceBandAutoQuery(spark, Sf)
+    val auto = bucketJoined(RangeJoin.priceBandAutoQuery(spark, Sf))
       .as[(Long, Long)].collect().toMap
-    val fixed = RangeJoin.priceBandQuery(spark, Sf)
+    val fixed = bucketJoined(RangeJoin.priceBandQuery(spark, Sf))
       .as[(Long, Long)].collect().toMap
     assert(auto === fixed)
-    val salted = RangeJoin.priceBandSaltedQuery(spark, Sf)
+    val salted = bucketJoined(RangeJoin.priceBandSaltedQuery(spark, Sf))
       .as[(Long, Long)].collect().toMap
     assert(salted === fixed)
     assert(auto.nonEmpty, "vacuous fixture — no price lands in any band")
@@ -233,8 +247,8 @@ class RangeJoinSpec extends SparkSpec {
         pmod(xxhash64(col("id"), lit(11L)), lit(50000L)).as("lo"))
       .withColumn("hi", col("lo") + pmod(xxhash64(col("i_id"), lit(12L)),
         lit(2000L)))
-    def got(salt: Int) = RangeJoin.pointInIntervalSalted(
-      pts, iv, "p", "lo", "hi", RangeJoin.BucketWidth, salt, Seq("rid"))
+    def got(salt: Int) = bucketJoined(RangeJoin.pointInInterval(
+      pts, iv, "p", "lo", "hi", RangeJoin.BucketWidth, salt, Seq("rid")))
       .groupBy("i_id").agg(count(lit(1)).as("n"))
       .as[(Long, Long)].collect().toMap
     val plain = got(1)
@@ -243,7 +257,7 @@ class RangeJoinSpec extends SparkSpec {
     // salt > 1 without stable id columns must refuse, not silently
     // fall back to a recompute-unsafe assignment
     intercept[IllegalArgumentException] {
-      RangeJoin.pointInIntervalSalted(
+      RangeJoin.pointInInterval(
         pts, iv, "p", "lo", "hi", RangeJoin.BucketWidth, 5)
     }
   }
@@ -253,9 +267,11 @@ class RangeJoinSpec extends SparkSpec {
     // VALUE crowd: 50k points at ONE value share a bucket at every
     // width — the regime detector must keep the probe width (refining
     // only inflates the interval explode) and derive salt ≥ 2 for the
-    // ~20M-pair hot task
+    // ~20M-pair hot task (materialized, like every literal crowd here:
+    // the optimizer folds a literal point column into the interval
+    // filter, and the bucket join disappears from the plan)
     val vPts = spark.range(50000).select(col("id").as("rid"),
-      lit(100L).as("p"))
+      lit(100L).as("p")).localCheckpoint()
     val iv = spark.range(404).select(col("id").as("i_id"),
         when(col("id") < 4, lit(0L)).otherwise(lit(600L)).as("lo"),
         when(col("id") < 4, lit(700L)).otherwise(lit(1023L)).as("hi"))
@@ -272,9 +288,9 @@ class RangeJoinSpec extends SparkSpec {
       s"a range crowd must refine, got $wr")
     assert(kr === 1, s"a split range crowd needs no salt, got $kr")
     // and the salted join at the derived mitigation matches salt-1
-    def got(pts: org.apache.spark.sql.DataFrame, w: Long, k: Int) =
-      RangeJoin.pointInIntervalSalted(pts, iv, "p", "lo", "hi", w, k,
-          Seq("rid"))
+    def got(pts: DataFrame, w: Long, k: Int) =
+      bucketJoined(RangeJoin.pointInInterval(pts, iv, "p", "lo", "hi", w, k,
+          Seq("rid")))
         .groupBy("i_id").agg(count(lit(1)).as("n"))
         .as[(Long, Long)].collect().toMap
     assert(got(vPts, wv, kv) === got(vPts, RangeJoin.BucketWidth, 1))
@@ -284,20 +300,18 @@ class RangeJoinSpec extends SparkSpec {
     // the hottest cell's candidate work at least 2×; the answer holds
     // across width and salt (checked on 44 of the intervals)
     val probe = RangeJoin.BucketWidth
-    // (materialized: the optimizer folds a literal point column into
-    // the interval filter, and the bucket join disappears from the plan)
     val vBig = spark.range(100000).select(col("id").as("rid"),
       lit(100L).as("p")).localCheckpoint()
     val (wb, kb) = RangeJoin.autoPointMitigation(vBig, "p", iv, "lo", "hi")
     assert(wb === probe && kb >= 3, s"value crowd mitigation ($wb, $kb)")
-    def hotCell(k: Int) = cellWork(RangeJoin.pointInIntervalSalted(
+    def hotCell(k: Int) = cellWork(RangeJoin.pointInInterval(
       vBig, iv, "p", "lo", "hi", probe, k, Seq("rid")))._1
     val (mPlain, mSalted) = (hotCell(1), hotCell(kb))
     assert(mPlain >= 2 * mSalted,
       s"salting did not shrink the hot cell: $mPlain -> $mSalted")
     val ivSub = iv.filter(col("i_id") < 44)
-    def sub(w: Long, k: Int) = RangeJoin.pointInIntervalSalted(vBig, ivSub,
-        "p", "lo", "hi", w, k, Seq("rid"))
+    def sub(w: Long, k: Int) = bucketJoined(RangeJoin.pointInInterval(
+        vBig, ivSub, "p", "lo", "hi", w, k, Seq("rid")))
       .groupBy("i_id").agg(count(lit(1)).as("n"))
       .as[(Long, Long)].collect().toMap
     val plain = sub(probe, 1)
@@ -319,9 +333,9 @@ class RangeJoinSpec extends SparkSpec {
           lit(100L).as(lo)).withColumn(hi, lit(800L)))
     val a = side(1500, 9L, "a_id", "lo_a", "hi_a")
     val b = side(1500, 19L, "b_id", "lo_b", "hi_b")
-    def got(salt: Int) = RangeJoin.intervalOverlapSalted(
+    def got(salt: Int) = bucketJoined(RangeJoin.intervalOverlap(
       a, b, "lo_a", "hi_a", "lo_b", "hi_b", RangeJoin.BucketWidth, salt,
-      Seq("a_id"))
+      Seq("a_id")))
       .select("a_id", "b_id").as[(Long, Long)].collect()
       .groupBy(identity).view.mapValues(_.length).toMap
     val plain = got(1)
@@ -331,12 +345,12 @@ class RangeJoinSpec extends SparkSpec {
     assert(plain.nonEmpty)
     // salt > 1 without stable LEFT id columns must refuse
     intercept[IllegalArgumentException] {
-      RangeJoin.intervalOverlapSalted(
+      RangeJoin.intervalOverlap(
         a, b, "lo_a", "hi_a", "lo_b", "hi_b", RangeJoin.BucketWidth, 6)
     }
     // id columns that live on the RIGHT must refuse with the swap hint
     val e = intercept[IllegalArgumentException] {
-      RangeJoin.intervalOverlapSalted(
+      RangeJoin.intervalOverlap(
         a, b, "lo_a", "hi_a", "lo_b", "hi_b", RangeJoin.BucketWidth, 6,
         Seq("b_id"))
     }
@@ -358,7 +372,7 @@ class RangeJoinSpec extends SparkSpec {
       s"a same-range crowd must keep the probe width, got $wv")
     assert(kv >= 2, s"a same-range crowd must salt, got $kv")
     // RANGE crowd: 5000 DISTINCT tiny intervals crammed into one
-    // probe bucket — width splits it (the autoWidth fixture)
+    // probe bucket — width splits it (the crowded-bucket fixture)
     def crowd(salt: Long, id: String, lo: String, hi: String) =
       spark.range(5000).select(col("id").as(id),
         pmod(xxhash64(col("id"), lit(salt)), lit(993L)).as(lo))
@@ -383,8 +397,8 @@ class RangeJoinSpec extends SparkSpec {
     // and the salted join at the derived mitigation matches salt-1
     val aD = dup("a_id", "lo_a", "hi_a")
     val bD = dup("b_id", "lo_b", "hi_b").filter(col("b_id") < 50)
-    def pairs(w: Long, k: Int) = RangeJoin.intervalOverlapSalted(
-      aD, bD, "lo_a", "hi_a", "lo_b", "hi_b", w, k, Seq("a_id"))
+    def pairs(w: Long, k: Int) = bucketJoined(RangeJoin.intervalOverlap(
+      aD, bD, "lo_a", "hi_a", "lo_b", "hi_b", w, k, Seq("a_id")))
       .select("a_id", "b_id").as[(Long, Long)].collect()
       .groupBy(identity).view.mapValues(_.length).toMap
     assert(pairs(wv, kv) === pairs(RangeJoin.BucketWidth, 1))
@@ -405,7 +419,7 @@ class RangeJoinSpec extends SparkSpec {
     val (wm, km) = RangeJoin.autoOverlapMitigation(aBig, bBig,
       "lo_a", "hi_a", "lo_b", "hi_b", saltIdCols = Seq("a_id"))
     assert(wm === probe && km >= 3, s"same-range crowd mitigation ($wm, $km)")
-    def hotCell(w: Long, k: Int) = cellWork(RangeJoin.intervalOverlapSalted(
+    def hotCell(w: Long, k: Int) = cellWork(RangeJoin.intervalOverlap(
       aBig, bBig, "lo_a", "hi_a", "lo_b", "hi_b", w, k, Seq("a_id")))._1
     val mHot = hotCell(probe, 1)
     assert(mHot === 18000000L)
@@ -414,8 +428,8 @@ class RangeJoinSpec extends SparkSpec {
     assert(mHot >= 2 * mSalted,
       s"salting did not shrink the hot cell: $mHot -> $mSalted")
     val bSub = bBig.filter(col("b_id") < 20)
-    def sig(w: Long, k: Int) = RangeJoin.intervalOverlapSalted(aBig, bSub,
-        "lo_a", "hi_a", "lo_b", "hi_b", w, k, Seq("a_id"))
+    def sig(w: Long, k: Int) = bucketJoined(RangeJoin.intervalOverlap(
+        aBig, bSub, "lo_a", "hi_a", "lo_b", "hi_b", w, k, Seq("a_id")))
       .agg(count(lit(1)), expr("bit_xor(xxhash64(a_id, b_id))")).head()
       .toSeq
     val plain = sig(probe, 1)
@@ -434,7 +448,7 @@ class RangeJoinSpec extends SparkSpec {
       spark.range(5000).select(idCol.as(id), lit(100L).as(lo))
         .withColumn(hi, lit(110L))
     val r = crowd(col("id"), "b_id", "lo_b", "hi_b")
-    def run(l: org.apache.spark.sql.DataFrame): ((Long, Int), String) = {
+    def run(l: DataFrame): ((Long, Int), String) = {
       val buf = new java.io.ByteArrayOutputStream
       val wk = Console.withOut(new java.io.PrintStream(buf, true)) {
         RangeJoin.autoOverlapMitigation(l, r,
@@ -474,9 +488,9 @@ class RangeJoinSpec extends SparkSpec {
   }
 
   test("band-overlap SALTED query matches the fixed-width board query") {
-    val salted = RangeJoin.bandOverlapSaltedQuery(spark, Sf)
+    val salted = bucketJoined(RangeJoin.bandOverlapSaltedQuery(spark, Sf))
       .as[(Long, Long)].collect().toMap
-    val fixed = RangeJoin.bandOverlapQuery(spark, Sf)
+    val fixed = bucketJoined(RangeJoin.bandOverlapQuery(spark, Sf))
       .as[(Long, Long)].collect().toMap
     assert(salted === fixed)
     assert(salted.nonEmpty)
@@ -493,7 +507,7 @@ class RangeJoinSpec extends SparkSpec {
     val iv = spark.range(64).select(col("id").as("i_id"),
       (pmod(xxhash64(col("id"), lit(5L)), lit(64L)) * 1024L).as("lo"))
       .withColumn("hi", col("lo") + lit(512L))
-    val w = RangeJoin.autoWidthPoints(pts, "p", iv, "lo", "hi")
+    val (w, _) = RangeJoin.autoPointMitigation(pts, "p", iv, "lo", "hi")
     assert(w === RangeJoin.BucketWidth,
       s"a ~4000-pair hot task is under the work budget, got $w")
   }
@@ -510,13 +524,13 @@ class RangeJoinSpec extends SparkSpec {
     val iv = spark.range(404).select(col("id").as("i_id"),
         when(col("id") < 4, lit(0L)).otherwise(lit(600L)).as("lo"),
         when(col("id") < 4, lit(700L)).otherwise(lit(1023L)).as("hi"))
-    val w = RangeJoin.autoWidthPoints(pts, "p", iv, "lo", "hi")
+    val (w, _) = RangeJoin.autoPointMitigation(pts, "p", iv, "lo", "hi")
     assert(w < RangeJoin.BucketWidth,
       s"a 20M-pair hot task must re-key, got $w")
     // the join at the derived width matches the probe width (per-
     // interval match counts — 200k output rows stay in Spark)
-    def got(width: Long) = RangeJoin.pointInInterval(
-      pts, iv, "p", "lo", "hi", width)
+    def got(width: Long) = bucketJoined(RangeJoin.pointInInterval(
+      pts, iv, "p", "lo", "hi", width))
       .groupBy("i_id").agg(count(lit(1)).as("n"))
       .as[(Long, Long)].collect().toMap
     val probe = RangeJoin.BucketWidth
@@ -564,9 +578,9 @@ class RangeJoinSpec extends SparkSpec {
   test("band-overlap AUTO query matches the fixed-width board query") {
     // width-independence end to end on real data: whatever width the
     // census picks, the answer is the fixed-width query's answer
-    val auto = RangeJoin.bandOverlapAutoQuery(spark, Sf)
+    val auto = bucketJoined(RangeJoin.bandOverlapAutoQuery(spark, Sf))
       .as[(Long, Long)].collect().toMap
-    val fixed = RangeJoin.bandOverlapQuery(spark, Sf)
+    val fixed = bucketJoined(RangeJoin.bandOverlapQuery(spark, Sf))
       .as[(Long, Long)].collect().toMap
     assert(auto === fixed)
     assert(auto.nonEmpty, "vacuous fixture — no overlapping bands")
@@ -627,7 +641,7 @@ class RangeJoinSpec extends SparkSpec {
         pmod(xxhash64(col("id"), lit(salt)), lit(65536L)).as(lo))
         .withColumn(hi,
           col(lo) + pmod(xxhash64(col(id), lit(salt + 1)), lit(1024L)))
-    val w = RangeJoin.autoWidth(
+    val (w, _) = RangeJoin.autoOverlapMitigation(
       uni(4000, 7L, "a_id", "lo_a", "hi_a"),
       uni(4000, 77L, "b_id", "lo_b", "hi_b"),
       "lo_a", "hi_a", "lo_b", "hi_b")
@@ -651,13 +665,14 @@ class RangeJoinSpec extends SparkSpec {
       .unionByName(bg(5L, "a_id", "lo_a", "hi_a"))
     val b = crowd(33L, "b_id", "lo_b", "hi_b")
       .unionByName(bg(55L, "b_id", "lo_b", "hi_b"))
-    val w = RangeJoin.autoWidth(a, b, "lo_a", "hi_a", "lo_b", "hi_b")
+    val (w, _) =
+      RangeJoin.autoOverlapMitigation(a, b, "lo_a", "hi_a", "lo_b", "hi_b")
     assert(w < RangeJoin.BucketWidth, s"crowding must re-key, got $w")
     assert(w >= 1L && w <= 16L,
       s"width should land at the crowd's median-span scale (~3), got $w")
     // the knob never changes answers: auto width == probe width results
-    def pairs(width: Long) =
-      RangeJoin.intervalOverlap(a, b, "lo_a", "hi_a", "lo_b", "hi_b", width)
+    def pairs(width: Long) = bucketJoined(
+      RangeJoin.intervalOverlap(a, b, "lo_a", "hi_a", "lo_b", "hi_b", width))
         .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     val probe = RangeJoin.BucketWidth
     val atProbe = pairs(probe)
@@ -688,7 +703,8 @@ class RangeJoinSpec extends SparkSpec {
           col(lo) + pmod(xxhash64(col(id), lit(salt + 1)), lit(7L)))
     val a = crowd(3L, "a_id", "lo_a", "hi_a")
     val b = crowd(33L, "b_id", "lo_b", "hi_b")
-    val w = RangeJoin.autoWidth(a, b, "lo_a", "hi_a", "lo_b", "hi_b")
+    val (w, _) =
+      RangeJoin.autoOverlapMitigation(a, b, "lo_a", "hi_a", "lo_b", "hi_b")
     assert(w < RangeJoin.BucketWidth,
       s"single-bucket crowding must re-key, got $w")
     assert(w >= 1L && w <= 16L,
@@ -706,7 +722,8 @@ class RangeJoinSpec extends SparkSpec {
     val wide = Seq((999999L, 5L, 5L + (1L << 23))).toDF("a_id", "lo_a", "hi_a")
     val a = crowd(3L, "a_id", "lo_a", "hi_a").unionByName(wide)
     val b = crowd(33L, "b_id", "lo_b", "hi_b")
-    val w = RangeJoin.autoWidth(a, b, "lo_a", "hi_a", "lo_b", "hi_b")
+    val (w, _) =
+      RangeJoin.autoOverlapMitigation(a, b, "lo_a", "hi_a", "lo_b", "hi_b")
     assert(w < RangeJoin.BucketWidth, s"crowding must re-key, got $w")
     val span = (1L << 23) + 1L
     val floor = span / (RangeJoin.MaxSpanBuckets - 1) +
@@ -721,13 +738,31 @@ class RangeJoinSpec extends SparkSpec {
   test("autoWidth: degenerate inputs fall back to the probe width") {
     val empty = Seq.empty[(Long, Long, Long)].toDF("a_id", "lo_a", "hi_a")
     val emptyB = Seq.empty[(Long, Long, Long)].toDF("b_id", "lo_b", "hi_b")
-    assert(RangeJoin.autoWidth(empty, emptyB,
-      "lo_a", "hi_a", "lo_b", "hi_b") === RangeJoin.BucketWidth)
+    assert(RangeJoin.autoOverlapMitigation(empty, emptyB,
+      "lo_a", "hi_a", "lo_b", "hi_b") === ((RangeJoin.BucketWidth, 1)))
     val inv = Seq((1L, 10L, 3L)).toDF("a_id", "lo_a", "hi_a") // inverted
     val nul = Seq((2L, None: Option[Long], Some(5L)))
       .toDF("b_id", "lo_b", "hi_b")
-    assert(RangeJoin.autoWidth(inv, nul,
-      "lo_a", "hi_a", "lo_b", "hi_b") === RangeJoin.BucketWidth)
+    assert(RangeJoin.autoOverlapMitigation(inv, nul,
+      "lo_a", "hi_a", "lo_b", "hi_b") === ((RangeJoin.BucketWidth, 1)))
+  }
+
+  test("salt 1 is the fixed-width plan: no salt column, one bucket " +
+      "Generate per exploded side") {
+    // the board's fixed-width legs (the default salt = 1) must plan
+    // exactly as the unsalted operator always did: the join is on the
+    // bucket alone; the salted legs add the salt column and the
+    // replicated side's salt Generate
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    def shape(df: DataFrame): (Int, Boolean) = {
+      val plan = df.queryExecution.optimizedPlan
+      (plan.collect { case g: Generate => g }.size,
+        plan.find(_.output.exists(_.name == "__s")).isDefined)
+    }
+    assert(shape(RangeJoin.priceBandQuery(spark, Sf)) === ((1, false)))
+    assert(shape(RangeJoin.bandOverlapQuery(spark, Sf)) === ((2, false)))
+    assert(shape(RangeJoin.priceBandSaltedQuery(spark, Sf)) === ((2, true)))
+    assert(shape(RangeJoin.bandOverlapSaltedQuery(spark, Sf)) === ((3, true)))
   }
 
   test("overlapStreamStateParts: census-derived, clamped, no constant") {

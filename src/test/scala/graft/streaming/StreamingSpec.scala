@@ -256,8 +256,8 @@ class StreamingSpec extends SparkSpec {
       Det(30, t("2021-03-21 11:00:00"), 400L)) // no matching order
     val oSrc = MemoryStream[Ord]
     val dSrc = MemoryStream[Det]
-    val q = StreamJobs.intervalJoin(oSrc.toDF(), dSrc.toDF(),
-        "order_id", "d_order_id", "o_ts", "d_ts", "30 minutes")
+    val q = StreamJobs.intervalJoinBounds(oSrc.toDF(), dSrc.toDF(),
+        "order_id", "d_order_id", "o_ts", "d_ts", "30 minutes", "30 minutes")
       .select(col("order_id"), col("amount"))
       .writeStream.format("memory").queryName("ivj_out")
       .outputMode("append").start()
@@ -268,14 +268,14 @@ class StreamingSpec extends SparkSpec {
     val streamed = spark.table("ivj_out")
       .as[(Long, Long)].collect().toSet
     // the SAME transform body in batch mode (unified API)
-    val batch = StreamJobs.intervalJoin(orders.toDF(), details.toDF(),
-        "order_id", "d_order_id", "o_ts", "d_ts", "30 minutes")
+    val batch = StreamJobs.intervalJoinBounds(orders.toDF(), details.toDF(),
+        "order_id", "d_order_id", "o_ts", "d_ts", "30 minutes", "30 minutes")
       .select(col("order_id"), col("amount"))
       .as[(Long, Long)].collect().toSet
     assert(streamed == Set((10L, 100L), (10L, 150L), (20L, 300L)))
     assert(streamed == batch)
 
-    // the reference's two shapes at volume through intervalJoinBounds,
+    // the reference's two shapes at volume through the same operator,
     // each side fed in its own event-time order: the joined pairs equal
     // the batch run of the same body over the same rows, join state
     // stays below one side's event count (bounded by the watermark
