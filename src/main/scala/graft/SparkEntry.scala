@@ -20,6 +20,13 @@ object SparkEntry {
   private def q(name: String, op: Op, oracle: => String) = Entry(name, op, Some(() => oracle))
   private def noOracle(name: String, op: Op) = Entry(name, op, None)
 
+  // table binders: every operator is a frame transform, and the board
+  // is the one place that binds it to the table it runs over
+  private def docs(f: DataFrame => DataFrame): Op = (s, d) => f(Tables.documents(s, d))
+  private def events(f: DataFrame => DataFrame): Op = (s, d) => f(Tables.events(s, d))
+  private def orders(f: DataFrame => DataFrame): Op = (s, d) => f(Tables.orders(s, d))
+  private def collapsed(f: DataFrame => DataFrame): Op = docs(t => f(llm.Dedup.collapsedDocs(t)))
+
   /** The board. Pairing rule: each query is declared here once, with its
     * operator and either its oracle SQL (`q`) or an explicit `noOracle`
     * when no SQL reproduces its answer (a rows-only check); `queries`
@@ -39,9 +46,9 @@ object SparkEntry {
     q("q_dws_display_stats", dwd.LogNested.displayStats(_, _), dwd.LogNested.displayStatsOracle),
     q("q_dwd_cdc_route", dwd.CdcEnvelope(_, _), dwd.CdcEnvelope.oracle),
     // SCD2 family: interval build, point-in-time lookup, snapshot diff
-    q("q_dwd_scd2", dwd.Scd2.scd2(_, _), dwd.Scd2.scd2Oracle),
-    q("q_dwm_scd2_pit", dwd.Scd2.pit(_, _), dwd.Scd2.pitOracle),
-    q("q_dwd_snapshot_diff", dwd.Scd2.snapshotDiff(_, _), dwd.Scd2.snapshotDiffOracle),
+    q("q_dwd_scd2", events(dwd.Scd2.scd2Of), dwd.Scd2.scd2Oracle),
+    q("q_dwm_scd2_pit", events(dwd.Scd2.pitOf), dwd.Scd2.pitOracle),
+    q("q_dwd_snapshot_diff", orders(dwd.Scd2.snapshotDiffOf), dwd.Scd2.snapshotDiffOracle),
     // DWM — dedup / CEP-bounce / interval + dim joins (§2.4, §2.5)
     q("q_dwm_unique_visit", dwm.UniqueVisit(_, _), dwm.UniqueVisit.oracle),
     q("q_dwm_jump_detect", dwm.JumpDetect(_, _), dwm.JumpDetect.oracle),
@@ -96,10 +103,10 @@ object SparkEntry {
     q("q_ads_hour_backfill", ads.Queries.hourBackfill(_, _), ads.Queries.hourBackfillOracle),
     // event-sequence analytics: ordered conversion funnel + cohort
     // retention (both integer epoch-ms/epoch-day arithmetic)
-    q("q_ads_funnel", ads.EventFlows.funnel(_, _), ads.EventFlows.funnelOracle),
-    q("q_ads_retention", ads.EventFlows.retention(_, _), ads.EventFlows.retentionOracle),
-    q("q_ads_sessionize", ads.EventFlows.sessionize(_, _), ads.EventFlows.sessionizeOracle),
-    q("q_ads_active_users", ads.EventFlows.activeUsers(_, _), ads.EventFlows.activeUsersOracle),
+    q("q_ads_funnel", events(ads.EventFlows.funnelOf), ads.EventFlows.funnelOracle),
+    q("q_ads_retention", events(ads.EventFlows.retentionOf), ads.EventFlows.retentionOracle),
+    q("q_ads_sessionize", events(ads.EventFlows.sessionizeOf), ads.EventFlows.sessionizeOracle),
+    q("q_ads_active_users", events(ads.EventFlows.activeUsersOf), ads.EventFlows.activeUsersOracle),
     // day-over-day GMV growth + RFM quintile segmentation + per-group top-N
     q("q_ads_gmv_growth", ads.Queries.gmvGrowth(_, _), ads.Queries.gmvGrowthOracle),
     q("q_ads_rfm", ads.Queries.rfm(_, _), ads.Queries.rfmOracle),
@@ -108,11 +115,11 @@ object SparkEntry {
     q("q_ads_copurchase", ads.Queries.copurchase(_, _), ads.Queries.copurchaseOracle),
     // path analytics: Markov transition matrix + conversion-latency
     // histogram (r8)
-    q("q_ads_transitions", ads.EventPaths.transitions(_, _), ads.EventPaths.transitionsOracle),
-    q("q_ads_time_to_convert", ads.EventPaths.timeToConvert(_, _),
+    q("q_ads_transitions", events(ads.EventPaths.transitionsOf), ads.EventPaths.transitionsOracle),
+    q("q_ads_time_to_convert", events(ads.EventPaths.timeToConvertOf),
       ads.EventPaths.timeToConvertOracle),
     // cross-source rare-shingle overlap (data-card mirror detection)
-    q("q_llm_source_overlap", llm.Dedup.sourceOverlap(_, _), llm.Dedup.sourceOverlapOracle),
+    q("q_llm_source_overlap", docs(llm.Dedup.sourceOverlapOf), llm.Dedup.sourceOverlapOracle),
     // Sink layer (K2–K5): real write → read-back through each sink path
     q("q_sink_dedup_latest", sinks.Sinks.dedupLatestQuery(_, _), sinks.Sinks.dedupLatestOracle),
     q("q_sink_route", sinks.Sinks.routeQuery(_, _), sinks.Sinks.routeOracle),
@@ -122,30 +129,30 @@ object SparkEntry {
     // similarity search, text analysis, multimodal plumbing
     q("q_llm_exact_dedup", llm.Dedup.exact(_, _), llm.Dedup.exactOracle),
     q("q_llm_minhash_sig", llm.Dedup.minhashSignatures(_, _), llm.Dedup.minhashOracle),
-    q("q_llm_lsh_dups", llm.Dedup.lshDuplicates(_, _), llm.Dedup.lshOracle),
-    q("q_llm_lsh_dups_collapsed", llm.Dedup.lshDuplicatesCollapsed(_, _),
+    q("q_llm_lsh_dups", docs(llm.Dedup.lshDuplicatesOf(_)), llm.Dedup.lshOracle),
+    q("q_llm_lsh_dups_collapsed", collapsed(llm.Dedup.lshDuplicatesOf(_)),
       llm.Dedup.lshCollapsedOracle),
     q("q_llm_dedup_keeplist", llm.Dedup.keepList(_, _), llm.Dedup.keepListOracle),
     q("q_llm_dedup_closure", llm.Dedup.dedupClosure(_, _), llm.Dedup.dedupClosureOracle),
-    q("q_llm_ngram_jaccard", llm.Dedup.ngramJaccard(_, _), llm.Dedup.ngramJaccardOracle),
-    q("q_llm_simhash", llm.Dedup.simhash(_, _), llm.Dedup.simhashOracle),
-    q("q_llm_simhash_dups", llm.Dedup.simhashDuplicates(_, _), llm.Dedup.simhashDupOracle),
+    q("q_llm_ngram_jaccard", docs(llm.Dedup.ngramJaccardOf), llm.Dedup.ngramJaccardOracle),
+    q("q_llm_simhash", docs(llm.Dedup.simhashOf), llm.Dedup.simhashOracle),
+    q("q_llm_simhash_dups", docs(llm.Dedup.simhashDuplicatesOf), llm.Dedup.simhashDupOracle),
     // mass-duplication guards for the other pair-emitting families —
     // same exact-collapse device as lsh_dups_collapsed (r14)
-    q("q_llm_simhash_dups_collapsed", llm.Dedup.simhashDuplicatesCollapsed(_, _),
+    q("q_llm_simhash_dups_collapsed", collapsed(llm.Dedup.simhashDuplicatesOf),
       llm.Dedup.simhashDupCollapsedOracle),
-    q("q_llm_ngram_jaccard_collapsed", llm.Dedup.ngramJaccardCollapsed(_, _),
+    q("q_llm_ngram_jaccard_collapsed", collapsed(llm.Dedup.ngramJaccardOf),
       llm.Dedup.ngramJaccardCollapsedOracle),
     q("q_llm_ngram_jaccard_prefix", llm.Dedup.ngramJaccardPrefix(_, _),
       llm.Dedup.ngramJaccardPrefixOracle),
-    q("q_llm_ngram_jaccard_prefix_collapsed", llm.Dedup.ngramJaccardPrefixCollapsed(_, _),
+    q("q_llm_ngram_jaccard_prefix_collapsed", collapsed(llm.Dedup.ngramJaccardPrefixOf),
       llm.Dedup.ngramJaccardPrefixCollapsedOracle),
-    q("q_llm_containment_collapsed", llm.Dedup.containmentCollapsed(_, _),
+    q("q_llm_containment_collapsed", collapsed(llm.Dedup.containmentOf),
       llm.Dedup.containmentCollapsedOracle),
     // exact-substring family: per-doc coverage by cross-doc repeated spans
-    q("q_llm_span_coverage", llm.Dedup.spanCoverage(_, _), llm.Dedup.spanCoverageOracle),
+    q("q_llm_span_coverage", docs(llm.Dedup.spanCoverageOf), llm.Dedup.spanCoverageOracle),
     // steady-state ingest: new batch deduped against the corpus snapshot
-    q("q_llm_incremental_dedup", llm.Dedup.incrementalDedup(_, _),
+    q("q_llm_incremental_dedup", docs(llm.Dedup.incrementalDedupOf),
       llm.Dedup.incrementalDedupOracle),
     q("q_llm_ann_topk", llm.Similarity.bruteTopK(_, _), llm.Similarity.bruteTopKOracle),
     // no oracle: centroid means are an unordered float sum, not SQL-
@@ -156,7 +163,8 @@ object SparkEntry {
     q("q_llm_ann_recall", llm.Similarity.ivfRecall(_, _), llm.Similarity.ivfRecallOracle),
     // full-probe identity: IVF at nprobe=KCells must equal bruteTopK
     // bit-for-bit — shares the brute oracle (hash check)
-    q("q_llm_ann_fullprobe", llm.Similarity.ivfTopKFullProbe(_, _), llm.Similarity.bruteTopKOracle),
+    q("q_llm_ann_fullprobe", llm.Similarity.ivfTopK(_, _, nprobe = llm.Similarity.KCells),
+      llm.Similarity.bruteTopKOracle),
     q("q_llm_embed_neardup", llm.Similarity.lshNearDup(_, _), llm.Similarity.lshNearDupOracle),
     // PQ-ADC + exact rescore (rows-only: float scores; quality is
     // adjudicated by the hash-green recall query below)
@@ -188,14 +196,16 @@ object SparkEntry {
       llm.Similarity.embedKeepListScaledOracle),
     q("q_llm_lang_id", llm.TextAnalysis.langId(_, _), llm.TextAnalysis.langIdOracle),
     q("q_llm_quality", llm.TextAnalysis.qualityScore(_, _), llm.TextAnalysis.qualityOracle),
-    q("q_llm_token_stats", llm.TextAnalysis.tokenStats(_, _), llm.TextAnalysis.tokenStatsOracle),
-    q("q_llm_fingerprint", llm.TextAnalysis.fingerprint(_, _), llm.TextAnalysis.fingerprintOracle),
+    q("q_llm_token_stats", docs(llm.TextAnalysis.tokenStatsOf), llm.TextAnalysis.tokenStatsOracle),
+    q("q_llm_fingerprint", docs(llm.TextAnalysis.fingerprintOf),
+      llm.TextAnalysis.fingerprintOracle),
     // integer TF-DF ranking: top-k keywords per doc, WindowGroupLimit
-    q("q_llm_doc_keywords", llm.TextAnalysis.docKeywords(_, _), llm.TextAnalysis.docKeywordsOracle),
+    q("q_llm_doc_keywords", docs(llm.TextAnalysis.docKeywordsOf),
+      llm.TextAnalysis.docKeywordsOracle),
     // lexical index structures: token->postings + exact-rational IDF
-    q("q_llm_inverted_index", llm.Index.invertedIndex(_, _), llm.Index.invertedIndexOracle),
-    q("q_llm_idf_rarity", llm.Index.idfRarity(_, _), llm.Index.idfRarityOracle),
-    q("q_llm_bm25", llm.Index.bm25(_, _), llm.Index.bm25Oracle),
+    q("q_llm_inverted_index", docs(llm.Index.invertedIndexOf), llm.Index.invertedIndexOracle),
+    q("q_llm_idf_rarity", docs(llm.Index.idfRarityOf), llm.Index.idfRarityOracle),
+    q("q_llm_bm25", docs(llm.Index.bm25Of), llm.Index.bm25Oracle),
     // real BPE merge loop: corpus-weighted pair argmax x3, then the
     // induced symbol vocabulary (oracle re-derives the merges in SQL)
     q("q_llm_bpe_merges", llm.Bpe.merges(_, _), llm.Bpe.mergesOracle),
@@ -203,36 +213,36 @@ object SparkEntry {
     q("q_llm_bpe_tokenize", llm.Bpe.tokenize(_, _), llm.Bpe.tokenizeOracle),
     q("q_llm_bpe_fertility", llm.Bpe.fertility(_, _), llm.Bpe.fertilityOracle),
     // integer bigram-MLE fluency (the KenLM-perplexity filter family)
-    q("q_llm_bigram_lm", llm.LangModel.bigramScore(_, _), llm.LangModel.bigramScoreOracle),
+    q("q_llm_bigram_lm", docs(llm.LangModel.bigramScoreOf), llm.LangModel.bigramScoreOracle),
     q("q_llm_multimodal_meta", llm.Multimodal.metaQuery(_, _), llm.Multimodal.metaOracle),
     q("q_llm_mm_resize", llm.Multimodal.resizeQuery(_, _), llm.Multimodal.resizeOracle),
     q("q_llm_mm_frames", llm.Multimodal.frameSample(_, _), llm.Multimodal.frameSampleOracle),
     q("q_llm_mm_features", llm.Multimodal.features(_, _), llm.Multimodal.featuresOracle),
     // Corpus curation: Gopher-style repetition signals, deterministic
     // hash splits, per-language quantile calibration
-    q("q_llm_repetition", llm.CorpusOps.repetition(_, _), llm.CorpusOps.repetitionOracle),
+    q("q_llm_repetition", docs(llm.CorpusOps.repetitionOf), llm.CorpusOps.repetitionOracle),
     q("q_llm_hash_split", llm.CorpusOps.hashSplit(_, _), llm.CorpusOps.hashSplitOracle),
-    q("q_llm_quality_quantiles", llm.CorpusOps.qualityQuantiles(_, _),
+    q("q_llm_quality_quantiles", docs(llm.CorpusOps.qualityQuantilesOf),
       llm.CorpusOps.qualityQuantilesOracle),
     // (the percentile_approx scale variant qualityQuantilesApprox
     // stays a spec-bounded library surface; its BOARD slot is the
     // hash-locked hq sketch pair below — same capability, full
     // oracle check instead of rows-only)
-    q("q_llm_packing", llm.CorpusOps.packing(_, _), llm.CorpusOps.packingOracle),
-    q("q_llm_packing_sharded", llm.CorpusOps.packingSharded(_, _),
+    q("q_llm_packing", docs(llm.CorpusOps.packingOf), llm.CorpusOps.packingOracle),
+    q("q_llm_packing_sharded", docs(llm.CorpusOps.packingShardedOf),
       llm.CorpusOps.packingShardedOracle),
     // corpus layout: deterministic training shuffle, length data card,
     // pack-utilization report; PMI collocation mining
-    q("q_llm_corpus_shuffle", llm.CorpusLayout.corpusShuffle(_, _),
+    q("q_llm_corpus_shuffle", docs(llm.CorpusLayout.corpusShuffleOf),
       llm.CorpusLayout.corpusShuffleOracle),
-    q("q_llm_length_hist", llm.CorpusLayout.lengthHist(_, _), llm.CorpusLayout.lengthHistOracle),
+    q("q_llm_length_hist", docs(llm.CorpusLayout.lengthHistOf), llm.CorpusLayout.lengthHistOracle),
     q("q_llm_pack_util", llm.CorpusLayout.packUtil(_, _), llm.CorpusLayout.packUtilOracle),
-    q("q_llm_pmi", llm.Colloc.pmi(_, _), llm.Colloc.pmiOracle),
+    q("q_llm_pmi", docs(llm.Colloc.pmiOf), llm.Colloc.pmiOracle),
     // per-language bigram heavy hitters (the common-pair data card)
-    q("q_llm_top_ngrams", llm.Colloc.topNgrams(_, _), llm.Colloc.topNgramsOracle),
+    q("q_llm_top_ngrams", docs(llm.Colloc.topNgramsOf), llm.Colloc.topNgramsOracle),
     // largest-remainder exact token-budget allocation across languages
-    q("q_llm_split_alloc", llm.CorpusLayout.splitAlloc(_, _), llm.CorpusLayout.splitAllocOracle),
-    q("q_llm_pack_payload", llm.CorpusOps.packPayload(_, _), llm.CorpusOps.packPayloadOracle),
+    q("q_llm_split_alloc", docs(llm.CorpusLayout.splitAllocOf), llm.CorpusLayout.splitAllocOracle),
+    q("q_llm_pack_payload", docs(llm.CorpusOps.packPayloadOf), llm.CorpusOps.packPayloadOracle),
     // payloads written as a (lang, shard)-partitioned directory and
     // read back — the durable training-shard layout, manifest-checked
     q("q_llm_shard_export", llm.CorpusOps.shardExport(_, _), llm.CorpusOps.shardExportOracle),
@@ -245,17 +255,18 @@ object SparkEntry {
     // bit-identical, also shares the exact oracle
     q("q_llm_contamination_bloom_sharded", llm.CorpusOps.contaminationBloomSharded(_, _),
       llm.CorpusOps.contaminationOracle),
-    q("q_llm_mixture_sample", llm.CorpusOps.mixtureSample(_, _), llm.CorpusOps.mixtureSampleOracle),
-    q("q_llm_mixture_sample_strat", llm.CorpusOps.mixtureSampleStratified(_, _),
+    q("q_llm_mixture_sample", docs(llm.CorpusOps.mixtureSampleOf),
+      llm.CorpusOps.mixtureSampleOracle),
+    q("q_llm_mixture_sample_strat", docs(llm.CorpusOps.mixtureSampleStratifiedOf),
       llm.CorpusOps.mixtureSampleStratifiedOracle),
     // data-driven rates: temperature sampling over per-lang token mass
-    q("q_llm_mixture_temperature", llm.CorpusOps.mixtureTemperature(_, _),
+    q("q_llm_mixture_temperature", docs(llm.CorpusOps.mixtureTemperatureOf),
       llm.CorpusOps.mixtureTemperatureOracle),
     // per-rule rejection counts + survivors, one typed pass
-    q("q_llm_filter_funnel", llm.CorpusOps.filterFunnel(_, _), llm.CorpusOps.filterFunnelOracle),
+    q("q_llm_filter_funnel", docs(llm.CorpusOps.filterFunnelOf), llm.CorpusOps.filterFunnelOracle),
     q("q_llm_corpus_report", llm.CorpusOps.corpusReport(_, _), llm.CorpusOps.corpusReportOracle),
     q("q_llm_vocab_report", llm.CorpusOps.vocabReport(_, _), llm.CorpusOps.vocabReportOracle),
-    q("q_llm_chunking", llm.CorpusOps.chunk(_, _), llm.CorpusOps.chunkOracle),
+    q("q_llm_chunking", docs(llm.CorpusOps.chunkOf(_)), llm.CorpusOps.chunkOracle),
     // composed pipeline: chunk long docs, pack the chunks — the whole
     // two-stage layout restated in one oracle (hash-checked end to end)
     q("q_llm_chunk_pack", llm.CorpusOps.chunkThenPack(_, _), llm.CorpusOps.chunkThenPackOracle),
@@ -267,24 +278,24 @@ object SparkEntry {
     q("q_llm_top_quality", llm.CorpusOps.topQuality(_, _), llm.CorpusOps.topQualityOracle),
     // curation extensions (r8): model-based quality scoring, corpus-
     // common block removal, fractional-epoch upsampling
-    q("q_llm_quality_model", llm.QualityModel.score(_, _), llm.QualityModel.scoreOracle),
-    q("q_llm_boilerplate", llm.Boilerplate.boilerplate(_, _), llm.Boilerplate.boilerplateOracle),
-    q("q_llm_upsample", llm.Upsample.upsample(_, _), llm.Upsample.upsampleOracle),
-    q("q_llm_packing_upsampled", llm.Upsample.packingUpsampled(_, _),
+    q("q_llm_quality_model", docs(llm.QualityModel.scoreOf), llm.QualityModel.scoreOracle),
+    q("q_llm_boilerplate", docs(llm.Boilerplate.boilerplateOf), llm.Boilerplate.boilerplateOracle),
+    q("q_llm_upsample", docs(llm.Upsample.upsampleOf), llm.Upsample.upsampleOracle),
+    q("q_llm_packing_upsampled", docs(llm.Upsample.packingUpsampledOf),
       llm.Upsample.packingUpsampledOracle),
     // vocabulary data cards + n-gram novelty + curriculum bands (r8)
-    q("q_llm_vocab_coverage", llm.VocabCoverage.vocabCoverage(_, _),
+    q("q_llm_vocab_coverage", docs(llm.VocabCoverage.vocabCoverageOf),
       llm.VocabCoverage.vocabCoverageOracle),
-    q("q_llm_oov_rate", llm.VocabCoverage.oovRate(_, _), llm.VocabCoverage.oovRateOracle),
-    q("q_llm_novelty", llm.Novelty.novelty(_, _), llm.Novelty.noveltyOracle),
-    q("q_llm_curriculum", llm.CorpusLayout.curriculum(_, _), llm.CorpusLayout.curriculumOracle),
+    q("q_llm_oov_rate", docs(llm.VocabCoverage.oovRateOf), llm.VocabCoverage.oovRateOracle),
+    q("q_llm_novelty", docs(llm.Novelty.noveltyOf), llm.Novelty.noveltyOracle),
+    q("q_llm_curriculum", docs(llm.CorpusLayout.curriculumOf), llm.CorpusLayout.curriculumOracle),
     // near-dup clusters survive their best-quality member (r8)
     q("q_llm_quality_keeplist", llm.Dedup.qualityKeepList(_, _), llm.Dedup.qualityKeepListOracle),
     // PII compliance pass + CCNet perplexity terciles + source drift (r9)
     q("q_llm_pii_scan", llm.Pii.piiScan(_, _), llm.Pii.piiScanOracle),
     q("q_llm_pii_redact", llm.Pii.piiRedact(_, _), llm.Pii.piiRedactOracle),
-    q("q_llm_ppl_filter", llm.LangModel.pplFilter(_, _), llm.LangModel.pplFilterOracle),
-    q("q_llm_source_divergence", llm.Divergence.sourceDivergence(_, _),
+    q("q_llm_ppl_filter", docs(llm.LangModel.pplFilterOf), llm.LangModel.pplFilterOracle),
+    q("q_llm_source_divergence", docs(llm.Divergence.sourceDivergenceOf),
       llm.Divergence.sourceDivergenceOracle),
     // JSON-lines file source: schema-on-read + corrupt accounting (r9)
     q("q_src_json_roundtrip", sources.JsonLines.jsonRoundtrip(_, _),
@@ -292,14 +303,14 @@ object SparkEntry {
     // co-purchase graph centrality: integer PageRank, bounded rounds (r9)
     q("q_ads_item_rank", ads.ItemRank.itemRank(_, _), ads.ItemRank.itemRankOracle),
     // hourly volume anomaly flags + last-touch attribution (r9)
-    q("q_ads_hourly_anomaly", ads.EventFlows.hourlyAnomaly(_, _),
+    q("q_ads_hourly_anomaly", events(ads.EventFlows.hourlyAnomalyOf),
       ads.EventFlows.hourlyAnomalyOracle),
-    q("q_ads_attribution", ads.EventFlows.attribution(_, _), ads.EventFlows.attributionOracle),
+    q("q_ads_attribution", events(ads.EventFlows.attributionOf), ads.EventFlows.attributionOracle),
     // per-dimension embedding data card over int8 codes (r9)
     q("q_llm_embed_dimstats", llm.Similarity.embedDimStats(_, _),
       llm.Similarity.embedDimStatsOracle),
     // token-budget data selection + leakage-safe splits (r9)
-    q("q_llm_budget_select", llm.CorpusLayout.budgetSelect(_, _),
+    q("q_llm_budget_select", docs(llm.CorpusLayout.budgetSelectOf),
       llm.CorpusLayout.budgetSelectOracle),
     q("q_llm_leakage_split", llm.CorpusOps.leakageSplit(_, _), llm.CorpusOps.leakageSplitOracle),
     // BI shapes over the marts: pivot / rollup / RANGE frame / exact
@@ -312,28 +323,28 @@ object SparkEntry {
     q("q_ads_price_median", ads.Rollups.priceMedian(_, _), ads.Rollups.priceMedianOracle),
     // mergeable integer sketches: HLL registers + estimate, Count-Min
     // matrix + heavy-hitter point query (r9)
-    q("q_llm_hll_sketch", llm.Sketches.hllSketch(_, _), llm.Sketches.hllSketchOracle),
-    q("q_llm_hll_estimate", llm.Sketches.hllEstimate(_, _), llm.Sketches.hllEstimateOracle),
-    q("q_llm_cms_sketch", llm.Sketches.cmsSketch(_, _), llm.Sketches.cmsSketchOracle),
-    q("q_llm_cms_topk", llm.Sketches.cmsTopK(_, _), llm.Sketches.cmsTopKOracle),
+    q("q_llm_hll_sketch", docs(llm.Sketches.hllSketchOf), llm.Sketches.hllSketchOracle),
+    q("q_llm_hll_estimate", docs(llm.Sketches.hllEstimateOf), llm.Sketches.hllEstimateOracle),
+    q("q_llm_cms_sketch", docs(llm.Sketches.cmsSketchOf), llm.Sketches.cmsSketchOracle),
+    q("q_llm_cms_topk", docs(llm.Sketches.cmsTopKOf), llm.Sketches.cmsTopKOracle),
     // KMV: the mergeable distinct sketch with SET OPERATIONS — union
     // and intersection estimates from the k-min lists alone (r14)
-    q("q_llm_kmv_sketch", llm.Sketches.kmvSketch(_, _), llm.Sketches.kmvSketchOracle),
-    q("q_llm_hq_sketch", llm.Sketches.hqSketch(_, _), llm.Sketches.hqSketchOracle),
+    q("q_llm_kmv_sketch", docs(llm.Sketches.kmvSketchOf), llm.Sketches.kmvSketchOracle),
+    q("q_llm_hq_sketch", docs(llm.Sketches.hqSketchOf), llm.Sketches.hqSketchOracle),
     q("q_llm_hq_estimate", llm.Sketches.hqEstimate(_, _), llm.Sketches.hqEstimateOracle),
-    q("q_llm_kmv_estimate", llm.Sketches.kmvEstimate(_, _), llm.Sketches.kmvEstimateOracle),
-    q("q_llm_kmv_overlap", llm.Sketches.kmvOverlap(_, _), llm.Sketches.kmvOverlapOracle),
+    q("q_llm_kmv_estimate", docs(llm.Sketches.kmvEstimateOf), llm.Sketches.kmvEstimateOracle),
+    q("q_llm_kmv_overlap", docs(llm.Sketches.kmvOverlapOf), llm.Sketches.kmvOverlapOracle),
     // DSIR importance scores over hashed unigram features (r9)
-    q("q_llm_dsir_score", llm.Dsir.dsirScore(_, _), llm.Dsir.dsirScoreOracle),
+    q("q_llm_dsir_score", docs(llm.Dsir.dsirScoreOf), llm.Dsir.dsirScoreOracle),
     // positional phrase search via the anchor device (r9)
-    q("q_llm_phrase_search", llm.Index.phraseSearch(_, _), llm.Index.phraseSearchOracle),
+    q("q_llm_phrase_search", docs(llm.Index.phraseSearchOf), llm.Index.phraseSearchOracle),
     // deterministic weighted sampling + dedup cluster histogram (r9)
-    q("q_llm_weighted_sample", llm.Sampling.weightedSample(_, _),
+    q("q_llm_weighted_sample", docs(llm.Sampling.weightedSampleOf),
       llm.Sampling.weightedSampleOracle),
     q("q_llm_cluster_hist", llm.Dedup.clusterHist(_, _), llm.Dedup.clusterHistOracle),
     // per-group HLL UV estimate — the sketch form of the reference's
     // per-window HashSet distinct counts (r9)
-    q("q_ads_uv_sketch", llm.Sketches.uvSketch(_, _), llm.Sketches.uvSketchOracle),
+    q("q_ads_uv_sketch", events(llm.Sketches.uvSketchOf), llm.Sketches.uvSketchOracle),
     // triangle count via degree-ordered orientation (r9)
     q("q_ads_triangles", ads.ItemRank.triangles(_, _), ads.ItemRank.trianglesOracle),
     // dup-rate-vs-threshold sweep over verified near-dup pairs (r9)
@@ -346,14 +357,14 @@ object SparkEntry {
     q("q_src_orc_roundtrip", sources.OrcEvents.orcRoundtrip(_, _),
       sources.OrcEvents.orcRoundtripOracle),
     // date-partitioned lake: directory-level partition pruning (r16)
-    q("q_src_lake_prune", sources.PartitionedLake.pruneParquet(_, _),
+    q("q_src_lake_prune", sources.PartitionedLake.pruneQuery(_, _, "parquet"),
       sources.PartitionedLake.pruneOracle),
-    q("q_src_lake_prune_orc", sources.PartitionedLake.pruneOrc(_, _),
+    q("q_src_lake_prune_orc", sources.PartitionedLake.pruneQuery(_, _, "orc"),
       sources.PartitionedLake.pruneOracle),
     // join-derived (DYNAMIC) partition pruning through a dim (r17)
     q("q_src_lake_dpp", sources.PartitionedLake.dppParquet(_, _),
       sources.PartitionedLake.dppOracle),
-    q("q_src_lake_dpp_orc", sources.PartitionedLake.dppOrc(_, _),
+    q("q_src_lake_dpp_orc", sources.PartitionedLake.dppQuery(_, _, "orc"),
       sources.PartitionedLake.dppOracle),
     q("q_src_lake_star", sources.PartitionedLake.starQuery(_, _),
       sources.PartitionedLake.starOracle),
@@ -363,27 +374,28 @@ object SparkEntry {
       operators.RangeJoin.bandOverlapOracle),
     // the 2-D salt-grid streaming path under the SAME oracle: engine-
     // AND grid-independence in one cross-engine hash (r20)
-    q("q_range_band_overlap_stream_salted", operators.RangeJoin.bandOverlapStreamSaltedQuery(_, _),
+    q("q_range_band_overlap_stream_salted",
+      operators.RangeJoin.bandOverlapStreamQuery(_, _, salt = 2),
       operators.RangeJoin.bandOverlapOracle),
     q("q_range_price_band_salted", operators.RangeJoin.priceBandSaltedQuery(_, _),
       operators.RangeJoin.priceBandOracle),
     q("q_range_band_overlap_salted", operators.RangeJoin.bandOverlapSaltedQuery(_, _),
       operators.RangeJoin.bandOverlapOracle),
     // Heaps-law vocabulary growth curve (r9)
-    q("q_llm_vocab_growth", llm.VocabCoverage.vocabGrowth(_, _),
+    q("q_llm_vocab_growth", docs(llm.VocabCoverage.vocabGrowthOf),
       llm.VocabCoverage.vocabGrowthOracle),
     // word-break DP (typed partition loop; HOF form is interpreted) (r9)
-    q("q_llm_word_break", llm.Segmentation.wordBreak(_, _), llm.Segmentation.wordBreakOracle),
+    q("q_llm_word_break", docs(llm.Segmentation.wordBreakOf), llm.Segmentation.wordBreakOracle),
     // asymmetric containment (near-subsumption) pairs (r9)
-    q("q_llm_containment", llm.Dedup.containment(_, _), llm.Dedup.containmentOracle),
+    q("q_llm_containment", docs(llm.Dedup.containmentOf), llm.Dedup.containmentOracle),
     // schema-evolution read: mergeSchema + generation partition (r9)
     q("q_src_schema_evolution", sources.SchemaEvolution.schemaEvolution(_, _),
       sources.SchemaEvolution.schemaEvolutionOracle),
     // content-defined chunking: rolling-hash boundaries + chunk dedup (r9)
-    q("q_llm_cdc_chunks", llm.Segmentation.cdcChunks(_, _), llm.Segmentation.cdcChunksOracle),
-    q("q_llm_cdc_dedup", llm.Segmentation.cdcDedup(_, _), llm.Segmentation.cdcDedupOracle),
+    q("q_llm_cdc_chunks", docs(llm.Segmentation.cdcChunksOf), llm.Segmentation.cdcChunksOracle),
+    q("q_llm_cdc_dedup", docs(llm.Segmentation.cdcDedupOf), llm.Segmentation.cdcDedupOracle),
     // sorted-neighborhood blocking (third candidate family) (r9)
-    q("q_llm_sorted_neighbor", llm.Dedup.sortedNeighborDups(_, _),
+    q("q_llm_sorted_neighbor", docs(llm.Dedup.sortedNeighborDupsOf),
       llm.Dedup.sortedNeighborDupsOracle),
     // join-key skew diagnostic feeding the salting decision (r9)
     q("q_ads_skew_report", func.Skew.skewReport(_, _), func.Skew.skewReportOracle),
@@ -392,9 +404,9 @@ object SparkEntry {
     // perceptual-hash near-dup over binary payloads (r9)
     q("q_llm_media_phash", llm.Multimodal.phashDups(_, _), llm.Multimodal.phashDupsOracle),
     // language-ID confusion matrix: the classifier eval harness (r9)
-    q("q_llm_langid_eval", llm.TextAnalysis.langIdEval(_, _), llm.TextAnalysis.langIdEvalOracle),
+    q("q_llm_langid_eval", docs(llm.TextAnalysis.langIdEvalOf), llm.TextAnalysis.langIdEvalOracle),
     // model-vs-heuristic quality agreement (filter-swap diagnostic) (r9)
-    q("q_llm_quality_agreement", llm.QualityModel.qualityAgreement(_, _),
+    q("q_llm_quality_agreement", docs(llm.QualityModel.qualityAgreementOf),
       llm.QualityModel.qualityAgreementOracle),
     // CUBE grouping sets: the column-marginal rollup cannot express (r9)
     q("q_ads_gmv_cube", ads.Rollups.gmvCube(_, _), ads.Rollups.gmvCubeOracle),

@@ -4,10 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Readers for the driver-generated test tables (TESTDATA.md).
   *
-  * Every operator in this engine is a pure `(SparkSession, sfDir) =>
-  * DataFrame` function; these loaders are the only place paths are
-  * built. Reads are plain parquet scans so Catalyst predicate pushdown
-  * and column pruning apply end-to-end (check `PushedFilters` /
+  * Every board query ([[SparkEntry]]) is a pure `(SparkSession, sfDir)
+  * => DataFrame` function; the operators behind them are frame
+  * transforms, and these loaders are the only place paths are built.
+  * Reads are plain parquet scans so Catalyst predicate pushdown and
+  * column pruning apply end-to-end (check `PushedFilters` /
   * `ReadSchema` in `.explain("formatted")`).
   *
   * Reference mapping (FIXTURES.md §B): `events` stands in for the

@@ -31,11 +31,8 @@ object EventFlows {
     * exchange); each stage's input shrinks to users that survived the
     * previous stage — the per-stage frames are filtered scans, never
     * the full log re-shuffled on a new key. No windows, no
-    * collect-per-user lists: state per user is three longs. */
-  def funnel(spark: SparkSession, dir: String): DataFrame =
-    funnelOf(Tables.events(spark, dir))
-
-  /** [[funnel]] over any (user_id, event_type, ts) frame. */
+    * collect-per-user lists: state per user is three longs. Input: any
+    * (user_id, event_type, ts) frame. */
   def funnelOf(events: DataFrame): DataFrame = {
     val ev = events.select(col("user_id"), col("event_type"),
       unix_millis(col("ts")).as("ms"))
@@ -90,11 +87,8 @@ object EventFlows {
     * and activity join share the `user_id` partitioning, the final
     * count groups by (cohort, offset) — tiny. The day-0 denominator
     * comes from a window over the already-aggregated counts (cohort
-    * cardinality, not event cardinality). */
-  def retention(spark: SparkSession, dir: String): DataFrame =
-    retentionOf(Tables.events(spark, dir))
-
-  /** [[retention]] over any (user_id, ts) frame. */
+    * cardinality, not event cardinality). Input: any (user_id, ts)
+    * frame. */
   def retentionOf(events: DataFrame): DataFrame = {
     val act = events
       .select(col("user_id"), expr("unix_millis(ts) DIV 86400000").as("day"))
@@ -129,11 +123,8 @@ object EventFlows {
     * (user_id, session_idx) — a superset of the partition key — so
     * EnsureRequirements reuses the exchange instead of re-shuffling
     * (hash(user_id) already co-locates every (user_id, session_idx)
-    * group). State per task is one sort run, spillable. */
-  def sessionize(spark: SparkSession, dir: String): DataFrame =
-    sessionizeOf(Tables.events(spark, dir))
-
-  /** [[sessionize]] over any (user_id, event_id, ts) frame. */
+    * group). State per task is one sort run, spillable. Input: any
+    * (user_id, event_id, ts) frame. */
   def sessionizeOf(events: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("ms", "event_id")
     events
@@ -186,11 +177,8 @@ object EventFlows {
     * three distinct counts plain sums/counts at the second level —
     * three conditional countDistincts in one aggregate would go
     * through Catalyst's 3-way expand (3× the shuffle rows, the
-    * documented [[graft.dws.ProductStats]] hazard). */
-  def activeUsers(spark: SparkSession, dir: String): DataFrame =
-    activeUsersOf(Tables.events(spark, dir))
-
-  /** [[activeUsers]] over any (user_id, ts) frame. */
+    * documented [[graft.dws.ProductStats]] hazard). Input: any (user_id,
+    * ts) frame. */
   def activeUsersOf(events: DataFrame): DataFrame = {
     val act = events
       .select(col("user_id"), expr("unix_millis(ts) DIV 86400000").as("day"))
@@ -247,11 +235,8 @@ object EventFlows {
     * window is keyed by event_type over that bounded frame. BIGINT
     * envelope: (c·n)² must stay < 2⁶³ — safe while c·n ≲ 3·10⁹
     * (e.g. 10⁶-event slots over a 3000-slot calendar); past that the
-    * two factors move to DECIMAL(38,0), same shape. */
-  def hourlyAnomaly(spark: SparkSession, dir: String): DataFrame =
-    hourlyAnomalyOf(Tables.events(spark, dir))
-
-  /** [[hourlyAnomaly]] over any (event_type, ts) frame. */
+    * two factors move to DECIMAL(38,0), same shape. Input: any
+    * (event_type, ts) frame. */
   def hourlyAnomalyOf(events: DataFrame): DataFrame = {
     val hourly = events
       .groupBy(col("event_type"),
@@ -300,12 +285,8 @@ object EventFlows {
     * Scale shape (100 TB): ONE user_id-keyed window pass over the
     * log (same exchange family as funnel/sessionize — AQE reuses the
     * partitioning when composed), then a 5-row aggregate. Purchase
-    * values carry in integer cents. */
-  def attribution(spark: SparkSession, dir: String): DataFrame =
-    attributionOf(Tables.events(spark, dir))
-
-  /** [[attribution]] over any (user_id, event_type, ts, event_id,
-    * value) frame. */
+    * values carry in integer cents. Input: any (user_id, event_type, ts,
+    * event_id, value) frame. */
   def attributionOf(events: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       .rowsBetween(Window.unboundedPreceding, -1)

@@ -27,11 +27,8 @@ object EventPaths {
     * the window operator — no per-user collect), then the pair count
     * is a two-level partial aggregate on the (prev, next) key space,
     * which is |event_type|² — tiny. The ppm denominator is a window
-    * over that tiny aggregate, not over the log. */
-  def transitions(spark: SparkSession, dir: String): DataFrame =
-    transitionsOf(Tables.events(spark, dir))
-
-  /** [[transitions]] over any (user_id, event_id, event_type, ts) frame. */
+    * over that tiny aggregate, not over the log. Input: any (user_id,
+    * event_id, event_type, ts) frame. */
   def transitionsOf(events: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy("ms", "event_id")
     val pairs = events
@@ -73,11 +70,7 @@ object EventPaths {
     * (one partitioning serves both and their join — AQE reuses the
     * exchange); the histogram groups by bucket (bounded by the time
     * horizon, not the log), and the cumulative window runs over that
-    * tiny frame. */
-  def timeToConvert(spark: SparkSession, dir: String): DataFrame =
-    timeToConvertOf(Tables.events(spark, dir))
-
-  /** [[timeToConvert]] over any (user_id, event_type, ts) frame. */
+    * tiny frame. Input: any (user_id, event_type, ts) frame. */
   def timeToConvertOf(events: DataFrame): DataFrame = {
     val ev = events.select(col("user_id"), col("event_type"),
       unix_millis(col("ts")).as("ms"))

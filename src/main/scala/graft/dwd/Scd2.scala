@@ -16,13 +16,13 @@ import graft.func.Exprs
   * of the user dimension.
   *
   * Three operators:
-  *  - [[scd2]]: the interval table — consecutive runs of the same
+  *  - [[scd2Of]]: the interval table — consecutive runs of the same
   *    state collapse to one row with [valid_from, valid_to) bounds, a
   *    version number, and an is_current flag.
-  *  - [[pit]]: the point-in-time join — every purchase event looks up
+  *  - [[pitOf]]: the point-in-time join — every purchase event looks up
   *    the state version valid at its timestamp (the query SCD2 exists
   *    to serve).
-  *  - [[Scd2.snapshotDiff]]: the snapshot-vs-snapshot CDC diff that
+  *  - [[Scd2.snapshotDiffOf]]: the snapshot-vs-snapshot CDC diff that
   *    produces a change feed from two full extracts (how CDC is
   *    bootstrapped when the source has no binlog).
   *
@@ -40,11 +40,8 @@ object Scd2 {
     * exchange + ONE sort serve the whole operator (the filter between
     * them preserves partitioning and order; exchange count is
     * plan-asserted in the spec). Output is bounded by the number of
-    * state CHANGES, not events — the frame only ever shrinks. */
-  def scd2(spark: SparkSession, dir: String): DataFrame =
-    scd2Of(Tables.events(spark, dir))
-
-  /** [[scd2]] over any (user_id, event_type, ts, event_id) frame. */
+    * state CHANGES, not events — the frame only ever shrinks. Input: any
+    * (user_id, event_type, ts, event_id) frame. */
   def scd2Of(events: DataFrame): DataFrame = {
     val ev = events.select(col("user_id"), col("event_type").as("state"),
       Exprs.epochMs(col("ts")).as("ms"), col("event_id"))
@@ -83,11 +80,8 @@ object Scd2 {
     * Scale shape: delegates to [[graft.operators.AsOf.asOf]] — union +
     * one running-last window, ONE hash shuffle on `user_id`,
     * intermediate size |purchases| + |state versions| (never the
-    * |purchases| × |versions| range-join blow-up). */
-  def pit(spark: SparkSession, dir: String): DataFrame =
-    pitOf(Tables.events(spark, dir))
-
-  /** [[pit]] over any events frame. */
+    * |purchases| × |versions| range-join blow-up). Input: any events
+    * frame. */
   def pitOf(events: DataFrame): DataFrame = {
     val states = scd2Of(events.filter(col("event_type") =!= "purchase"))
       // one version per (user, valid_from_ms): keep the latest version
@@ -147,11 +141,8 @@ object Scd2 {
     * key — both sides are scans of the same source here, and at 100 TB
     * two real extracts bucketed on the key
     * ([[graft.sinks.Sinks.bucketedJoinQuery]] pattern) join with no
-    * exchange at all. The change classification is a projection. */
-  def snapshotDiff(spark: SparkSession, dir: String): DataFrame =
-    snapshotDiffOf(Tables.orders(spark, dir))
-
-  /** [[snapshotDiff]] over any orders frame. */
+    * exchange at all. The change classification is a projection. Input:
+    * any orders frame. */
   def snapshotDiffOf(orders: DataFrame): DataFrame = {
     val base = orders.select(col("o_orderkey"),
       Exprs.cents(col("o_totalprice")).as("cents"))

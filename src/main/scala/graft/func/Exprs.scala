@@ -60,16 +60,6 @@ object Exprs {
     when(den === 0, lit(0.0))
       .otherwise(floor(num.cast("double") * scale / den.cast("double")) / scale)
 
-  /** Deterministic md5 bucket: integer value of the first `nibbles`
-    * hex nibbles of md5(salt ++ id), mod `mod` — the Spark half of the
-    * hash trick [[OracleSql.hexNibbles]] states for DuckDB; keep the
-    * two in sync. ONE definition for every operator that buckets by
-    * md5 (hash splits, shard keys, sampling verdicts) so a nibble-
-    * width or salt change cannot drift per call site. Exact for
-    * nibbles ≤ 15 (60 bits < a BIGINT). Modulo bias is (2^(4·nibbles)
-    * mod `mod`) / 2^(4·nibbles) relative — pick nibbles so that is
-    * negligible for the use (4 → ~10⁻³ for mod 100; 10 → ~10⁻⁶ for
-    * mod 10⁶). */
   /** Exact floor-division of non-negative decimals. Spark's `div`
     * only accepts integral types, and plain decimal `/` rounds to the
     * result scale — but (a - a % b) is exactly divisible by b, so the
@@ -79,10 +69,25 @@ object Exprs {
   def decimalFloorDiv(a: Column, b: Column): Column =
     ((a - a % b) / b).cast("decimal(38,0)")
 
+  /** Integer value of the first `n` hex nibbles of md5(`key`) — the
+    * Spark half of the hash trick [[OracleSql.hexNibbles]] states for
+    * DuckDB; keep the two in sync. ONE decode for every operator that
+    * hashes by md5 (hash splits, shard keys, sampling verdicts,
+    * sketch cells, minhash values) so a nibble width cannot drift per
+    * call site. Exact for n ≤ 15 (60 bits < a BIGINT). */
+  def md5Nibbles(key: Column, n: Int): Column = {
+    require(n >= 1 && n <= 15, s"nibbles $n not in 1..15")
+    conv(substring(md5(key), 1, n), 16, 10).cast("long")
+  }
+
+  /** Deterministic md5 bucket: [[md5Nibbles]] of md5(salt ++ id),
+    * mod `mod`, so a salt change cannot drift per call site either.
+    * Modulo bias is (2^(4·nibbles) mod `mod`) / 2^(4·nibbles) relative
+    * — pick nibbles so that is negligible for the use (4 → ~10⁻³ for
+    * mod 100; 10 → ~10⁻⁶ for mod 10⁶). */
   def md5Bucket(id: Column, salt: String, nibbles: Int, mod: Long): Column = {
-    require(nibbles >= 1 && nibbles <= 15, s"nibbles $nibbles not in 1..15")
     val key = if (salt.isEmpty) id.cast("string")
       else concat(lit(salt), id.cast("string"))
-    conv(substring(md5(key), 1, nibbles), 16, 10).cast("long") % mod
+    md5Nibbles(key, nibbles) % mod
   }
 }

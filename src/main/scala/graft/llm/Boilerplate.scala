@@ -47,10 +47,7 @@ object Boilerplate {
     * end of the RefinedWeb setting. */
   val MinDf = 2L
 
-  def boilerplate(spark: SparkSession, dir: String): DataFrame =
-    boilerplateOf(Tables.documents(spark, dir))
-
-  /** [[boilerplate]] over any (doc_id, text) frame — public for tests.
+  /** Boilerplate removal over any (doc_id, text) frame.
     * Output per doc: total block count, blocks removed as boilerplate,
     * and tokens surviving the removal. */
   def boilerplateOf(docs: DataFrame): DataFrame = {

@@ -42,10 +42,7 @@ object Colloc {
   /** Ranked pairs returned. */
   val TopC = 30
 
-  def pmi(spark: SparkSession, dir: String): DataFrame =
-    pmiOf(Tables.documents(spark, dir))
-
-  /** [[pmi]] over any (doc_id, text) frame — public for tests. */
+  /** PMI-ranked collocations over any (doc_id, text) frame. */
   def pmiOf(docs: DataFrame): DataFrame = {
     // LAZY localCheckpoint: toks feeds the unigram table, the bigram
     // table and (before r20) the pair total — without it the
@@ -115,7 +112,7 @@ object Colloc {
 
   // ---- per-language bigram heavy hitters ---------------------------
 
-  /** Ranked bigrams kept per language by [[topNgrams]]. */
+  /** Ranked bigrams kept per language by [[topNgramsOf]]. */
   val TopNgramsPerLang = 5
 
   /** Per-language top bigrams by raw frequency — the heavy-hitter
@@ -128,11 +125,7 @@ object Colloc {
     * on (lang, w1, w2); the rank-≤-k filter plans as WindowGroupLimit
     * (plan-asserted), so each partition keeps only k candidates per
     * language before the window exchange — the full bigram-type table
-    * is never sorted globally. */
-  def topNgrams(spark: SparkSession, dir: String): DataFrame =
-    topNgramsOf(Tables.documents(spark, dir))
-
-  /** [[topNgrams]] over any (lang, text) frame. */
+    * is never sorted globally. Input: any (lang, text) frame. */
   def topNgramsOf(docs: DataFrame): DataFrame = {
     val toks = docs.select(col("lang"), Tokenizer.tokens(col("text")).as("t"))
     val pairs = toks.filter(size(col("t")) >= 2)

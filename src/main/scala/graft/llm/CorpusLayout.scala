@@ -18,7 +18,7 @@ object CorpusLayout {
 
   // ---- deterministic corpus shuffle --------------------------------
 
-  /** Shard count for [[corpusShuffle]]. Test-scale 16; at 100 TB this
+  /** Shard count for [[corpusShuffleOf]]. Test-scale 16; at 100 TB this
     * is THE parallelism knob: one shard = one independently-sorted
     * training file family = one reducer's sort buffer. The shard key
     * is a pure function of doc_id, so growing the count re-buckets
@@ -40,15 +40,11 @@ object CorpusLayout {
     * independently inside its reducer — there is no global total
     * order, so no single-partition bottleneck; [[ShuffleShards]] is
     * sized to the cluster. This is the Spark-native answer to "shuffle
-    * 100 TB before training": sort-within-bucket, never sort-all. */
-  def corpusShuffle(spark: SparkSession, dir: String): DataFrame =
-    corpusShuffleOf(Tables.documents(spark, dir))
-
-  /** [[corpusShuffle]] over any (doc_id, lang) frame — public for
-    * tests. `skey` (the full md5) and `shard` (its first 4 nibbles
-    * mod [[ShuffleShards]], via the shared [[Exprs.md5Bucket]]) are
-    * derived from the SAME salted hash, so the oracle states both
-    * from one md5() call. */
+    * 100 TB before training": sort-within-bucket, never sort-all. Input:
+    * any (doc_id, lang) frame. `skey` (the full md5) and `shard` (its
+    * first 4 nibbles mod [[ShuffleShards]], via the shared
+    * [[Exprs.md5Bucket]]) are derived from the SAME salted hash, so the
+    * oracle states both from one md5() call. */
   def corpusShuffleOf(docs: DataFrame): DataFrame = {
     val keyed = docs.select(col("doc_id"), col("lang"),
       md5(concat(lit(ShuffleSalt), col("doc_id").cast("string"))).as("skey"),
@@ -84,13 +80,9 @@ object CorpusLayout {
     * Scale shape: tokenize-and-count projection, then ONE map-side-
     * combinable aggregate over a (langs × ~12)-bounded key space —
     * shuffle volume is rows-per-map-task, the cheapest full-corpus
-    * pass there is. */
-  def lengthHist(spark: SparkSession, dir: String): DataFrame =
-    lengthHistOf(Tables.documents(spark, dir))
-
-  /** [[lengthHist]] over any (lang, text) frame — public for tests.
-    * Null text counts as zero tokens (magnitude 1 bucket, with the
-    * 0-9 docs), matching the oracle's coalesce. */
+    * pass there is. Input: any (lang, text) frame. Null text counts as
+    * zero tokens (magnitude 1 bucket, with the 0-9 docs), matching the
+    * oracle's coalesce. */
   def lengthHistOf(docs: DataFrame): DataFrame =
     docs
       .select(col("lang"),
@@ -113,7 +105,7 @@ object CorpusLayout {
 
   // ---- pack utilization report -------------------------------------
 
-  /** Per-(lang, shard) utilization of [[CorpusOps.packingSharded]]'s
+  /** Per-(lang, shard) utilization of [[CorpusOps.packingShardedOf]]'s
     * next-fit layout: how much of the allocated pack capacity actually
     * carries tokens — the number a pipeline owner watches to decide
     * whether the packer needs a smarter (best-fit / chunk-first)
@@ -132,7 +124,7 @@ object CorpusLayout {
     * exchange — zero additional shuffles on top of [[CorpusOps
     * .packingSharded]]. */
   def packUtil(spark: SparkSession, dir: String): DataFrame =
-    packUtilOf(CorpusOps.packingSharded(spark, dir))
+    packUtilOf(CorpusOps.packingShardedOf(Tables.documents(spark, dir)))
 
   /** [[packUtil]] over any packed (lang, shard, n_tokens, pack_id)
     * frame — public for tests. */
@@ -164,7 +156,7 @@ object CorpusLayout {
 
   // ---- exact token-budget allocation (largest remainder) -----------
 
-  /** Global sample budget [[splitAlloc]] distributes, in tokens. */
+  /** Global sample budget [[splitAllocOf]] distributes, in tokens. */
   val AllocBudget = 1000000L
 
   /** Largest-remainder (Hamilton) allocation of a fixed token budget
@@ -173,7 +165,7 @@ object CorpusLayout {
     * fractional remainders (ties to the lexically-smaller lang). The
     * result sums to the budget EXACTLY — the property proportional
     * rounding cannot give and a mixture sampler needs before it draws
-    * per-language quotas ([[CorpusOps.mixtureSample]] takes rates;
+    * per-language quotas ([[CorpusOps.mixtureSampleOf]] takes rates;
     * this takes a budget).
     *
     * All arithmetic is DECIMAL(38,0)/HUGEINT — N·mᵢ overflows BIGINT
@@ -182,11 +174,8 @@ object CorpusLayout {
     * Scale shape: ONE map-side-combined aggregate collapses the corpus
     * to a languages-sized frame; the two unpartitioned windows (total
     * mass, remainder rank) run over those few rows — a driver-sized
-    * formality, same as [[Colloc.pmiOf]]'s rank. */
-  def splitAlloc(spark: SparkSession, dir: String): DataFrame =
-    splitAllocOf(Tables.documents(spark, dir))
-
-  /** [[splitAlloc]] over any (lang, text) frame. */
+    * formality, same as [[Colloc.pmiOf]]'s rank. Input: any (lang, text)
+    * frame. */
   def splitAllocOf(docs: DataFrame): DataFrame = {
     val perLang = docs
       .select(col("lang"), size(Tokenizer.tokens(col("text"))).cast("long").as("n"))
@@ -238,7 +227,7 @@ object CorpusLayout {
 
   // ---- curriculum ordering -----------------------------------------
 
-  /** Difficulty bands for [[curriculum]]. */
+  /** Difficulty bands for [[curriculumOf]]. */
   val Bands = 5L
 
   /** Curriculum ordering: every document gets its global difficulty
@@ -255,11 +244,7 @@ object CorpusLayout {
     * partitioning on `n_chars`. The offset table rides a broadcast
     * join. This is the two-pass distributed-rank device a single
     * `row_number() OVER (ORDER BY …)` (single-partition window)
-    * cannot survive at scale. */
-  def curriculum(spark: SparkSession, dir: String): DataFrame =
-    curriculumOf(Tables.documents(spark, dir))
-
-  /** [[curriculum]] over any (doc_id, n_chars) frame. */
+    * cannot survive at scale. Input: any (doc_id, n_chars) frame. */
   def curriculumOf(docs: DataFrame): DataFrame = {
     val d = docs.select(col("doc_id"), col("n_chars"))
     val counts = d.groupBy("n_chars").agg(count(lit(1)).as("cnt"))
@@ -289,7 +274,7 @@ object CorpusLayout {
 
   // ---- token-budget selection --------------------------------------
 
-  /** Global token budget for [[budgetSelect]] — the compute envelope
+  /** Global token budget for [[budgetSelectOf]] — the compute envelope
     * a training run fixes first (tokens, not documents). */
   val TokenBudget = 10000L
 
@@ -312,11 +297,7 @@ object CorpusLayout {
     * bounded frame, then each doc's running total is offset + an
     * intra-score window KEYED on quality_ppm. The same
     * distributed-rank device as [[curriculumOf]], extended from
-    * rank to prefix-sum. */
-  def budgetSelect(spark: SparkSession, dir: String): DataFrame =
-    budgetSelectOf(Tables.documents(spark, dir))
-
-  /** [[budgetSelect]] over any (doc_id, text) frame. */
+    * rank to prefix-sum. Input: any (doc_id, text) frame. */
   def budgetSelectOf(docs: DataFrame): DataFrame = {
     // LAZY localCheckpoint: `q` feeds both the per-score totals and
     // the final offset join (PLANS.md rule #17 — one scoring pass)

@@ -23,7 +23,7 @@ object CorpusOps {
   // ---- repetition signals -----------------------------------------
 
   /** Smallest / largest n for the duplicated-n-gram CHARACTER
-    * fractions ([[repetition]]'s dup5..dup10 columns). */
+    * fractions ([[repetitionOf]]'s dup5..dup10 columns). */
   val DupCharMinN = 5
   val DupCharMaxN = 10
 
@@ -49,11 +49,7 @@ object CorpusOps {
     * two-level-aggregate form — zero shuffle, and no interpreted
     * higher-order functions on the hot path. Linear in corpus size
     * (9 gram widths ⇒ 9 linear sweeps per doc), embarrassingly
-    * parallel at any scale. */
-  def repetition(spark: SparkSession, dir: String): DataFrame =
-    repetitionOf(Tables.documents(spark, dir))
-
-  /** [[repetition]] over any (doc_id, text) frame — public for tests. */
+    * parallel at any scale. Input: any (doc_id, text) frame. */
   def repetitionOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     docs.select(col("doc_id"), col("text")).as[(Long, String)]
@@ -186,7 +182,7 @@ object CorpusOps {
 
   // ---- quality filter funnel --------------------------------------
 
-  /** [[filterFunnel]] thresholds — the C4/Gopher-style rule set
+  /** [[filterFunnelOf]] thresholds — the C4/Gopher-style rule set
     * (Raffel et al. 2020 §2.2, Rae et al. 2021 §A1.1), tuned to the
     * corpus envelope: token count in [25, 90], ≥ 2 stopword hits,
     * top-bigram and duplicated-bigram fractions ≤ 10 %, and language-ID
@@ -202,7 +198,7 @@ object CorpusOps {
     * (counted independently, so a rule's bite is visible even when
     * another rule also fires), how many pass every rule, and the
     * surviving token volume. Composes the [[TextAnalysis]] length /
-    * stopword / language-ID signals with [[repetition]]'s bigram
+    * stopword / language-ID signals with [[repetitionOf]]'s bigram
     * fractions into one decision table — the artifact a mixture
     * designer reads next to [[corpusReport]].
     *
@@ -212,13 +208,8 @@ object CorpusOps {
     * map-side-combinable aggregate over bounded lang keys. The
     * equivalent Column-expression form would be three scans of
     * `documents` joined on doc_id — this is the fused plan a 100-TB
-    * run needs. */
-  def filterFunnel(spark: SparkSession, dir: String): DataFrame =
-    filterFunnelOf(Tables.documents(spark, dir))
-
-  /** [[filterFunnel]] over any (doc_id, lang, text) frame — public for
-    * tests and streaming parity (stateless per-doc flags + an
-    * aggregate). */
+    * run needs. Input: any (doc_id, lang, text) frame; streaming-safe
+    * (stateless per-doc flags + an aggregate). */
   def filterFunnelOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     val stopSet = TextAnalysis.Stopwords.toSet
@@ -412,7 +403,7 @@ object CorpusOps {
 
   // ---- deterministic mixture sampling -----------------------------
 
-  /** Per-language sampling rates (ppm) for [[mixtureSample]] — the
+  /** Per-language sampling rates (ppm) for [[mixtureSampleOf]] — the
     * data-mixing weight table a training run tunes (upsample
     * low-resource languages, downsample the dominant one). Literal
     * config here, the same role as [[graft.dwd.DbRouter.config]]. */
@@ -436,14 +427,10 @@ object CorpusOps {
     * by up to 1.3 %). The salt decouples these buckets from
     * [[hashSplit]]'s, so sampling is independent of split assignment.
     * Pure projection — zero shuffle, embarrassingly parallel at any
-    * scale. */
-  def mixtureSample(spark: SparkSession, dir: String): DataFrame =
-    mixtureSampleOf(Tables.documents(spark, dir))
-
-  /** [[mixtureSample]] over any (doc_id, lang) frame — public for
-    * tests, and streaming-safe (a stateless projection: the SAME body
-    * runs unchanged over a documents stream — ingest-time sampling —
-    * with parity asserted in StreamingSpec). */
+    * scale. Input: any (doc_id, lang) frame; streaming-safe (a
+    * stateless projection: the SAME body runs unchanged over a documents
+    * stream — ingest-time sampling — with parity asserted in
+    * StreamingSpec). */
   def mixtureSampleOf(docs: DataFrame): DataFrame = {
     val rate = MixRates.foldLeft(lit(MixDefaultPpm)) {
       case (rest, (l, r)) => when(col("lang") === l, r).otherwise(rest)
@@ -473,7 +460,7 @@ object CorpusOps {
        |FROM documents""".stripMargin
   }
 
-  /** (lang, source)-level rate overrides for [[mixtureSampleStratified]]
+  /** (lang, source)-level rate overrides for [[mixtureSampleStratifiedOf]]
     * — real mixing weights strata, not just languages (a books-like
     * source upsampled, a noisy crawl slice downsampled, within the
     * same language). Literal config, like [[MixRates]]. */
@@ -481,18 +468,14 @@ object CorpusOps {
     ("en", "src0") -> 150000L, ("en", "src1") -> 950000L,
     ("zh", "src2") -> 250000L, ("de", "src3") -> 990000L)
 
-  /** [[mixtureSample]] with a per-stratum rate cascade:
+  /** [[mixtureSampleOf]] with a per-stratum rate cascade:
     * (lang, source) override → lang rate → default. The SAME salted
     * bucket as the lang-only form, so a doc's verdict changes only
     * where its stratum's rate does — re-tuning weights never
     * re-rolls the dice (the reproducibility property a curation run
     * audits against). Still a pure projection: zero shuffle, verdicts
-    * independent of other docs, stable under corpus growth. */
-  def mixtureSampleStratified(spark: SparkSession, dir: String): DataFrame =
-    mixtureSampleStratifiedOf(Tables.documents(spark, dir))
-
-  /** [[mixtureSampleStratified]] over any (doc_id, lang, source) frame
-    * — public for tests. */
+    * independent of other docs, stable under corpus growth. Input: any
+    * (doc_id, lang, source) frame. */
   def mixtureSampleStratifiedOf(docs: DataFrame): DataFrame = {
     val langRate = MixRates.foldLeft(lit(MixDefaultPpm)) {
       case (rest, (l, r)) => when(col("lang") === l, r).otherwise(rest)
@@ -525,7 +508,7 @@ object CorpusOps {
 
   // ---- temperature-scaled mixture ---------------------------------
 
-  /** Mixing exponent α = 1/T for [[mixtureTemperature]], as thousandths
+  /** Mixing exponent α = 1/T for [[mixtureTemperatureOf]], as thousandths
     * (α = 0.5, i.e. T = 2 — the multilingual-pretraining standard:
     * target language mass ∝ n^α, upsampling low-resource languages;
     * Conneau & Lample 2019 §3.1, Xue et al. 2021 §3.2). α = 0.5 is
@@ -536,7 +519,7 @@ object CorpusOps {
     * guarantee. */
   val MixAlphaThousandths = 500L
 
-  /** [[mixtureSample]] with DATA-DRIVEN rates instead of a literal
+  /** [[mixtureSampleOf]] with DATA-DRIVEN rates instead of a literal
     * table: per-language token counts feed temperature sampling with
     * target mass ∝ tokens^α. Realizing that by per-doc keep/drop means
     * rate_l ∝ tokens_l^(α-1), normalized so the scarcest language
@@ -550,12 +533,8 @@ object CorpusOps {
     * the corpus scan, and a pure projection — the rate table is the
     * only coordination, and it is O(langs), not O(docs). Languages
     * with zero tokens have no defined target mass and are excluded
-    * (inner join), matching the oracle's HAVING. */
-  def mixtureTemperature(spark: SparkSession, dir: String): DataFrame =
-    mixtureTemperatureOf(Tables.documents(spark, dir))
-
-  /** [[mixtureTemperature]] over any (doc_id, lang, text) frame —
-    * public for tests. */
+    * (inner join), matching the oracle's HAVING. Input: any (doc_id,
+    * lang, text) frame. */
   def mixtureTemperatureOf(docs: DataFrame): DataFrame = {
     require(MixAlphaThousandths == 500L,
       "rate formula below is the α = 1/2 (sqrt) specialization")
@@ -694,21 +673,17 @@ object CorpusOps {
   /** Sliding-window chunking: each document's token sequence is cut
     * into [[ChunkSize]]-token windows starting every [[ChunkStride]]
     * tokens — the context-window layout for documents LONGER than the
-    * training sequence (the complement of [[packing]], which groups
+    * training sequence (the complement of [[packingOf]], which groups
     * documents shorter than it). Chunk count = 1 + ceil(max(n-size,0)
     * / stride), so every token lands in ≥ 1 chunk and consecutive
     * chunks overlap by size - stride tokens for continuity.
     *
     * Scale shape: one narrow projection + a bounded explode (≈
     * n/stride output rows per doc) — no shuffle, no state; the
-    * sequence/slice/array_join chain is all codegen'd built-ins. */
-  def chunk(spark: SparkSession, dir: String): DataFrame =
-    chunkOf(Tables.documents(spark, dir))
-
-  /** [[chunk]] over any (doc_id, text) frame — public for tests.
-    * `keep` names extra input columns carried through unchanged (e.g.
-    * `lang` for a downstream per-language layout) — passthrough, not a
-    * join, so composing stays shuffle-free. */
+    * sequence/slice/array_join chain is all codegen'd built-ins. Input:
+    * any (doc_id, text) frame. `keep` names extra input columns carried
+    * through unchanged (e.g. `lang` for a downstream per-language
+    * layout) — passthrough, not a join, so composing stays shuffle-free. */
   def chunkOf(docs: DataFrame, keep: Seq[String] = Nil): DataFrame = {
     val toks = graft.func.Tokenizer.tokens(col("text"))
     val kept = keep.map(col)
@@ -1112,16 +1087,12 @@ object CorpusOps {
     *
     * Scale note: the running sum is one window shuffle per `lang`
     * partition — a handful of languages means a handful of reducers,
-    * each serializing its language's whole corpus. [[packingSharded]]
+    * each serializing its language's whole corpus. [[packingShardedOf]]
     * is the 100-TB form: partition key (lang, shard), bounded
     * partitions, still deterministic. This sequential form stays as
     * the oracle-checked calibration path and the per-shard reference
-    * (property-tested equal shard-by-shard in CorpusOpsSpec). */
-  def packing(spark: SparkSession, dir: String): DataFrame =
-    packingOf(Tables.documents(spark, dir))
-
-  /** [[packing]] over any (doc_id, lang, text) frame — public for the
-    * shard-equivalence property test. */
+    * (property-tested equal shard-by-shard in CorpusOpsSpec). Input: any
+    * (doc_id, lang, text) frame. */
   def packingOf(docs: DataFrame): DataFrame = {
     val w = Window.partitionBy("lang").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1149,21 +1120,21 @@ object CorpusOps {
        |       CAST((cum_tokens - n_tokens) % $PackCapacity AS BIGINT) AS pack_offset
        |FROM c""".stripMargin
 
-  /** Shard count for [[packingSharded]]. Test-scale 8; at 100 TB this
+  /** Shard count for [[packingShardedOf]]. Test-scale 8; at 100 TB this
     * is sized so one (lang, shard) slice fits a reducer's spill budget
     * (the shard key is a pure function of doc_id, so growing the count
     * re-buckets deterministically — no layout state to migrate). */
   val PackShards = 8L
 
   /** Salt for the packing shard hash. Salted for the same reason as
-    * [[mixtureSample]]'s "mix:": the UNSALTED md5 prefix is what
+    * [[mixtureSampleOf]]'s "mix:": the UNSALTED md5 prefix is what
     * [[hashSplit]] reduces mod 100, and gcd(8, 100) = 4 means a given
     * split bucket could only ever land in 2 of 8 unsalted shards — a
     * hidden correlation if packing runs on a split-filtered corpus.
     * The salt makes shard assignment independent of split assignment. */
   val PackShardSalt = "shard:"
 
-  /** The 100-TB form of [[packing]]: the running token sum is keyed by
+  /** The 100-TB form of [[packingOf]]: the running token sum is keyed by
     * (lang, shard) where shard = md5-bucket of doc_id — the same
     * deterministic-hash trick as [[hashSplit]], so DuckDB can state
     * the identical window. Each shard is an independent pack stream
@@ -1171,18 +1142,14 @@ object CorpusOps {
     * wants, since a global pack numbering would chain every shard
     * behind a prefix-sum barrier for no training benefit — packs are
     * consumed as unordered files. Plan shape is unchanged from
-    * [[packing]] (one window shuffle + partition-local sort), but the
+    * [[packingOf]] (one window shuffle + partition-local sort), but the
     * partition count is langs × [[PackShards]] instead of langs, so no
     * reducer ever holds a whole language.
     *
     * Shard-local totals are property-tested against the sequential
-    * form: filtering [[packing]]'s input to one shard's docs yields
-    * exactly this operator's rows for that shard. */
-  def packingSharded(spark: SparkSession, dir: String): DataFrame =
-    packingShardedOf(Tables.documents(spark, dir))
-
-  /** [[packingSharded]] over any (doc_id, lang, text) frame — public
-    * for the shard-equivalence property test. */
+    * form: filtering [[packingOf]]'s input to one shard's docs yields
+    * exactly this operator's rows for that shard. Input: any (doc_id,
+    * lang, text) frame. */
   def packingShardedOf(docs: DataFrame): DataFrame =
     packingShardedTokens(docs.select(col("doc_id"), col("lang"),
       size(graft.func.Tokenizer.tokens(col("text"))).cast("long")
@@ -1226,7 +1193,7 @@ object CorpusOps {
 
   // ---- packed-sequence payloads -----------------------------------
 
-  /** The consumable artifact [[packingSharded]] only assigns: one row
+  /** The consumable artifact [[packingShardedOf]] only assigns: one row
     * per (lang, shard, pack_id) with the ordered concatenated token
     * payload and its token fill count — what a training loader
     * actually reads (the assignment alone is an index, not data; same
@@ -1238,19 +1205,15 @@ object CorpusOps {
     * straddles its pack boundary (next-fit) contributes its whole text
     * to the pack it STARTS in, so `fill_tokens` may exceed
     * [[PackCapacity]] on straddle packs — the loader's cursor, not a
-    * bug; the companion `pack_offset` column in [[packingSharded]]
+    * bug; the companion `pack_offset` column in [[packingShardedOf]]
     * locates the straddle.
     *
     * Scale shape: one extra hash shuffle on (lang, shard, pack_id)
     * after the packing window — keys are ~corpus_tokens/[[PackCapacity]]
     * packs, values bounded by a pack's worth of text (+ one straddling
     * doc), so no reducer hot-spots. The window itself is the
-    * [[packingSharded]] plan unchanged. */
-  def packPayload(spark: SparkSession, dir: String): DataFrame =
-    packPayloadOf(Tables.documents(spark, dir))
-
-  /** [[packPayload]] over any (doc_id, lang, text) frame — public for
-    * tests. */
+    * [[packingShardedOf]] plan unchanged. Input: any (doc_id, lang, text)
+    * frame. */
   def packPayloadOf(docs: DataFrame): DataFrame = {
     val toks = graft.func.Tokenizer.tokens(col("text"))
     val w = Window.partitionBy("lang", "shard").orderBy("doc_id")
@@ -1305,7 +1268,7 @@ object CorpusOps {
        |FROM c GROUP BY 1, 2, 3""".stripMargin
   }
 
-  /** The final hop of the curation pipeline: [[packPayload]] rows
+  /** The final hop of the curation pipeline: [[packPayloadOf]] rows
     * materialized as a consumable shard DIRECTORY — one parquet
     * partition per (lang, shard), the layout a training loader lists,
     * shuffles, and reads ([[graft.sinks.Sinks.writeRouted]]'s
@@ -1315,7 +1278,7 @@ object CorpusOps {
     * DURABLE state: a lost partition, a dropped pack, or a mangled
     * payload string all surface as a red manifest row.
     *
-    * Scale shape: the write adds no shuffle ([[packPayload]]'s
+    * Scale shape: the write adds no shuffle ([[packPayloadOf]]'s
     * aggregate already leaves rows grouped by pack key); the manifest
     * is one bounded-key aggregate over the read-back. Partition
     * values round-trip as directory NAMES, so both keys are re-cast
@@ -1331,7 +1294,7 @@ object CorpusOps {
     // deferred consumer — and a 32-bit hashCode key would reintroduce
     // exactly that bug for colliding dir strings
     val path = graft.func.TempDirs.cachedFor("graft_llm_shard_export", dir)
-    val packed = packPayload(spark, dir)
+    val packed = packPayloadOf(Tables.documents(spark, dir))
     packed.write.mode("overwrite")
       .partitionBy("lang", "shard").parquet(path)
     // explicit schema: an empty corpus leaves a footerless partitioned
@@ -1373,21 +1336,6 @@ object CorpusOps {
   /** Quantile points (percent) reported per language. */
   val QuantilePoints = Seq(25, 50, 75, 90)
 
-  /** Per-language discrete quantiles of the [[TextAnalysis]] quality
-    * score: the value at rank ceil(p·n/100) of the sorted scores —
-    * exact, integer, and identically defined in both engines (unlike
-    * continuous-interpolation percentiles, whose midpoint arithmetic
-    * is engine-specific). The calibration table a corpus-filtering
-    * pass reads its thresholds from.
-    *
-    * Scale note: rank-by-window is one shuffle per language partition
-    * and a partition-local sort — fine while every language fits an
-    * executor's spill budget; at 100 TB swap in approx_percentile
-    * (t-digest) behind the same output shape, as
-    * [[graft.dws.ProductStats.approx]] does for distinct counts. */
-  def qualityQuantiles(spark: SparkSession, dir: String): DataFrame =
-    qualityQuantilesOf(Tables.documents(spark, dir))
-
   /** (lang, doc_id, quality_ppm) with zero-token documents excluded —
     * the ONE definition of "scoreable corpus" every quality aggregate
     * below consumes (exact and approx quantiles, top-k). Zero-token
@@ -1408,8 +1356,20 @@ object CorpusOps {
       .select(col("lang"), col("doc_id"), col("quality_ppm"))
   }
 
-  /** [[qualityQuantiles]] over any (doc_id, text, lang) frame — public
-    * for tests. Scoreable-corpus contract: see [[scoredByLang]]. */
+  /** Per-language discrete quantiles of the [[TextAnalysis]] quality
+    * score: the value at rank ceil(p·n/100) of the sorted scores —
+    * exact, integer, and identically defined in both engines (unlike
+    * continuous-interpolation percentiles, whose midpoint arithmetic
+    * is engine-specific). The calibration table a corpus-filtering
+    * pass reads its thresholds from.
+    *
+    * Scale note: rank-by-window is one shuffle per language partition
+    * and a partition-local sort — fine while every language fits an
+    * executor's spill budget; at 100 TB swap in approx_percentile
+    * (t-digest) behind the same output shape, as
+    * [[graft.dws.ProductStats.approx]] does for distinct counts. Input:
+    * any (doc_id, text, lang) frame. Scoreable-corpus contract: see
+    * [[scoredByLang]]. */
   def qualityQuantilesOf(docs: DataFrame): DataFrame = {
     val ranked = scoredByLang(docs).select("lang", "quality_ppm")
       .withColumn("rn", row_number()
@@ -1422,29 +1382,25 @@ object CorpusOps {
       .agg(count(lit(1)).as("n_docs"), qs: _*)
   }
 
-  /** [[percentile_approx]] accuracy for [[qualityQuantilesApprox]] —
+  /** [[percentile_approx]] accuracy for [[qualityQuantilesApproxOf]] —
     * error bound is 1/accuracy of the rank range, so 10⁴ keeps the
     * reported value within 0.01 % of the true rank while the sketch
     * stays a few KB per language. */
   val ApproxAccuracy = 10000
 
-  /** The 100-TB form of [[qualityQuantiles]]: Spark's
+  /** The 100-TB form of [[qualityQuantilesOf]]: Spark's
     * `percentile_approx` (a mergeable rank sketch) behind the SAME
     * output shape — one map-side-combinable aggregate, no per-language
     * window, no partition-local sort, so a language's volume never
     * serializes through one reducer. percentile_approx's randomized
     * estimates are not oracle-comparable, so the BOARD slot for
     * distributed quantiles is the deterministic, hash-locked
-    * histogram sketch ([[graft.llm.Sketches.hqSketch]] pair); this
+    * histogram sketch ([[graft.llm.Sketches.hqSketchOf]] pair); this
     * form remains the library surface for callers who want Spark's
     * built-in KLL path, spec-bounded (rank error vs the exact form)
-    * rather than board-checked. */
-  def qualityQuantilesApprox(spark: SparkSession, dir: String): DataFrame =
-    qualityQuantilesApproxOf(Tables.documents(spark, dir))
-
-  /** [[qualityQuantilesApprox]] over any (doc_id, text, lang) frame —
-    * public for tests. Same scoreable-corpus front as the exact form
-    * BY CONSTRUCTION ([[scoredByLang]]). */
+    * rather than board-checked. Input: any (doc_id, text, lang) frame.
+    * Same scoreable-corpus front as the exact form BY CONSTRUCTION
+    * ([[scoredByLang]]). */
   def qualityQuantilesApproxOf(docs: DataFrame): DataFrame = {
     val qs = QuantilePoints.map(p =>
       percentile_approx(col("quality_ppm"), lit(p / 100.0),

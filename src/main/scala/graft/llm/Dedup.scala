@@ -117,7 +117,7 @@ object Dedup {
       |       count(*) OVER (PARTITION BY md5(text)) AS group_ct
       |FROM documents""".stripMargin
 
-  /** Shingle document-frequency ceiling for [[sourceOverlap]]: only
+  /** Shingle document-frequency ceiling for [[sourceOverlapOf]]: only
     * shingles in at most this many documents count as "rare" shared
     * content. Much tighter than the near-dup [[MaxDf]] on purpose — a
     * data card asking "which sources copy each other" must not count
@@ -134,12 +134,7 @@ object Dedup {
     * filter bounds the self-join fan-out per shingle to ≤ min(df,
     * |sources|)² rows, and the output is bounded by |sources|² — the
     * same rare-shingle trick that keeps [[CorpusOps.contamination]]
-    * join-safe at corpus scale. */
-  def sourceOverlap(spark: SparkSession, dir: String): DataFrame =
-    sourceOverlapOf(Tables.documents(spark, dir))
-
-  /** [[sourceOverlap]] over any (doc_id, source, text) frame — public
-    * for tests. */
+    * join-safe at corpus scale. Input: any (doc_id, source, text) frame. */
   def sourceOverlapOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     // typed shingle pass (the interpreted higher-order-function form
@@ -259,8 +254,7 @@ object Dedup {
     val exploded = shl
       .select(col("doc_id"), explode(col("shingles")).as("sh"))
       // one md5 per shingle; 12 hex chars = 48 bits, exact in a LONG
-      .withColumn("x",
-        expr("CAST(conv(substring(md5(sh), 1, 12), 16, 10) AS BIGINT)"))
+      .withColumn("x", graft.func.Exprs.md5Nibbles(col("sh"), 12))
     val aggs = (0 until K).map(i =>
       min((lit(hashA(i)) * col("x") + lit(hashB(i))) % lit(P)).as(s"h$i"))
     exploded.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
@@ -302,22 +296,18 @@ object Dedup {
     * exact shingle Jaccard (integer ppm), threshold 0.8. The shingle
     * pass and the per-doc signature aggregate are each materialized
     * once (lazy checkpoint) — the band self-join and both verify joins
-    * re-read them instead of re-tokenizing the corpus per branch. */
-  def lshDuplicates(spark: SparkSession, dir: String): DataFrame =
-    lshDuplicatesOf(Tables.documents(spark, dir))
-
-  /** [[lshDuplicates]] over any (doc_id, text) frame. `bands`×`rows`
-    * is the RECALL knob. The default [[Bands]]×[[R]] = 8×4 has
-    * band-hit probability 1−(1−J⁴)⁸ ≈ 0.990 at J = 0.81, which the
-    * round-10 scale rehearsal measured as 97/100k docs (0.097%)
-    * losing every band cut on an adversarial chain corpus. When
-    * recall at the 0.8 verify threshold matters, 16×2 over the same
-    * K = 32 signature raises the hit probability to 1−(1−J²)¹⁶ ≈
-    * 1−3e-8 at the same verify cost per emitted candidate (more
+    * re-read them instead of re-tokenizing the corpus per branch. Input:
+    * any (doc_id, text) frame. `bands`×`rows` is the RECALL knob. The
+    * default [[Bands]]×[[R]] = 8×4 has band-hit probability 1−(1−J⁴)⁸ ≈
+    * 0.990 at J = 0.81, which the round-10 scale rehearsal measured as
+    * 97/100k docs (0.097%) losing every band cut on an adversarial chain
+    * corpus. When recall at the 0.8 verify threshold matters, 16×2 over
+    * the same K = 32 signature raises the hit probability to 1−(1−J²)¹⁶
+    * ≈ 1−3e-8 at the same verify cost per emitted candidate (more
     * candidates, same exact Jaccard filter — precision is unchanged by
-    * construction). The board query stays on the default; the
-    * rehearsal re-runs the constructed-truth corpus at 16×2 and
-    * measures recall → 100% (PLANS.md §r11). */
+    * construction). The board query stays on the default; the rehearsal
+    * re-runs the constructed-truth corpus at 16×2 and measures recall →
+    * 100% (PLANS.md §r11). */
   def lshDuplicatesOf(docs: DataFrame,
                       bands: Int = Bands, rows: Int = R): DataFrame = {
     val shl = shingleSetsShared(docs)
@@ -331,38 +321,42 @@ object Dedup {
     jaccardVerify(cands, shl)
   }
 
-  /** [[lshDuplicates]] behind an EXACT-duplicate pre-collapse — the
-    * mass-duplication guard (r13, VERDICT r11 task 5). A corpus with
-    * a boilerplate cluster at fraction f puts C(f·n, 2) candidate
-    * pairs into ONE (band, bsig) bucket — a quadratic hot task no
-    * banding knob can split, because identical texts have identical
-    * signatures in EVERY band. Collapsing to one representative per
-    * distinct text first (hash-groupBy — embarrassingly parallel)
-    * removes the hot bucket by construction and shrinks the output
-    * contract from quadratic (all pairs inside the cluster) to
-    * linear. Near-dup semantics are EXACTLY preserved at the
-    * component level: members of an exact group share signatures
-    * with their representative, so rep-level pairs + exact groups
-    * reconstruct the same connected components and the same min-id
-    * keepers (asserted in DedupSpec, including under a 20%-mass
-    * boilerplate text). Production rule: ALWAYS exact-dedup
-    * before near-dup banding.
+  /** The exact-duplicate pre-collapse: one representative (min
+    * doc_id) per distinct non-null non-empty text. Hash-groupBy —
+    * embarrassingly parallel, no skew (the group KEY is the text; a
+    * mass-duplicated text is one group whose partial aggregates
+    * combine map-side).
+    *
+    * It is the mass-duplication guard (r13, VERDICT r11 task 5) that
+    * the board's `*_collapsed` queries put in front of
+    * [[lshDuplicatesOf]], [[simhashDuplicatesOf]], [[ngramJaccardOf]],
+    * [[containmentOf]] and [[ngramJaccardPrefixOf]]. A boilerplate
+    * cluster at fraction f puts C(f·n, 2) candidate pairs into ONE
+    * bucket — a quadratic hot task no banding knob can split, because
+    * identical texts have identical minhash signatures in EVERY band,
+    * the identical 32-bit simhash (so identical nibbles in every
+    * band), identical prefixes, and shingles that co-occur in f·n docs
+    * under [[MaxDf]]. Collapsing first removes the hot bucket by
+    * construction and shrinks the output contract from quadratic (all
+    * pairs inside the cluster) to linear. Near-dup semantics are
+    * EXACTLY preserved at the component level: members of an exact
+    * group share signatures with their representative, so rep-level
+    * pairs + exact groups reconstruct the same connected components
+    * and the same min-id keepers (asserted in DedupSpec, including
+    * under a 20%-mass boilerplate text). For the inverted-index
+    * families collapsing first also REPAIRS the candidates: document
+    * frequency is counted over distinct texts, so a genuinely rare
+    * shingle that boilerplate copies inflated past [[MaxDf]] (hiding
+    * its true near-dup pair) prunes correctly again. Production rule:
+    * ALWAYS exact-dedup before near-dup mining.
     *
     * NULL and empty texts are EXCLUDED from the collapse (and so from
-    * the exact-group edge set): the plain pipeline never pairs them
-    * (no shingles → no signature → no bands), so pooling them into
-    * one exact group would mark every null-text doc a duplicate of
-    * the min-id one — a component that exists nowhere in the plain
-    * pipeline's output. */
-  def lshDuplicatesCollapsed(spark: SparkSession, dir: String): DataFrame =
-    lshDuplicatesOf(collapsedDocs(Tables.documents(spark, dir)))
-
-  /** The exact-collapse device shared by every `*Collapsed` variant:
-    * one representative (min doc_id) per distinct non-null non-empty
-    * text. Hash-groupBy — embarrassingly parallel, no skew (the
-    * group KEY is the text; a mass-duplicated text is one group whose
-    * partial aggregates combine map-side). */
-  private[llm] def collapsedDocs(docs: DataFrame): DataFrame =
+    * the exact-group edge set): the plain pipelines never pair them
+    * (no shingles → no signature → no bands; zero-token docs are
+    * dropped before hashing), so pooling them into one exact group
+    * would mark every null-text doc a duplicate of the min-id one — a
+    * component that exists nowhere in the plain pipeline's output. */
+  private[graft] def collapsedDocs(docs: DataFrame): DataFrame =
     docs.filter(col("text").isNotNull && col("text") =!= "")
       .groupBy(col("text")).agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"), col("text"))
@@ -400,7 +394,7 @@ object Dedup {
        |FROM jac WHERE (1000000 * i_ct) // u_ct >= $JaccardPpmThreshold""".stripMargin
   }
 
-  /** [[lshDuplicatesCollapsed]]'s oracle: the exact-collapse as a
+  /** The `q_llm_lsh_dups_collapsed` oracle: the exact-collapse as a
     * `documents` CTE shadowing the base table (DuckDB scoping), then
     * the UNCHANGED [[lshOracle]] chain over it — the operator is
     * literally "exact dedup, then the same near-dup pipeline". */
@@ -415,7 +409,7 @@ object Dedup {
     * One broadcast-or-shuffle anti join over the verdicts — the pair
     * set is tiny relative to the corpus at any scale. */
   def keepList(spark: SparkSession, dir: String): DataFrame = {
-    val dropped = lshDuplicates(spark, dir)
+    val dropped = lshDuplicatesOf(Tables.documents(spark, dir))
       .select(col("doc_b").as("doc_id")).distinct()
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), col("source"))
@@ -459,19 +453,16 @@ object Dedup {
     * every bucket, same-shingle self-join emits id-only pairs, a
     * count-≥-MinShared filter shrinks the candidate set BEFORE the
     * joins that carry shingle arrays, and exact verification runs only
-    * within candidates (the same contract as [[lshDuplicates]], which
-    * it must agree with on any pair both generate). */
-  def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
-    ngramJaccardOf(Tables.documents(spark, dir))
-
-  /** [[ngramJaccard]] over any (doc_id, text) frame. */
+    * within candidates (the same contract as [[lshDuplicatesOf]], which
+    * it must agree with on any pair both generate). Input: any (doc_id,
+    * text) frame. */
   def ngramJaccardOf(docs: DataFrame): DataFrame = {
     val (cands, shl) = jaccardCandidates(docs)
     jaccardVerify(cands, shl)
   }
 
   /** Shared inverted-index candidate generation for the exact-shingle
-    * scorers ([[ngramJaccard]], [[containment]]): df-pruned postings →
+    * scorers ([[ngramJaccardOf]], [[containmentOf]]): df-pruned postings →
     * same-shingle id-only pairs → MinShared count filter. Returns the
     * (doc_a < doc_b) candidate frame and the shingle-set frame. */
   private def jaccardCandidates(docs: DataFrame): (DataFrame, DataFrame) = {
@@ -505,8 +496,8 @@ object Dedup {
   val SnWindow = 4L
 
   /** Sorted-neighborhood dedup (Hernández & Stolfo's merge/purge) —
-    * the third blocking family beside LSH bands ([[lshDuplicates]])
-    * and inverted-index candidates ([[ngramJaccard]]): sort the
+    * the third blocking family beside LSH bands ([[lshDuplicatesOf]])
+    * and inverted-index candidates ([[ngramJaccardOf]]): sort the
     * corpus by a key (here the [[SnKeyLen]]-char unspaced prefix),
     * compare only documents within [[SnWindow]] ranks, verify with
     * exact Jaccard. Catches the near-identical-prefix class (mirrors,
@@ -521,11 +512,7 @@ object Dedup {
     * boundaries). The window join is an EQUIJOIN on rank-buckets
     * (each left row probes its own and the next bucket — a 2× fanout,
     * never a non-equi nested loop), and the Jaccard verify runs only
-    * on window pairs. */
-  def sortedNeighborDups(spark: SparkSession, dir: String): DataFrame =
-    sortedNeighborDupsOf(Tables.documents(spark, dir))
-
-  /** [[sortedNeighborDups]] over any (doc_id, text) frame. */
+    * on window pairs. Input: any (doc_id, text) frame. */
   def sortedNeighborDupsOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     val shl = shingleSetsShared(docs)
@@ -590,15 +577,11 @@ object Dedup {
     * candidate pairs where the smaller shingle set is ≥
     * [[ContainmentPpmThreshold]] inside the intersection, with the
     * contained side identified — the quote/excerpt/boilerplate-reuse
-    * relation a dedup pass needs beside [[ngramJaccard]].
+    * relation a dedup pass needs beside [[ngramJaccardOf]].
     *
-    * Scale shape: identical to [[ngramJaccard]] (same candidate
+    * Scale shape: identical to [[ngramJaccardOf]] (same candidate
     * pipeline, same bounded posting joins) — only the final verify
-    * arithmetic differs. */
-  def containment(spark: SparkSession, dir: String): DataFrame =
-    containmentOf(Tables.documents(spark, dir))
-
-  /** [[containment]] over any (doc_id, text) frame. */
+    * arithmetic differs. Input: any (doc_id, text) frame. */
   def containmentOf(docs: DataFrame): DataFrame = {
     val (cands, shl) = jaccardCandidates(docs)
     cands
@@ -643,29 +626,9 @@ object Dedup {
        |WHERE (1000000 * i_ct) // least(size_a, size_b)
        |      >= $ContainmentPpmThreshold""".stripMargin
 
-  /** [[ngramJaccard]] behind the exact-duplicate pre-collapse — the
-    * same mass-duplication guard as [[lshDuplicatesCollapsed]]: a
-    * boilerplate cluster at fraction f makes every one of its shingles
-    * co-occur in f·n docs, which is C(f·n, 2) id-pairs out of EVERY
-    * posting under [[MaxDf]] — the same quadratic hot bucket, here in
-    * the inverted-index join. Beyond killing the quadratic, collapsing
-    * first also REPAIRS the candidate semantics under mass
-    * duplication: document frequency is counted over distinct texts,
-    * so a genuinely rare shingle that boilerplate copies inflated past
-    * [[MaxDf]] (hiding its true near-dup pair) prunes correctly again
-    * — dedup-then-mine is the production stage order. */
-  def ngramJaccardCollapsed(spark: SparkSession, dir: String): DataFrame =
-    ngramJaccardOf(collapsedDocs(Tables.documents(spark, dir)))
-
-  /** [[containment]] behind the exact-duplicate pre-collapse — same
-    * rationale as [[ngramJaccardCollapsed]] (shared candidate
-    * pipeline, shared hot bucket, shared df repair). */
-  def containmentCollapsed(spark: SparkSession, dir: String): DataFrame =
-    containmentOf(collapsedDocs(Tables.documents(spark, dir)))
-
   /** Exact n-gram Jaccard via PREFIX FILTERING (the SSJoin/PPJoin
     * device — Chaudhuri et al., ICDE'06; Xiao et al., WWW'08) — the
-    * LOSSLESS alternative to [[ngramJaccard]]'s df-cap/MinShared
+    * LOSSLESS alternative to [[ngramJaccardOf]]'s df-cap/MinShared
     * candidate pruning: under a single global token ordering (here
     * rarest-first by document frequency, ties by the shingle itself),
     * any pair with J ≥ t must share a token within each side's first
@@ -685,13 +648,14 @@ object Dedup {
     * so the trade wins there; [[PLANS.md]] §r15 records the measured
     * A/B. Mass duplication still defeats any prefix scheme (identical
     * texts share identical prefixes) — the [[collapsedDocs]] guard
-    * composes in front, boarded as [[ngramJaccardPrefixCollapsed]].
+    * composes in front, boarded as `q_llm_ngram_jaccard_prefix_collapsed`.
     *
     * Output contract: EVERY pair with exact Jaccard ≥
     * [[JaccardPpmThreshold]] (docs with < 3 tokens have no shingles
     * and never pair). The oracle is device-independent — all
     * shared-shingle pairs, exactly verified — so a prefix bug that
-    * drops one true pair hash-fails. */
+    * drops one true pair hash-fails. Kept beside
+    * [[ngramJaccardPrefixOf]] because the `perfbench` curation calls it. */
   def ngramJaccardPrefix(spark: SparkSession, dir: String): DataFrame =
     ngramJaccardPrefixOf(Tables.documents(spark, dir))
 
@@ -734,13 +698,6 @@ object Dedup {
       .distinct()
     jaccardVerify(cands, shl)
   }
-
-  /** [[ngramJaccardPrefix]] behind the exact-duplicate pre-collapse —
-    * the production stage order for this family (the
-    * [[ngramJaccardCollapsed]] rationale; identical texts share
-    * identical prefixes, so collapse is what bounds the hot bucket). */
-  def ngramJaccardPrefixCollapsed(spark: SparkSession, dir: String): DataFrame =
-    ngramJaccardPrefixOf(collapsedDocs(Tables.documents(spark, dir)))
 
   /** Device-independent exact contract: every ≥-one-shared-shingle
     * pair (a superset of every J ≥ t pair, since t > 0), exactly
@@ -797,7 +754,7 @@ object Dedup {
     * normal regime — candidate generation exists to keep it tiny),
     * distributed pointer-doubling rounds beyond that. */
   def dedupClosure(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = lshDuplicates(spark, dir).select(col("doc_a"), col("doc_b"))
+    val pairs = lshDuplicatesOf(Tables.documents(spark, dir)).select(col("doc_a"), col("doc_b"))
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), col("source"))
       .join(closureKeepers(pairs), Seq("doc_id"), "left")
@@ -813,6 +770,19 @@ object Dedup {
     * graph. Hitting the cap with labels still moving now THROWS instead
     * of silently returning wrong keepers. */
   val ClosureMaxRounds = 20
+
+  /** Undirected-edge ceiling for the driver union-find shortcut in
+    * [[closureKeepers]] (compared against HALF the doubled-direction
+    * row count). 4M undirected edges collects as ~8M boxed tuples —
+    * a few hundred MB of driver heap for milliseconds of union-find —
+    * while the
+    * distributed loop at ANY size pays several multi-stage shuffle
+    * rounds (measured: 7 rounds ≈ 8 s on a 3k-edge graph at 32-way
+    * parallelism, overhead only). LSH banding exists precisely to keep
+    * the candidate graph ≪ corpus, so real workloads land far under
+    * this; past it the pointer-doubling loop takes over with the same
+    * keeper = component-min contract. */
+  val DriverClosureMaxEdges = 4000000L
 
   /** The label-propagation loop alone: (doc_id, keeper) for every node
     * of the pair graph, keeper = min id of its connected component.
@@ -837,19 +807,6 @@ object Dedup {
     * (neighbor-min and pointer doubling are composed in one plan, and
     * the checkpointed frame carries `prev_keeper` so the convergence
     * count is a scan of the materialized RDD, not a second join). */
-  /** Undirected-edge ceiling for the driver union-find shortcut in
-    * [[closureKeepers]] (compared against HALF the doubled-direction
-    * row count). 4M undirected edges collects as ~8M boxed tuples —
-    * a few hundred MB of driver heap for milliseconds of union-find —
-    * while the
-    * distributed loop at ANY size pays several multi-stage shuffle
-    * rounds (measured: 7 rounds ≈ 8 s on a 3k-edge graph at 32-way
-    * parallelism, overhead only). LSH banding exists precisely to keep
-    * the candidate graph ≪ corpus, so real workloads land far under
-    * this; past it the pointer-doubling loop takes over with the same
-    * keeper = component-min contract. */
-  val DriverClosureMaxEdges = 4000000L
-
   def closureKeepers(pairs: DataFrame): DataFrame = {
     val edges = undirectedEdges(pairs).cache()
     try {
@@ -1034,21 +991,16 @@ object Dedup {
   val SimBandBits = 8
 
   /** Per-doc 32-bit SimHash over the token multiset. One explode + one
-    * map-side-combinable groupBy — linear in token count. */
-  def simhash(spark: SparkSession, dir: String): DataFrame =
-    simhashOf(Tables.documents(spark, dir))
-
-  /** SimHash over any (doc_id, text) frame — public for tests.
-    *
-    * Typed per-doc pass, zero shuffle: the earlier explode + 32
-    * conditional `sum`s pushed ~1M (doc, md5-hex) token rows through a
-    * 32-column aggregate and evaluated 32 substring compares per token
-    * (measured ~60% of q_llm_simhash_dups at sf0.1). The majority vote
-    * is doc-local, so it belongs in one partition-local loop — the same
-    * escalation as [[shingleSets]]. Bit j comes from md5 nibble j's
-    * high bit (hex char >= '8'), identical to the SQL form in
-    * [[simhashSql]]; docs with zero tokens are skipped, matching the
-    * explode form (no token rows → no group). */
+    * map-side-combinable groupBy — linear in token count. Input: any
+    * (doc_id, text) frame. Typed per-doc pass, zero shuffle: the earlier
+    * explode + 32 conditional `sum`s pushed ~1M (doc, md5-hex) token
+    * rows through a 32-column aggregate and evaluated 32 substring
+    * compares per token (measured ~60% of q_llm_simhash_dups at sf0.1).
+    * The majority vote is doc-local, so it belongs in one
+    * partition-local loop — the same escalation as [[shingleSets]]. Bit
+    * j comes from md5 nibble j's high bit (hex char >= '8'), identical
+    * to the SQL form in [[simhashSql]]; docs with zero tokens are
+    * skipped, matching the explode form (no token rows → no group). */
   def simhashOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     docs.select(col("doc_id"), col("text")).as[(Long, String)]
@@ -1100,25 +1052,8 @@ object Dedup {
   /** SimHash near-dup pairs: Hamming distance ≤ 2 on the 32-bit hash.
     * Pigeonhole over 4 byte-bands: ≤2 differing bits touch ≤2 bands,
     * so every qualifying pair shares ≥1 intact band — the band
-    * equi-join is the candidate filter, never all-pairs. */
-  def simhashDuplicates(spark: SparkSession, dir: String): DataFrame =
-    simhashDuplicatesOf(Tables.documents(spark, dir))
-
-  /** [[simhashDuplicates]] behind the exact-duplicate pre-collapse —
-    * the same mass-duplication guard as [[lshDuplicatesCollapsed]]
-    * and for the same reason: identical texts have the IDENTICAL
-    * 32-bit simhash, hence identical nibbles in every band, so a
-    * boilerplate cluster is one (band, nib) bucket emitting C(f·n, 2)
-    * candidate pairs that all verify at hamming 0. Component
-    * equivalence is exact, as for MinHash-LSH: an exact-group member
-    * shares its representative's simhash verbatim, so rep-level pairs
-    * + exact groups reconstruct the same components (null/empty texts
-    * excluded — the plain pipeline drops zero-token docs before
-    * hashing). */
-  def simhashDuplicatesCollapsed(spark: SparkSession, dir: String): DataFrame =
-    simhashDuplicatesOf(collapsedDocs(Tables.documents(spark, dir)))
-
-  /** [[simhashDuplicates]] over any (doc_id, text) frame. */
+    * equi-join is the candidate filter, never all-pairs. Input: any
+    * (doc_id, text) frame. */
   def simhashDuplicatesOf(docs: DataFrame): DataFrame = {
     // LAZY localCheckpoint: the band frame feeds both sides of the
     // candidate self-join — without it the typed tokenize+md5 simhash
@@ -1161,7 +1096,7 @@ object Dedup {
 
   // ---- cross-document repeated spans (exact-substring family) ------
 
-  /** Span width (tokens) for [[spanCoverage]]. Small at this corpus
+  /** Span width (tokens) for [[spanCoverageOf]]. Small at this corpus
     * shape (random word soup repeats short spans only); a web corpus
     * runs wider windows (Lee et al. use 50 tokens) — the plan shape is
     * width-independent. */
@@ -1176,7 +1111,7 @@ object Dedup {
     * mostly covered by cross-doc spans is a strip/remove candidate
     * even when no whole-doc near-dup fires — the complement of the
     * pairwise family above, and the cross-doc complement of
-    * [[CorpusOps.repetition]]'s within-doc signals.
+    * [[CorpusOps.repetitionOf]]'s within-doc signals.
     *
     * Shape at 100 TB: positioned postings (one row per token, like the
     * decontamination posting list but carrying `pos`), ONE map-side-
@@ -1184,11 +1119,8 @@ object Dedup {
     * postings, and a bounded position explode (×[[SpanK]]) before the
     * per-doc count — never doc×doc, never all-pairs. A full suffix
     * array (the paper's single-node structure) does not distribute;
-    * fixed-width span postings are the standard cluster restatement. */
-  def spanCoverage(spark: SparkSession, dir: String): DataFrame =
-    spanCoverageOf(graft.Tables.documents(spark, dir))
-
-  /** [[spanCoverage]] over any (doc_id, text) frame — public for tests. */
+    * fixed-width span postings are the standard cluster restatement.
+    * Input: any (doc_id, text) frame. */
   def spanCoverageOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     // positioned postings, typed (the shingleSets escalation): 1-based
@@ -1269,11 +1201,8 @@ object Dedup {
     * on the same key — one partitioning serves both. The snapshot side
     * ships only its distinct hash column (not text), and at 100 TB a
     * bloom pre-filter on the batch ([[CorpusOps.contaminationBloom]]
-    * pattern) keeps the join's snapshot side to candidate buckets. */
-  def incrementalDedup(spark: SparkSession, dir: String): DataFrame =
-    incrementalDedupOf(Tables.documents(spark, dir))
-
-  /** [[incrementalDedup]] over any (doc_id, text) frame. */
+    * pattern) keeps the join's snapshot side to candidate buckets.
+    * Input: any (doc_id, text) frame. */
   def incrementalDedupOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val hashed = docs.select(col("doc_id"), md5(col("text")).as("h"))
@@ -1330,7 +1259,7 @@ object Dedup {
     */
   def qualityKeepList(spark: SparkSession, dir: String): DataFrame =
     qualityKeepListOf(Tables.documents(spark, dir),
-      lshDuplicates(spark, dir).select(col("doc_a"), col("doc_b")))
+      lshDuplicatesOf(Tables.documents(spark, dir)).select(col("doc_a"), col("doc_b")))
 
   /** [[qualityKeepList]] over any (doc_id, lang, text) frame and
     * (doc_a, doc_b) pair graph — public for tests. */

@@ -32,10 +32,7 @@ import graft.func.Materialize.MatOps
   * broadcast joins. Output is |sources| rows.
   */
 object Divergence {
-  def sourceDivergence(spark: SparkSession, dir: String): DataFrame =
-    sourceDivergenceOf(Tables.documents(spark, dir))
-
-  /** [[sourceDivergence]] over any (source, text) frame. */
+  /** Per-source drift over any (source, text) frame. */
   def sourceDivergenceOf(docs: DataFrame): DataFrame = {
     val words = docs.select(col("source"),
       Tokenizer.explodeTokens(col("text")).as("w"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.func.{OracleSql, Tokenizer}
+import graft.func.{Exprs, OracleSql, Tokenizer}
 import graft.func.Materialize.MatOps
 
 /** Data Selection via Importance Resampling (DSIR, Xie et al. 2023)
@@ -39,17 +39,14 @@ object Dsir {
     * real run would point at its curated target corpus). */
   val TargetLang = "en"
 
-  def dsirScore(spark: SparkSession, dir: String): DataFrame =
-    dsirScoreOf(Tables.documents(spark, dir))
-
-  /** [[dsirScore]] over any (doc_id, lang, text) frame: per document,
+  /** DSIR scores over any (doc_id, lang, text) frame: per document,
     * its token count and integer log2 importance score (positive =
     * target-like). Token-less documents score 0. */
   def dsirScoreOf(docs: DataFrame): DataFrame = {
     def toksOf(d: DataFrame) = d.select(col("doc_id"), col("lang"),
         Tokenizer.explodeTokens(col("text")).as("w"))
       .withColumn("b",
-        conv(substring(md5(col("w")), 1, 4), 16, 10).cast("long") % DsirBuckets)
+        Exprs.md5Nibbles(col("w"), 4) % DsirBuckets)
       // the token string is consumed by the bucket hash above; both
       // consumers below key on (doc_id, lang, b) only — drop it so
       // the shared cache holds 3 small columns, not the corpus text

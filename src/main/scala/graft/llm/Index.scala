@@ -39,11 +39,7 @@ object Index {
     * `row_number` ordered by doc_id for the head — and the final
     * groupBy(token) reuses the same partitioning (no second exchange;
     * `collect_list` is bounded by the rn ≤ [[PostingHead]] filter
-    * before it, never O(df)). */
-  def invertedIndex(spark: SparkSession, dir: String): DataFrame =
-    invertedIndexOf(Tables.documents(spark, dir))
-
-  /** [[invertedIndex]] over any (doc_id, text) frame — public for tests. */
+    * before it, never O(df)). Input: any (doc_id, text) frame. */
   def invertedIndexOf(docs: DataFrame): DataFrame = {
     val pairs = docs.select(col("doc_id"),
       explode(array_distinct(Tokenizer.tokens(col("text")))).as("token"))
@@ -86,11 +82,7 @@ object Index {
     * not (PLANS.md rule #2, the Boilerplate precedent). The final
     * per-doc aggregate shuffles (and map-side combines) on doc_id.
     * Docs with zero tokens survive via the left join with null
-    * score. */
-  def idfRarity(spark: SparkSession, dir: String): DataFrame =
-    idfRarityOf(Tables.documents(spark, dir))
-
-  /** [[idfRarity]] over any (doc_id, text) frame — public for tests. */
+    * score. Input: any (doc_id, text) frame. */
   def idfRarityOf(docs: DataFrame): DataFrame = {
     // LAZY localCheckpoint at the DOC level (arrays, not the exploded
     // token stream — same bytes as the corpus, far fewer rows): the
@@ -132,7 +124,7 @@ object Index {
 
   // ---- BM25 retrieval ----------------------------------------------
 
-  /** The fixed query whose top hits [[bm25]] returns — constants so
+  /** The fixed query whose top hits [[bm25Of]] returns — constants so
     * the oracle replays the identical retrieval. */
   val Bm25Terms = Seq("spark", "join", "window")
 
@@ -159,11 +151,8 @@ object Index {
     * convention (PLANS.md rule #2) even when, as here, the row count
     * is term-list-bounded. Only the scalar one-row (N, A) frame keeps
     * its hint. The global top-k is orderBy+limit →
-    * TakeOrderedAndProject, per-partition heaps, no sort exchange. */
-  def bm25(spark: SparkSession, dir: String): DataFrame =
-    bm25Of(Tables.documents(spark, dir))
-
-  /** [[bm25]] over any (doc_id, text) frame — public for tests. */
+    * TakeOrderedAndProject, per-partition heaps, no sort exchange.
+    * Input: any (doc_id, text) frame. */
   def bm25Of(docs: DataFrame): DataFrame = {
     val dec = "decimal(38,0)"
     val toks = docs
@@ -242,11 +231,8 @@ object Index {
     * Scale shape (100 TB): the term filter lands INSIDE the posting
     * explode's projection (rare phrase terms → the exchange carries
     * only matching postings, not the corpus); the anchor aggregate
-    * and the per-doc rollup share the doc_id partitioning. */
-  def phraseSearch(spark: SparkSession, dir: String): DataFrame =
-    phraseSearchOf(Tables.documents(spark, dir))
-
-  /** [[phraseSearch]] over any (doc_id, text) frame. */
+    * and the per-doc rollup share the doc_id partitioning. Input: any
+    * (doc_id, text) frame. */
   def phraseSearchOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     val k = Phrase.length

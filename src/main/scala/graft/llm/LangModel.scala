@@ -30,10 +30,7 @@ import graft.func.Materialize.MatOps
   * survive via left join with null score.
   */
 object LangModel {
-  def bigramScore(spark: SparkSession, dir: String): DataFrame =
-    bigramScoreOf(Tables.documents(spark, dir))
-
-  /** [[bigramScore]] over any (doc_id, text) frame — public for tests. */
+  /** Bigram-LM fluency scores over any (doc_id, text) frame. */
   def bigramScoreOf(docs: DataFrame): DataFrame = {
     // LAZY localCheckpoint: toks feeds the pair stream (twice — bigram
     // counts + the scoring join) and the unigram table; without it the
@@ -82,11 +79,8 @@ object LangModel {
     * offsets are a window over that bounded frame, and each doc's
     * rank is offset + row_number within its (lang, score) partition,
     * a hash-partitioned window. No single-partition corpus-sized
-    * WindowExec anywhere; the offset table rides a broadcast join. */
-  def pplFilter(spark: SparkSession, dir: String): DataFrame =
-    pplFilterOf(Tables.documents(spark, dir))
-
-  /** [[pplFilter]] over any (doc_id, text, lang) frame. */
+    * WindowExec anywhere; the offset table rides a broadcast join.
+    * Input: any (doc_id, text, lang) frame. */
   def pplFilterOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // LAZY localCheckpoint: `scored` feeds both the counts branch and

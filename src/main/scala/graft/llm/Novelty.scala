@@ -29,11 +29,8 @@ object Novelty {
     * the min-doc_id aggregate and the attribution join share that one
     * partitioning (AQE reuses the exchange). The per-doc rollup is
     * the second, doc_id-keyed shuffle. No all-pairs comparison
-    * anywhere — cost is corpus-gram-linear. */
-  def novelty(spark: SparkSession, dir: String): DataFrame =
-    noveltyOf(Tables.documents(spark, dir))
-
-  /** [[novelty]] over any (doc_id, text) frame. */
+    * anywhere — cost is corpus-gram-linear. Input: any (doc_id, text)
+    * frame. */
   def noveltyOf(docs: DataFrame): DataFrame = {
     val toks = docs
       .select(col("doc_id"), Tokenizer.tokens(col("text")).as("t"))

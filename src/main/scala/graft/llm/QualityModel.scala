@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.func.OracleSql
+import graft.func.{Exprs, OracleSql}
 
 /** Model-based quality scoring — the fastText-classifier curation
   * stage (CCNet, GPT-3 WebText filter): every document is scored by a
@@ -38,18 +38,15 @@ object QualityModel {
 
   /** md5-derived bucket of a token. */
   private def bucketOf(w: Column): Column =
-    conv(substring(md5(w), 1, 4), 16, 10).cast("long") % Buckets
+    Exprs.md5Nibbles(w, 4) % Buckets
 
   /** md5-derived integer weight of a bucket id. */
   private def weightOf(w: Column): Column =
-    conv(substring(md5(concat(lit("b:"), bucketOf(w).cast("string"))), 1, 4),
-      16, 10).cast("long") % WeightSpan - 1000L
+    Exprs.md5Nibbles(concat(lit("b:"), bucketOf(w).cast("string")), 4) %
+      WeightSpan - 1000L
 
-  def score(spark: SparkSession, dir: String): DataFrame =
-    scoreOf(Tables.documents(spark, dir))
-
-  /** [[score]] over any (doc_id, lang, text) frame — public for
-    * tests. `pred` = 1 iff the doc passes (score ≥ 0). */
+  /** Model quality scores over any (doc_id, lang, text) frame.
+    * `pred` = 1 iff the doc passes (score ≥ 0). */
   def scoreOf(docs: DataFrame): DataFrame =
     docs.select(
         col("doc_id"),
@@ -81,11 +78,8 @@ object QualityModel {
     * projection would require duplicating both scorers' formulas,
     * the drift hazard the shared-oracle-CTE design exists to
     * prevent. The matrix itself is bounded by
-    * 2·([[AgreementBands]]+1) cells. */
-  def qualityAgreement(spark: SparkSession, dir: String): DataFrame =
-    qualityAgreementOf(Tables.documents(spark, dir))
-
-  /** [[qualityAgreement]] over any (doc_id, lang, text) frame. */
+    * 2·([[AgreementBands]]+1) cells. Input: any (doc_id, lang, text)
+    * frame. */
   def qualityAgreementOf(docs: DataFrame): DataFrame = {
     val heur = TextAnalysis.qualityOf(docs)
       .select(col("doc_id"),

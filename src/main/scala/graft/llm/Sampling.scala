@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.func.OracleSql
+import graft.func.{Exprs, OracleSql}
 
 /** Deterministic weighted reservoir sampling — pick k documents with
   * inclusion preference proportional to a weight column, without any
@@ -15,7 +15,7 @@ import graft.func.OracleSql
   * keep the k SMALLEST): monotone in u for fixed w and stochastically
   * decreasing in w, so heavier docs win ties toward inclusion with
   * the same plan shape and determinism contract as the repo's other
-  * md5-driven samplers (CorpusOps.mixtureSample).
+  * md5-driven samplers (CorpusOps.mixtureSampleOf).
   *
   * Weight = `n_chars` — length-proportional sampling, the shape a
   * token-budget subcorpus draw uses (longer docs carry more tokens,
@@ -34,16 +34,14 @@ object Sampling {
     * on doc_id (mixture "mix:", splits "split:", …). */
   val Salt = "ws:"
 
-  def weightedSample(spark: SparkSession, dir: String): DataFrame =
-    weightedSampleOf(Tables.documents(spark, dir))
-
-  /** [[weightedSample]] over any (doc_id, n_chars) frame. */
+  /** The weighted sample over any (doc_id, n_chars) frame. */
   def weightedSampleOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("n_chars"),
         // integral DIV (not /): float division's rounding could flip
         // the floor at exact-quotient boundaries vs DuckDB's //
-        expr(s"CAST(conv(substring(md5('$Salt' || CAST(doc_id AS STRING))," +
-          " 1, 10), 16, 10) AS BIGINT) DIV (n_chars + 1)").as("skey"))
+        call_function("div", Exprs.md5Nibbles(
+          concat(lit(Salt), col("doc_id").cast("string")), 10),
+          col("n_chars") + 1).as("skey"))
       .orderBy(col("skey"), col("doc_id"))
       .limit(SampleK)
 

@@ -123,14 +123,6 @@ object ScaleRehearsal {
   val LadderVecs = 2000L
   val LadderWindows = 2400 // distinct 10 s ship windows at x1
   val LadderDocVocab = 30000
-  /** Sign-LSH bucket-occupancy target for the scale-aware banding:
-    * chosen so the x1 rung (2k vectors) lands on the board's default
-    * 4 bits exactly — the knob REDUCES to the oracle-locked banding
-    * at board scale. Capped at 7 bits (8 bands × 7 = 56 ≤ 63).
-    * Promoted to [[Similarity.ScaleBucket]] in r14 (the knob is now a
-    * board operator, `q_llm_embed_keeplist_scaled`); kept as an alias
-    * so ladder prose and code keep reading in one place. */
-  val LadderVecBucket: Double = Similarity.ScaleBucket
   // scale-INVARIANT task structure. Co-purchase: the catalog is
   // partitioned into fixed-size communities and each order draws its
   // items from one community — more scale = more communities (new
@@ -357,7 +349,7 @@ object ScaleRehearsal {
   private def closureSection(spark: SparkSession, closureDir: String): Unit = {
     println(s"[scale] === closure rehearsal ($closureDir) ===")
     val (pairs, nPairs) = time("lshDuplicates (shingle→minhash→band→verify)") {
-      val p = Dedup.lshDuplicates(spark, closureDir)
+      val p = Dedup.lshDuplicatesOf(graft.Tables.documents(spark, closureDir))
         .select("doc_a", "doc_b").localCheckpoint()
       (p, p.count())
     }
@@ -666,6 +658,8 @@ object ScaleRehearsal {
   private def ladderSection(spark: SparkSession, ladderDir: String): Unit = {
     println(s"[scale] === ladder rehearsal (${LadderScales.map("x" + _)
       .mkString("/")} at $ladderDir) ===")
+    def docs(op: DataFrame => DataFrame) =
+      (sp: SparkSession, d: String) => op(graft.Tables.documents(sp, d))
     def pipesFor(s: Int): Seq[(String, (SparkSession, String) => DataFrame)] = {
       val bits = ladderBits(LadderVecs * s)
       Seq(
@@ -674,7 +668,7 @@ object ScaleRehearsal {
         "copurchase" -> (graft.ads.Queries.copurchase _),
         "item_rank" -> (graft.ads.ItemRank.itemRank _),
         "triangles" -> (graft.ads.ItemRank.triangles _),
-        "lsh_dups" -> (Dedup.lshDuplicates _),
+        "lsh_dups" -> docs(Dedup.lshDuplicatesOf(_)),
         "keeplist_8x4" -> ((sp: SparkSession, d: String) =>
           Similarity.embedKeepList(sp, d, 8, 4)),
         s"keeplist_aware_8x$bits" -> ((sp: SparkSession, d: String) =>
@@ -682,12 +676,12 @@ object ScaleRehearsal {
         // second CPU tier (r13 verdict task 5): the next-largest board
         // block (~17 cpu-s at sf0.1), previously measured at one scale
         // point only
-        "containment" -> (Dedup.containment _),
-        "ngram_jaccard" -> (Dedup.ngramJaccard _),
+        "containment" -> docs(Dedup.containmentOf),
+        "ngram_jaccard" -> docs(Dedup.ngramJaccardOf),
         // the lossless candidate generator (r15): same verify, exact
         // contract — its growth must stay comparable to the pruned path
         "ngram_jaccard_prefix" -> (Dedup.ngramJaccardPrefix _),
-        "novelty" -> (Novelty.novelty _),
+        "novelty" -> docs(Novelty.noveltyOf),
         "product_stats_approx" -> ((sp: SparkSession, d: String) =>
           graft.dws.ProductStats.approx(sp, d)),
         // dedup_sweep inherits lshNearDup's FIXED 8×4 banding, so its

@@ -42,10 +42,7 @@ object Segmentation {
     * overflow on either engine. */
   val Big = 1L << 60
 
-  def wordBreak(spark: SparkSession, dir: String): DataFrame =
-    wordBreakOf(Tables.documents(spark, dir))
-
-  /** [[wordBreak]] over any (doc_id, text) frame: per doc, the
+  /** Word break over any (doc_id, text) frame: per doc, the
     * unspaced length, whether the top-vocab dictionary can tile it,
     * and the minimum word count when it can (NULL otherwise). */
   def wordBreakOf(docs: DataFrame): DataFrame = {
@@ -88,7 +85,7 @@ object Segmentation {
       .toDF("doc_id", "ns_len", "seg_ok", "min_words")
   }
 
-  /** Rolling-hash window width for [[cdcChunks]]. */
+  /** Rolling-hash window width for [[cdcChunksOf]]. */
   val CdcW = 8
   /** Polynomial base. 131, NOT the folkloric 31: 31² ≡ 1 (mod 64),
     * so with a power-of-two divisor the window hash collapses onto
@@ -101,20 +98,17 @@ object Segmentation {
     * ~[[CdcD]]-char average chunks at unbiased 1/D density. */
   val CdcD = 61L
 
-  def cdcChunks(spark: SparkSession, dir: String): DataFrame =
-    cdcChunksOf(Tables.documents(spark, dir))
-
   /** Content-defined chunking — boundaries where the rolling hash of
     * the last [[CdcW]] characters divides [[CdcD]] — the
     * storage-dedup chunker (Rabin/FastCDC family): unlike the
-    * fixed-window chunker ([[CorpusOps.chunk]]), an insertion early
+    * fixed-window chunker ([[CorpusOps.chunkOf]]), an insertion early
     * in a document shifts only the chunks it touches, so chunk-level
     * dedup across document revisions keeps working. One row per
     * chunk: (doc_id, chunk_id, start_pos, chunk_len), 1-based
     * positions; token-less documents emit no chunks.
     *
     * Per-item sequential scan → typed flatMap partition loop (the
-    * [[wordBreak]] HOF lesson); the hash is recomputed per position
+    * [[wordBreakOf]] HOF lesson); the hash is recomputed per position
     * (O(len·W), W = 8) to match the oracle's unrolled-term sum
     * exactly — both engines evaluate the identical integer
     * polynomial, so boundaries are bit-portable.
@@ -176,9 +170,6 @@ object Segmentation {
   lazy val cdcChunksOracle: String =
     s"""WITH $cdcCoreSql
        |SELECT doc_id, chunk_id, start_pos, chunk_len FROM ch""".stripMargin
-
-  def cdcDedup(spark: SparkSession, dir: String): DataFrame =
-    cdcDedupOf(Tables.documents(spark, dir))
 
   /** Chunk-level dedup report — the payoff of content-defined
     * boundaries: shared passages across documents (revisions,

@@ -244,38 +244,12 @@ object Similarity {
     cents
   }
 
-  /** IVF top-k — the ANN scale path. Coarse cells come from
-    * [[kmeansCentroids]]; ONE further typed pass assigns every vector
-    * its nearest cell and (for query vectors) its [[NProbe]] probe
-    * cells, so the scored candidate set shrinks by ~KCells/NProbe and
-    * the one real shuffle is the (cell)-keyed candidate join. Scoring
-    * reuses the raw-embedding norms so cos_ppm is bit-identical to
-    * [[bruteTopK]] on shared pairs. Centroid means are an unordered
-    * float sum, so this operator has no SQL oracle (driver rows-only
-    * check); recall vs [[bruteTopK]] is asserted in the test suite. */
-  def ivfTopK(spark: SparkSession, dir: String): DataFrame =
-    ivfTopKProbes(spark, dir, NProbe)
-
-  /** [[ivfTopK]] at nprobe = [[KCells]]: every query probes EVERY
-    * cell, so the candidate set is the full corpus and the output must
-    * be bit-identical to [[bruteTopK]] (cells partition the vectors —
-    * full probing loses nothing; scoring reuses the raw-embedding
-    * norms, so cos_ppm agrees pairwise). Registered with the brute
-    * oracle as a HASH check: it pins the quantizer's partition
-    * property, the probe join, and the scoring path exactly —
-    * far stronger than the [[RecallFloorPpm]] sanity floor, and
-    * data-independent (no re-measuring after fixture regeneration).
-    * A check query, not a serving path: full probe is brute force
-    * with extra steps, priced accordingly. */
-  def ivfTopKFullProbe(spark: SparkSession, dir: String): DataFrame =
-    ivfTopKProbes(spark, dir, KCells)
-
   /** Memoized coarse index, keyed by table directory. The centroids
     * are a PURE function of the embeddings table (fixed seeds, fixed
     * Lloyd rounds, pinned IEEE order), so this is the build/probe
     * separation every real ANN system has — the index is built once
-    * and served to many queries ([[ivfTopK]], [[ivfRecall]],
-    * [[ivfTopKFullProbe]] all probe the same quantizer, as they
+    * and served to many queries ([[ivfTopK]] at any nprobe and
+    * [[ivfRecall]] all probe the same quantizer, as they
     * would in production). Cache entries are K×(Dim) doubles
     * (scalars, not data); per-JVM, so results are identical whether
     * the cache hits or rebuilds — PROVIDED the table at `dir` is
@@ -286,8 +260,29 @@ object Similarity {
   private val centroidCache =
     scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
 
-  private def ivfTopKProbes(spark: SparkSession, dir: String,
-      nprobe: Int): DataFrame = {
+  /** IVF top-k — the ANN scale path. Coarse cells come from
+    * [[kmeansCentroids]]; ONE further typed pass assigns every vector
+    * its nearest cell and (for query vectors) its `nprobe` probe
+    * cells, so the scored candidate set shrinks by ~KCells/nprobe and
+    * the one real shuffle is the (cell)-keyed candidate join. Scoring
+    * reuses the raw-embedding norms so cos_ppm is bit-identical to
+    * [[bruteTopK]] on shared pairs. Centroid means are an unordered
+    * float sum, so this operator has no SQL oracle (driver rows-only
+    * check); recall vs [[bruteTopK]] is asserted in the test suite.
+    *
+    * At nprobe = [[KCells]] (board `q_llm_ann_fullprobe`) every query
+    * probes EVERY cell, so the candidate set is the full corpus and
+    * the output must be bit-identical to [[bruteTopK]] (cells
+    * partition the vectors — full probing loses nothing; scoring
+    * reuses the raw-embedding norms, so cos_ppm agrees pairwise).
+    * Registered with the brute oracle as a HASH check: it pins the
+    * quantizer's partition property, the probe join, and the scoring
+    * path exactly — far stronger than the [[RecallFloorPpm]] sanity
+    * floor, and data-independent (no re-measuring after fixture
+    * regeneration). A check query, not a serving path: full probe is
+    * brute force with extra steps, priced accordingly. */
+  def ivfTopK(spark: SparkSession, dir: String,
+      nprobe: Int = NProbe): DataFrame = {
     import spark.implicits._
     val e = embRows(spark, dir)
       .select(col("vec_id"), col("embedding"),
@@ -346,7 +341,7 @@ object Similarity {
     * a red [[ivfRecall]] row after such a change means the floor
     * moved, not necessarily that IVF broke. The probe-join mechanics
     * are pinned independently (and data-independently) by the
-    * full-probe identity query [[ivfTopKFullProbe]]. */
+    * full-probe identity query (`q_llm_ann_fullprobe`). */
   val RecallFloorPpm = 100000L
 
   /** Driver-decidable IVF recall check: one row per query vector in

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.func.{OracleSql, Tokenizer}
+import graft.func.{Exprs, OracleSql, Tokenizer}
 import graft.func.Materialize.MatOps
 
 /** Mergeable integer sketches — the bounded-state devices a 100 TB
@@ -77,11 +77,8 @@ object Sketches {
     * md5(text) — the exact-dedup key, llm/Dedup.scala): one row per
     * non-empty bucket, `r_max` = max rho observed. Duplicate documents
     * collapse for free (same text → same (bucket, rho)) — that is the
-    * point: the post-dedup corpus cardinality with no dedup shuffle. */
-  def hllSketch(spark: SparkSession, dir: String): DataFrame =
-    hllSketchOf(Tables.documents(spark, dir))
-
-  /** [[hllSketch]] over any frame with a `text` column. */
+    * point: the post-dedup corpus cardinality with no dedup shuffle.
+    * Input: any frame with a `text` column. */
   def hllSketchOf(docs: DataFrame): DataFrame =
     registersOf(docs, Nil, md5(col("text")), HllM)
 
@@ -114,11 +111,8 @@ object Sketches {
     * DIV S. Overflow: AlphaScaled < 2^12, 2^R ≤ 2^33 → product
     * < 2^45; S ≤ m·2^33 < 2^39 — far inside int64 in BOTH engines'
     * plain BIGINT (no HUGEINT widening on the oracle side: every
-    * product is written in pre-bounded factors). */
-  def hllEstimate(spark: SparkSession, dir: String): DataFrame =
-    hllEstimateOf(Tables.documents(spark, dir))
-
-  /** [[hllEstimate]] over any frame with a `text` column. */
+    * product is written in pre-bounded factors). Input: any frame with a
+    * `text` column. */
   def hllEstimateOf(docs: DataFrame): DataFrame = {
     // LAZY localCheckpoint: the ≤ m-row register table feeds the R/nb
     // scalar AND the S aggregation — without it the corpus scan runs
@@ -182,6 +176,15 @@ object Sketches {
 
   val GroupHllAlphaScaled: Long = GroupHllAlphaPpm * GroupHllM * GroupHllM / 1000000L
 
+  /** The grouped register table alone — the streaming-safe half of
+    * [[uvSketchOf]] (groupBy + max runs in update/complete mode; the
+    * R/S estimator below needs a batch window). In production the
+    * streaming job maintains THIS as its state store and the serving
+    * layer runs the estimator over the stored registers. */
+  def uvRegistersOf(events: DataFrame): DataFrame =
+    registersOf(events, Seq("event_type"),
+      md5(col("user_id").cast("string")), GroupHllM)
+
   /** Per-event-type distinct-user estimate: the UV/dedup-count the
     * reference computes with an exact per-key HashSet
     * (gmall-time app/dws2/VisitorStatsApp.java:61-96), here as a
@@ -193,20 +196,8 @@ object Sketches {
     * Scale shape: ONE (event_type, bucket)-keyed exchange, ≤
     * groups·[[GroupHllM]] rows per map task after partial max; the
     * per-group R/S reduction is a window + aggregate over that
-    * bounded register frame; the exact-count join is groups-sized. */
-  def uvSketch(spark: SparkSession, dir: String): DataFrame =
-    uvSketchOf(Tables.events(spark, dir))
-
-  /** The grouped register table alone — the streaming-safe half of
-    * [[uvSketchOf]] (groupBy + max runs in update/complete mode; the
-    * R/S estimator below needs a batch window). In production the
-    * streaming job maintains THIS as its state store and the serving
-    * layer runs the estimator over the stored registers. */
-  def uvRegistersOf(events: DataFrame): DataFrame =
-    registersOf(events, Seq("event_type"),
-      md5(col("user_id").cast("string")), GroupHllM)
-
-  /** [[uvSketch]] over any (event_type, user_id) frame. */
+    * bounded register frame; the exact-count join is groups-sized.
+    * Input: any (event_type, user_id) frame. */
   def uvSketchOf(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val regs = uvRegistersOf(events)
@@ -274,8 +265,7 @@ object Sketches {
 
   /** Salted md5 cell of a word for hash row `r`. */
   private def cellOf(r: Int, w: Column): Column =
-    conv(substring(md5(concat(lit(s"r$r:"), w)), 1, 4), 16, 10)
-      .cast("long") % CmsW
+    Exprs.md5Nibbles(concat(lit(s"r$r:"), w), 4) % CmsW
 
   /** Vocabulary frame (word, count) — shared base of both CMS
     * queries; the cell is a function of the word alone, so the sketch
@@ -296,11 +286,8 @@ object Sketches {
 
   /** The d×w count matrix as (r, cell, c_cell) rows — non-empty cells
     * only. Mergeable by cell-wise addition; size bounded by
-    * [[CmsD]]·[[CmsW]] regardless of vocabulary. */
-  def cmsSketch(spark: SparkSession, dir: String): DataFrame =
-    cmsSketchOf(Tables.documents(spark, dir))
-
-  /** [[cmsSketch]] over any frame with a `text` column. */
+    * [[CmsD]]·[[CmsW]] regardless of vocabulary. Input: any frame with a
+    * `text` column. */
   def cmsSketchOf(docs: DataFrame): DataFrame =
     sketchFromVocab(vocabOf(docs))
 
@@ -334,11 +321,8 @@ object Sketches {
     * the CMS estimate (min over the d cells), and the collision
     * overcount (always ≥ 0 — CMS never underestimates). At 100 TB the
     * candidate set comes from a cheap sample, not an exact top-k; the
-    * exact column here is the adjudicator. */
-  def cmsTopK(spark: SparkSession, dir: String): DataFrame =
-    cmsTopKOf(Tables.documents(spark, dir))
-
-  /** [[cmsTopK]] over any frame with a `text` column. */
+    * exact column here is the adjudicator. Input: any frame with a
+    * `text` column. */
   def cmsTopKOf(docs: DataFrame): DataFrame = {
     // LAZY localCheckpoint: the vocabulary feeds the sketch AND the
     // top-k candidates — one corpus pass (PLANS.md rule #17)
@@ -395,7 +379,7 @@ object Sketches {
     docs.select(col("source"),
         explode(Tokenizer.tokens(col("text"))).as("w"))
       .select(col("source"),
-        conv(substring(md5(col("w")), 1, 12), 16, 10).cast("long").as("hv"))
+        Exprs.md5Nibbles(col("w"), 12).as("hv"))
       .distinct()
 
   private def kmvHashesSql: String =
@@ -409,11 +393,8 @@ object Sketches {
     * distinct on (source, hash) — bounded by the vocabulary, the same
     * frame the CMS rides — then a per-source top-k (WindowGroupLimit
     * pushes the k cut below the sort at scale); the sketch table is
-    * sources × k rows, broadcastable by construction. */
-  def kmvSketch(spark: SparkSession, dir: String): DataFrame =
-    kmvSketchOf(Tables.documents(spark, dir))
-
-  /** [[kmvSketch]] over any (source, text) frame. */
+    * sources × k rows, broadcastable by construction. Input: any
+    * (source, text) frame. */
   def kmvSketchOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("source").orderBy("hv")
@@ -438,11 +419,8 @@ object Sketches {
     * distinct count + ppm error ride along as test adjudicators
     * (the [[hllEstimateOf]] convention). All BIGINT: with k = 16,
     * (k−1)·M = 15·2^48 < 2^52; in general (k−1)·2^48 stays below
-    * the 2^63 BIGINT ceiling for any k up to ~32768. */
-  def kmvEstimate(spark: SparkSession, dir: String): DataFrame =
-    kmvEstimateOf(Tables.documents(spark, dir))
-
-  /** [[kmvEstimate]] over any (source, text) frame. */
+    * the 2^63 BIGINT ceiling for any k up to ~32768. Input: any (source,
+    * text) frame. */
   def kmvEstimateOf(docs: DataFrame): DataFrame = {
     val hv = kmvHashes(docs).matLazily
     val sk = kmvSketchOf(docs)
@@ -486,11 +464,8 @@ object Sketches {
     * fraction × union_est (the standard KMV Jaccard device). Output
     * is sources²/2 rows of pure BIGINT — every value replayed exactly
     * by the oracle, estimator quality adjudicated in SketchesSpec
-    * against the exact per-pair intersections. */
-  def kmvOverlap(spark: SparkSession, dir: String): DataFrame =
-    kmvOverlapOf(Tables.documents(spark, dir))
-
-  /** [[kmvOverlap]] over any (source, text) frame. */
+    * against the exact per-pair intersections. Input: any (source, text)
+    * frame. */
   def kmvOverlapOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sk = kmvSketchOf(docs).select(col("source"), col("hv"))
@@ -579,7 +554,7 @@ object Sketches {
 
   /** Histogram-quantile sketch — the fourth mergeable sketch beside
     * HLL/CMS/KMV, and the DETERMINISTIC alternative to Spark's
-    * `percentile_approx` ([[CorpusOps.qualityQuantilesApprox]]) for
+    * `percentile_approx` ([[CorpusOps.qualityQuantilesApproxOf]]) for
     * distributed quantiles: fixed-width value bins, counts per
     * (lang, bin). Unlike percentile_approx's randomized-compaction
     * KLL state, the histogram is a pure GROUP BY — integer binning,
@@ -591,17 +566,14 @@ object Sketches {
     * Scale shape (100 TB): the corpus never sorts. Each doc projects
     * to one bin inside the scan stage; the only exchange carries the
     * ≤ 101-rows-per-lang-per-map-task partial counts. The exact form
-    * ([[CorpusOps.qualityQuantiles]]) serializes each language
+    * ([[CorpusOps.qualityQuantilesOf]]) serializes each language
     * through one reducer's sort — the calibration path, not the
     * production path. Trade-off: the estimate is the quantile's bin
     * LOWER BOUND, within [[HqBinW]] − 1 ppm of the exact value
     * (spec-bounded against the exact form); rank targeting uses the
-    * exact form's ceil convention `(n·p + 99) DIV 100`. */
-  def hqSketch(spark: SparkSession, dir: String): DataFrame =
-    hqSketchOf(Tables.documents(spark, dir))
-
-  /** [[hqSketch]] over any (doc_id, text, lang) frame — the scoreable
-    * corpus contract is [[CorpusOps.scoredByLang]]'s. */
+    * exact form's ceil convention `(n·p + 99) DIV 100`. Input: any
+    * (doc_id, text, lang) frame; the scoreable corpus contract is
+    * [[CorpusOps.scoredByLang]]'s. */
   def hqSketchOf(docs: DataFrame): DataFrame =
     CorpusOps.scoredByLang(docs)
       .select(col("lang"), expr(s"quality_ppm DIV $HqBinW").as("bin"))
@@ -609,7 +581,7 @@ object Sketches {
       .agg(count(lit(1)).as("ct"))
 
   def hqEstimate(spark: SparkSession, dir: String): DataFrame =
-    hqEstimateFrom(hqSketch(spark, dir))
+    hqEstimateFrom(hqSketchOf(Tables.documents(spark, dir)))
 
   /** Quantile estimates from a SKETCH frame (lang, bin, ct) — taking
     * the sketch (not the corpus) is what the merge-law spec exercises:

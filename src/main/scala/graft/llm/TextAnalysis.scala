@@ -50,7 +50,8 @@ object TextAnalysis {
 
   /** Language ID: (doc_id, pred_lang, hit_ct, is_match vs the labeled
     * `lang`). The `lang` column is the ground-truth label; the
-    * heuristic's agreement rate is itself a useful corpus stat. */
+    * heuristic's agreement rate is itself a useful corpus stat. Kept
+    * beside [[langIdOf]] because the `perfbench` curation calls it. */
   def langId(spark: SparkSession, dir: String): DataFrame =
     langIdOf(Tables.documents(spark, dir))
 
@@ -98,11 +99,8 @@ object TextAnalysis {
     *
     * Scale shape: rides the zero-shuffle scorer; the matrix is ONE
     * map-side-combined aggregate bounded by |langs|·(|langs|+1)
-    * cells; the row-total window runs over that tiny frame. */
-  def langIdEval(spark: SparkSession, dir: String): DataFrame =
-    langIdEvalOf(Tables.documents(spark, dir))
-
-  /** [[langIdEval]] over any (doc_id, text, lang) frame. */
+    * cells; the row-total window runs over that tiny frame. Input: any
+    * (doc_id, text, lang) frame. */
   def langIdEvalOf(docs: DataFrame): DataFrame =
     langIdOf(docs)
       .groupBy(col("lang"), col("pred_lang"))
@@ -121,7 +119,8 @@ object TextAnalysis {
 
   /** Quality score: stopword ratio, mean token length, and a composite
     * — all ppm integers. The shape every corpus-filtering pass needs:
-    * per-doc, embarrassingly parallel. */
+    * per-doc, embarrassingly parallel. Kept beside [[qualityOf]]
+    * because the `perfbench` curation calls it. */
   def qualityScore(spark: SparkSession, dir: String): DataFrame =
     qualityOf(Tables.documents(spark, dir))
 
@@ -200,11 +199,8 @@ object TextAnalysis {
   val BpePattern = " ?[a-z]+| ?[0-9]+| ?[^a-z0-9 ]+"
 
   /** Token counting: regex word tokens, whitespace tokens, BPE-ish
-    * pre-tokens, distinct tokens, type-token ratio (ppm) — per doc. */
-  def tokenStats(spark: SparkSession, dir: String): DataFrame =
-    tokenStatsOf(Tables.documents(spark, dir))
-
-  /** [[tokenStats]] over any (doc_id, text) frame — public for tests. */
+    * pre-tokens, distinct tokens, type-token ratio (ppm) — per doc.
+    * Input: any (doc_id, text) frame. */
   def tokenStatsOf(docs: DataFrame): DataFrame = {
     val toks = Tokenizer.tokens(col("text"))
     docs
@@ -236,24 +232,19 @@ object TextAnalysis {
 
   /** Content fingerprint: md5 over the sorted distinct token set —
     * invariant to word order and repetition (a cheap canonical-form
-    * document hash, the batch analog of a rolling-hash fingerprint). */
-  def fingerprint(spark: SparkSession, dir: String): DataFrame =
-    fingerprintOf(Tables.documents(spark, dir))
-
-  /** [[fingerprint]] over any (doc_id, text) frame — public for tests.
-    * `roll_fp` is a winnowing-style rolling fingerprint: the minimum
-    * 48-bit hash over all character 8-grams — stable under small edits
-    * anywhere outside the minimizing window (the batch analog of a
-    * rolling-hash document sketch).
-    *
-    * Typed `mapPartitions`, not Column expressions: the per-position
-    * md5 ran as an INTERPRETED `transform` HOF — one interpreted md5
-    * per character of every document, the slowest row in the LLM bench
-    * block (4.8 s → measured below 1 s at sf0.1). Same escalation
-    * rationale as the LSH signature stage (PLANS.md #7); hash
-    * semantics are bit-identical (md5 over UTF-8, first 48 bits / 16
-    * hex nibbles — all tokens ASCII by construction) and remain
-    * oracle-checked. Per-doc linear work, embarrassingly parallel. */
+    * document hash, the batch analog of a rolling-hash fingerprint).
+    * Input: any (doc_id, text) frame. `roll_fp` is a winnowing-style
+    * rolling fingerprint: the minimum 48-bit hash over all character
+    * 8-grams — stable under small edits anywhere outside the minimizing
+    * window (the batch analog of a rolling-hash document sketch). Typed
+    * `mapPartitions`, not Column expressions: the per-position md5 ran
+    * as an INTERPRETED `transform` HOF — one interpreted md5 per
+    * character of every document, the slowest row in the LLM bench block
+    * (4.8 s → measured below 1 s at sf0.1). Same escalation rationale as
+    * the LSH signature stage (PLANS.md #7); hash semantics are
+    * bit-identical (md5 over UTF-8, first 48 bits / 16 hex nibbles — all
+    * tokens ASCII by construction) and remain oracle-checked. Per-doc
+    * linear work, embarrassingly parallel. */
   def fingerprintOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     docs.select(col("doc_id"), col("text")).as[(Long, String)]
@@ -321,7 +312,7 @@ object TextAnalysis {
 
   // ---- per-doc keyword extraction ---------------------------------
 
-  /** Keywords reported per document by [[docKeywords]]. */
+  /** Keywords reported per document by [[docKeywordsOf]]. */
   val KeywordsPerDoc = 3
 
   /** Per-document keyword extraction, the TF-IDF idea restated in
@@ -339,12 +330,7 @@ object TextAnalysis {
     * ultra-common terms is bounded by each doc contributing one row
     * per distinct term, and AQE splits what remains); the final
     * per-doc top-k runs as WindowGroupLimit — map-side heaps, no full
-    * sort of any partition. */
-  def docKeywords(spark: SparkSession, dir: String): DataFrame =
-    docKeywordsOf(Tables.documents(spark, dir))
-
-  /** [[docKeywords]] over any (doc_id, text) frame — public for
-    * tests. */
+    * sort of any partition. Input: any (doc_id, text) frame. */
   def docKeywordsOf(docs: DataFrame): DataFrame = {
     val tf = docs
       .select(col("doc_id"), Tokenizer.explodeTokens(col("text")).as("term"))

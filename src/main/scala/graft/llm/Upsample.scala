@@ -7,7 +7,7 @@ import graft.Tables
 import graft.func.{Exprs, OracleSql}
 
 /** Fractional epoch upsampling — the mixture side the down-sampling
-  * operators (CorpusOps.mixtureSample / mixtureTemperature) don't
+  * operators (CorpusOps.mixtureSampleOf / mixtureTemperatureOf) don't
   * cover: when a language's target weight EXCEEDS its natural share,
   * training data pipelines repeat its documents a fractional number of
   * epochs (the Llama/Gopher "epochs per source" knob). A factor of
@@ -37,12 +37,7 @@ object Upsample {
 
   /** Per-language repeat factor in ppm (≥ [[Ppm]] = at least 1×). */
   def factorPpm(lang: Column): Column =
-    lit(Ppm) +
-      conv(substring(md5(concat(lit("up:"), lang)), 1, 8), 16, 10)
-        .cast("long") % FactorSpanPpm
-
-  def upsample(spark: SparkSession, dir: String): DataFrame =
-    upsampleOf(Tables.documents(spark, dir))
+    lit(Ppm) + Exprs.md5Nibbles(concat(lit("up:"), lang), 8) % FactorSpanPpm
 
   /** The epoch expansion over ANY frame carrying (doc_id, lang) —
     * payload columns ride along untouched, which is what lets the
@@ -58,7 +53,7 @@ object Upsample {
       .withColumn("epoch", explode(sequence(lit(1L), col("reps"))))
       .drop("fppm", "reps")
 
-  /** [[upsample]] over any (doc_id, lang) frame — public for tests.
+  /** Upsampled units over any (doc_id, lang) frame.
     * One output row per (doc, epoch); epoch is 1-based. */
   def upsampleOf(docs: DataFrame): DataFrame =
     upsampleUnitsOf(docs.select(col("doc_id"), col("lang")))
@@ -94,12 +89,9 @@ object Upsample {
     * Scale shape (100 TB): tokenization is counted ONCE per document
     * before the ≤3× epoch fan-out (the expansion replicates a LONG,
     * not the text), then one window shuffle keyed (lang, shard) —
-    * the [[CorpusOps.packingSharded]] plan unchanged, partitions
-    * bounded by langs × [[CorpusOps.PackShards]] shards. */
-  def packingUpsampled(spark: SparkSession, dir: String): DataFrame =
-    packingUpsampledOf(Tables.documents(spark, dir))
-
-  /** [[packingUpsampled]] over any (doc_id, lang, text) frame. */
+    * the [[CorpusOps.packingShardedOf]] plan unchanged, partitions
+    * bounded by langs × [[CorpusOps.PackShards]] shards. Input: any
+    * (doc_id, lang, text) frame. */
   def packingUpsampledOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val counted = docs.select(col("doc_id"), col("lang"),

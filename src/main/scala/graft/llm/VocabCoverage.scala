@@ -33,11 +33,8 @@ object VocabCoverage {
     * value every word contributes the same `freq` to the cumsum, so
     * rank = word_offset + row_number and cum = mass_offset +
     * freq × row_number under a freq-KEYED window — the only
-    * vocabulary-sized exchange is a hash partitioning on freq. */
-  def vocabCoverage(spark: SparkSession, dir: String): DataFrame =
-    vocabCoverageOf(Tables.documents(spark, dir))
-
-  /** [[vocabCoverage]] over any frame with a `text` column. */
+    * vocabulary-sized exchange is a hash partitioning on freq. Input:
+    * any frame with a `text` column. */
   def vocabCoverageOf(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // LAZY localCheckpoint: the vocab-bounded count frame feeds both
@@ -80,7 +77,7 @@ object VocabCoverage {
        |FROM v""".stripMargin
   }
 
-  /** Decile count for the [[vocabGrowth]] curve. */
+  /** Decile count for the [[vocabGrowthOf]] curve. */
   val GrowthDeciles = 10L
 
   /** Heaps-law vocabulary growth curve: sweep the corpus in ingest
@@ -95,11 +92,7 @@ object VocabCoverage {
     * device — ONE word-keyed map-side-combined min aggregate (the
     * corpus collapses to the vocabulary before any exchange); the
     * decile rollup and the 10-row cumulative window are
-    * vocabulary-then-constant sized. */
-  def vocabGrowth(spark: SparkSession, dir: String): DataFrame =
-    vocabGrowthOf(Tables.documents(spark, dir))
-
-  /** [[vocabGrowth]] over any (doc_id, text) frame. */
+    * vocabulary-then-constant sized. Input: any (doc_id, text) frame. */
   def vocabGrowthOf(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     import org.apache.spark.sql.expressions.Window
@@ -143,15 +136,11 @@ object VocabCoverage {
     * docs — ANSI-safe, matches DuckDB `x // 0 = NULL`).
     *
     * Scale shape: the vocabulary is built by the same collapsed
-    * aggregate as [[vocabCoverage]] and its top-[[VocabBudget]] rows
+    * aggregate as [[vocabCoverageOf]] and its top-[[VocabBudget]] rows
     * are a `TakeOrderedAndProject` (no global sort materialized); the
     * budget-sized keep-set is BROADCAST back against the exploded
     * corpus, so the per-doc accounting costs one doc_id-keyed shuffle
-    * and zero token-keyed ones. */
-  def oovRate(spark: SparkSession, dir: String): DataFrame =
-    oovRateOf(Tables.documents(spark, dir))
-
-  /** [[oovRate]] over any (doc_id, text) frame. */
+    * and zero token-keyed ones. Input: any (doc_id, text) frame. */
   def oovRateOf(docs: DataFrame): DataFrame = {
     // LAZY localCheckpoint: the vocabulary head and the per-doc OOV
     // scoring each re-ran the tokenize pass (r20 plan audit:

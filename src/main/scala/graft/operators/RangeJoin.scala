@@ -739,7 +739,7 @@ object RangeJoin {
     * real volume gets real parallelism from the same rule. */
   val StreamStatePartTargetRows = 8192L
 
-  /** State-partition count for [[bandOverlapStreamImpl]] derived from
+  /** State-partition count for [[bandOverlapStreamQuery]] derived from
     * the estimated buffered-row census (r20-VERDICT task 2 — replaces
     * the hand-pinned 8): ceil(rows / [[StreamStatePartTargetRows]]),
     * clamped to [1, 1024] (the cap bounds scheduler fan-out; at 1024
@@ -781,31 +781,24 @@ object RangeJoin {
     * aggregate is a LAZY frame over the run's parquet. The
     * driver-side collect of the 20k-row band table remains
     * demonstration harness, not the production path (a deployment
-    * reads `readStream`; the operator itself never collects). */
-  def bandOverlapStreamQuery(spark: SparkSession, dir: String): DataFrame =
-    bandOverlapStreamImpl(spark, dir, saltLeft = 1, saltRight = 1)
-
-  /** [[bandOverlapStreamQuery]] through the 2-D salt GRID (fixed 2×2)
-    * — same oracle as the batch board query: the driver's hash compare
-    * is the cross-engine proof that grid placement (left rows hashed
-    * into grid rows and replicated across columns, rights the
-    * transpose, responsibility rule untouched) never changes the
-    * streaming answer — the invariance the crowd mitigation's
-    * correctness leans on, proven here on real data rather than only
-    * on the spec's synthetic crowd. */
-  def bandOverlapStreamSaltedQuery(spark: SparkSession,
-      dir: String): DataFrame =
-    bandOverlapStreamImpl(spark, dir, saltLeft = 2, saltRight = 2)
-
-  private def bandOverlapStreamImpl(spark: SparkSession, dir: String,
-      saltLeft: Int, saltRight: Int): DataFrame = {
+    * reads `readStream`; the operator itself never collects).
+    *
+    * `salt` > 1 runs the stream through the salt×salt 2-D salt GRID
+    * (board `q_range_band_overlap_stream_salted`, salt 2) under the
+    * same oracle: the driver's hash compare is the cross-engine proof
+    * that grid placement (left rows hashed into grid rows and
+    * replicated across columns, rights the transpose, responsibility
+    * rule untouched) never changes the streaming answer — the
+    * invariance the crowd mitigation's correctness leans on, proven
+    * here on real data rather than only on the spec's synthetic
+    * crowd. */
+  def bandOverlapStreamQuery(spark: SparkSession, dir: String,
+      salt: Int = 1): DataFrame = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val rows = {
-      import spark.implicits._
-      priceBands(spark, dir, "pk", "lo", "hi")
-        .select("pk", "lo", "hi").as[(Long, Long, Long)]
-        .collect().sortBy(_._3)
-    }
+    import spark.implicits._
+    val rows = priceBands(spark, dir, "pk", "lo", "hi")
+      .select("pk", "lo", "hi").as[(Long, Long, Long)]
+      .collect().sortBy(_._3)
     // degenerate empty corpus: no bands → no stream to run (and no
     // derived span, and no committed sink files to read back) — the
     // empty aggregate frame directly (review r19; the `when` keeps
@@ -815,26 +808,23 @@ object RangeJoin {
       return spark.range(0).select(
         when(col("id") >= 0, col("id")).as("p_partkey"),
         col("id").as("overlap_ct"))
-    // the stream leg runs on a per-query SCOPED session whose shuffle-
-    // partition count — the stateful operator's state-partition count,
-    // fixed at query start from this conf — is DERIVED from the band
-    // census (r20-VERDICT task 2; the r19/r20 rounds pinned 8 from an
-    // A/B at sf0.1, a constant that could not follow the data): EVERY
-    // micro-batch commits one HDFS-store delta file per partition, a
-    // fixed per-partition cost, so the count must scale with the state
-    // it amortizes — estimated buffered rows = Σ buckets per interval
-    // × each side's grid replication — not with the session's core
-    // count. At sf0.1 (~20k bands × ~1 bucket × 2 sides ≈ 40k rows)
-    // this derives 5, parity with the hand-pinned 8 (A/B in
-    // OPTIMIZATION_r21.md); at a deployment's real volume the same
-    // derivation scales the count up with the state.
+    // the stream leg's shuffle-partition count — the stateful
+    // operator's state-partition count, fixed at query start from this
+    // conf — is DERIVED from the band census (r20-VERDICT task 2; the
+    // r19/r20 rounds pinned 8 from an A/B at sf0.1, a constant that
+    // could not follow the data): EVERY micro-batch commits one
+    // HDFS-store delta file per partition, a fixed per-partition cost,
+    // so the count must scale with the state it amortizes — estimated
+    // buffered rows = Σ buckets per interval × each side's grid
+    // replication — not with the session's core count. At sf0.1 (~20k
+    // bands × ~1 bucket × 2 sides ≈ 40k rows) this derives 5, parity
+    // with the hand-pinned 8 (A/B in OPTIMIZATION_r21.md); at a
+    // deployment's real volume the same derivation scales the count up
+    // with the state. The stream starts, drains and stops inside
+    // withSqlConfs, so the caller's conf is restored on return.
     val estStateRows = rows.iterator.map { case (_, lo, hi) =>
-      (hi - lo) / BucketWidth + 1 }.sum * (saltLeft + saltRight)
-    val ss: SparkSession = graft.func.Confs.scopedSession(spark,
-      Seq("spark.sql.shuffle.partitions" ->
-        overlapStreamStateParts(estStateRows).toString))
-    import ss.implicits._
-    implicit val sqlc: org.apache.spark.sql.SQLContext = ss.sqlContext
+      (hi - lo) / BucketWidth + 1 }.sum * (2 * salt)
+    implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
     val maxSpan = rows.iterator.map(r => r._3 - r._2).max
     val ts = rows.map { case (pk, lo, hi) =>
       (pk, new java.sql.Timestamp(lo), new java.sql.Timestamp(hi)) }
@@ -846,30 +836,33 @@ object RangeJoin {
     val base = graft.func.TempDirs.cached("bandoverlapstream")
     val run = streamRuns.incrementAndGet()
     val (out, ckpt) = (s"$base/run$run/out", s"$base/run$run/ckpt")
-    val q = graft.streaming.StreamJobs.intervalOverlapStream(
-        lSrc.toDF().toDF("id", "lo", "hi"),
-        rSrc.toDF().toDF("id", "lo", "hi"),
-        "id", "lo", "hi", "id", "lo", "hi",
-        bucketWidthMs = BucketWidth, maxSpanMs = maxSpan,
-        delay = "1 second", saltLeft = saltLeft, saltRight = saltRight)
-      // the query's l_id < r_id predicate applied BEFORE the sink
-      // (r21, guide §2.3 shuffle/IO fewer bytes): both stream sides
-      // carry the same band set, so the raw yield holds every
-      // unordered pair TWICE plus the 1-per-band self-pairs — at
-      // sf0.1 that was 15.0M sink rows of which the read-back filter
-      // kept 7.5M. Filtering inside the streaming query halves the
-      // encode + parquet write + read-back; the read-back filter
-      // stays (idempotent on the pre-filtered rows) so the returned
-      // frame's contract is visible at one site.
-      .filter(col("l_id") < col("r_id"))
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    try {
-      lSrc.addData(ts.toIndexedSeq)
-      rSrc.addData(ts.toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
+    val stateParts = overlapStreamStateParts(estStateRows).toString
+    graft.func.Confs.withSqlConfs(spark)("spark.sql.shuffle.partitions" -> stateParts) {
+      val q = graft.streaming.StreamJobs.intervalOverlapStream(
+          lSrc.toDF().toDF("id", "lo", "hi"),
+          rSrc.toDF().toDF("id", "lo", "hi"),
+          "id", "lo", "hi", "id", "lo", "hi",
+          bucketWidthMs = BucketWidth, maxSpanMs = maxSpan,
+          delay = "1 second", saltLeft = salt, saltRight = salt)
+        // the query's l_id < r_id predicate applied BEFORE the sink
+        // (r21, guide §2.3 shuffle/IO fewer bytes): both stream sides
+        // carry the same band set, so the raw yield holds every
+        // unordered pair TWICE plus the 1-per-band self-pairs — at
+        // sf0.1 that was 15.0M sink rows of which the read-back filter
+        // kept 7.5M. Filtering inside the streaming query halves the
+        // encode + parquet write + read-back; the read-back filter
+        // stays (idempotent on the pre-filtered rows) so the returned
+        // frame's contract is visible at one site.
+        .filter(col("l_id") < col("r_id"))
+        .writeStream.format("parquet")
+        .option("path", out).option("checkpointLocation", ckpt)
+        .outputMode("append").start()
+      try {
+        lSrc.addData(ts.toIndexedSeq)
+        rSrc.addData(ts.toIndexedSeq)
+        q.processAllAvailable()
+      } finally q.stop()
+    }
     spark.read.schema("l_id LONG, r_id LONG").parquet(out)
       .filter(col("l_id") < col("r_id"))
       .groupBy(col("l_id").as("p_partkey"))

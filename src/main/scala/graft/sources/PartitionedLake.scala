@@ -112,12 +112,6 @@ object PartitionedLake {
         max(col("event_id")).as("max_event"))
   }
 
-  def pruneParquet(spark: SparkSession, dir: String): DataFrame =
-    pruneQuery(spark, dir, "parquet")
-
-  def pruneOrc(spark: SparkSession, dir: String): DataFrame =
-    pruneQuery(spark, dir, "orc")
-
   /** DYNAMIC partition pruning — the join-derived twin of
     * [[pruneQuery]]'s static elimination, and the access pattern the
     * reference's star schema actually runs at 100 TB: a fact scan
@@ -179,11 +173,10 @@ object PartitionedLake {
       .select("d_dt")
   }
 
+  /** [[dppQuery]] over the parquet lake, kept as its own entry point
+    * because the `perfbench` warehouse build calls it. */
   def dppParquet(spark: SparkSession, dir: String): DataFrame =
     dppQuery(spark, dir, "parquet")
-
-  def dppOrc(spark: SparkSession, dir: String): DataFrame =
-    dppQuery(spark, dir, "orc")
 
   /** Nation key of the selective customer dim in [[starQuery]] —
     * chosen non-empty at every sf (~1/25 of customers, ~9% of the

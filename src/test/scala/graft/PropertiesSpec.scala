@@ -163,7 +163,7 @@ class PropertiesSpec extends SparkSpec {
   }
 
   test("attribution conserves purchase mass and value") {
-    val out = ads.EventFlows.attribution(spark, Sf).collect()
+    val out = ads.EventFlows.attributionOf(Tables.events(spark, Sf)).collect()
     val ev = Tables.events(spark, Sf)
       .filter(col("event_type") === "purchase")
       .agg(count(lit(1)), func.Exprs.sumCents(col("value"))).head()
@@ -177,7 +177,7 @@ class PropertiesSpec extends SparkSpec {
     // no dropped doc may out-rank a kept doc: every dropped score is
     // ≤ every kept score, with equality only at the boundary score
     // (where doc_id ties split)
-    val sel = llm.CorpusLayout.budgetSelect(spark, Sf).collect()
+    val sel = llm.CorpusLayout.budgetSelectOf(Tables.documents(spark, Sf)).collect()
     val kept = sel.filter(_.getLong(4) == 1L)
     val dropped = sel.filter(_.getLong(4) == 0L)
     assert(kept.nonEmpty && dropped.nonEmpty)

@@ -4,12 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One SparkSession builder ([[Session]]), one SparkListener
   * ([[Metrics]]), one as-of core per execution mode, one operator per
-  * range-join form, no forwarding overload ladders in `graft.llm` and
-  * four environment variables in main code. Six builders with four
-  * core defaults, five near-identical listeners, five as-of copies,
-  * salted and auto-width twins beside the range joins and two
-  * gate-softening env knobs grew one copy at a time; grep the main
-  * source tree so a new copy fails here instead. */
+  * range-join form, no forwarding overload ladders in `graft.llm`, no
+  * `(spark, dir)` table-binding twins of frame operators and four
+  * environment variables in main code. Six builders with four core
+  * defaults, five near-identical listeners, five as-of copies, salted
+  * and auto-width twins beside the range joins, 80 table-binding twins
+  * and two gate-softening env knobs grew one copy at a time; grep the
+  * main source tree so a new copy fails here instead. */
 class SingleSiteSpec extends AnyFunSuite {
   private val root = new java.io.File("src/main/scala")
 
@@ -99,6 +100,28 @@ class SingleSiteSpec extends AnyFunSuite {
       }
     }
     assert(ladders.isEmpty, s"fold into default arguments: $ladders")
+  }
+
+  test("no (spark, dir) forwarding twin of a frame operator") {
+    // `def x(spark, dir) = xOf(Tables.t(spark, dir))` is a second entry
+    // point whose only job is to pick a table; the board
+    // (SparkEntry.board) binds tables, so each operator keeps its one
+    // frame-level entry point. The perfbench harness calls these four.
+    val harness = Set("langId", "qualityScore", "ngramJaccardPrefix",
+      "dppParquet")
+    val table = """(?:graft\.)?Tables\.\w+\(\s*spark\s*,\s*dir\s*\)"""
+    val twin = ("""def\s+(\w+)\s*\(\s*spark\s*:\s*SparkSession\s*,""" +
+      """\s*dir\s*:\s*String\s*\)\s*:\s*DataFrame\s*=\s*""" +
+      """(?:\w+\.)*\w+(?:Of|From)\(\s*(?:""" + table +
+      """|(?:\w+\.)*collapsedDocs\(\s*""" + table + """\s*\))\s*\)""").r
+    val twins = mainSources.flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      twin.findAllMatchIn(src).map(m => m.group(1) -> f.getName)
+    }
+    assert(twins.map(_._1).toSet.contains("langId"),
+      s"the pattern no longer sees the known harness twins: $twins")
+    val extra = twins.filterNot(t => harness(t._1))
+    assert(extra.isEmpty, s"bind the table in SparkEntry.board instead: $extra")
   }
 
   test("main code reads only the four documented environment variables") {

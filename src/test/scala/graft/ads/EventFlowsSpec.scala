@@ -3,7 +3,7 @@ package graft.ads
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 
 class EventFlowsSpec extends SparkSpec {
   import spark.implicits._
@@ -36,7 +36,7 @@ class EventFlowsSpec extends SparkSpec {
   }
 
   test("funnel at Sf: depth is monotone-consistent with stage nulls") {
-    val rows = EventFlows.funnel(spark, Sf).collect()
+    val rows = EventFlows.funnelOf(Tables.events(spark, Sf)).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val reached = Seq(1, 2, 3).map(i => !r.isNullAt(i))
@@ -88,7 +88,7 @@ class EventFlowsSpec extends SparkSpec {
   }
 
   test("sessionize: one exchange — the session groupBy reuses the window partitioning") {
-    val plan = EventFlows.sessionize(spark, Sf)
+    val plan = EventFlows.sessionizeOf(Tables.events(spark, Sf))
       .queryExecution.executedPlan.toString
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
     assert(exchanges === 1,
@@ -112,7 +112,7 @@ class EventFlowsSpec extends SparkSpec {
   }
 
   test("activeUsers at Sf: dau <= wau <= mau, and mau spans the month") {
-    val rows = EventFlows.activeUsers(spark, Sf).collect()
+    val rows = EventFlows.activeUsersOf(Tables.events(spark, Sf)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(rows.nonEmpty)
     rows.foreach { case (d, dau, wau, mau) =>
@@ -124,7 +124,7 @@ class EventFlowsSpec extends SparkSpec {
   }
 
   test("activeUsers plan: the trailing-window expansion is a broadcast join") {
-    val plan = EventFlows.activeUsers(spark, Sf)
+    val plan = EventFlows.activeUsersOf(Tables.events(spark, Sf))
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastNestedLoopJoin"),
       s"the O(history) day list must broadcast for the range predicate:\n$plan")
@@ -134,7 +134,7 @@ class EventFlowsSpec extends SparkSpec {
   }
 
   test("retention at Sf: day-0 rows are 1e6 ppm and dominate every offset") {
-    val rows = EventFlows.retention(spark, Sf).collect()
+    val rows = EventFlows.retentionOf(Tables.events(spark, Sf)).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getLong(2), r.getLong(3))))
     assert(rows.nonEmpty)
     val byCohort = rows.groupBy(_._1._1)
@@ -151,7 +151,7 @@ class EventFlowsSpec extends SparkSpec {
   }
 
   test("hourlyAnomaly: integer 2-sigma test matches float recompute") {
-    val out = EventFlows.hourlyAnomaly(spark, Sf).collect()
+    val out = EventFlows.hourlyAnomalyOf(Tables.events(spark, Sf)).collect()
     assert(out.nonEmpty)
     val byType = out.groupBy(_.getString(0))
     byType.foreach { case (_, rows) =>
@@ -192,7 +192,7 @@ class EventFlowsSpec extends SparkSpec {
   }
 
   test("attribution plan: one user-keyed window, no self-join") {
-    val df = EventFlows.attribution(spark, Sf)
+    val df = EventFlows.attributionOf(Tables.events(spark, Sf))
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("hashpartitioning(user_id"),
       s"carry-forward must be a user-keyed window:\n$plan")

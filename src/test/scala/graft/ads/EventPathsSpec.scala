@@ -1,7 +1,7 @@
 package graft.ads
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 
 class EventPathsSpec extends SparkSpec {
   import spark.implicits._
@@ -48,7 +48,7 @@ class EventPathsSpec extends SparkSpec {
   }
 
   test("transitions on the events table: shares sum to ~1e6 per row") {
-    val out = EventPaths.transitions(spark, Sf)
+    val out = EventPaths.transitionsOf(Tables.events(spark, Sf))
       .groupBy("prev_type").agg(sum("share_ppm").as("s"), count(lit(1)).as("k"))
       .as[(String, Long, Long)].collect()
     assert(out.nonEmpty)

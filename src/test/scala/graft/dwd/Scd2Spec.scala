@@ -1,7 +1,7 @@
 package graft.dwd
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 
 class Scd2Spec extends SparkSpec {
   import spark.implicits._
@@ -28,7 +28,7 @@ class Scd2Spec extends SparkSpec {
   }
 
   test("scd2 at Sf: intervals tile exactly, one current row per user") {
-    val out = Scd2.scd2(spark, Sf).cache()
+    val out = Scd2.scd2Of(Tables.events(spark, Sf)).cache()
     val users = graft.Tables.events(spark, Sf)
       .select("user_id").distinct().count()
     assert(out.filter(col("is_current")).count() === users,
@@ -50,7 +50,7 @@ class Scd2Spec extends SparkSpec {
   }
 
   test("scd2: one hash exchange serves both window passes") {
-    val plan = Scd2.scd2(spark, Sf).queryExecution.executedPlan.toString
+    val plan = Scd2.scd2Of(Tables.events(spark, Sf)).queryExecution.executedPlan.toString
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).size
     assert(exchanges === 1, plan.take(2000))
   }
@@ -74,7 +74,7 @@ class Scd2Spec extends SparkSpec {
   test("pit at Sf: every purchase appears exactly once") {
     val purchases = graft.Tables.events(spark, Sf)
       .filter(col("event_type") === "purchase").count()
-    val out = Scd2.pit(spark, Sf).cache()
+    val out = Scd2.pitOf(Tables.events(spark, Sf)).cache()
     assert(out.count() === purchases)
     assert(out.select("event_id").distinct().count() === purchases)
     // a matched state is never 'purchase' (states built without them)
@@ -106,7 +106,7 @@ class Scd2Spec extends SparkSpec {
       col("o_orderkey") % 97 =!= 3).count()
     val changed = keys.filter(col("o_orderkey") % 11 === 0 &&
       col("o_orderkey") % 97 =!= 3 && col("o_orderkey") % 89 =!= 5).count()
-    val got = Scd2.snapshotDiff(spark, Sf)
+    val got = Scd2.snapshotDiffOf(Tables.orders(spark, Sf))
       .groupBy("change_type").agg(count(lit(1)).as("ct"))
       .as[(String, Long)].collect().toMap
     assert(got.getOrElse("added", 0L) === added)

@@ -1,7 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 
 class CorpusLayoutSpec extends SparkSpec {
   import spark.implicits._
@@ -9,7 +9,7 @@ class CorpusLayoutSpec extends SparkSpec {
   // ---- corpus shuffle ----------------------------------------------
 
   test("corpusShuffle: positions are a permutation, dense per shard") {
-    val out = CorpusLayout.corpusShuffle(spark, Sf)
+    val out = CorpusLayout.corpusShuffleOf(Tables.documents(spark, Sf))
       .select("doc_id", "shard", "pos").as[(Long, Long, Long)].collect()
     assert(out.length === 500)
     assert(out.map(_._1).distinct.length === 500, "one row per doc")
@@ -22,9 +22,9 @@ class CorpusLayoutSpec extends SparkSpec {
   }
 
   test("corpusShuffle: order is reproducible and not the input order") {
-    val a = CorpusLayout.corpusShuffle(spark, Sf)
+    val a = CorpusLayout.corpusShuffleOf(Tables.documents(spark, Sf))
       .orderBy("shard", "pos").as[(Long, String, Long, Long)].collect()
-    val b = CorpusLayout.corpusShuffle(spark, Sf)
+    val b = CorpusLayout.corpusShuffleOf(Tables.documents(spark, Sf))
       .orderBy("shard", "pos").as[(Long, String, Long, Long)].collect()
     assert(a.toSeq === b.toSeq, "deterministic across runs")
     // within some shard, doc_ids must NOT be ascending (that would
@@ -54,7 +54,7 @@ class CorpusLayoutSpec extends SparkSpec {
   }
 
   test("lengthHist at Sf: totals equal the corpus") {
-    val out = CorpusLayout.lengthHist(spark, Sf)
+    val out = CorpusLayout.lengthHistOf(Tables.documents(spark, Sf))
       .agg(sum("doc_ct"), sum("token_sum")).as[(Long, Long)].head()
     val docs = graft.Tables.documents(spark, Sf)
     val expDocs = docs.count()
@@ -67,7 +67,7 @@ class CorpusLayoutSpec extends SparkSpec {
   // ---- pack utilization --------------------------------------------
 
   test("packUtil: agrees with a driver recompute over the packing") {
-    val packed = CorpusOps.packingSharded(spark, Sf)
+    val packed = CorpusOps.packingShardedOf(Tables.documents(spark, Sf))
       .select("lang", "shard", "n_tokens", "pack_id", "pack_offset")
       .as[(String, Long, Long, Long, Long)].collect()
     val exp = packed.groupBy(r => (r._1, r._2)).map { case (k, rows) =>
@@ -136,7 +136,7 @@ class SourceOverlapSpec extends SparkSpec {
   }
 
   test("sourceOverlap at Sf: bounded output, symmetric-free, nonzero") {
-    val out = Dedup.sourceOverlap(spark, Sf)
+    val out = Dedup.sourceOverlapOf(Tables.documents(spark, Sf))
       .as[(String, String, Long)].collect()
     assert(out.nonEmpty, "synthetic corpus must share rare shingles")
     assert(out.forall { case (a, b, c) => a < b && c > 0 })
@@ -146,7 +146,7 @@ class SourceOverlapSpec extends SparkSpec {
   }
 
   test("sourceOverlap at Sf: ONE corpus-scale shuffle, no self-join") {
-    val plan = Dedup.sourceOverlap(spark, Sf)
+    val plan = Dedup.sourceOverlapOf(Tables.documents(spark, Sf))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("SortMergeJoin") && !plan.contains("HashJoin"),
       s"source pairs must expand array-side, not via posting self-join:\n" +
@@ -181,7 +181,7 @@ class SplitAllocSpec extends SparkSpec {
   }
 
   test("splitAlloc at Sf: quotas sum to the budget exactly") {
-    val out = CorpusLayout.splitAlloc(spark, Sf)
+    val out = CorpusLayout.splitAllocOf(Tables.documents(spark, Sf))
       .as[(String, Long, Long)].collect()
     assert(out.map(_._3).sum === CorpusLayout.AllocBudget)
     // proportionality within one token of the exact share
@@ -238,7 +238,7 @@ class CollocSpec extends SparkSpec {
   }
 
   test("pmi at Sf: broadcast unigrams, take-ordered top-k (plan shape)") {
-    val qe = Colloc.pmi(spark, Sf).queryExecution.executedPlan.toString
+    val qe = Colloc.pmiOf(Tables.documents(spark, Sf)).queryExecution.executedPlan.toString
     assert(qe.contains("TakeOrderedAndProject"),
       s"global top-k must not be a full sort exchange:\n$qe")
     assert("BroadcastHashJoin".r.findAllIn(qe).length >= 2,
@@ -266,13 +266,13 @@ class CollocSpec extends SparkSpec {
   }
 
   test("topNgrams at Sf: per-lang top-k, WindowGroupLimit plan") {
-    val out = Colloc.topNgrams(spark, Sf).cache()
+    val out = Colloc.topNgramsOf(Tables.documents(spark, Sf)).cache()
     val langs = graft.Tables.documents(spark, Sf)
       .select("lang").distinct().count()
     assert(out.count() === langs * Colloc.TopNgramsPerLang,
       "every language has ≥ k bigram types at this sf")
     // rank-1 count per lang equals a direct recompute of the max count
-    val plan = Colloc.topNgrams(spark, Sf)
+    val plan = Colloc.topNgramsOf(Tables.documents(spark, Sf))
       .queryExecution.executedPlan.toString
     assert(plan.contains("WindowGroupLimit"), plan.take(2000))
   }

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 
 class CorpusOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -87,7 +87,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("packing: next-fit by running token offset, per-lang restart") {
-    val out = CorpusOps.packing(spark, Sf)
+    val out = CorpusOps.packingOf(Tables.documents(spark, Sf))
       .select("lang", "doc_id", "n_tokens", "cum_tokens", "pack_id", "pack_offset")
       .as[(String, Long, Long, Long, Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.sortBy(_._2)).toMap
@@ -234,7 +234,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("mixture sampling: deterministic, bucket-consistent, rate-true") {
-    val rows = CorpusOps.mixtureSample(spark, Sf)
+    val rows = CorpusOps.mixtureSampleOf(Tables.documents(spark, Sf))
       .select("lang", "mix_bucket", "rate_ppm", "sampled")
       .as[(String, Long, Long, Int)].collect()
     assert(rows.nonEmpty)
@@ -253,14 +253,14 @@ class CorpusOpsSpec extends SparkSpec {
         s"$lang realized $realized vs configured $configured")
     }
     // rerun is bit-identical (pure projection of doc_id)
-    val again = CorpusOps.mixtureSample(spark, Sf)
+    val again = CorpusOps.mixtureSampleOf(Tables.documents(spark, Sf))
       .select("lang", "mix_bucket", "rate_ppm", "sampled")
       .as[(String, Long, Long, Int)].collect()
     assert(rows.sorted.sameElements(again.sorted))
   }
 
   test("stratified mixture: cascade rates, same dice as lang-only form") {
-    val rows = CorpusOps.mixtureSampleStratified(spark, Sf)
+    val rows = CorpusOps.mixtureSampleStratifiedOf(Tables.documents(spark, Sf))
       .select("doc_id", "lang", "source", "mix_bucket", "rate_ppm", "sampled")
       .as[(Long, String, String, Long, Long, Int)].collect()
     assert(rows.nonEmpty)
@@ -276,7 +276,7 @@ class CorpusOpsSpec extends SparkSpec {
     assert(rows.exists(r => stratum.contains((r._2, r._3))))
     // identical salted bucket as the lang-only form: re-tuning weights
     // never re-rolls the dice, so non-overridden strata agree exactly
-    val langOnly = CorpusOps.mixtureSample(spark, Sf)
+    val langOnly = CorpusOps.mixtureSampleOf(Tables.documents(spark, Sf))
       .select("doc_id", "mix_bucket", "sampled")
       .as[(Long, Long, Int)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
@@ -351,7 +351,7 @@ class CorpusOpsSpec extends SparkSpec {
     assert(out(2L)(0)._4 === toks33.take(size).mkString(" "))
     assert(out(2L)(1)._4 === toks33.drop(stride).mkString(" "))
     // real corpus: every token position covered, overlaps consistent
-    CorpusOps.chunk(spark, Sf).select("doc_id", "chunk_id", "n_chunk_tokens")
+    CorpusOps.chunkOf(Tables.documents(spark, Sf)).select("doc_id", "chunk_id", "n_chunk_tokens")
       .as[(Long, Long, Long)].collect()
       .groupBy(_._1).foreach { case (_, chunks) =>
         val sorted = chunks.sortBy(_._2)
@@ -409,7 +409,7 @@ class CorpusOpsSpec extends SparkSpec {
     // recompute the chain from the individual operators' outputs
     val keptIds = Dedup.keepList(spark, Sf)
       .filter(col("kept") === 1).select("doc_id").as[Long].collect().toSet
-    val sampledIds = CorpusOps.mixtureSample(spark, Sf)
+    val sampledIds = CorpusOps.mixtureSampleOf(Tables.documents(spark, Sf))
       .filter(col("sampled") === 1).select("doc_id").as[Long].collect().toSet
     val split = CorpusOps.hashSplit(spark, Sf)
       .select("doc_id", "lang", "split")
@@ -464,17 +464,17 @@ class CorpusOpsSpec extends SparkSpec {
     // column pruning must reach the parquet scan: a curation pass that
     // drags `text` (or the full row) through a projection-only operator
     // reads the whole corpus body for nothing at 100 TB
-    val mixPlan = CorpusOps.mixtureSample(spark, Sf)
+    val mixPlan = CorpusOps.mixtureSampleOf(Tables.documents(spark, Sf))
       .queryExecution.executedPlan.toString
     assert(mixPlan.contains("ReadSchema: struct<doc_id:bigint,lang:string>"),
       s"mixtureSample should scan only (doc_id, lang):\n$mixPlan")
-    val chunkPlan = CorpusOps.chunk(spark, Sf)
+    val chunkPlan = CorpusOps.chunkOf(Tables.documents(spark, Sf))
       .queryExecution.executedPlan.toString
     assert(chunkPlan.contains("ReadSchema: struct<doc_id:bigint,text:string>"),
       s"chunk should scan only (doc_id, text):\n$chunkPlan")
     // funnel's typed pass: exactly (doc_id, lang, text), never the
     // full row (source/n_chars would ride the deserializer for nothing)
-    val funnelPlan = CorpusOps.filterFunnel(spark, Sf)
+    val funnelPlan = CorpusOps.filterFunnelOf(Tables.documents(spark, Sf))
       .queryExecution.executedPlan.toString
     assert(funnelPlan.contains(
       "ReadSchema: struct<doc_id:bigint,text:string,lang:string>") ||
@@ -483,7 +483,7 @@ class CorpusOpsSpec extends SparkSpec {
       s"filterFunnel should scan only (doc_id, lang, text):\n$funnelPlan")
     // temperature mixture: the doc-side scan must NOT read text (only
     // the rate side tokenizes); both scans stay pruned
-    val tempPlan = CorpusOps.mixtureTemperature(spark, Sf)
+    val tempPlan = CorpusOps.mixtureTemperatureOf(Tables.documents(spark, Sf))
       .queryExecution.executedPlan.toString
     assert(tempPlan.contains("ReadSchema: struct<doc_id:bigint,lang:string>"),
       s"mixtureTemperature doc side should scan only (doc_id, lang):\n$tempPlan")
@@ -525,7 +525,7 @@ class CorpusOpsSpec extends SparkSpec {
     assert(r.getLong(1) === 4L) // zero-token doc excluded from n_docs
     assert((2 to 5).map(r.getLong) === scored.toSeq) // q25..q90 = ranks 1..4
     // the real corpus: shape + per-lang monotonicity
-    val corpus = CorpusOps.qualityQuantiles(spark, Sf)
+    val corpus = CorpusOps.qualityQuantilesOf(Tables.documents(spark, Sf))
     assert(corpus.columns.toSeq === Seq("lang", "n_docs", "q25", "q50", "q75", "q90"))
     corpus.collect().foreach { row =>
       val qs = (2 to 5).map(row.getLong)
@@ -534,7 +534,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("mixtureTemperature: sqrt rates, same dice, realized mass flattens") {
-    val out = CorpusOps.mixtureTemperature(spark, Sf)
+    val out = CorpusOps.mixtureTemperatureOf(Tables.documents(spark, Sf))
     val rates = out.select("lang", "lang_tokens", "rate_ppm")
       .distinct().as[(String, Long, Long)].collect()
       .map { case (l, t, r) => l -> ((t, r)) }.toMap
@@ -551,7 +551,7 @@ class CorpusOpsSpec extends SparkSpec {
     assert(rates.toSeq.sortBy(_._2._1).map(_._2._2).reverse ===
       rates.toSeq.sortBy(_._2._1).map(_._2._2).sorted)
     // SAME dice as the static mixture: identical buckets per doc
-    val dice = CorpusOps.mixtureSample(spark, Sf)
+    val dice = CorpusOps.mixtureSampleOf(Tables.documents(spark, Sf))
       .select("doc_id", "mix_bucket").as[(Long, Long)].collect().toMap
     out.select("doc_id", "mix_bucket").as[(Long, Long)].collect()
       .foreach { case (d, b) => assert(dice(d) === b, s"doc $d bucket") }
@@ -587,7 +587,7 @@ class CorpusOpsSpec extends SparkSpec {
   }
 
   test("filterFunnel: per-rule counts equal a driver-side recompute") {
-    val out = CorpusOps.filterFunnel(spark, Sf)
+    val out = CorpusOps.filterFunnelOf(Tables.documents(spark, Sf))
       .as[(String, Long, Long, Long, Long, Long, Long, Long, Long)]
       .collect().map(r => r._1 -> r).toMap
     // independent recompute from the raw docs, same tokenizer contract

@@ -1,7 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 
 /** Round-8 curation extensions: model-based quality scoring,
   * boilerplate-block removal, fractional-epoch upsampling. */
@@ -43,7 +43,7 @@ class CurationExtSpec extends SparkSpec {
   }
 
   test("qualityModel is a pure projection — zero shuffles") {
-    val plan = QualityModel.score(spark, Sf)
+    val plan = QualityModel.scoreOf(Tables.documents(spark, Sf))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"),
       s"quality scoring must not shuffle:\n$plan")
@@ -83,7 +83,7 @@ class CurationExtSpec extends SparkSpec {
     // the boilerplate set is corpus-derived and unbounded by
     // construction — PLANS.md rule #2 forbids a hard broadcast hint;
     // the logical plan must carry no join hint at all
-    val df = Boilerplate.boilerplate(spark, Sf)
+    val df = Boilerplate.boilerplateOf(Tables.documents(spark, Sf))
     assert(!df.queryExecution.optimizedPlan.toString.contains("ResolvedHint") &&
       !df.queryExecution.logical.toString.contains("UnresolvedHint"),
       "no broadcast hint on the boilerplate side")
@@ -93,7 +93,7 @@ class CurationExtSpec extends SparkSpec {
   // ---- Upsample -----------------------------------------------------
 
   test("upsample: every doc appears 1–3 times with contiguous epochs") {
-    val out = Upsample.upsample(spark, Sf)
+    val out = Upsample.upsampleOf(Tables.documents(spark, Sf))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n"), max("epoch").as("mx"), min("epoch").as("mn"))
       .as[(Long, Long, Long, Long)].collect()
@@ -106,7 +106,7 @@ class CurationExtSpec extends SparkSpec {
   test("upsample: per-language rep counts differ by at most one doc-level") {
     // factor is per-language; within a language every doc gets either
     // floor(f) or floor(f)+1 epochs
-    val spread = Upsample.upsample(spark, Sf)
+    val spread = Upsample.upsampleOf(Tables.documents(spark, Sf))
       .groupBy("lang", "doc_id").agg(count(lit(1)).as("n"))
       .groupBy("lang").agg((max("n") - min("n")).as("d"))
       .as[(String, Long)].collect()
@@ -116,11 +116,11 @@ class CurationExtSpec extends SparkSpec {
   // ---- epoch-aware packing -----------------------------------------
 
   test("packingUpsampled: one unit per (doc, epoch), shard-local prefix sums") {
-    val out = Upsample.packingUpsampled(spark, Sf)
+    val out = Upsample.packingUpsampledOf(Tables.documents(spark, Sf))
       .select("doc_id", "epoch", "lang", "shard", "n_tokens", "cum_tokens")
       .as[(Long, Long, String, Long, Long, Long)].collect()
     // unit multiset = the upsample expansion, exactly
-    val nUnits = Upsample.upsample(spark, Sf).count()
+    val nUnits = Upsample.upsampleOf(Tables.documents(spark, Sf)).count()
     assert(out.length.toLong === nUnits, "every (doc, epoch) unit packed once")
     // per (lang, shard), cum_tokens is the running sum in (doc_id, epoch) order
     out.groupBy(u => (u._3, u._4)).foreach { case (_, us) =>
@@ -160,13 +160,13 @@ class CurationExtSpec extends SparkSpec {
   }
 
   test("upsample plan: no shuffle — projection + bounded explode") {
-    val plan = Upsample.upsample(spark, Sf)
+    val plan = Upsample.upsampleOf(Tables.documents(spark, Sf))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"),
       s"upsampling must not shuffle:\n$plan")
   }
   test("qualityAgreement: cells partition the corpus; keep-rate bounded") {
-    val out = QualityModel.qualityAgreement(spark, Sf).collect()
+    val out = QualityModel.qualityAgreementOf(Tables.documents(spark, Sf)).collect()
     assert(out.nonEmpty)
     val docs = graft.Tables.documents(spark, Sf).count()
     assert(out.map(_.getLong(2)).sum === docs, "every doc in one cell")

@@ -1,7 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -238,7 +238,7 @@ class DedupSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_ngram").toString
     docs((1L, base), (2L, nearDup), (3L, other))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = Dedup.ngramJaccard(spark, dir)
+    val out = Dedup.ngramJaccardOf(Tables.documents(spark, dir))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(out.map(p => (p._1, p._2)).toSet == Set((1L, 2L)),
       s"expected exactly the planted pair, got ${out.toSeq}")
@@ -272,7 +272,7 @@ class DedupSpec extends SparkSpec {
     } yield (a, b) -> ppm).toMap
     assert(got === brute, s"prefix path must be exact; got $got vs $brute")
     assert(got.contains((4L, 5L)), "the tiny pair is the lossless evidence")
-    val pruned = Dedup.ngramJaccard(spark, dir)
+    val pruned = Dedup.ngramJaccardOf(Tables.documents(spark, dir))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(!pruned.contains((4L, 5L)),
       "fixture no longer demonstrates the MinShared miss")
@@ -282,7 +282,7 @@ class DedupSpec extends SparkSpec {
       "identical ppm on shared pairs, collapsed composes") {
     val pfx = Dedup.ngramJaccardPrefix(spark, Sf)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val pruned = Dedup.ngramJaccard(spark, Sf)
+    val pruned = Dedup.ngramJaccardOf(Tables.documents(spark, Sf))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(pruned.keySet.subsetOf(pfx.keySet),
       s"pruned found pairs prefix missed: ${pruned.keySet -- pfx.keySet}")
@@ -290,7 +290,7 @@ class DedupSpec extends SparkSpec {
     assert(pfx.nonEmpty, "vacuous fixture")
     // collapsed variant: every rep pair appears in the plain output
     // with the identical score (reps carry their group's text)
-    val coll = Dedup.ngramJaccardPrefixCollapsed(spark, Sf)
+    val coll = Dedup.ngramJaccardPrefixOf(Dedup.collapsedDocs(Tables.documents(spark, Sf)))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     coll.foreach { case (k, v) =>
       assert(pfx.get(k).contains(v), s"collapsed pair $k not in plain") }
@@ -299,9 +299,9 @@ class DedupSpec extends SparkSpec {
   test("ngram jaccard and minhash-LSH agree on shared pairs") {
     // both verify with exact shingle Jaccard, so any pair emitted by
     // both candidate generators must carry the IDENTICAL ppm value
-    val ng = Dedup.ngramJaccard(spark, Sf)
+    val ng = Dedup.ngramJaccardOf(Tables.documents(spark, Sf))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val lsh = Dedup.lshDuplicates(spark, Sf)
+    val lsh = Dedup.lshDuplicatesOf(Tables.documents(spark, Sf))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val shared = ng.keySet intersect lsh.keySet
     assert(shared.nonEmpty, "fixture should produce overlapping pairs")
@@ -341,7 +341,7 @@ class DedupSpec extends SparkSpec {
     assert(out2(6L) === 4L)
     // corpus smoke: signal exists at this sf (random soup repeats
     // SHORT spans across docs) and ppm is well-formed
-    val corpus = Dedup.spanCoverage(spark, Sf).collect()
+    val corpus = Dedup.spanCoverageOf(Tables.documents(spark, Sf)).collect()
     assert(corpus.nonEmpty)
     corpus.foreach { r =>
       assert(r.getLong(2) <= r.getLong(1), "covered ≤ tokens")
@@ -374,7 +374,7 @@ class DedupSpec extends SparkSpec {
     val recrawl = d.filter(col("doc_id") % 10 =!= 7 &&
       col("doc_id") % 20 === 4).count()
     val mirrored = d.filter(col("doc_id") % 30 === 7).count()
-    val out = Dedup.incrementalDedup(spark, Sf).cache()
+    val out = Dedup.incrementalDedupOf(Tables.documents(spark, Sf)).cache()
     assert(out.count() === fresh + recrawl + mirrored)
     val byVerdict = out.groupBy("verdict").agg(count(lit(1)).as("ct"))
       .as[(String, Long)].collect().toMap
@@ -401,7 +401,7 @@ class DedupSpec extends SparkSpec {
   }
   test("containment dominates Jaccard on every shared pair") {
     import org.apache.spark.sql.functions._
-    val cont = Dedup.containment(spark, Sf)
+    val cont = Dedup.containmentOf(Tables.documents(spark, Sf))
       .select(col("doc_a"), col("doc_b"), col("cont_ppm"), col("contained_doc"))
       .collect()
     assert(cont.nonEmpty)
@@ -412,7 +412,7 @@ class DedupSpec extends SparkSpec {
     }
     // containment uses min-size in the denominator, Jaccard the union:
     // for any pair both report, cont_ppm >= jac_ppm
-    val jac = Dedup.ngramJaccard(spark, Sf).collect()
+    val jac = Dedup.ngramJaccardOf(Tables.documents(spark, Sf)).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val both = cont.flatMap(r =>
       jac.get((r.getLong(0), r.getLong(1))).map(j => (r.getLong(2), j)))
@@ -449,10 +449,10 @@ class DedupSpec extends SparkSpec {
 
     // cross-family agreement at Sf: any pair BOTH blockers emit
     // carries the identical exact-Jaccard verdict
-    val sn = Dedup.sortedNeighborDups(spark, Sf)
+    val sn = Dedup.sortedNeighborDupsOf(Tables.documents(spark, Sf))
       .as[(Long, Long, Long)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
-    val lsh = Dedup.lshDuplicates(spark, Sf)
+    val lsh = Dedup.lshDuplicatesOf(Tables.documents(spark, Sf))
       .select("doc_a", "doc_b", "jac_ppm")
       .as[(Long, Long, Long)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
@@ -469,7 +469,7 @@ class DedupSpec extends SparkSpec {
     // shingle sets via doc-keyed equijoins. Forced-shuffle mode makes
     // the keys visible at smoke scale.
     withForcedShuffleJoins {
-      val plan = Dedup.sortedNeighborDups(spark, Sf)
+      val plan = Dedup.sortedNeighborDupsOf(Tables.documents(spark, Sf))
         .queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct") &&
         !plan.contains("BroadcastNestedLoopJoin"),

@@ -1,7 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 
 class IndexSpec extends SparkSpec {
   import spark.implicits._
@@ -42,7 +42,7 @@ class IndexSpec extends SparkSpec {
   }
 
   test("plans: inverted index runs on one token exchange; idf df-table broadcasts") {
-    val invPlan = Index.invertedIndex(spark, Sf)
+    val invPlan = Index.invertedIndexOf(Tables.documents(spark, Sf))
       .queryExecution.executedPlan.toString
     val tokenExchanges = "Exchange hashpartitioning\\(token".r
       .findAllIn(invPlan).size
@@ -53,7 +53,7 @@ class IndexSpec extends SparkSpec {
     // explode+aggregate subtree, which an estimator or fixture change
     // could flip spuriously — the claim under test is that RUNTIME
     // AQE broadcasts the df table at this measured size (review r11)
-    val idf = Index.idfRarity(spark, Sf)
+    val idf = Index.idfRarityOf(Tables.documents(spark, Sf))
     idf.queryExecution.toRdd.count()
     val idfPlan = idf.queryExecution.executedPlan.toString
     assert(idfPlan.contains("BroadcastHashJoin"),
@@ -120,12 +120,12 @@ class IndexSpec extends SparkSpec {
   }
 
   test("bm25 at Sf: broadcast term stats, take-ordered top-k (plan shape)") {
-    val plan = Index.bm25(spark, Sf).queryExecution.executedPlan.toString
+    val plan = Index.bm25Of(Tables.documents(spark, Sf)).queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"),
       s"global top-k must not be a full sort exchange:\n$plan")
     assert(plan.contains("BroadcastHashJoin"),
       s"the |terms|-row df table must broadcast:\n$plan")
-    val rows = Index.bm25(spark, Sf).count()
+    val rows = Index.bm25Of(Tables.documents(spark, Sf)).count()
     assert(rows === Index.Bm25TopK.toLong, "corpus has plenty of matches")
   }
 
@@ -144,7 +144,7 @@ class IndexSpec extends SparkSpec {
   }
 
   test("phraseSearch plan: term filter precedes the shuffle; one agg chain") {
-    val df = Index.phraseSearch(spark, Sf)
+    val df = Index.phraseSearchOf(Tables.documents(spark, Sf))
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       s"the k-row phrase table must broadcast:\n$plan")

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 
 class LangModelSpec extends SparkSpec {
   import spark.implicits._
@@ -28,7 +28,7 @@ class LangModelSpec extends SparkSpec {
   }
 
   test("bigramScore at Sf: every scored doc within [0, 1e6], total bigram conservation") {
-    val rows = LangModel.bigramScore(spark, Sf).collect()
+    val rows = LangModel.bigramScoreOf(Tables.documents(spark, Sf)).collect()
     assert(rows.nonEmpty)
     var totalBigrams = 0L
     rows.foreach { r =>

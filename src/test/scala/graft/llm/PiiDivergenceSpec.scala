@@ -1,7 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 
 class PiiDivergenceSpec extends SparkSpec {
   import spark.implicits._
@@ -67,7 +67,7 @@ class PiiDivergenceSpec extends SparkSpec {
   }
 
   test("pplFilter plan: rank window is lang/score-keyed, not single") {
-    val plan = LangModel.pplFilter(spark, Sf)
+    val plan = LangModel.pplFilterOf(Tables.documents(spark, Sf))
       .queryExecution.executedPlan.toString
     assert(plan.contains("hashpartitioning(lang"),
       s"rank must run under a (lang, score)-keyed window:\n$plan")
@@ -90,7 +90,7 @@ class PiiDivergenceSpec extends SparkSpec {
   }
 
   test("sourceDivergence on sf data: one row per source, ppm-bounded") {
-    val out = Divergence.sourceDivergence(spark, Sf).collect()
+    val out = Divergence.sourceDivergenceOf(Tables.documents(spark, Sf)).collect()
     assert(out.length === 20)
     assert(out.forall(r => r.getLong(3) >= 0L && r.getLong(3) <= 1000000L))
   }

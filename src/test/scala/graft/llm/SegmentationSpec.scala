@@ -1,7 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 
 class SegmentationSpec extends SparkSpec {
   import spark.implicits._
@@ -42,7 +42,7 @@ class SegmentationSpec extends SparkSpec {
   }
 
   test("cdcChunks: chunks tile each doc exactly and contiguously") {
-    val out = Segmentation.cdcChunks(spark, Sf).collect()
+    val out = Segmentation.cdcChunksOf(Tables.documents(spark, Sf)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(out.nonEmpty)
     out.groupBy(_._1).foreach { case (_, cs) =>
@@ -84,7 +84,7 @@ class SegmentationSpec extends SparkSpec {
   }
 
   test("wordBreak at Sf: every doc of only-top-vocab words tiles") {
-    val out = Segmentation.wordBreak(spark, Sf)
+    val out = Segmentation.wordBreakOf(Tables.documents(spark, Sf))
     val rows = out.collect()
     assert(rows.length === 500)
     // a doc that tiles reports min_words ≤ ns_len (each word ≥ 1 char)

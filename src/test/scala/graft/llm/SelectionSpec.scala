@@ -1,13 +1,13 @@
 package graft.llm
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 
 class SelectionSpec extends SparkSpec {
   import spark.implicits._
 
   test("budgetSelect: greedy best-first, start-offset boundary rule") {
-    val out = CorpusLayout.budgetSelect(spark, Sf).collect()
+    val out = CorpusLayout.budgetSelectOf(Tables.documents(spark, Sf)).collect()
     val byRank = out.sortBy(r => (-r.getLong(1), r.getLong(0)))
     // cum_before is the exact prefix sum in (quality desc, doc_id) order
     var cum = 0L
@@ -28,7 +28,7 @@ class SelectionSpec extends SparkSpec {
   }
 
   test("budgetSelect plan: prefix sum is score-keyed, not single") {
-    val plan = CorpusLayout.budgetSelect(spark, Sf)
+    val plan = CorpusLayout.budgetSelectOf(Tables.documents(spark, Sf))
       .queryExecution.executedPlan.toString
     assert(plan.contains("hashpartitioning(quality_ppm"),
       s"intra-score window must be score-keyed:\n$plan")
@@ -53,9 +53,9 @@ class SelectionSpec extends SparkSpec {
     }
   }
   test("weightedSample: deterministic, k rows, heavier docs favored") {
-    val out = Sampling.weightedSample(spark, Sf).collect()
+    val out = Sampling.weightedSampleOf(Tables.documents(spark, Sf)).collect()
     assert(out.length === Sampling.SampleK)
-    val out2 = Sampling.weightedSample(spark, Sf).collect()
+    val out2 = Sampling.weightedSampleOf(Tables.documents(spark, Sf)).collect()
     assert(out.map(_.toString).toSeq === out2.map(_.toString).toSeq,
       "same corpus, same sample")
     // length bias: sampled docs are longer on average than the corpus
@@ -68,7 +68,7 @@ class SelectionSpec extends SparkSpec {
   }
 
   test("weightedSample plan: top-k, not a global sort exchange") {
-    val plan = Sampling.weightedSample(spark, Sf)
+    val plan = Sampling.weightedSampleOf(Tables.documents(spark, Sf))
       .queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"),
       s"k-row draw must be per-partition top-k + merge:\n$plan")

@@ -1,7 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -43,7 +43,7 @@ class SimilaritySpec extends SparkSpec {
     // pinned data-independently (the registered oracle is the brute one)
     val brute = Similarity.bruteTopK(spark, Sf)
       .as[(Long, Int, Long, Long)].collect().toSet
-    val full = Similarity.ivfTopKFullProbe(spark, Sf)
+    val full = Similarity.ivfTopK(spark, Sf, nprobe = Similarity.KCells)
       .as[(Long, Int, Long, Long)].collect().toSet
     assert(full === brute)
   }

@@ -34,7 +34,7 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("hllEstimate: estimate lands within the m=64 error envelope") {
-    val r = Sketches.hllEstimate(spark, Sf).collect().head
+    val r = Sketches.hllEstimateOf(Tables.documents(spark, Sf)).collect().head
     val est = r.getAs[Long]("est")
     val exact = r.getAs[Long]("n_exact")
     // 1.04/sqrt(64) = 13% std error; allow 3 sigma
@@ -44,7 +44,7 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("hll plan: no distinct shuffle — one bucket-keyed exchange") {
-    val plan = Sketches.hllSketch(spark, Sf)
+    val plan = Sketches.hllSketchOf(Tables.documents(spark, Sf))
       .queryExecution.executedPlan.toString
     assert(plan.contains("hashpartitioning(bucket"),
       s"register aggregation must shuffle on bucket:\n$plan")
@@ -56,7 +56,7 @@ class SketchesSpec extends SparkSpec {
   // ---- Grouped HLL --------------------------------------------------
 
   test("uvSketch: per-group registers, estimate tracks exact per key") {
-    val out = Sketches.uvSketch(spark, Sf).collect()
+    val out = Sketches.uvSketchOf(Tables.events(spark, Sf)).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       assert(r.getAs[Long]("n_buckets") <= Sketches.GroupHllM)
@@ -70,7 +70,7 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("uvSketch plan: register exchange is (group, bucket)-keyed") {
-    val plan = Sketches.uvSketch(spark, Sf)
+    val plan = Sketches.uvSketchOf(Tables.events(spark, Sf))
       .queryExecution.executedPlan.toString
     // the SKETCH branch's only exchange: hashpartitioning(event_type,
     // bucket) — the exact-count adjudicator branch legitimately does
@@ -97,7 +97,7 @@ class SketchesSpec extends SparkSpec {
 
   test("cmsTopK: estimates never undercount and match exact for " +
     "collision-free words") {
-    val out = Sketches.cmsTopK(spark, Sf).collect()
+    val out = Sketches.cmsTopKOf(Tables.documents(spark, Sf)).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       assert(r.getAs[Long]("c_est") >= r.getAs[Long]("c_exact"),
@@ -108,7 +108,7 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("cmsTopK plan: sketch joins broadcast — no corpus-keyed join") {
-    val plan = Sketches.cmsTopK(spark, Sf)
+    val plan = Sketches.cmsTopKOf(Tables.documents(spark, Sf))
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       s"the bounded sketch must broadcast against the candidates:\n$plan")
@@ -121,7 +121,7 @@ class SketchesSpec extends SparkSpec {
   // ---- KMV ----------------------------------------------------------
 
   test("kmvSketch: k smallest distinct hashes, merge law holds") {
-    val sk = Sketches.kmvSketch(spark, Sf)
+    val sk = Sketches.kmvSketchOf(Tables.documents(spark, Sf))
       .as[(String, Long, Long)].collect()
     val bySrc = sk.groupBy(_._1)
     bySrc.foreach { case (s, rows) =>
@@ -144,7 +144,7 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("kmvEstimate: estimator branch live, within the k=16 envelope") {
-    val rows = Sketches.kmvEstimate(spark, Sf)
+    val rows = Sketches.kmvEstimateOf(Tables.documents(spark, Sf))
       .as[(String, Long, Long, Long)].collect()
     assert(rows.nonEmpty)
     rows.foreach { case (s, est, exact, errPpm) =>
@@ -158,7 +158,7 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("kmvOverlap: intersection estimate tracks the exact overlap") {
-    val got = Sketches.kmvOverlap(spark, Sf)
+    val got = Sketches.kmvOverlapOf(Tables.documents(spark, Sf))
       .as[(String, String, Long, Long, Long)].collect()
     assert(got.length >= 3)
     // exact per-pair distinct-token intersections (small at Sf)
@@ -198,7 +198,7 @@ class SketchesSpec extends SparkSpec {
   }
 
   test("dsirScore plan: bucket weights broadcast back to the corpus") {
-    val plan = Dsir.dsirScore(spark, Sf)
+    val plan = Dsir.dsirScoreOf(Tables.documents(spark, Sf))
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       s"the bounded weight table must broadcast:\n$plan")
@@ -229,7 +229,7 @@ class SketchesSpec extends SparkSpec {
       "HqBinW - 1 of the exact value") {
     def num(r: org.apache.spark.sql.Row, c: String): Long =
       r.getAs[Number](c).longValue()
-    val exact = CorpusOps.qualityQuantiles(spark, Sf).collect()
+    val exact = CorpusOps.qualityQuantilesOf(Tables.documents(spark, Sf)).collect()
       .map(r => Option(r.getString(0)) ->
         CorpusOps.QuantilePoints.map(p => num(r, s"q$p"))).toMap
     val sk = Sketches.hqEstimate(spark, Sf).collect()

@@ -1,7 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 
 class TextAnalysisSpec extends SparkSpec {
   import spark.implicits._
@@ -60,7 +60,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("tokenStats on the documents table: types ≤ tokens, ttr ≤ 1e6") {
-    val out = TextAnalysis.tokenStats(spark, Sf)
+    val out = TextAnalysis.tokenStatsOf(Tables.documents(spark, Sf))
       .select("n_tokens", "n_types", "ttr_ppm").as[(Long, Long, Long)]
       .collect()
     assert(out.nonEmpty)
@@ -88,12 +88,12 @@ class TextAnalysisSpec extends SparkSpec {
     }
     // WindowGroupLimit must be in the plan (map-side top-k, not a
     // full per-partition sort at corpus scale)
-    val plan = TextAnalysis.docKeywords(spark, Sf)
+    val plan = TextAnalysis.docKeywordsOf(Tables.documents(spark, Sf))
       .queryExecution.executedPlan.toString
     assert(plan.contains("WindowGroupLimit"), plan.take(2000))
   }
   test("langIdEval: rows partition labels; recall sums to 1e6 per label") {
-    val out = TextAnalysis.langIdEval(spark, Sf).collect()
+    val out = TextAnalysis.langIdEvalOf(Tables.documents(spark, Sf)).collect()
       .map(r => (r.getString(0), r.getString(1)) ->
         (r.getLong(2), r.getLong(3)))
     assert(out.nonEmpty)

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 
 /** PLANS.md rule #2 enforcement for the vocabulary-frame class: a
   * corpus-derived frame (token df table, unigram/bigram counts, the
@@ -50,23 +50,23 @@ class VocabHintSpec extends SparkSpec {
   }
 
   test("idfRarity: no hints at all — AQE owns the df-table join") {
-    val df = Index.idfRarity(spark, Sf)
+    val df = Index.idfRarityOf(Tables.documents(spark, Sf))
     assert(hintOutputs(df).isEmpty, "idfRarity must carry zero hints")
     assert(df.count() > 0L)
   }
 
   test("bm25: only the one-row (n_docs, a_tokens) stats frame is hinted") {
-    assertNoVocabHint(Index.bm25(spark, Sf),
+    assertNoVocabHint(Index.bm25Of(Tables.documents(spark, Sf)),
       allowed = Set(Set("n_docs", "a_tokens")))
   }
 
   test("pmi: only the one-row n_pairs total is hinted") {
-    assertNoVocabHint(Colloc.pmi(spark, Sf),
+    assertNoVocabHint(Colloc.pmiOf(Tables.documents(spark, Sf)),
       allowed = Set(Set("n_pairs")))
   }
 
   test("bigramScore: no hints at all — both count tables are corpus-derived") {
-    val df = LangModel.bigramScore(spark, Sf)
+    val df = LangModel.bigramScoreOf(Tables.documents(spark, Sf))
     assert(hintOutputs(df).isEmpty, "bigramScore must carry zero hints")
     assert(df.count() > 0L)
   }
@@ -95,17 +95,17 @@ class VocabHintSpec extends SparkSpec {
   // PLANS.md §r11).
 
   test("pplFilter: only the (lang, score)-grid offsets frame is hinted") {
-    assertNoVocabHint(LangModel.pplFilter(spark, Sf),
+    assertNoVocabHint(LangModel.pplFilterOf(Tables.documents(spark, Sf)),
       allowed = Set(Set("lang", "fluency_ppm", "off", "n_lang")))
   }
 
   test("curriculum: only the n_chars-grid offsets frame is hinted") {
-    assertNoVocabHint(CorpusLayout.curriculum(spark, Sf),
+    assertNoVocabHint(CorpusLayout.curriculumOf(Tables.documents(spark, Sf)),
       allowed = Set(Set("n_chars", "off", "total")))
   }
 
   test("budgetSelect: only the quality-grid offsets frame is hinted") {
-    assertNoVocabHint(CorpusLayout.budgetSelect(spark, Sf),
+    assertNoVocabHint(CorpusLayout.budgetSelectOf(Tables.documents(spark, Sf)),
       allowed = Set(Set("quality_ppm", "off")))
   }
 }

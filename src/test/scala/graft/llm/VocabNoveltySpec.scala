@@ -1,7 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 
 class VocabNoveltySpec extends SparkSpec {
   import spark.implicits._
@@ -19,7 +19,7 @@ class VocabNoveltySpec extends SparkSpec {
   }
 
   test("vocabCoverage plan: vocab-sized exchange is keyed, not single") {
-    val plan = VocabCoverage.vocabCoverage(spark, Sf)
+    val plan = VocabCoverage.vocabCoverageOf(Tables.documents(spark, Sf))
       .queryExecution.executedPlan.toString
     assert(plan.contains("hashpartitioning(freq"),
       s"word rank must run under a freq-keyed window:\n$plan")
@@ -43,7 +43,7 @@ class VocabNoveltySpec extends SparkSpec {
   }
 
   test("oovRate plan: vocab keep-set rides a broadcast join") {
-    val plan = VocabCoverage.oovRate(spark, Sf)
+    val plan = VocabCoverage.oovRateOf(Tables.documents(spark, Sf))
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       s"top-V vocab must broadcast, not shuffle the corpus:\n$plan")
@@ -68,7 +68,7 @@ class VocabNoveltySpec extends SparkSpec {
   }
 
   test("novelty on documents: ppm bounded, grams positive") {
-    val out = Novelty.novelty(spark, Sf)
+    val out = Novelty.noveltyOf(Tables.documents(spark, Sf))
       .select("n_grams", "n_novel", "novelty_ppm").as[(Long, Long, Long)]
       .collect()
     assert(out.nonEmpty)
@@ -90,13 +90,13 @@ class VocabNoveltySpec extends SparkSpec {
   }
 
   test("curriculum plan: corpus-sized exchange is keyed, not single") {
-    val plan = CorpusLayout.curriculum(spark, Sf)
+    val plan = CorpusLayout.curriculumOf(Tables.documents(spark, Sf))
       .queryExecution.executedPlan.toString
     assert(plan.contains("hashpartitioning(n_chars"),
       s"doc rank must run under a length-keyed window:\n$plan")
     // the only SinglePartition shuffle allowed is the tiny
     // per-length offsets frame, which sits under a broadcast
-    val bands = CorpusLayout.curriculum(spark, Sf)
+    val bands = CorpusLayout.curriculumOf(Tables.documents(spark, Sf))
       .groupBy("band").count().as[(Long, Long)].collect().toMap
     assert(bands.keySet === (1L to CorpusLayout.Bands).toSet)
     assert(bands.values.max - bands.values.min <= 1L,
@@ -124,7 +124,7 @@ class VocabNoveltySpec extends SparkSpec {
   }
 
   test("vocabGrowth at Sf: monotone cumulative, total = vocab size") {
-    val out = VocabCoverage.vocabGrowth(spark, Sf)
+    val out = VocabCoverage.vocabGrowthOf(Tables.documents(spark, Sf))
       .as[(Long, Long, Long)].collect().sortBy(_._1)
     assert(out.map(_._3).toSeq === out.map(_._3).sorted.toSeq)
     val vocab = graft.Tables.documents(spark, Sf)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 
 class RangeJoinSpec extends SparkSpec {
   import spark.implicits._
@@ -570,7 +570,7 @@ class RangeJoinSpec extends SparkSpec {
     // the 2-D salt-grid path on the same real corpus: grid placement
     // (rows hashed, transpose replication, responsibility untouched)
     // must be invisible in the answer — the board leg's contract
-    val gridded = RangeJoin.bandOverlapStreamSaltedQuery(spark, Sf)
+    val gridded = RangeJoin.bandOverlapStreamQuery(spark, Sf, salt = 2)
       .as[(Long, Long)].collect().toMap
     assert(gridded === fixed)
   }
@@ -781,5 +781,34 @@ class RangeJoinSpec extends SparkSpec {
     assert(sf01 >= 4 && sf01 <= 12, s"sf0.1-shaped census derived $sf01")
     // the clamp bounds runaway estimates
     assert(RangeJoin.overlapStreamStateParts(Long.MaxValue / 2) === 1024)
+  }
+
+  test("bandOverlapStreamQuery: the stream runs at the census-derived " +
+      "state-partition count and leaves the caller's conf unchanged") {
+    val key = "spark.sql.shuffle.partitions"
+    // the census the operator states: buckets per band, both sides
+    val est = RangeJoin.priceBands(spark, Sf, "pk", "lo", "hi")
+      .select("lo", "hi").as[(Long, Long)].collect()
+      .map { case (lo, hi) => (hi - lo) / RangeJoin.BucketWidth + 1 }.sum * 2
+    val derived = RangeJoin.overlapStreamStateParts(est)
+    val callerParts = (derived + 3).toString
+    val base = new java.io.File(graft.func.TempDirs.cached("bandoverlapstream"))
+    def runs = Option(base.listFiles()).map(_.map(_.getName).toSet)
+      .getOrElse(Set.empty[String])
+    val before = runs
+    graft.func.Confs.withSqlConfs(spark)(key -> callerParts) {
+      assert(RangeJoin.bandOverlapStreamQuery(spark, Sf).count() > 0)
+      assert(spark.conf.get(key) === callerParts,
+        "the stream leg must not leave its conf on the caller's session")
+    }
+    val run = runs -- before
+    assert(run.size === 1, s"expected one new stream run, got $run")
+    // the first batch's offset log records the conf the stateful
+    // operator was planned under
+    val offsets = new String(java.nio.file.Files.readAllBytes(
+      new java.io.File(base, s"${run.head}/ckpt/offsets/0").toPath), "UTF-8")
+    val logged = ("\"" + java.util.regex.Pattern.quote(key) +
+      "\":\"(\\d+)\"").r.findFirstMatchIn(offsets).map(_.group(1))
+    assert(logged === Some(derived.toString), s"offsets/0: $offsets")
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StateOperatorProgress, StreamingQuery}
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
 import graft.func.Confs.withSqlConfs
 
 case class Ev(event_id: Long, user_id: Long, event_type: String,
@@ -1206,7 +1206,7 @@ class StreamingSpec extends SparkSpec {
     mixQ.stop()
     val mixStreamed = spark.table("mix_stream_out")
       .as[(Long, String, Long, Long, Int)].collect().toSet
-    val mixBatch = graft.llm.CorpusOps.mixtureSample(spark, Sf)
+    val mixBatch = graft.llm.CorpusOps.mixtureSampleOf(Tables.documents(spark, Sf))
       .as[(Long, String, Long, Long, Int)].collect().toSet
     assert(mixStreamed == mixBatch && mixStreamed.nonEmpty)
 
@@ -1233,7 +1233,7 @@ class StreamingSpec extends SparkSpec {
     stratQ.stop()
     val stratStreamed = spark.table("strat_stream_out")
       .as[(Long, String, String, Long, Long, Int)].collect().toSet
-    val stratBatch = graft.llm.CorpusOps.mixtureSampleStratified(spark, Sf)
+    val stratBatch = graft.llm.CorpusOps.mixtureSampleStratifiedOf(Tables.documents(spark, Sf))
       .as[(Long, String, String, Long, Long, Int)].collect().toSet
     assert(stratStreamed == stratBatch && stratStreamed.nonEmpty)
 
@@ -1245,7 +1245,7 @@ class StreamingSpec extends SparkSpec {
     chunkQ.stop()
     val chunkStreamed = spark.table("chunk_stream_out")
       .as[(Long, Long, Long, String)].collect().toSet
-    val chunkBatch = graft.llm.CorpusOps.chunk(spark, Sf)
+    val chunkBatch = graft.llm.CorpusOps.chunkOf(Tables.documents(spark, Sf))
       .as[(Long, Long, Long, String)].collect().toSet
     assert(chunkStreamed == chunkBatch && chunkStreamed.nonEmpty)
   }
@@ -1448,7 +1448,7 @@ class StreamingSpec extends SparkSpec {
     q.stop()
     val streamed = spark.table("hll_stream_out")
       .as[(Long, Long)].collect().toMap
-    val batch = graft.llm.Sketches.hllSketch(spark, Sf)
+    val batch = graft.llm.Sketches.hllSketchOf(Tables.documents(spark, Sf))
       .as[(Long, Long)].collect().toMap
     assert(streamed === batch && streamed.nonEmpty)
   }
@@ -1488,7 +1488,7 @@ class StreamingSpec extends SparkSpec {
     q.stop()
     val streamed = spark.table("cdc_stream_out")
       .as[(Long, Long, Long, Long)].collect().toSet
-    val batch = graft.llm.Segmentation.cdcChunks(spark, Sf)
+    val batch = graft.llm.Segmentation.cdcChunksOf(Tables.documents(spark, Sf))
       .as[(Long, Long, Long, Long)].collect().toSet
     assert(streamed === batch && streamed.nonEmpty)
   }
