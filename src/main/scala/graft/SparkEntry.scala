@@ -224,10 +224,8 @@ object SparkEntry {
     q("q_llm_hash_split", llm.CorpusOps.hashSplit(_, _), llm.CorpusOps.hashSplitOracle),
     q("q_llm_quality_quantiles", docs(llm.CorpusOps.qualityQuantilesOf),
       llm.CorpusOps.qualityQuantilesOracle),
-    // (the percentile_approx scale variant qualityQuantilesApprox
-    // stays a spec-bounded library surface; its BOARD slot is the
-    // hash-locked hq sketch pair below — same capability, full
-    // oracle check instead of rows-only)
+    // (exact, from per-(lang, score) counts; the hq sketch pair below
+    // is the add-mergeable estimate of the same quantiles)
     q("q_llm_packing", docs(llm.CorpusOps.packingOf), llm.CorpusOps.packingOracle),
     q("q_llm_packing_sharded", docs(llm.CorpusOps.packingShardedOf),
       llm.CorpusOps.packingShardedOracle),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.func.Exprs._
+import graft.func.Ranks
 import graft.func.Materialize.MatOps
 
 /** ADS layer: the reference's query surface — the MyBatis @Select
@@ -364,15 +365,12 @@ object Queries {
     * Scale shape: the corpus-scale work is a per-customer aggregate
     * (map-side combined). The quintiles do NOT use global ntile
     * windows (a single-partition sort of every customer, three
-    * times); each is the curriculum distributed-rank device
-    * ([[graft.llm.CorpusLayout.curriculumOf]]): collapse to per-key
-    * counts (keys: recency_days / frequency — value-domain-bounded —
-    * and a [[RfmMonetaryBandCents]]-wide monetary band), window the
-    * TINY offsets frame, broadcast it back, and recover the exact
-    * global rank as offset + key-partitioned row_number. ntile is
-    * then pure positional arithmetic on (rank, total): the first
-    * n%5 buckets take n/5+1 rows, the rest n/5 — so the only
-    * corpus-sized exchanges are hash partitionings on the rank keys. */
+    * times); each is [[Ranks.perRow]]'s distributed rank
+    * (keys: recency_days / frequency — value-domain-bounded — and a
+    * [[RfmMonetaryBandCents]]-wide monetary band). ntile is then pure
+    * positional arithmetic on (rank, total): the first n%5 buckets
+    * take n/5+1 rows, the rest n/5 — so the only corpus-sized
+    * exchanges are hash partitionings on the rank keys. */
   def rfm(spark: SparkSession, dir: String): DataFrame = {
     val per = Tables.orders(spark, dir)
       .groupBy(col("o_custkey").as("custkey"))
@@ -402,11 +400,10 @@ object Queries {
         "r_bin", "f_bin", "m_bin", "segment")
   }
 
-  /** Exact distributed quintile step for [[rfm]]: global rank by
-    * (key, within...) via per-key offsets + keyed row_number, then
-    * positional ntile(5) arithmetic — no corpus-sized
-    * single-partition window anywhere (QueriesSpec asserts the plan
-    * shape on this device directly). `asc` orients the key; `within`
+  /** Exact distributed quintile step for [[rfm]]: the global rank by
+    * (key, within...) from [[Ranks.perRow]], then
+    * positional ntile(5) arithmetic (QueriesSpec asserts the plan
+    * shape on this step directly). `asc` orients the key; `within`
     * finishes the total order inside one key value.
     *
     * LAZY localCheckpoint on the input: each quintile reads it TWICE
@@ -419,26 +416,16 @@ object Queries {
     * assert each step's keyed-window shape, which the checkpoint
     * boundaries hide from the composed query's final plan. */
   private[ads] def rfmQuintile(df0: DataFrame, key: String, asc: Boolean,
-      within: Seq[org.apache.spark.sql.Column], out: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val df = df0.matLazily
-    val ord = if (asc) col(key).asc else col(key).desc
-    val offs = df.groupBy(key).agg(count(lit(1)).as("_cnt"))
-      .select(col(key),
-        coalesce(sum("_cnt").over(Window.orderBy(ord)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("_off"),
-        sum("_cnt").over(Window.partitionBy(lit(1))).as("_n"))
-    val w = Window.partitionBy(key).orderBy(within: _*)
-    df.join(broadcast(offs), key)
-      .withColumn("_rn", col("_off") + row_number().over(w).cast("long"))
+      within: Seq[org.apache.spark.sql.Column], out: String): DataFrame =
+    Ranks.perRow(df0.matLazily, key, asc, within,
+        rank = "_rn", size = "_n")
       .withColumn(out, expr(
         """CASE WHEN _rn <= (_n DIV 5 + 1) * (_n % 5)
           |  THEN (_rn - 1) DIV (_n DIV 5 + 1) + 1
           |  ELSE _n % 5 + (_rn - (_n DIV 5 + 1) * (_n % 5) - 1)
           |         DIV greatest(_n DIV 5, 1) + 1 END""".stripMargin)
         .cast("long"))
-      .drop("_off", "_n", "_rn")
-  }
+      .drop("_n", "_rn")
 
   /** Market-basket co-purchase pairs: distinct part pairs bought in
     * the same order, support-counted, the top pairs ranked (support

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.func.Exprs.{cents, sumCents}
+import graft.func.Ranks
 
 /** Multi-dimensional ADS extensions over the reference's dashboard
   * surface (gmall-publisher2 exposes flat GROUP BYs only — a BI layer
@@ -19,7 +20,7 @@ import graft.func.Exprs.{cents, sumCents}
   *     window frame over day numbers (frame sees actual dates, so
   *     date gaps shrink the window instead of spanning 7 rows).
   *   - [[priceMedian]] — EXACT per-group median without a per-group
-  *     sort collapse, via the distributed-rank device.
+  *     sort of the raw orders, via [[Ranks.perGroup]].
   *
   * Scale shapes (100 TB): pivot and rollup are single aggregates over
   * the fact scan (pivot values are DECLARED, so no driver-side
@@ -27,11 +28,9 @@ import graft.func.Exprs.{cents, sumCents}
   * map-side combine collapses them before exchange). The MA7 window
   * is over the per-DAY frame — bounded by the calendar, a deliberate
   * bounded collapse (same device as [[Queries.gmvGrowth]]). The
-  * median never globally sorts: per-(segment, cents) counts (bounded
-  * by segments × price domain), a segment-keyed cumulative window
-  * over that bounded frame, then min(cents | cum ≥ (n+1)/2) — the
-  * same per-key-offset pattern as
-  * [[graft.llm.CorpusLayout.curriculumOf]].
+  * median never sorts orders: its segment-keyed cumulative window
+  * runs over per-(segment, cents) counts, bounded by segments × the
+  * price domain.
   */
 object Rollups {
   /** TPC-H market segments — the declared pivot domain. Declaring the
@@ -219,22 +218,14 @@ object Rollups {
 
   /** Exact per-segment median order value (cents), lower-discrete
     * (percentile_disc 0.5): the smallest value whose cumulative count
-    * reaches ⌈n/2⌉. No per-group sort of raw orders — values collapse
-    * to (segment, cents) counts first. */
+    * reaches ⌈n/2⌉ — [[Ranks.perGroup]]'s p = 50. */
   def priceMedian(spark: SparkSession, dir: String): DataFrame = {
     val c = Tables.customer(spark, dir)
     val j = Tables.orders(spark, dir)
       .join(c, col("o_custkey") === c("c_custkey"))
       .select(col("c_mktsegment"), cents(col("o_totalprice")).as("v"))
-    val counts = j.groupBy("c_mktsegment", "v").agg(count(lit(1)).as("cnt"))
-    // bounded frame: one row per distinct (segment, value)
-    val cum = counts.select(col("c_mktsegment"), col("v"), col("cnt"),
-      expr("sum(cnt) OVER (PARTITION BY c_mktsegment ORDER BY v)").as("cum"),
-      expr("sum(cnt) OVER (PARTITION BY c_mktsegment)").as("n"))
-    cum.filter(col("cum") * 2 >= col("n"))
-      .groupBy("c_mktsegment")
-      .agg(min("v").as("median_cents"), max("n").as("n_orders"))
-      .select(col("c_mktsegment"), col("n_orders"), col("median_cents"))
+    Ranks.perGroup(j, "v", Seq("c_mktsegment"), "n_orders",
+      Seq("median_cents" -> 50))
   }
 
   lazy val priceMedianOracle: String =

@@ -88,11 +88,9 @@ object OrderWide {
     val s  = Tables.supplier(spark, dir)
     // standalone category3/trademark dims with md5-derived surrogate ids
     val cat3 = p.select(col("p_type").as("c3_name")).distinct()
-      .withColumn("c3_id",
-        expr("CAST(conv(substring(md5(c3_name), 1, 12), 16, 10) AS BIGINT)"))
+      .withColumn("c3_id", md5Nibbles(col("c3_name"), 12))
     val tm = p.select(col("p_brand").as("tm_name")).distinct()
-      .withColumn("tm_key",
-        expr("CAST(conv(substring(md5(tm_name), 1, 12), 16, 10) AS BIGINT)"))
+      .withColumn("tm_key", md5Nibbles(col("tm_name"), 12))
 
     // broadcast() hints only on the genuinely bounded sides: nation is
     // fixed-size (25 rows at ANY sf), and cat3/tm are distinct-value

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.func.{Exprs, OracleSql, Tokenizer}
+import graft.func.{Exprs, OracleSql, Ranks, Tokenizer}
 import graft.func.Materialize.MatOps
 
 /** Corpus layout operators — the physical-arrangement half of a
@@ -235,33 +235,15 @@ object CorpusLayout {
     * curriculum learning) and a band 1..[[Bands]] of equal rank-width,
     * the unit a curriculum-aware loader schedules epochs over.
     *
-    * Scale shape (100 TB): the GLOBAL rank is computed WITHOUT a
-    * global sort. Distinct lengths collapse to a per-length count
-    * (bounded by the length domain, not the corpus); their cumulative
-    * offsets are a window over that tiny frame; each doc's rank is
-    * offset(length) + its row_number within its length partition — a
-    * length-KEYED window, so the only corpus-sized exchange is hash
-    * partitioning on `n_chars`. The offset table rides a broadcast
-    * join. This is the two-pass distributed-rank device a single
-    * `row_number() OVER (ORDER BY …)` (single-partition window)
-    * cannot survive at scale. Input: any (doc_id, n_chars) frame. */
-  def curriculumOf(docs: DataFrame): DataFrame = {
-    val d = docs.select(col("doc_id"), col("n_chars"))
-    val counts = d.groupBy("n_chars").agg(count(lit(1)).as("cnt"))
-    // tiny frame: one row per distinct length — the single-partition
-    // window is a deliberate bounded collapse
-    val offsets = counts.select(col("n_chars"), col("cnt"),
-      expr("sum(cnt) OVER (ORDER BY n_chars " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)").as("off"),
-      expr("sum(cnt) OVER ()").as("total"))
-      .select(col("n_chars"), coalesce(col("off"), lit(0L)).as("off"),
-        col("total"))
-    val w = Window.partitionBy("n_chars").orderBy("doc_id")
-    d.join(broadcast(offsets), "n_chars")
-      .withColumn("rn", col("off") + row_number().over(w).cast("long"))
+    * Scale shape (100 TB): the global rank is [[Ranks.perRow]]'s
+    * distributed rank keyed on `n_chars` (bounded by the length
+    * domain), so the only corpus-sized exchange is a hash
+    * partitioning on `n_chars`. Input: any (doc_id, n_chars) frame. */
+  def curriculumOf(docs: DataFrame): DataFrame =
+    Ranks.perRow(docs.select(col("doc_id"), col("n_chars")), "n_chars",
+      tiebreak = Seq(col("doc_id")), rank = "rn", size = "total")
       .select(col("doc_id"), col("n_chars"), col("rn"),
         (expr(s"(rn - 1) * $Bands DIV total") + 1L).as("band"))
-  }
 
   lazy val curriculumOracle: String =
     s"""WITH d AS (SELECT doc_id, n_chars FROM documents)
@@ -291,13 +273,11 @@ object CorpusLayout {
     * contribute budget and are not candidates (and their NULL score
     * would rank differently per engine).
     *
-    * Scale shape (100 TB): ranked cumulative sums WITHOUT a global
-    * sort — per-score token totals (bounded by the ppm score domain,
-    * ≤ 1e6 rows, NOT corpus-sized), cumulative offsets over that
-    * bounded frame, then each doc's running total is offset + an
-    * intra-score window KEYED on quality_ppm. The same
-    * distributed-rank device as [[curriculumOf]], extended from
-    * rank to prefix-sum. Input: any (doc_id, text) frame. */
+    * Scale shape (100 TB): the running token total is
+    * [[Ranks.perRow]]'s weighted prefix sum keyed on `quality_ppm`
+    * (bounded by the ppm score domain), so the only corpus-sized
+    * exchange is a hash partitioning on the score. Input: any
+    * (doc_id, text) frame. */
   def budgetSelectOf(docs: DataFrame): DataFrame = {
     // LAZY localCheckpoint: `q` feeds both the per-score totals and
     // the final offset join (PLANS.md rule #17 — one scoring pass)
@@ -305,20 +285,11 @@ object CorpusLayout {
       .filter(col("n_tokens") > 0L)
       .select("doc_id", "n_tokens", "quality_ppm")
       .matLazily
-    // bounded frame: one row per distinct score
-    val g = q.groupBy("quality_ppm").agg(sum("n_tokens").as("tok_sum"))
-    val offsets = g.select(col("quality_ppm"),
-      expr("sum(tok_sum) OVER (ORDER BY quality_ppm DESC " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)").as("off"))
-      .select(col("quality_ppm"), coalesce(col("off"), lit(0L)).as("off"))
-    val w = Window.partitionBy("quality_ppm").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    q.join(broadcast(offsets), Seq("quality_ppm"))
-      .withColumn("cum_before",
-        col("off") + coalesce(sum("n_tokens").over(w), lit(0L)))
+    Ranks.perRow(q, "quality_ppm", asc = false, Seq(col("doc_id")),
+        weight = Some("n_tokens"))
       .select(col("doc_id"), col("quality_ppm"), col("n_tokens"),
-        col("cum_before"),
-        when(col("cum_before") < TokenBudget, 1L).otherwise(0L)
+        col("prefix").as("cum_before"),
+        when(col("prefix") < TokenBudget, 1L).otherwise(0L)
           .as("selected"))
   }
 

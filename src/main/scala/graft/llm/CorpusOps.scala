@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.func.Materialize.MatOps
+import graft.func.Ranks
 
 /** Corpus-curation operators an LLM training-data pipeline runs after
   * dedup: repetition-based quality signals (the Gopher/MassiveText
@@ -1338,13 +1339,11 @@ object CorpusOps {
 
   /** (lang, doc_id, quality_ppm) with zero-token documents excluded —
     * the ONE definition of "scoreable corpus" every quality aggregate
-    * below consumes (exact and approx quantiles, top-k). Zero-token
-    * documents are excluded up front: they have no defined quality
-    * score (the ppm ratios divide by token count), and engines
-    * disagree on where a NULL score ranks (Spark sorts nulls first,
-    * DuckDB last) — filtering is the portable contract, and sharing
-    * the helper is what keeps the exact/approx pair's documented
-    * equivalence from drifting. */
+    * consumes (quantiles, top-k, the hq sketch). Zero-token documents
+    * are excluded up front: they have no defined quality score (the
+    * ppm ratios divide by token count), and engines disagree on where
+    * a NULL score ranks (Spark sorts nulls first, DuckDB last) —
+    * filtering is the portable contract. */
   private[llm] def scoredByLang(docs: DataFrame): DataFrame = {
     val scoreable =
       docs.filter(size(graft.func.Tokenizer.tokens(col("text"))) > 0)
@@ -1363,51 +1362,17 @@ object CorpusOps {
     * is engine-specific). The calibration table a corpus-filtering
     * pass reads its thresholds from.
     *
-    * Scale note: rank-by-window is one shuffle per language partition
-    * and a partition-local sort — fine while every language fits an
-    * executor's spill budget; at 100 TB swap in approx_percentile
-    * (t-digest) behind the same output shape, as
-    * [[graft.dws.ProductStats.approx]] does for distinct counts. Input:
-    * any (doc_id, text, lang) frame. Scoreable-corpus contract: see
-    * [[scoredByLang]]. */
-  def qualityQuantilesOf(docs: DataFrame): DataFrame = {
-    val ranked = scoredByLang(docs).select("lang", "quality_ppm")
-      .withColumn("rn", row_number()
-        .over(Window.partitionBy("lang").orderBy("quality_ppm")).cast("long"))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy("lang")))
-    val qs = QuantilePoints.map(p =>
-      max(when(expr(s"rn = (n * $p + 99) DIV 100"), col("quality_ppm")))
-        .as(s"q$p"))
-    ranked.groupBy("lang")
-      .agg(count(lit(1)).as("n_docs"), qs: _*)
-  }
-
-  /** [[percentile_approx]] accuracy for [[qualityQuantilesApproxOf]] —
-    * error bound is 1/accuracy of the rank range, so 10⁴ keeps the
-    * reported value within 0.01 % of the true rank while the sketch
-    * stays a few KB per language. */
-  val ApproxAccuracy = 10000
-
-  /** The 100-TB form of [[qualityQuantilesOf]]: Spark's
-    * `percentile_approx` (a mergeable rank sketch) behind the SAME
-    * output shape — one map-side-combinable aggregate, no per-language
-    * window, no partition-local sort, so a language's volume never
-    * serializes through one reducer. percentile_approx's randomized
-    * estimates are not oracle-comparable, so the BOARD slot for
-    * distributed quantiles is the deterministic, hash-locked
-    * histogram sketch ([[graft.llm.Sketches.hqSketchOf]] pair); this
-    * form remains the library surface for callers who want Spark's
-    * built-in KLL path, spec-bounded (rank error vs the exact form)
-    * rather than board-checked. Input: any (doc_id, text, lang) frame.
-    * Same scoreable-corpus front as the exact form BY CONSTRUCTION
-    * ([[scoredByLang]]). */
-  def qualityQuantilesApproxOf(docs: DataFrame): DataFrame = {
-    val qs = QuantilePoints.map(p =>
-      percentile_approx(col("quality_ppm"), lit(p / 100.0),
-        lit(ApproxAccuracy)).as(s"q$p"))
-    scoredByLang(docs).groupBy("lang")
-      .agg(count(lit(1)).as("n_docs"), qs: _*)
-  }
+    * Scale note: [[Ranks.perGroup]] reads the quantiles off per-(lang,
+    * score) counts, bounded by |langs| × the ppm score domain. The
+    * corpus-sized exchange is that count's map-side-combined shuffle
+    * on (lang, score); a second exchange moves only the counts to the
+    * lang-keyed cumulative window. No window runs over per-document
+    * rows, so a language's volume never serializes through one
+    * reducer's sort. Input: any (doc_id, text, lang) frame.
+    * Scoreable-corpus contract: see [[scoredByLang]]. */
+  def qualityQuantilesOf(docs: DataFrame): DataFrame =
+    Ranks.perGroup(scoredByLang(docs), "quality_ppm", Seq("lang"), "n_docs",
+      QuantilePoints.map(p => s"q$p" -> p))
 
   /** Rows kept per language by [[topQuality]]. */
   val TopKPerLang = 5

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.func.{OracleSql, Tokenizer}
+import graft.func.{OracleSql, Ranks, Tokenizer}
 import graft.func.Materialize.MatOps
 
 /** Statistical language-model scoring over `documents`: a bigram
@@ -72,17 +72,12 @@ object LangModel {
     * Docs with no bigram (< 2 tokens) have no score and are dropped,
     * as CCNet drops unscorable pages.
     *
-    * Scale shape (100 TB): the per-language GLOBAL rank uses the
-    * distributed-rank device ([[CorpusLayout.curriculumOf]]): scores
-    * collapse to a per-(lang, score) count — bounded by
-    * |langs| × 1e6 ppm values, NOT by corpus size — cumulative
-    * offsets are a window over that bounded frame, and each doc's
-    * rank is offset + row_number within its (lang, score) partition,
-    * a hash-partitioned window. No single-partition corpus-sized
-    * WindowExec anywhere; the offset table rides a broadcast join.
-    * Input: any (doc_id, text, lang) frame. */
+    * Scale shape (100 TB): the per-language rank is
+    * [[Ranks.perRow]]'s distributed rank partitioned by lang and keyed
+    * on the score (bounded by |langs| × 1e6 ppm values), so no
+    * corpus-sized window runs in one partition. Input: any (doc_id,
+    * text, lang) frame. */
   def pplFilterOf(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // LAZY localCheckpoint: `scored` feeds both the counts branch and
     // the final rank join — without it the whole bigram-scoring
     // subtree executes twice (PLANS.md rule #17)
@@ -91,18 +86,8 @@ object LangModel {
       .join(docs.select("doc_id", "lang"), Seq("doc_id"))
       .select("doc_id", "lang", "fluency_ppm")
       .matLazily
-    // bounded frame: one row per distinct (lang, score)
-    val counts = scored.groupBy("lang", "fluency_ppm")
-      .agg(count(lit(1)).as("cnt"))
-    val offsets = counts.select(col("lang"), col("fluency_ppm"),
-      expr("sum(cnt) OVER (PARTITION BY lang ORDER BY fluency_ppm DESC " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)").as("off"),
-      expr("sum(cnt) OVER (PARTITION BY lang)").as("n_lang"))
-      .select(col("lang"), col("fluency_ppm"),
-        coalesce(col("off"), lit(0L)).as("off"), col("n_lang"))
-    val w = Window.partitionBy("lang", "fluency_ppm").orderBy("doc_id")
-    scored.join(broadcast(offsets), Seq("lang", "fluency_ppm"))
-      .withColumn("lang_rank", col("off") + row_number().over(w).cast("long"))
+    Ranks.perRow(scored, "fluency_ppm", asc = false, Seq(col("doc_id")),
+        Seq("lang"), rank = "lang_rank", size = "n_lang")
       .select(col("doc_id"), col("lang"), col("fluency_ppm"), col("lang_rank"),
         when(lit(3L) * (col("lang_rank") - 1L) < col("n_lang"), "head")
           .when(lit(3L) * (col("lang_rank") - 1L) < lit(2L) * col("n_lang"),

@@ -200,6 +200,8 @@ object Multimodal {
     }.toDF("doc_id", "f0", "f1", "f2", "f3", "f4", "f5", "f6", "f7")
   }
 
+  /** The oracle replays the stub's md5 arithmetic on the text bytes
+    * (hex-nibble pairs = digest bytes; ASCII text ⇒ blob == text). */
   val featuresOracle: String = {
     def byteSql(i: Int): String =
       s"((instr('0123456789abcdef', m[${2 * i + 1}]) - 1) * 16 + instr('0123456789abcdef', m[${2 * i + 2}]) - 1)"
@@ -209,8 +211,6 @@ object Multimodal {
        |FROM (SELECT doc_id, md5(text) AS m FROM documents)""".stripMargin
   }
 
-  /** The oracle replays the stub's md5 arithmetic on the text bytes
-    * (hex-nibble pairs = digest bytes; ASCII text ⇒ blob == text). */
   /** aHash cells (bits of the perceptual hash). */
   val PhCells = 32
   /** Band layout over the 32-bit hash: 4 bands × 8 bits — pairs with

@@ -553,23 +553,21 @@ object Sketches {
   val HqBinW = 10000L
 
   /** Histogram-quantile sketch — the fourth mergeable sketch beside
-    * HLL/CMS/KMV, and the DETERMINISTIC alternative to Spark's
-    * `percentile_approx` ([[CorpusOps.qualityQuantilesApproxOf]]) for
-    * distributed quantiles: fixed-width value bins, counts per
-    * (lang, bin). Unlike percentile_approx's randomized-compaction
-    * KLL state, the histogram is a pure GROUP BY — integer binning,
-    * no sketch internals — so the DuckDB oracle replays it exactly
-    * and the estimates are HASH-LOCKED, while staying mergeable
-    * (union two corpora's sketches by ADDING counts per (lang, bin);
-    * merge law spec-asserted) and map-side combinable.
+    * HLL/CMS/KMV, and a DETERMINISTIC one: fixed-width value bins,
+    * counts per (lang, bin). Unlike a randomized-compaction sketch
+    * (Spark's `percentile_approx`), the histogram is a pure GROUP BY —
+    * integer binning, no sketch internals — so the DuckDB oracle
+    * replays it exactly and the estimates are HASH-LOCKED, while
+    * staying mergeable (union two corpora's sketches by ADDING counts
+    * per (lang, bin); merge law spec-asserted) and map-side combinable.
     *
     * Scale shape (100 TB): the corpus never sorts. Each doc projects
     * to one bin inside the scan stage; the only exchange carries the
     * ≤ 101-rows-per-lang-per-map-task partial counts. The exact form
-    * ([[CorpusOps.qualityQuantilesOf]]) serializes each language
-    * through one reducer's sort — the calibration path, not the
-    * production path. Trade-off: the estimate is the quantile's bin
-    * LOWER BOUND, within [[HqBinW]] − 1 ppm of the exact value
+    * ([[CorpusOps.qualityQuantilesOf]]) also never sorts documents,
+    * but keeps one count per distinct (lang, score) — up to 10⁶ per
+    * language, where the sketch keeps ≤ 101. Trade-off: the estimate is the quantile's
+    * bin LOWER BOUND, within [[HqBinW]] − 1 ppm of the exact value
     * (spec-bounded against the exact form); rank targeting uses the
     * exact form's ceil convention `(n·p + 99) DIV 100`. Input: any
     * (doc_id, text, lang) frame; the scoreable corpus contract is

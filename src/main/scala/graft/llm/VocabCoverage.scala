@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.func.{OracleSql, Tokenizer}
+import graft.func.{OracleSql, Ranks, Tokenizer}
 import graft.func.Materialize.MatOps
 
 /** Vocabulary data-card operators: the corpus frequency-rank table
@@ -24,19 +24,14 @@ object VocabCoverage {
     * Scale shape (100 TB): the corpus collapses to the WORD VOCABULARY
     * in one partial-aggregated shuffle (map-side combine — the
     * exchange carries one row per distinct word per map task, not one
-    * per token). Rank and cumulative sum are then the curriculum
-    * distributed-rank device ([[CorpusLayout.curriculumOf]]) with
-    * FREQ as the key — the Zipf collapse: distinct frequency values
-    * are O(√tokens), so the offsets frame (per-freq word count, token
-    * mass, and their running totals) is tiny even when the vocabulary
-    * itself is open-domain (URLs, code identifiers). Within one freq
-    * value every word contributes the same `freq` to the cumsum, so
-    * rank = word_offset + row_number and cum = mass_offset +
-    * freq × row_number under a freq-KEYED window — the only
+    * per token). Rank and cumulative sum are then [[Ranks.perRow]]'s
+    * rank and frequency-weighted prefix sum keyed on FREQ — the Zipf
+    * collapse: distinct frequency values are O(√tokens), so the
+    * offsets frame is tiny even when the vocabulary itself is
+    * open-domain (URLs, code identifiers), and the only
     * vocabulary-sized exchange is a hash partitioning on freq. Input:
     * any frame with a `text` column. */
   def vocabCoverageOf(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // LAZY localCheckpoint: the vocab-bounded count frame feeds both
     // the offset branch and the rank join — without it the corpus
     // explode+aggregate executes twice (PLANS.md rule #17; caught by
@@ -45,21 +40,10 @@ object VocabCoverage {
       .select(explode(Tokenizer.tokens(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
       .matLazily
-    // tiny frame: one row per distinct frequency (Zipf: O(√tokens))
-    val offs = words.groupBy("freq")
-      .agg(count(lit(1)).as("_cnt"), sum("freq").as("_mass"))
-      .select(col("freq"),
-        coalesce(sum("_cnt").over(Window.orderBy(col("freq").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("_woff"),
-        coalesce(sum("_mass").over(Window.orderBy(col("freq").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("_moff"),
-        sum("_mass").over(Window.partitionBy(lit(1))).as("_total"))
-    val w = Window.partitionBy("freq").orderBy("word")
-    words.join(broadcast(offs), "freq")
-      .withColumn("_rn", row_number().over(w).cast("long"))
-      .select(col("word"), col("freq"),
-        (col("_woff") + col("_rn")).as("rank"),
-        expr("1000000 * (_moff + freq * _rn) DIV _total").as("cum_ppm"))
+    Ranks.perRow(words, "freq", asc = false, Seq(col("word")),
+        weight = Some("freq"))
+      .select(col("word"), col("freq"), col("rank"),
+        expr("1000000 * (prefix + freq) DIV mass").as("cum_ppm"))
   }
 
   lazy val vocabCoverageOracle: String = {

@@ -97,13 +97,6 @@ object Sinks {
       .format("parquet")
       .saveAsTable(table)
 
-  /** Driver-checkable bucketed-join query: orders and customer written
-    * through [[writeBucketed]] on their join key (8 buckets), then
-    * joined table-to-table and rolled up per nation. Bucketing must be
-    * RESULT-INVISIBLE — the oracle is the plain join on the raw
-    * parquet — while the physical plan joins bucket-to-bucket with no
-    * shuffle exchange (asserted in SinksSpec; the pre-shuffled layout
-    * is the 100-TB pattern for repeated joins on one key). */
   /** Reset a managed table across JVMs: the in-memory catalog starts
     * empty each session, but the table's warehouse directory survives
     * — and `saveAsTable` refuses to create a managed table over a
@@ -123,6 +116,13 @@ object Sinks {
     }
   }
 
+  /** Driver-checkable bucketed-join query: orders and customer written
+    * through [[writeBucketed]] on their join key (8 buckets), then
+    * joined table-to-table and rolled up per nation. Bucketing must be
+    * RESULT-INVISIBLE — the oracle is the plain join on the raw
+    * parquet — while the physical plan joins bucket-to-bucket with no
+    * shuffle exchange (asserted in SinksSpec; the pre-shuffled layout
+    * is the 100-TB pattern for repeated joins on one key). */
   def bucketedJoinQuery(spark: SparkSession, dir: String): DataFrame = {
     import graft.func.Exprs._
     resetManagedTable(spark, "graft_q_orders_b")

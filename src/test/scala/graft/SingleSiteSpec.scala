@@ -6,11 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * ([[Metrics]]), one as-of core per execution mode, one operator per
   * range-join form, no forwarding overload ladders in `graft.llm`, no
   * `(spark, dir)` table-binding twins of frame operators and four
-  * environment variables in main code. Six builders with four core
-  * defaults, five near-identical listeners, five as-of copies, salted
-  * and auto-width twins beside the range joins, 80 table-binding twins
-  * and two gate-softening env knobs grew one copy at a time; grep the
-  * main source tree so a new copy fails here instead. */
+  * environment variables in main code, one distributed-rank device
+  * ([[func.Ranks]]) and no detached scaladoc. Six builders with four
+  * core defaults, five near-identical listeners, five as-of copies,
+  * salted and auto-width twins beside the range joins, 80
+  * table-binding twins, two gate-softening env knobs and five
+  * hand-built global ranks grew one copy at a time; grep the main
+  * source tree so a new copy fails here instead. */
 class SingleSiteSpec extends AnyFunSuite {
   private val root = new java.io.File("src/main/scala")
 
@@ -142,6 +144,41 @@ class SingleSiteSpec extends AnyFunSuite {
       s"the pattern no longer sees the known reads: $names")
     val extra = names.filterNot(n => allowed(n._1))
     assert(extra.isEmpty, s"environment reads outside $allowed: $extra")
+  }
+
+  test("one distributed-rank device") {
+    // the device: an exclusive running sum over a collapsed per-key
+    // frame, broadcast back onto the rows and added to their keyed
+    // row_number (or running sum) — graft.func.Ranks holds it once,
+    // with its bounded-input proof. Oracle SQL (triple-quoted strings)
+    // states the plain windows and is not a copy.
+    val exclusive = """rowsBetween\(\s*Window\.unboundedPreceding\s*,\s*-1\s*\)|UNBOUNDED PRECEDING AND 1 PRECEDING""".r
+    val copies = mainSources
+      .filter(_.toPath != root.toPath.resolve("graft/func/Ranks.scala"))
+      .flatMap { f =>
+        val src = new String(java.nio.file.Files.readAllBytes(f.toPath),
+          "UTF-8").replaceAll("(?s)\"\"\".*?\"\"\"", "")
+        val defs = """\bdef\s+(\w+)""".r.findAllMatchIn(src).toSeq
+        defs.zip(defs.drop(1).map(_.start) :+ src.length).collect {
+          case (d, end) if exclusive.findFirstIn(src.substring(d.start, end))
+              .isDefined && src.substring(d.start, end).contains("broadcast(") =>
+            s"${f.getName}: ${d.group(1)}"
+        }
+      }
+    assert(copies.isEmpty, s"rank through graft.func.Ranks: $copies")
+  }
+
+  test("no scaladoc sits detached above another") {
+    // `/** a */ /** b */ def x` attaches only b to x; a documents
+    // nothing and reads as if it belonged to x
+    val detached = mainSources.flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      """\*/\s*/\*\*""".r.findAllMatchIn(src).map { m =>
+        val line = src.substring(0, m.end).count(_ == '\n') + 1
+        s"${root.toPath.relativize(f.toPath)}:$line"
+      }
+    }
+    assert(detached.isEmpty, s"move each doc onto its member: $detached")
   }
 
   test("graft.Metrics is the only SparkListener in main code") {

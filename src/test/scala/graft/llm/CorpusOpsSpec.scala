@@ -169,39 +169,6 @@ class CorpusOpsSpec extends SparkSpec {
     assert(exchanges === 1, "window shuffle only — groupBy co-partitioned")
   }
 
-  test("approx quality quantiles: same shape, rank-accurate vs exact") {
-    val docs = graft.Tables.documents(spark, Sf)
-    val approx = CorpusOps.qualityQuantilesApproxOf(docs).collect()
-      .map(r => r.getString(0) -> r).toMap
-    val exact = CorpusOps.qualityQuantilesOf(docs).collect()
-      .map(r => r.getString(0) -> r).toMap
-    assert(approx.keySet === exact.keySet)
-    assert(approx.values.head.schema.fieldNames.toSeq ===
-      Seq("lang", "n_docs", "q25", "q50", "q75", "q90"))
-    val scoreable =
-      docs.filter(size(graft.func.Tokenizer.tokens(col("text"))) > 0)
-    val scores = TextAnalysis.qualityOf(scoreable)
-      .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-      .select("lang", "quality_ppm").as[(String, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
-    approx.foreach { case (lang, row) =>
-      assert(row.getLong(1) === exact(lang).getLong(1), "n_docs identical")
-      val s = scores(lang)
-      val n = s.length
-      CorpusOps.QuantilePoints.zipWithIndex.foreach { case (p, i) =>
-        val v = row.getLong(2 + i)
-        assert(s.contains(v), s"$lang q$p=$v is not an observed score")
-        // rank error bound: n/accuracy, plus 1 for the rank convention
-        val target = (n * p + 99) / 100
-        val lo = s.indexOf(v) + 1
-        val hi = s.lastIndexOf(v) + 1
-        val tol = 1L + n / CorpusOps.ApproxAccuracy
-        assert(target >= lo - tol && target <= hi + tol,
-          s"$lang q$p=$v occupies ranks [$lo,$hi], target $target of $n")
-      }
-    }
-  }
-
   test("topQuality: k best per lang, plan uses WindowGroupLimit") {
     val out = CorpusOps.topQuality(spark, Sf)
     val rows = out.select("lang", "doc_id", "quality_ppm", "rk")
