@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions._
   * unpartitioned, and they run over one row per distinct key value,
   * not per input row. Every caller ranks by a key with a bounded value
   * domain (a length, a ppm score, a word frequency, a day count, a
-  * spend band); a key with an unbounded domain (an id) would defeat
-  * the device.
+  * spend band, a sketch bin, the spans inside one range-join bucket);
+  * a key with an unbounded domain (an id) would defeat the device.
   *
   * Null keys keep their place in the order (Spark's default: first
   * ascending, last descending) and count toward the size, but are
@@ -38,9 +38,11 @@ object Ranks {
   /** One row per distinct (`parts`, `key`): `cnt` rows, `off` rows
     * before it in its partition, `size` rows in the partition and,
     * with a `weight` column, `woff` weight before it and `mass` weight
-    * in the partition. */
+    * in the partition. With a `counted` column each input row stands
+    * for that many rows. */
   private def offsets(df: DataFrame, key: String, asc: Boolean,
-      parts: Seq[String], size: String, weight: Option[String]): DataFrame = {
+      parts: Seq[String], size: String, weight: Option[String],
+      counted: Option[String] = None): DataFrame = {
     require(!df.columns.exists(Reserved.contains),
       s"input columns clash with ${Reserved.mkString(", ")}")
     val keys = (parts :+ key).map(col)
@@ -50,7 +52,8 @@ object Ranks {
     val weighted = weight.toSeq.flatMap(_ =>
       Seq(coalesce(sum("wsum").over(before), lit(0L)).as("woff"),
         sum("wsum").over(all).as("mass")))
-    df.groupBy(keys: _*).agg(count(lit(1)).as("cnt"),
+    df.groupBy(keys: _*)
+      .agg(counted.fold(count(lit(1)))(c => sum(c)).as("cnt"),
         weight.toSeq.map(w => sum(w).as("wsum")): _*)
       .select(keys ++ Seq(col("cnt"),
         coalesce(sum("cnt").over(before), lit(0L)).as("off"),
@@ -91,11 +94,13 @@ object Ranks {
     * percentile of `key`: the smallest key whose ascending cumulative
     * count reaches rank ⌈n·p/100⌉ = `(n·p + 99) DIV 100` (p = 50: the
     * lower median). With no partition columns the result is one row,
-    * all null on an empty input. */
+    * all null on an empty input. A `counted` column makes the input a
+    * histogram: each row stands for that many rows, repeated keys add. */
   def perGroup(df: DataFrame, key: String, partitionBy: Seq[String],
-      size: String, percentiles: Seq[(String, Int)]): DataFrame = {
+      size: String, percentiles: Seq[(String, Int)],
+      counted: Option[String] = None): DataFrame = {
     val cum = col("off") + col("cnt")
-    offsets(df, key, asc = true, partitionBy, size, None)
+    offsets(df, key, asc = true, partitionBy, size, None, counted)
       .groupBy(partitionBy.map(col): _*)
       .agg(max(size).as(size), percentiles.map { case (name, p) =>
         // cum ≥ ⌈n·p/100⌉ ⇔ 100·cum ≥ n·p over the integers

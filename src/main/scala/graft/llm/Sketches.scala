@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.func.{Exprs, OracleSql, Tokenizer}
+import graft.func.{Exprs, OracleSql, Ranks, Tokenizer}
 import graft.func.Materialize.MatOps
 
 /** Mergeable integer sketches — the bounded-state devices a 100 TB
@@ -555,7 +555,7 @@ object Sketches {
   /** Histogram-quantile sketch — the fourth mergeable sketch beside
     * HLL/CMS/KMV, and a DETERMINISTIC one: fixed-width value bins,
     * counts per (lang, bin). Unlike a randomized-compaction sketch
-    * (Spark's `percentile_approx`), the histogram is a pure GROUP BY —
+    * (Spark's approximate percentile), the histogram is a pure GROUP BY —
     * integer binning, no sketch internals — so the DuckDB oracle
     * replays it exactly and the estimates are HASH-LOCKED, while
     * staying mergeable (union two corpora's sketches by ADDING counts
@@ -566,10 +566,10 @@ object Sketches {
     * ≤ 101-rows-per-lang-per-map-task partial counts. The exact form
     * ([[CorpusOps.qualityQuantilesOf]]) also never sorts documents,
     * but keeps one count per distinct (lang, score) — up to 10⁶ per
-    * language, where the sketch keeps ≤ 101. Trade-off: the estimate is the quantile's
-    * bin LOWER BOUND, within [[HqBinW]] − 1 ppm of the exact value
-    * (spec-bounded against the exact form); rank targeting uses the
-    * exact form's ceil convention `(n·p + 99) DIV 100`. Input: any
+    * language, where the sketch keeps ≤ 101. Trade-off: the estimate
+    * is the quantile's bin LOWER BOUND, within [[HqBinW]] − 1 ppm of
+    * the exact value (spec-bounded against the exact form); both read
+    * their ranks through [[Ranks.perGroup]]. Input: any
     * (doc_id, text, lang) frame; the scoreable corpus contract is
     * [[CorpusOps.scoredByLang]]'s. */
   def hqSketchOf(docs: DataFrame): DataFrame =
@@ -581,21 +581,17 @@ object Sketches {
   def hqEstimate(spark: SparkSession, dir: String): DataFrame =
     hqEstimateFrom(hqSketchOf(Tables.documents(spark, dir)))
 
-  /** Quantile estimates from a SKETCH frame (lang, bin, ct) — taking
-    * the sketch (not the corpus) is what the merge-law spec exercises:
+  /** Quantile estimates from a SKETCH frame (lang, bin, ct), read off
+    * it as a counted histogram by [[Ranks.perGroup]] — taking the
+    * sketch (not the corpus) is what the merge-law spec exercises:
     * estimates from a merged sketch must equal estimates from the
     * whole corpus's sketch. */
   def hqEstimateFrom(sketch: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cum = sketch
-      .withColumn("cum",
-        sum("ct").over(Window.partitionBy("lang").orderBy("bin")))
-      .withColumn("n", sum("ct").over(Window.partitionBy("lang")))
-    val qs = CorpusOps.QuantilePoints.map(p =>
-      (min(when(col("cum") >= expr(s"(n * $p + 99) DIV 100"), col("bin")))
-        * lit(HqBinW)).cast("long").as(s"q${p}_lo"))
-    cum.groupBy("lang")
-      .agg(max("n").cast("long").as("n_docs"), qs: _*)
+    val qs = CorpusOps.QuantilePoints.map(p => s"q${p}_lo")
+    Ranks.perGroup(sketch, "bin", Seq("lang"), "n_docs",
+        qs.zip(CorpusOps.QuantilePoints), counted = Some("ct"))
+      .select(col("lang") +: col("n_docs") +: qs.map(q =>
+        (col(q) * lit(HqBinW)).cast("long").as(q)): _*)
   }
 
   /** Oracle replays the binning itself (same quality CTEs as the

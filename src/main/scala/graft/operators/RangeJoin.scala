@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.func.Ranks
 
 /** Distributed point-in-interval range join — the second member (with
   * [[AsOf]]) of the non-equi-join family Spark's built-in operator set
@@ -135,25 +136,26 @@ object RangeJoin {
       lLo: String, lHi: String, rLo: String, rHi: String): DataFrame =
     longBounds(left, lLo, lHi).unionByName(longBounds(right, rLo, rHi))
 
+  /** The inclusive span `__hi − __lo + 1`, saturating like the guard
+    * (signed contract). */
+  private def spanCol: Column = expr("coalesce(try_add(" +
+    s"try_subtract(__hi, __lo), 1L), ${Long.MaxValue}L)")
+
   /** Intervals (`__lo`, `__hi`) exploded at `probeWidth` and rolled up
-    * per bucket in ONE pass: occupancy `__n`, the `extra` aggregates,
-    * and the span sum/count/max (`__s1`/`__c1`/`__mx1`) counted once
-    * per interval via its FIRST bucket (`__b == fdiv(__lo)` exactly
-    * once per exploded interval). The span `__span` saturates like the
-    * guard (signed contract); bucketExplode applies the valid-interval
+    * per bucket in ONE pass: occupancy `__n` and the span
+    * sum/count/max (`__s1`/`__c1`/`__mx1`) counted once per interval
+    * via its FIRST bucket (`__b == fdiv(__lo)` exactly once per
+    * exploded interval). bucketExplode applies the valid-interval
     * filter. */
-  private def bucketRollup(iv: DataFrame, probeWidth: Long,
-      extra: Column*): DataFrame = {
+  private def bucketRollup(iv: DataFrame, probeWidth: Long): DataFrame = {
     require(probeWidth >= 1, s"probe width $probeWidth must be >= 1")
     val firstB = col("__b") === expr(fdiv("__lo", probeWidth))
-    val spanned = iv.withColumn("__span", expr("coalesce(try_add(" +
-      s"try_subtract(__hi, __lo), 1L), ${Long.MaxValue}L)"))
-    bucketExplode(spanned, "__lo", "__hi", probeWidth)
+    bucketExplode(iv.withColumn("__span", spanCol), "__lo", "__hi", probeWidth)
       .groupBy("__b")
-      .agg(count(lit(1)).as("__n"), extra ++ Seq(
+      .agg(count(lit(1)).as("__n"),
         sum(when(firstB, col("__span").cast("double"))).as("__s1"),
         count(when(firstB, lit(1))).as("__c1"),
-        max(when(firstB, col("__span"))).as("__mx1")): _*)
+        max(when(firstB, col("__span"))).as("__mx1"))
   }
 
   /** The corpus [[Spans]] aggregates over a [[bucketRollup]], read back
@@ -166,10 +168,9 @@ object RangeJoin {
     Spans(r.getDouble(i), r.getLong(i + 1), r.getLong(i + 2))
 
   /** The overlap-form census rollup: pooled per-bucket occupancy
-    * max/mean, the hottest bucket's id and median span, and the
-    * corpus [[Spans]]. */
+    * max/mean, the hottest bucket's id, and the corpus [[Spans]]. */
   private case class OverlapCensus(maxN: Long, avgN: Double,
-      hotMed: Long, hotB: Long, spans: Spans) {
+      hotB: Long, spans: Spans) {
     /** The probe width stands: ratio test (blind on narrow domains)
       * AND the absolute occupancy work budget. */
     def benign: Boolean =
@@ -183,16 +184,15 @@ object RangeJoin {
       lLo: String, lHi: String, rLo: String, rHi: String,
       probeWidth: Long): Option[OverlapCensus] = {
     val census = bucketRollup(pooledIntervals(left, right, lLo, lHi, rLo, rHi),
-      probeWidth, expr("percentile_approx(__span, 0.5)").as("__med"))
+      probeWidth)
     // bounded collect: ONE row of corpus statistics
     val stats = census.agg(max(col("__n")).as("maxN"),
       Seq(avg(col("__n")).as("avgN"),
-        expr("max_by(__med, __n)").as("hotMed"),
         expr("max_by(__b, __n)").as("hotB")) ++ spanTotals: _*)
       .collect()(0)
     if (stats.isNullAt(0)) None
     else Some(OverlapCensus(stats.getLong(0), stats.getDouble(1),
-      stats.getLong(2), stats.getLong(3), spansAt(stats, 4)))
+      stats.getLong(2), spansAt(stats, 3)))
   }
 
   /** The balanced width for a flagged overlap census. Within a crowded
@@ -208,9 +208,15 @@ object RangeJoin {
     * rebalancing stops while explode cost keeps rising (measured r17:
     * the crowd-span width looked perfect for the hot bucket and moved
     * the bottleneck to a 128× background explode). */
-  private def overlapWidthFor(c: OverlapCensus, probeWidth: Long): Long = {
+  private def overlapWidthFor(c: OverlapCensus, pooled: DataFrame,
+      probeWidth: Long): Long = {
     val vStar = math.sqrt(c.spans.sum * probeWidth.toDouble) / c.maxN
-    val floor = math.max(math.max(c.hotMed, c.spans.guardFloor), 1L)
+    // the crowd median: the hot bucket's lower-median span, one pass
+    // filtered to that bucket (≤ maxN distinct spans in the window)
+    val hotMed = Ranks.perGroup(inBucket(pooled, "__lo", "__hi",
+        probeWidth, c.hotB).select(spanCol.as("__span")), "__span", Nil,
+      "__n", Seq("__med" -> 50)).collect()(0).getLong(1)
+    val floor = math.max(math.max(hotMed, c.spans.guardFloor), 1L)
     math.min(probeWidth, math.max(vStar.toLong, floor))
   }
 
@@ -513,8 +519,9 @@ object RangeJoin {
     * Device: ONE census pass at `probeWidth` — both sides' valid
     * intervals explode to their buckets (same contract/guard as the
     * join itself) and one aggregation computes per-bucket occupancy,
-    * its max/mean, the MEDIAN SPAN inside the hottest bucket, and the
-    * corpus span sum and max. The ladder:
+    * its max/mean, the hottest bucket, and the corpus span sum and
+    * max; the width arm adds the MEDIAN SPAN inside that bucket
+    * ([[overlapWidthFor]]). The ladder:
     *
     *  - benign (max/mean ≤ [[AutoSkewFactor]] AND the worst bucket
     *    under [[AutoOccupancyCap]] — the ratio alone is blind on a
@@ -600,14 +607,14 @@ object RangeJoin {
         // (measured r19: the first cut derived salt 24 where 6
         // sufficed and the replication dwarfed the win)
         val maxWork = (c.maxN.toDouble / 2) * (c.maxN.toDouble / 2)
-        val dups = maxDupHot(pooledIntervals(left, right, lLo, lHi, rLo,
-          rHi), "__lo", "__hi", probeWidth, c.hotB)
+        val pooled = pooledIntervals(left, right, lLo, lHi, rLo, rHi)
+        val dups = maxDupHot(pooled, "__lo", "__hi", probeWidth, c.hotB)
         val valueCore = (dups.toDouble / 2) * (dups.toDouble / 2)
         if (valueCore * 2 >= maxWork) {
           // value crowd: width is useless, salt at the probe width
           checked(c.hotB)(probeWidth, saltFor(maxWork))
         } else {
-          val v = overlapWidthFor(c, probeWidth)
+          val v = overlapWidthFor(c, pooled, probeWidth)
           // what v cannot split: each side's occupancy thins with the
           // bucket only past its own span scale; the dup core never
           val s = c.spans.mean

@@ -147,12 +147,21 @@ class SingleSiteSpec extends AnyFunSuite {
   }
 
   test("one distributed-rank device") {
-    // the device: an exclusive running sum over a collapsed per-key
-    // frame, broadcast back onto the rows and added to their keyed
-    // row_number (or running sum) — graft.func.Ranks holds it once,
-    // with its bounded-input proof. Oracle SQL (triple-quoted strings)
-    // states the plain windows and is not a copy.
+    // the device in either form — graft.func.Ranks holds it once, with
+    // its bounded-input proof: a per-key offset added to a keyed
+    // row_number (however the offset is built: an exclusive running
+    // sum broadcast back, or any `x + row_number()`), or an order
+    // statistic read as the smallest key whose running count reaches
+    // a target. Oracle SQL (triple-quoted strings) states the plain
+    // windows and is not a copy.
     val exclusive = """rowsBetween\(\s*Window\.unboundedPreceding\s*,\s*-1\s*\)|UNBOUNDED PRECEDING AND 1 PRECEDING""".r
+    val offsetRank = """\+\s*row_number\(|row_number\(\)[^\n]*?\)\s*\+""".r
+    val running = """sum\([^\n]*\.over\([^\n]*orderBy\(|sum\([^()]*\)\s*OVER\s*\((PARTITION BY [^)]*?)?ORDER BY""".r
+    def isCopy(body: String): Boolean =
+      (exclusive.findFirstIn(body).isDefined && body.contains("broadcast(")) ||
+        offsetRank.findFirstIn(body).isDefined ||
+        (running.findFirstIn(body).isDefined && body.contains(">=") &&
+          """\bmin\(""".r.findFirstIn(body).isDefined)
     val copies = mainSources
       .filter(_.toPath != root.toPath.resolve("graft/func/Ranks.scala"))
       .flatMap { f =>
@@ -160,8 +169,7 @@ class SingleSiteSpec extends AnyFunSuite {
           "UTF-8").replaceAll("(?s)\"\"\".*?\"\"\"", "")
         val defs = """\bdef\s+(\w+)""".r.findAllMatchIn(src).toSeq
         defs.zip(defs.drop(1).map(_.start) :+ src.length).collect {
-          case (d, end) if exclusive.findFirstIn(src.substring(d.start, end))
-              .isDefined && src.substring(d.start, end).contains("broadcast(") =>
+          case (d, end) if isCopy(src.substring(d.start, end)) =>
             s"${f.getName}: ${d.group(1)}"
         }
       }

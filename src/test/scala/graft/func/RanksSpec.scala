@@ -9,7 +9,8 @@ import graft.SparkSpec
   * empty frame, a single row, a null partition value and null keys.
   * The per-row form is compared with SQL `row_number()` / `count(*)`
   * / exclusive running `sum` windows, the per-group form with ranks
-  * read off a driver-side sort. */
+  * read off a driver-side sort (and, given a counted histogram of the
+  * same rows, with its own uncounted answer). */
 class RanksSpec extends SparkSpec {
   import spark.implicits._
 
@@ -108,6 +109,16 @@ class RanksSpec extends SparkSpec {
         }.toMap
         assert(got === sortedPercentiles(rows, parts, ps), ctx)
       }
+      // the same rows as a counted histogram, split in two halves so
+      // keys repeat (merged sketches add): same answer
+      val halves = rows.zipWithIndex.partition(_._2 % 2 == 0)
+      val hist = Seq(halves._1, halves._2).map(h => frame(h.map(_._1))
+          .groupBy("p", "k").agg(count(lit(1)).as("c")))
+        .reduce(_ unionByName _)
+      val counted = Ranks.perGroup(hist, "k", by, "n",
+        ps.map(p => s"q$p" -> p), counted = Some("c"))
+      assert(counted.collect().toSeq.map(_.toSeq).toSet ===
+        rs.map(_.toSeq).toSet, s"$ctx, counted")
     }
   }
 }

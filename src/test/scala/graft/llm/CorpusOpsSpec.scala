@@ -1,8 +1,12 @@
 package graft.llm
 
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{PlanWalk, SparkSpec, Tables}
 
 class CorpusOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -498,6 +502,29 @@ class CorpusOpsSpec extends SparkSpec {
       val qs = (2 to 5).map(row.getLong)
       assert(qs === qs.sorted, s"non-monotone quantiles in ${row}")
     }
+  }
+
+  test("quality quantiles plan: no per-document row is shuffled or windowed") {
+    // two exchanges, both over counts: the corpus-sized one carries
+    // the map-side partial (lang, quality_ppm) counts, the second the
+    // final counts to the lang-keyed cumulative window
+    val plan = CorpusOps.qualityQuantilesOf(Tables.documents(spark, Sf))
+      .queryExecution.executedPlan
+    val nodes = PlanWalk.allNodes(plan)
+    val exchanges = nodes.collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.length === 2, s"two exchanges:\n$plan")
+    exchanges.foreach(e => assert(e.child.isInstanceOf[HashAggregateExec],
+      s"a shuffle reads per-document rows:\n$plan"))
+    // what a Window reads, past the sort and shuffle that feed it
+    def feed(p: SparkPlan): SparkPlan = p match {
+      case _: WindowExec | _: SortExec | _: ShuffleExchangeExec =>
+        feed(p.children.head)
+      case other => other
+    }
+    val windows = nodes.collect { case w: WindowExec => w }
+    assert(windows.nonEmpty, s"no cumulative window:\n$plan")
+    windows.foreach(w => assert(feed(w).isInstanceOf[HashAggregateExec],
+      s"a Window reads per-document rows:\n$plan"))
   }
 
   test("mixtureTemperature: sqrt rates, same dice, realized mass flattens") {
